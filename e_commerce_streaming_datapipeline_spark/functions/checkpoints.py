@@ -8,7 +8,9 @@ localCheckpoint stays the default; cluster deployments set
 ``SPARK_GRAFT_CHECKPOINT_DIR`` to a durable path (HDFS / object store) and
 every round checkpoint becomes a RELIABLE ``checkpoint()`` into that
 directory instead — identical plan truncation, executor-loss-safe (r9
-ADVICE #3).
+ADVICE #3).  ``get_spark`` sets ``spark.cleaner.referenceTracking.cleanCheckpoints``
+so unreferenced reliable checkpoints are deleted; it is a SparkContext conf, so
+externally built sessions must set it at launch to get the same reaping.
 """
 
 from __future__ import annotations

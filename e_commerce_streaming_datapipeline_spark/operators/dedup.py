@@ -25,6 +25,7 @@ from pyspark.storagelevel import StorageLevel
 from e_commerce_streaming_datapipeline_spark.functions.ranks import register_cache
 from e_commerce_streaming_datapipeline_spark.functions.checkpoints import round_checkpoint
 from e_commerce_streaming_datapipeline_spark.functions.rounding import fround
+from e_commerce_streaming_datapipeline_spark.functions.hashing import hash_half, hash_half_sql
 
 from e_commerce_streaming_datapipeline_spark.plans.registry import query
 from e_commerce_streaming_datapipeline_spark.sources.batch import load_table, load_valid_embeddings
@@ -1075,27 +1076,25 @@ def q_semantic_dedup_autoblock(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Deterministic doc-level sample for the audit's ground-truth side (r9
-# VERDICT task #6): keep a doc when knuth_hash(doc_id) % MOD == 0, with the
-# multiplicative hash decorrelating the sample from any doc_id structure the
-# duplicate generator has.  Engine-portable pure-integer arithmetic
-# (doc_id·2654435761 stays far under 2^63), so DuckDB regenerates the
-# identical sample and the sampled audit remains hash-checked end to end.
-_AUDIT_HASH_MULT = 2654435761  # Knuth 2^32/phi
-_AUDIT_SAMPLE_MOD = 2  # keep 1/2 of docs -> ~1/4 of ground-truth pairs
-
-
+# VERDICT task #6): keep a doc when the high bit of its Knuth hash is 0
+# (operators/sampling.py::hash_half) — 1/2 of docs, ~1/4 of ground-truth
+# pairs.  The high bit decorrelates the sample from the duplicate
+# generator's doc_id structure (a clone at id+1 can share its source's
+# side), and the arithmetic stays in int64 on both engines, so DuckDB
+# regenerates the identical sample and the audit stays hash-checked.
 def _audit_sampled(col):
-    return ((col * _AUDIT_HASH_MULT) % 4294967296) % _AUDIT_SAMPLE_MOD == 0
+    return hash_half(col) == 0
 
 
-_AUDIT_GATE_SQL = "(({c} * 2654435761) % 4294967296) % 2 = 0"
+def _audit_gate_sql(c: str) -> str:
+    return f"{hash_half_sql(c)} = 0"
 
 
 @query(
     "minhash_audit",
     oracle=f"""
 WITH {_MINHASH_VERIFIED_CTES}, exploded_s AS (
-    SELECT * FROM exploded WHERE {_AUDIT_GATE_SQL.format(c="doc_id")}
+    SELECT * FROM exploded WHERE {_audit_gate_sql("doc_id")}
 ), truth_cands AS (
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
     FROM exploded_s a JOIN exploded_s b
@@ -1113,8 +1112,8 @@ WITH {_MINHASH_VERIFIED_CTES}, exploded_s AS (
     SELECT doc_a, doc_b FROM verified WHERE jaccard >= {JACCARD_THRESHOLD}
 ), hits_s AS (
     SELECT doc_a, doc_b FROM hits
-    WHERE {_AUDIT_GATE_SQL.format(c="doc_a")}
-      AND {_AUDIT_GATE_SQL.format(c="doc_b")}
+    WHERE {_audit_gate_sql("doc_a")}
+      AND {_audit_gate_sql("doc_b")}
 ), counts AS (
     SELECT
         (SELECT count(*) FROM truth)      AS n_truth_sampled,
@@ -1155,7 +1154,7 @@ def q_minhash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAMPLE (r9 VERDICT task #6 — the exhaustive shingle self-join was the
     bench's slowest tail query, and its Σ(docs-per-shingle choose 2)
     blow-up is the one cost the LSH pipeline under audit never pays):
-    keep a doc when knuth_hash(doc_id) % 2 == 0, so the pair rate is
+    keep a doc when the high bit of knuth_hash(doc_id) is 0, so the pair rate is
     (1/2)², the truth join's inputs shrink linearly and its output
     quadratically.  recall_sampled estimates recall on within-sample
     pairs (every exact-verified hit with both ends sampled is a sampled
@@ -1165,7 +1164,7 @@ def q_minhash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     share a doc are not independent Bernoulli draws; the binomial bound
     is the standard operational approximation).  Precision stays EXACT:
     its denominator is the band-candidate set the production pipeline
-    materializes anyway.  At 100 TB the same gate runs with a larger MOD;
+    materializes anyway.  At 100 TB a narrower gate (more hash bits) keeps less;
     the sample is hash-deterministic, so reruns and both engines agree
     row-for-row."""
     docs = load_table(spark, "documents", sf_dir)

@@ -18,22 +18,17 @@ well-mixed for anything without adversarial structure.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from e_commerce_streaming_datapipeline_spark.functions.hashing import (
+    KNUTH as _KNUTH,
+    MOD as _MOD,
+    hash_bucket,
+)
 from e_commerce_streaming_datapipeline_spark.functions.rounding import fround
 from e_commerce_streaming_datapipeline_spark.plans.registry import query
 from e_commerce_streaming_datapipeline_spark.sources.batch import load_table, load_valid_embeddings
-
-_KNUTH = 2654435761  # golden-ratio multiplicative hash constant
-_MOD = 2**32
-
-
-def hash_bucket(key: Column, buckets: int) -> Column:
-    """Deterministic pseudo-random bucket in [0, buckets) from an integer
-    key — identical arithmetic on any engine (no RNG, no engine hash)."""
-    return (key * F.lit(_KNUTH)) % F.lit(_MOD) % F.lit(buckets)
-
 
 @query(
     "stratified_doc_sample",

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from e_commerce_streaming_datapipeline_spark.functions.checkpoints import round_checkpoint
 from e_commerce_streaming_datapipeline_spark.functions.rounding import fround
 from e_commerce_streaming_datapipeline_spark.functions.scalars import scalar_join
+from e_commerce_streaming_datapipeline_spark.functions.hashing import hash_half, hash_half_sql
 from e_commerce_streaming_datapipeline_spark.plans.registry import query
 from e_commerce_streaming_datapipeline_spark.sources.batch import load_table
 
@@ -1793,6 +1794,9 @@ def q_value_imputation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _Z95 = 1.959963985  # two-sided 95% normal quantile, fixed constant
+# per-user experiment arm (ab_test_zscore, cuped_did_lift, ab_srm_check):
+# the high bit of the Knuth hash — its low bit would be user_id % 2
+_ARM_SQL = hash_half_sql("user_id")
 
 
 @query(
@@ -1875,7 +1879,7 @@ WITH assigned AS (
     -- unit = user-day (see conversion_rate_ci), arm fixed per USER so the
     -- randomization unit matches how experiments actually assign
     SELECT user_id, date_trunc('day', ts) AS day,
-           (user_id * 2654435761) % 4294967296 % 2 AS arm,
+           {_ARM_SQL} AS arm,
            CAST(count_if(event_type = 'purchase') > 0 AS INT) AS converted
     FROM events GROUP BY 1, 2, 3
 ), arms AS (
@@ -1917,8 +1921,6 @@ def q_ab_test_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Same determinism story as `conversion_rate_ci`: + * / sqrt/abs only,
     all IEEE correctly-rounded, bit-identical across engines."""
-    from e_commerce_streaming_datapipeline_spark.operators.sampling import hash_bucket
-
     events = load_table(spark, "events", sf_dir)
     assigned = events.groupBy(
         "user_id", F.date_trunc("day", "ts").alias("day")
@@ -1927,7 +1929,7 @@ def q_ab_test_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("int")
         .alias("converted"),
     ).select(
-        hash_bucket(F.col("user_id"), 2).alias("arm"),
+        hash_half(F.col("user_id")).alias("arm"),
         "converted",
     )
     arms = assigned.groupBy("arm").agg(
@@ -3423,14 +3425,14 @@ def q_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cuped_did_lift",
-    oracle="""
+    oracle=f"""
 WITH mid AS (
     SELECT (min(epoch_us(ts)) + max(epoch_us(ts))) // 2 AS mid_us
     FROM events WHERE ts IS NOT NULL
 ), per_user AS (
     SELECT
         user_id,
-        (user_id * 2654435761) % 4294967296 % 2 AS arm,
+        {_ARM_SQL} AS arm,
         CAST(sum(CASE WHEN event_type = 'purchase' AND ts IS NOT NULL
                        AND epoch_us(ts) < mid.mid_us
                       THEN coalesce(CAST(round(value * 100) AS BIGINT), 0)
@@ -3517,7 +3519,7 @@ def q_cuped_did_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         scalar_join(events.where(F.col("user_id").isNotNull()), mid)
         .groupBy(
             "user_id",
-            ((F.col("user_id") * 2654435761) % 4294967296 % 2).alias("arm"),
+            hash_half(F.col("user_id")).alias("arm"),
         )
         .agg(
             F.sum(
@@ -5491,9 +5493,9 @@ def q_event_burst_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ab_srm_check",
-    oracle="""
+    oracle=f"""
 WITH arms AS (
-    SELECT (user_id * 2654435761) % 4294967296 % 2 AS arm,
+    SELECT {_ARM_SQL} AS arm,
            count(DISTINCT user_id) AS n
     FROM events WHERE user_id IS NOT NULL
     GROUP BY 1
@@ -5536,7 +5538,7 @@ def q_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, "events", sf_dir)
         .where(F.col("user_id").isNotNull())
         .select(
-            F.expr("(user_id * 2654435761) % 4294967296 % 2").alias("arm"),
+            hash_half(F.col("user_id")).alias("arm"),
             "user_id",
         )
         .groupBy("arm")

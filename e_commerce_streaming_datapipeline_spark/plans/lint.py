@@ -1,5 +1,6 @@
 """Physical-plan linting as a library: the scale-regression checks the test
-suite runs registry-wide (tests/test_engine.py), exposed so pipelines can
+suite runs on every registered query's executed plan (the oracle parity
+sweep, tests/test_oracle_parity.py), exposed so pipelines can
 gate their own plans in CI — ``lint_plan(df)`` returns findings instead of
 assertions.
 

@@ -120,6 +120,9 @@ def get_spark(
                     os.environ.get("SPARK_GRAFT_STATESTORE", ""),
                 ))
         .config("spark.streaming.stopGracefullyOnShutdown", "true")
+        # reap reliable round checkpoints (functions/checkpoints.py) once
+        # their RDDs are garbage-collected, instead of piling them up
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     # deployment-specific overrides without code changes (e.g. cluster
     # shuffle codecs, memoryOverhead):  SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2".

@@ -76,12 +76,14 @@ def _gen_arrow(part: _RangePartition):
     # int64 headroom guard: the row-path twin ``_gen`` computes the LCG in
     # exact Python ints, while this path wraps at 2^63 — beyond
     # n ≈ 8.36e9 the two readers would silently diverge.  Fail loudly
-    # instead (r9 ADVICE #1).
-    assert part.end <= (2**63) // 1103515245, (
-        f"_gen_arrow int64 overflow: end={part.end} exceeds "
-        f"{(2**63) // 1103515245} (LCG multiply would wrap); "
-        "compute modulo before multiply to lift the bound"
-    )
+    # instead (r9 ADVICE #1) — a raise, not an assert, so ``python -O``
+    # keeps the guard.
+    if part.end > (2**63) // 1103515245:
+        raise OverflowError(
+            f"_gen_arrow int64 overflow: end={part.end} exceeds "
+            f"{(2**63) // 1103515245} (LCG multiply would wrap); "
+            "compute modulo before multiply to lift the bound"
+        )
     i = np.arange(part.start, part.end, part.stride, dtype=np.int64)
     user = ((1103515245 * i + 12345) % 2147483648) % 997
     amount = ((i * 137) % 100_000).astype(np.float64)

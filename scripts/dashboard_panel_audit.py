@@ -13,9 +13,14 @@ script FAILS if (a) the reference grows a SQL surface with no mapping,
 technical dashboard unexpectedly grows a SQL panel (it is pure Prometheus
 ``expr`` today — its analogue is streaming/monitoring.py, not a query).
 
+The extracted surfaces are committed in tests/dashboard_surfaces.json, so
+the audit runs without a reference checkout; ``--refresh`` re-extracts that
+inventory from one (default path below, or the directory given after it).
+
 Usage:
-    python scripts/dashboard_panel_audit.py          # print table, exit 1 on gaps
-    python scripts/dashboard_panel_audit.py --write  # also refresh QUERIES.md appendix
+    python scripts/dashboard_panel_audit.py            # print table, exit 1 on gaps
+    python scripts/dashboard_panel_audit.py --write    # also refresh QUERIES.md appendix
+    python scripts/dashboard_panel_audit.py --refresh [REF_DIR]  # re-extract inventory
 """
 
 from __future__ import annotations
@@ -27,6 +32,7 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 REF = "/root/reference"
+INVENTORY = os.path.join(REPO, "tests", "dashboard_surfaces.json")
 
 BEGIN = "<!-- dashboard-audit:begin -->"
 END = "<!-- dashboard-audit:end -->"
@@ -116,30 +122,55 @@ def extract_views(path: str) -> list[str]:
     return [f"view:{v}" for v in views] + [f"function:{f}" for f in funcs]
 
 
+def extract_inventory(ref: str) -> dict[str, list[str]]:
+    """Every SQL surface of a reference checkout, keyed by where it lives."""
+    dash = os.path.join(ref, "infrastructure/grafana/dashboards")
+    return {
+        "streaming_panels": [
+            f"panel:{title}"
+            for title, _ in extract_grafana(os.path.join(dash, "ecommerce-streaming.json"))
+        ],
+        "technical_panels": [
+            f"panel:{title}"
+            for title, _ in extract_grafana(os.path.join(dash, "ecommerce-technical.json"))
+        ],
+        "makefile_targets": [
+            f"make:{t}"
+            for t in dict.fromkeys(extract_makefile(os.path.join(ref, "Makefile")))
+        ],
+        "views_and_functions": extract_views(
+            os.path.join(ref, "infrastructure/postgres/init_metrics.sql")
+        ),
+    }
+
+
 def main() -> int:
     sys.path.insert(0, REPO)
     from e_commerce_streaming_datapipeline_spark.plans.registry import all_queries
 
     registry = set(all_queries())
 
-    surfaces: list[str] = []
-    streaming = extract_grafana(
-        os.path.join(REF, "infrastructure/grafana/dashboards/ecommerce-streaming.json")
-    )
-    surfaces += [f"panel:{title}" for title, _ in streaming]
-    technical = extract_grafana(
-        os.path.join(REF, "infrastructure/grafana/dashboards/ecommerce-technical.json")
-    )
-    assert not technical, (
-        "technical dashboard grew rawSql panels — map them: "
-        f"{[t for t, _ in technical]}"
-    )
-    surfaces += [f"make:{t}" for t in dict.fromkeys(extract_makefile(os.path.join(REF, "Makefile")))]
-    surfaces += extract_views(
-        os.path.join(REF, "infrastructure/postgres/init_metrics.sql")
+    if "--refresh" in sys.argv:
+        rest = sys.argv[sys.argv.index("--refresh") + 1 :]
+        ref = rest[0] if rest and not rest[0].startswith("--") else REF
+        with open(INVENTORY, "w") as f:
+            json.dump(extract_inventory(ref), f, indent=1, ensure_ascii=False)
+            f.write("\n")
+        print(f"wrote inventory to {INVENTORY}")
+    with open(INVENTORY) as f:
+        inventory = json.load(f)
+
+    surfaces: list[str] = (
+        inventory["streaming_panels"]
+        + inventory["makefile_targets"]
+        + inventory["views_and_functions"]
     )
 
-    rows, problems = [], []
+    rows = []
+    problems = [
+        f"technical dashboard grew a rawSql panel — map it: {t}"
+        for t in inventory["technical_panels"]
+    ]
     for key in surfaces:
         if key not in MAPPING:
             problems.append(f"UNMAPPED reference surface: {key}")

@@ -2,7 +2,9 @@
 registered Spark query and its oracle SQL side by side, compare row count +
 column names + an order-insensitive value hash with tolerant float/timestamp
 normalization.  Used by tests and by ``python -m tests.oracle_compare`` for
-fast iteration."""
+fast iteration.  ``run_query`` also hands back what that one build and
+execution produced (frame, rows, oracle frame), so tests can check more
+contracts without running the query or its oracle a second time."""
 
 from __future__ import annotations
 
@@ -11,8 +13,22 @@ import os
 from dataclasses import dataclass
 
 import duckdb
+import pandas as pd
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+from e_commerce_streaming_datapipeline_spark.schemas import TESTDATA_TABLES
+
+
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per fixture table present in
+    ``sf_dir`` — the catalog every oracle SQL text is written against."""
+    con = duckdb.connect()
+    for t in TESTDATA_TABLES:
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(path):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    return con
 
 
 def _norm_cell(v) -> str:
@@ -85,11 +101,13 @@ def _oracle_df_rows(con, sql: str):
     the Spark-side NaN gate in ``compare_query``, which FAIL any query
     that emits a genuine NaN at all.  Returns (columns, rows, dtypes,
     has_null)."""
+    return _df_rows(con.execute(sql).df())
+
+
+def _df_rows(df: pd.DataFrame):
+    """``_oracle_df_rows`` on an already materialized oracle frame."""
     import numpy as np
 
-    import pandas as pd
-
-    df = con.execute(sql).df()
     cols = list(df.columns)
     rows = []
     for tup in df.itertuples(index=False, name=None):
@@ -171,13 +189,27 @@ def _dtype_kind_mismatches(
     return bad
 
 
+@dataclass
+class QueryRun:
+    """One build and one Spark action of a registered query, plus one
+    oracle execution: the compare result and the objects it was made from."""
+
+    result: CompareResult
+    frame: DataFrame
+    rows: list
+    oracle_df: pd.DataFrame | None
+
+
 def compare_query(spark: SparkSession, name: str, sf_dir: str) -> CompareResult:
+    return run_query(spark, name, sf_dir).result
+
+
+def run_query(spark: SparkSession, name: str, sf_dir: str) -> QueryRun:
     from e_commerce_streaming_datapipeline_spark.plans.registry import get_query
 
     q = get_query(name)
     sdf = q.builder(spark, sf_dir)
     spark_rows = sdf.collect()
-    spark_cols = sdf.columns
     # the action has run; release any determinism persists the rank family
     # pinned during the build (functions/ranks.py) so a full-registry sweep
     # doesn't accumulate hundreds of cached copies
@@ -188,17 +220,18 @@ def compare_query(spark: SparkSession, name: str, sf_dir: str) -> CompareResult:
     release_rank_caches()
 
     if q.oracle is None:
-        return CompareResult(name, True, len(spark_rows), -1, "rows-only (no oracle)")
+        result = CompareResult(name, True, len(spark_rows), -1, "rows-only (no oracle)")
+        return QueryRun(result, sdf, spark_rows, None)
 
-    con = duckdb.connect()
-    for t in ("region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"):
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
-    oracle_cols, oracle_rows, oracle_dtypes, oracle_has_null = _oracle_df_rows(
-        con, q.oracle
-    )
+    con = oracle_connection(sf_dir)
+    odf = con.execute(q.oracle).df()
+    result = _compare(name, sdf, spark_rows, con, q.oracle, odf)
+    return QueryRun(result, sdf, spark_rows, odf)
+
+
+def _compare(name, sdf, spark_rows, con, oracle_sql, odf) -> CompareResult:
+    spark_cols = sdf.columns
+    oracle_cols, oracle_rows, oracle_dtypes, oracle_has_null = _df_rows(odf)
 
     # NaN gates (r7 ADVICE #4): the pandas canonicalizer conflates genuine
     # NaN with SQL NULL on both sides, so a query emitting NaN anywhere is
@@ -223,7 +256,7 @@ def compare_query(spark: SparkSession, name: str, sf_dir: str) -> CompareResult:
         if oracle_dtypes.get(c, "").startswith("float") and oracle_has_null.get(c)
     ]
     if nan_suspects:
-        genuine = _genuine_oracle_nans(con, q.oracle, nan_suspects)
+        genuine = _genuine_oracle_nans(con, oracle_sql, nan_suspects)
         if genuine:
             return CompareResult(
                 name, False, len(spark_rows), len(oracle_rows),

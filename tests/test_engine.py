@@ -408,111 +408,6 @@ def test_windowed_totals_scan_fact_once(spark, sf_dir):
     assert "ReusedExchange" in final or "ReusedQueryStage" in final
 
 
-def test_no_accidental_cartesian_or_nested_loop_joins(spark, sf_dir):
-    """Registry-wide plan lint: no batch query may plan a CartesianProduct,
-    and BroadcastNestedLoopJoin is allowed ONLY for the queries that
-    deliberately cross-join a 1-row scalar relation (threshold / query-
-    vector / corpus-stat broadcasts).  Catches the classic silent
-    regression where a dropped join condition or a non-equi predicate
-    downgrades an equi-join into an O(n*m) loop that only explodes at
-    scale."""
-    from e_commerce_streaming_datapipeline_spark.plans.registry import all_queries
-
-    # Deliberate nested-loop joins that remain after the round-3 whitelist
-    # trim (1-row THRESHOLD attachments now go through
-    # functions/scalars.scalar_join, a broadcast HASH join, and need no
-    # allowance).  What's left is genuinely non-equi or small-grid fan-out:
-    scalar_cross = {
-        "embedding_topk",         # query-vector x corpus fan-out (Q x N scan)
-        "ngram_jaccard_topk",     # query document x corpus fan-out
-        "lsh_recall_audit",       # inherits embedding_topk's query-vector cross join
-        "lsh_multiprobe_recall_audit",  # ditto + 5-row probe-levels cross join
-        "hard_negative_mining",   # anchor-sample broadcast, label-mismatch predicate
-        "embedding_topk_sq",      # query-vector broadcast (quantized candidate scan)
-        "matryoshka_recall_audit",  # inherits embedding_topk's query-vector cross join
-        "knn_label_accuracy",     # ditto (brute-force pairs feed the vote)
-        "pr_curve_thresholds",    # 9-threshold x bounded score-grid range join
-        "mmr_diversified_topk",   # query-vector fan-out feeding the MMR kernel
-        "kmeans_lloyd_step",      # K-row centroid-table broadcast (Lloyd assignment)
-        "trained_ivf_topk",       # same K-row centroid broadcast, x3 (train/assign/probe)
-        "embedding_topk_ivf_adc", # inherits the K-row centroid crossJoin (ivf_assign)
-        "ivf_probe_recall_audit", # ditto + 3-row nprobe-levels cross join
-        "source_fuzzy_pairs",     # 20-row distinct-key self-join, length-banded
-        "revenue_theilsen_trend", # daily-aggregate pair expansion (n_days^2/2)
-        "locf_value_15min",       # spine x |event types| tiny-relation grid
-        "sql_udf_revenue",        # 4-row discount-band table function, range-joined
-        "decontam_threshold_sweep",  # 4-row threshold grid x per-doc hit counts
-    }
-    # builders with side effects or streaming runs — not pure explain targets:
-    skip_substr = ("_stream", "bucketed", "partitioned_scan", "csv_source", "orc_source",
-                   "multimodal", "merge_upsert",
-                   # round-3 side-effecting builders (streaming runs, Derby
-                   # DDL/MERGE, catalog DDL + INSERT OVERWRITE, observe()'s
-                   # noop pass, the dims^2 driver collect) — not pure
-                   # explain targets either
-                   "lambda_unified", "jdbc_upsert", "warehouse_", "observed_",
-                   "embedding_top_pc")
-    from e_commerce_streaming_datapipeline_spark.plans.lint import lint_plan
-
-    # Single-partition windows allowed ONLY over relations whose size is
-    # bounded by something other than the data (the round-4 global-window
-    # rule; unbounded ones were rewired onto functions/ranks.py —
-    # ngram_zipf_slope, conversion_latency_stats, revenue_gini,
-    # rfm_segments, clv (deciling), equi_depth_histogram,
-    # source_quantile_normalize, zorder_layout_stats).  Each entry names
-    # its bound:
-    bounded_global_window = {
-        "approx_topk_event_types",   # exploded approx_top_k sketch: <= 5 rows
-        "auc_quality_langid",        # 2dp score grid: <= ~10^4 distinct scores
-        "decision_stump_train",      # split tallies over the n_chars NDV grid
-        "kaplan_meier_conversion",   # KM chain over the day-grain (horizon-
-                                     # bounded) step relation
-        "bootstrap_revenue_ci",      # 200 bootstrap replicate means
-        "calibration_bins",          # 10 reliability bins
-        "chi2_independence",         # lang x source contingency grid
-        "clv_pareto_deciles",        # cum-share window over the 10 deciles
-        "compaction_plan",           # file manifest (metadata, not rows)
-        "compaction_rewrite_roundtrip",  # same manifest-sized inventory window
-        "daily_revenue_ma",          # daily spine (#days)
-        "forecast_backtest_snaive",  # daily spine
-        "gmv_pattern_topk",          # minutely spine (#minutes in range)
-        "kfold_auc",                 # k=5 per-fold summary rows
-        "knn_label_accuracy",        # N_QUERIES query rows
-        "lateness_watermark_profile",  # bucket-summary relation (id-range/512)
-        "locf_value_15min",          # 15-min spine x |event types| grid
-        "markov_attribution",        # <= 51-row transition matrix
-        "neyman_allocation_sample",  # largest-remainder rank over <= |langs| strata
-        "matryoshka_recall_audit",   # N_QUERIES rows
-        "popularity_rec_hitrate",    # segment x top-5 recommendation grid
-        "psi_value_drift",           # fixed PSI bins
-        "quantile_pinball_backtest", # decile grid x daily spine
-        "residual_anomaly_days",     # daily spine
-        "retrieval_eval_mrr",        # N_QUERIES rows
-        "revenue_cusum_changepoints",  # daily spine
-        "revenue_dod",               # daily spine
-        "revenue_rolling_7d",        # daily spine
-        "revenue_theilsen_trend",    # daily-pair slopes (n_days^2/2)
-        "running_revenue",           # daily spine
-        "seasonal_decompose_daily",  # daily spine
-        "top_supplier",              # supplier-dim relation (one skinny row
-                                     # per supplier; see its docstring)
-    }
-    checked = 0
-    for name, q in sorted(all_queries().items()):
-        if any(s in name for s in skip_substr):
-            continue
-        findings = lint_plan(
-            q.builder(spark, sf_dir),
-            allow_nested_loop=name in scalar_cross,
-            allow_expand=True,  # cube/rollup/grouping-sets Expands are intended
-            allow_global_window=name in bounded_global_window,
-        )
-        findings = [f for f in findings if f.rule != "unbounded-collect"]
-        assert not findings, f"{name}: {[str(f) for f in findings]}"
-        checked += 1
-    assert checked > 80
-
-
 def test_decontam_is_broadcast_join_corpus_never_shuffles(spark, sf_dir):
     """The benchmark n-gram set must reach the contamination join as a
     broadcast relation — the 100 TB training side probes map-side and never
@@ -801,28 +696,6 @@ def test_external_session_can_run_closure_pickling_queries(tmp_path):
         timeout=300,
     )
     assert "EXTERNAL_SESSION_OK" in proc.stdout, proc.stderr[-2000:]
-
-
-def test_no_complex_typed_output_columns(spark, sf_dir):
-    """Driver-canonicalizer contract: every registered query's result schema
-    is scalar-only.  Array/map/struct output columns are unhashable by
-    pandas-based result canonicalizers (sort_values -> factorize ->
-    `unhashable type: 'list'`), so vector-ish results are emitted as
-    comma-joined fixed-point strings instead (see embedding_centroids,
-    embedding_quantize, multimodal_features, multimodal_frame_sample,
-    dropoff_hourly).  Schema access analyzes the plan without executing it,
-    so this sweeps all queries cheaply."""
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    from e_commerce_streaming_datapipeline_spark.plans.registry import all_queries
-
-    offenders = {}
-    for name, q in sorted(all_queries().items()):
-        fields = q.builder(spark, sf_dir).schema.fields
-        bad = [f.name for f in fields if isinstance(f.dataType, (ArrayType, MapType, StructType))]
-        if bad:
-            offenders[name] = bad
-    assert not offenders, f"complex-typed output columns: {offenders}"
 
 
 def test_salting_balances_skewed_join_reducers(spark):

@@ -14,10 +14,10 @@ from __future__ import annotations
 
 import os
 
-import duckdb
 import pytest
 
 from e_commerce_streaming_datapipeline_spark.plans.registry import all_queries
+from tests.oracle_compare import oracle_connection
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
 BAD = ("HUGEINT", "UHUGEINT", "DECIMAL")
@@ -25,14 +25,7 @@ BAD = ("HUGEINT", "UHUGEINT", "DECIMAL")
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in ("region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"):
-        path = os.path.join(SF_DIR, f"{t}.parquet")
-        if os.path.exists(path):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-            )
+    con = oracle_connection(SF_DIR)
     yield con
     con.close()
 

@@ -41,15 +41,19 @@ class TestRoundCheckpoint:
             for f in files
         ]
         assert found, "reliable checkpoint() wrote nothing under the dir"
+        # get_spark reaps unreferenced reliable checkpoints
+        conf = spark.sparkContext.getConf()
+        assert conf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true"
 
 
 def test_gen_arrow_overflow_guard_raises():
+    """A raise, not an ``assert``, so ``python -O`` keeps the guard."""
     from e_commerce_streaming_datapipeline_spark.sources.python_datasource import (
         _RangePartition,
         _gen_arrow,
     )
 
-    with pytest.raises(AssertionError, match="overflow"):
+    with pytest.raises(OverflowError, match="overflow"):
         list(_gen_arrow(_RangePartition(0, 2**60, 1)))
 
 
@@ -176,3 +180,29 @@ def test_scd2_stream_store_closed_partitions_append_only(spark, sf_dir):
     streamed = {tuple(r) for r in q_scd2_stream_merge(spark, sf_dir).collect()}
     batch = {tuple(r) for r in q_scd2_priority_history(spark, sf_dir).collect()}
     assert streamed == batch
+
+
+def test_hash_half_splits_consecutive_ids(spark):
+    """The two-way sample/arm split is the Knuth hash's HIGH bit: a clone
+    at id+1 can land on its source's side (the low bit is ``id % 2`` and
+    always separates them; the golden-ratio step keeps ~2/phi - 1 = 23.6 %
+    of consecutive pairs together), both sides hold about half the
+    ids, and the DuckDB twin agrees row-for-row, also past ~3.47e9 where an
+    unreduced multiply wraps int64 in Spark."""
+    import duckdb
+
+    from e_commerce_streaming_datapipeline_spark.functions.hashing import (
+        hash_half,
+        hash_half_sql,
+    )
+
+    ids = list(range(1000)) + [3_500_000_000 + i for i in range(50)] + [2**40 + 7]
+    df = spark.createDataFrame([(i,) for i in ids], "id long")
+    got = dict(df.select("id", hash_half(F.col("id"))).collect())
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t AS SELECT unnest(?::BIGINT[]) AS id", [ids])
+    assert dict(con.execute(f"SELECT id, {hash_half_sql('id')} FROM t").fetchall()) == got
+    assert set(got.values()) == {0, 1}
+    assert 400 < sum(got[i] for i in range(1000)) < 600
+    together = sum(got[i] == got[i + 1] for i in range(999))
+    assert 150 < together < 850, together

@@ -12,9 +12,10 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def test_dashboard_panel_audit_maps_every_reference_surface():
     """Every SQL surface the reference exposes (Grafana rawSql, Makefile
-    psql targets, Postgres views + retention function) must map to a
-    registered query — the audit script exits non-zero on any gap, stale
-    mapping, or a new technical-dashboard SQL panel."""
+    psql targets, Postgres views + retention function; committed in
+    tests/dashboard_surfaces.json) must map to a registered query — the
+    audit script exits non-zero on any gap, stale mapping, or a new
+    technical-dashboard SQL panel."""
     proc = subprocess.run(
         [sys.executable, os.path.join(REPO, "scripts", "dashboard_panel_audit.py")],
         capture_output=True,
