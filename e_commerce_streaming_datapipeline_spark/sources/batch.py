@@ -15,10 +15,13 @@ path layout, not from code here.
 from __future__ import annotations
 
 import os
+import tempfile
+import threading
+import zipfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructType
 
 from e_commerce_streaming_datapipeline_spark.schemas import TESTDATA_TABLES
 
@@ -42,6 +45,7 @@ def _normalize_ns_timestamps(df: DataFrame) -> DataFrame:
 
 
 _SHIPPED_SESSIONS: set[str] = set()
+_SHIP_LOCK = threading.Lock()
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -53,34 +57,43 @@ def _ship_package(spark: SparkSession) -> None:
     worker ``import e_commerce_streaming_datapipeline_spark`` — which fails
     unless the package rides along.  ``addPyFile`` is runtime-callable and
     reaches workers through SparkFiles, so it works however the session was
-    built.  Idempotent per (process, SparkContext)."""
+    built.  Idempotent per (process, SparkContext), and safe for concurrent
+    first callers: the lock makes the check-then-ship atomic, and the zip is
+    written under a temporary name and renamed into place, so no caller ever
+    ships a half-written zip."""
     sc = spark.sparkContext
     # keyed on applicationId, NOT id(sc): CPython recycles object addresses,
     # so after a context is stopped and freed a NEW context can reuse the
     # address and silently skip the addPyFile it needs
     key = sc.applicationId
-    if key in _SHIPPED_SESSIONS:
-        return
-    import tempfile
-    import zipfile
-
-    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    pkg_name = os.path.basename(pkg_root)
-    zip_path = os.path.join(
-        tempfile.gettempdir(), f"{pkg_name}_pyfiles_{os.getpid()}.zip"
-    )
-    if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            for dirpath, _dirnames, filenames in os.walk(pkg_root):
-                for fn in filenames:
-                    if fn.endswith(".py"):
-                        full = os.path.join(dirpath, fn)
-                        arc = os.path.join(
-                            pkg_name, os.path.relpath(full, pkg_root)
-                        )
-                        zf.write(full, arc)
-    sc.addPyFile(zip_path)
-    _SHIPPED_SESSIONS.add(key)
+    with _SHIP_LOCK:
+        if key in _SHIPPED_SESSIONS:
+            return
+        pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        pkg_name = os.path.basename(pkg_root)
+        zip_path = os.path.join(
+            tempfile.gettempdir(), f"{pkg_name}_pyfiles_{os.getpid()}.zip"
+        )
+        if not os.path.exists(zip_path):
+            fd, tmp_path = tempfile.mkstemp(
+                suffix=".zip.tmp", dir=os.path.dirname(zip_path)
+            )
+            try:
+                with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as zf:
+                    for dirpath, _dirnames, filenames in os.walk(pkg_root):
+                        for fn in filenames:
+                            if fn.endswith(".py"):
+                                full = os.path.join(dirpath, fn)
+                                arc = os.path.join(
+                                    pkg_name, os.path.relpath(full, pkg_root)
+                                )
+                                zf.write(full, arc)
+                os.replace(tmp_path, zip_path)
+            except BaseException:
+                os.unlink(tmp_path)
+                raise
+        sc.addPyFile(zip_path)
+        _SHIPPED_SESSIONS.add(key)
 
 
 def ensure_session_conf(spark: SparkSession) -> None:
@@ -101,10 +114,35 @@ def ensure_session_conf(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.shuffle.partitions", str(os.cpu_count() or 8))
 
 
+# path -> (st_size, st_mtime_ns, inferred schema) of single-file tables.
+# Schemas only, never DataFrames: two loads of one table must get fresh
+# attribute ids, or a self-join of them cannot be resolved.
+_FILE_SCHEMAS: dict[str, tuple[int, int, StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the footer-inference Spark job
+    on every load: a single file's inferred schema is reused while the
+    file's size and mtime are unchanged.  Directories (the partitioned
+    layout at scale) and paths that are not local files keep inference."""
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    st = os.stat(path)
+    cached = _FILE_SCHEMAS.get(path)
+    if cached is not None and cached[:2] == (st.st_size, st.st_mtime_ns):
+        return spark.read.schema(cached[2]).parquet(path)
+    df = spark.read.parquet(path)
+    _FILE_SCHEMAS[path] = (st.st_size, st.st_mtime_ns, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
+    # ensure_session_conf pins the confs that steer parquet schema inference
+    # (nanosAsLong, inferTimestampNTZ) just before the read, so a cached
+    # schema is the one inference would give on this session too
     ensure_session_conf(spark)
     sf_dir = sf_dir or DEFAULT_SF_DIR
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     return _normalize_ns_timestamps(df)
 
 

@@ -13,8 +13,8 @@ SURVEY §4 inefficiency 3).  Here:
   idempotent write = exactly-once table state.  The partition key must equal
   the idempotence key — a coarser key (e.g. per day) would delete same-day
   windows a later micro-batch did not re-emit.
-* The batch DataFrame is persisted once per batch; every downstream action
-  (metrics, write) reuses it.
+* That sink is ONE write action per micro-batch; only ``fan_out_sink``,
+  which runs several writers over one batch, caches it.
 * ``jdbc_upsert_sink`` — the JDBC twin: same keying, staged through a
   per-batch table + ON CONFLICT merge executed over a driver-side JDBC
   connection.  Connectivity-gated before any write (no Postgres in this
@@ -30,11 +30,10 @@ from pyspark.sql import functions as F
 
 
 def _acquire_cache(df: DataFrame) -> bool:
-    """Persist ``df`` unless a caller already did; return whether WE own the
-    cache (and must therefore be the one to unpersist).  A composed inner
-    sink must never unpersist a DataFrame it did not cache — that would evict
-    the batch out from under ``fan_out_sink``'s remaining writers and force a
-    full plan recomputation per sink."""
+    """``fan_out_sink``'s cache: persist ``df`` unless a caller already did;
+    return whether the fan-out owns the cache and so must unpersist it — a
+    nested fan-out must not evict the batch from under the outer one's
+    remaining writers."""
     lvl = df.storageLevel
     if lvl.useMemory or lvl.useDisk:
         return False
@@ -54,26 +53,23 @@ def idempotent_parquet_sink(output_dir: str) -> Callable[[DataFrame, int], None]
     number of distinct windows ever emitted (24/day hourly, 1440/day
     minutely) — for sub-minute windows compact downstream rather than
     coarsening this key, because the key IS the idempotence unit.
+
+    One write action per micro-batch, no emptiness probe: an empty batch is
+    a no-op write (dynamic overwrite replaces only the partitions the batch
+    holds), except that an empty FIRST batch leaves an empty ``output_dir``.
     """
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        owns = _acquire_cache(batch_df)
-        try:
-            if batch_df.isEmpty():
-                return
-            (
-                batch_df.withColumn(
-                    "window_part",
-                    F.date_format(F.col("window_start"), "yyyyMMddHHmmss"),
-                )
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("window_part")
-                .parquet(output_dir)
+        (
+            batch_df.withColumn(
+                "window_part",
+                F.date_format(F.col("window_start"), "yyyyMMddHHmmss"),
             )
-        finally:
-            if owns:
-                batch_df.unpersist()
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("window_part")
+            .parquet(output_dir)
+        )
 
     return write
 

@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import os
 import sys
+import time
+import uuid
 from pathlib import Path
 
 import pytest
@@ -24,3 +26,19 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+def sync_status_store(sc, timeout_s: float = 30.0) -> None:
+    """Block until the status store has applied every job event posted so
+    far: it applies listener events in order, so once a marker job started
+    now is visible, every earlier job is too."""
+    group = f"marker-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + timeout_s
+    while not sc.statusTracker().getJobIdsForGroup(group):
+        assert time.monotonic() < deadline, "status store never saw the marker job"
+        time.sleep(0.05)

@@ -698,6 +698,95 @@ def test_external_session_can_run_closure_pickling_queries(tmp_path):
     assert "EXTERNAL_SESSION_OK" in proc.stdout, proc.stderr[-2000:]
 
 
+def test_load_table_reuses_schema_until_the_file_changes(spark, tmp_path):
+    """A second load of an unchanged single-file table runs no Spark job:
+    its inferred schema is reused.  Rewriting the file (here with an extra
+    column) makes the next load infer again and see the new column."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tests.conftest import sync_status_store
+
+    sc = spark.sparkContext
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+
+    def load_jobs():
+        group = f"load-{uuid.uuid4().hex}"
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            df = load_table(spark, "t", str(tmp_path))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sync_status_store(sc)
+        return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    first, _ = load_jobs()
+    second, jobs = load_jobs()
+    assert jobs == 0
+    assert second.schema == first.schema
+    # schemas are cached, not DataFrames: two loads still self-join
+    assert first.join(second, first.a == second.a).count() == 2
+
+    pq.write_table(pa.table({"a": [3], "b": ["x"]}), path)
+    third, _ = load_jobs()
+    assert third.columns == ["a", "b"]
+    assert [tuple(r) for r in third.collect()] == [(3, "x")]
+
+
+def test_ship_package_concurrent_first_callers_ship_one_whole_zip(
+    tmp_path, monkeypatch
+):
+    """Concurrent first callers on one context (threads running builders)
+    ship the package exactly once, and never a half-written zip."""
+    import sys
+    import tempfile
+    import threading
+    import types
+    import zipfile
+
+    from e_commerce_streaming_datapipeline_spark.sources import batch
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(batch, "_SHIPPED_SESSIONS", set())
+    shipped, errors = [], []
+
+    class StubContext:
+        applicationId = "stub-app"
+
+        def addPyFile(self, path):
+            with zipfile.ZipFile(path) as zf:
+                shipped.append(zf.namelist())
+
+    stub = types.SimpleNamespace(sparkContext=StubContext())
+    n_threads = 8
+    barrier = threading.Barrier(n_threads)
+
+    def first_call():
+        try:
+            barrier.wait(timeout=30)
+            batch._ship_package(stub)
+        except Exception as exc:  # e.g. BadZipFile on a half-written zip
+            errors.append(exc)
+
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=first_call) for _ in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old_interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(shipped) == 1
+    assert "e_commerce_streaming_datapipeline_spark/__init__.py" in shipped[0]
+
+
 def test_salting_balances_skewed_join_reducers(spark):
     """Skew-resilience evidence for the salting pattern behind
     salted_priority_revenue (operators/setops.py): on a deliberately skewed

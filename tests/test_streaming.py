@@ -90,6 +90,98 @@ def test_idempotent_sink_converges(spark, sf_dir):
     assert once == twice == batch.count()
 
 
+def test_parquet_sink_runs_one_job_per_micro_batch(spark, sf_dir, tmp_path):
+    """The sink is ONE write action per micro-batch, for data and no-data
+    batches alike: the write itself runs the stateful plan (state-store
+    load, update, commit), with no emptiness probe before it and no cached
+    copy of the batch left behind."""
+    import pyarrow.parquet as pq
+
+    from tests.conftest import sync_status_store
+
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    table = pq.read_table(os.path.join(sf_dir, "events.parquet")).sort_by("ts")
+    cuts = [table.num_rows * i // 3 for i in range(4)]
+    for i in range(3):
+        pq.write_table(
+            table.slice(cuts[i], cuts[i + 1] - cuts[i]), in_dir / f"part{i}.parquet"
+        )
+
+    sc = spark.sparkContext
+    sink = idempotent_parquet_sink(str(tmp_path / "out"))
+    groups, cached = {}, {}
+
+    def counted(batch_df, batch_id):
+        # the sink's jobs run on the stream thread: tag them per batch,
+        # then hand the thread its own job group (the run id) back
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        groups[batch_id] = f"sink-{uuid.uuid4().hex}"
+        sc.setLocalProperty("spark.jobGroup.id", groups[batch_id])
+        try:
+            sink(batch_df, batch_id)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+        lvl = batch_df.storageLevel
+        cached[batch_id] = lvl.useMemory or lvl.useDisk
+
+    events = read_file_stream(spark, str(in_dir), "*.parquet", max_files_per_trigger=1)
+    q = (
+        streaming_gmv(events, "1 hour")
+        .writeStream.foreachBatch(counted)
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    input_rows = {p["batchId"]: p["numInputRows"] for p in q.recentProgress}
+    sync_status_store(sc)
+    jobs = {
+        b: len(sc.statusTracker().getJobIdsForGroup(g)) for b, g in groups.items()
+    }
+
+    assert sorted(jobs) == sorted(input_rows)
+    assert 0 in input_rows.values() and any(input_rows.values()), (
+        f"need data and no-data batches: {input_rows}"
+    )
+    assert jobs == {b: 1 for b in input_rows}, f"jobs per batch {jobs}, rows {input_rows}"
+    assert not any(cached.values()), "the sink left the batch persisted"
+
+
+def test_parquet_sink_empty_batch_is_a_no_op(spark, tmp_path):
+    """No emptiness probe guards the write: an empty batch after a
+    non-empty one leaves every partition and row as it was, and an empty
+    FIRST batch leaves an empty output directory."""
+    import datetime
+
+    schema = "window_start timestamp, window_end timestamp, gmv double"
+    day = datetime.datetime(2024, 1, 15)
+    rows = [
+        (day + datetime.timedelta(hours=h), day + datetime.timedelta(hours=h + 1), h * 1.5)
+        for h in range(3)
+    ]
+
+    def listing(path):
+        return sorted(p.name for p in path.iterdir() if not p.name.startswith("."))
+
+    def contents(path):
+        return sorted(map(tuple, spark.read.parquet(str(path)).collect()))
+
+    out = tmp_path / "metrics"
+    sink = idempotent_parquet_sink(str(out))
+    sink(spark.createDataFrame(rows, schema), 0)
+    parts, before = listing(out), contents(out)
+    assert len(parts) == len(before) == 3
+    sink(spark.createDataFrame([], schema), 1)
+    assert listing(out) == parts
+    assert contents(out) == before
+
+    fresh = tmp_path / "fresh"
+    idempotent_parquet_sink(str(fresh))(spark.createDataFrame([], schema), 0)
+    assert list(fresh.iterdir()) == []
+
+
 def test_custom_stateful_user_stats_matches_batch(spark, sf_dir):
     """applyInPandasWithState running profiles converge to the batch GROUP BY."""
     from e_commerce_streaming_datapipeline_spark.operators.streaming_queries import q_user_stats_stream
