@@ -14,23 +14,52 @@ KNUTH = 2654435761  # golden-ratio multiplicative hash constant
 MOD = 2**32
 
 
+def hash32(key: Column) -> Column:
+    """The 32-bit Knuth hash of a non-negative integer key, in [0, 2^32).
+    The key is reduced mod 2^31 before the multiply so the product stays
+    under 2^63: Spark wraps int64 where DuckDB promotes, so an unreduced
+    multiply diverges past key ~3.47e9.  The full hash is a sort key for
+    pseudo-random order.  SQL twin: ``hash32_sql``."""
+    return (key % F.lit(2**31)) * F.lit(KNUTH) % F.lit(MOD)
+
+
+def hash32_sql(key: str) -> str:
+    """``hash32`` as DuckDB SQL text, for oracles."""
+    return f"((({key}) % 2147483648) * 2654435761) % 4294967296"
+
+
+def _check_buckets(buckets: int) -> None:
+    # hash32 * buckets must stay under 2^63
+    if not 1 <= buckets < 2**31:
+        raise ValueError(f"buckets must be in [1, 2^31), got {buckets}")
+
+
 def hash_bucket(key: Column, buckets: int) -> Column:
-    """Deterministic pseudo-random bucket in [0, buckets) from an integer
-    key — identical arithmetic on any engine (no RNG, no engine hash)."""
-    return (key * F.lit(KNUTH)) % F.lit(MOD) % F.lit(buckets)
+    """Deterministic pseudo-random bucket in [0, buckets) from a non-negative
+    integer key — identical arithmetic on any engine (no RNG, no engine
+    hash).  The bucket is taken from the HIGH bits of ``hash32``
+    (``hash32 * buckets >> 32``): ``hash32 % buckets`` keeps the low bits,
+    and for an even bucket count its parity is just ``key % 2``, so
+    consecutive ids never share a bucket.  SQL twin: ``hash_bucket_sql``."""
+    _check_buckets(buckets)
+    return F.shiftright(hash32(key) * F.lit(buckets), 32)
+
+
+def hash_bucket_sql(key: str, buckets: int) -> str:
+    """``hash_bucket`` as DuckDB SQL text, for oracles."""
+    _check_buckets(buckets)
+    return f"(({hash32_sql(key)} * {buckets}) >> 32)"
 
 
 def hash_half(key: Column) -> Column:
     """Deterministic 0/1 two-way split from a non-negative integer key: the
-    HIGH bit of the 32-bit Knuth hash.  ``hash_bucket(key, 2)`` keeps the
-    low bit, which for an odd multiplier is just ``key % 2`` — consecutive
-    ids (a clone at id+1) always land on opposite sides.  The key is
-    reduced mod 2^31 before the multiply so the product stays under 2^63:
-    Spark wraps int64 where DuckDB promotes, so an unreduced multiply
-    diverges past key ~3.47e9.  SQL twin: ``hash_half_sql``."""
-    return F.shiftright((key % F.lit(2**31)) * F.lit(KNUTH) % F.lit(MOD), 31)
+    HIGH bit of ``hash32``, equal to ``hash_bucket(key, 2)``.  The low bit
+    is, for an odd multiplier, just ``key % 2`` — consecutive ids (a clone
+    at id+1) would always land on opposite sides.  SQL twin:
+    ``hash_half_sql``."""
+    return F.shiftright(hash32(key), 31)
 
 
 def hash_half_sql(key: str) -> str:
     """``hash_half`` as DuckDB SQL text, for oracles."""
-    return f"(((({key}) % 2147483648) * 2654435761) % 4294967296 >> 31)"
+    return f"({hash32_sql(key)} >> 31)"

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from e_commerce_streaming_datapipeline_spark.functions.rounding import fround
-from e_commerce_streaming_datapipeline_spark.operators.sampling import hash_bucket
+from e_commerce_streaming_datapipeline_spark.functions.hashing import hash_bucket, hash_bucket_sql
 from e_commerce_streaming_datapipeline_spark.functions.scalars import scalar_join
 from e_commerce_streaming_datapipeline_spark.plans.registry import query
 from e_commerce_streaming_datapipeline_spark.sources.batch import load_table
@@ -246,11 +246,11 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "source_mixture_sample",
-    oracle="""
+    oracle=f"""
 WITH rated AS (
     SELECT doc_id, source,
         (CAST(substr(source, 4) AS INT) * 37) % 101 AS target_pct,
-        (doc_id * 2654435761) % 4294967296 % 100    AS bucket
+        {hash_bucket_sql("doc_id", 100)} AS bucket
     FROM documents
 )
 SELECT
@@ -512,7 +512,7 @@ WITH toks AS (
         len(t)                                                        AS nt,
         len(list_distinct(t)) * 1.0 / len(t)                          AS ttr,
         md5(array_to_string(list_sort(list_distinct(t)), ' '))        AS bag,
-        (doc_id * 2654435761) % 4294967296 % 100                      AS bucket
+        {hash_bucket_sql("doc_id", 100)} AS bucket
     FROM toks
 ), q AS (
     SELECT *,
@@ -755,7 +755,7 @@ _N_SHARDS = 64
     oracle=f"""
 WITH assigned AS (
     SELECT
-        (doc_id * 2654435761) % 4294967296 % {_N_SHARDS} AS shard,
+        {hash_bucket_sql("doc_id", _N_SHARDS)} AS shard,
         n_chars,
         length(text) - length(replace(text, ' ', '')) + 1 AS tokens
     FROM documents
@@ -1150,7 +1150,7 @@ def q_target_encoding_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     "kfold_assignment",
     oracle=f"""
 WITH folded AS (
-    SELECT (doc_id * 2654435761) % 4294967296 % {_KFOLDS} AS fold, lang, n_chars
+    SELECT {hash_bucket_sql("doc_id", _KFOLDS)} AS fold, lang, n_chars
     FROM documents
 )
 SELECT
@@ -2275,7 +2275,7 @@ def q_kanon_generalization_ladder(spark: SparkSession, sf_dir: str) -> DataFrame
     "group_kfold_assignment",
     oracle=f"""
 WITH folded AS (
-    SELECT (user_id * 2654435761) % 4294967296 % {_KFOLDS} AS fold,
+    SELECT {hash_bucket_sql("user_id", _KFOLDS)} AS fold,
            user_id, event_type, coalesce(value, 0.0) AS value
     FROM events WHERE user_id IS NOT NULL
 ), per_user AS (
@@ -2314,8 +2314,6 @@ def q_group_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit — both map-side-combinable; the audit scalar joins back as a
     broadcast.  NULL users belong to no entity and are excluded on both
     engines."""
-    from e_commerce_streaming_datapipeline_spark.operators.sampling import hash_bucket
-
     folded = (
         load_table(spark, "events", sf_dir)
         .where(F.col("user_id").isNotNull())

@@ -24,7 +24,10 @@ from pyspark.sql import functions as F
 from e_commerce_streaming_datapipeline_spark.functions.hashing import (
     KNUTH as _KNUTH,
     MOD as _MOD,
+    hash32,
+    hash32_sql,
     hash_bucket,
+    hash_bucket_sql,
 )
 from e_commerce_streaming_datapipeline_spark.functions.rounding import fround
 from e_commerce_streaming_datapipeline_spark.plans.registry import query
@@ -32,10 +35,10 @@ from e_commerce_streaming_datapipeline_spark.sources.batch import load_table, lo
 
 @query(
     "stratified_doc_sample",
-    oracle="""
+    oracle=f"""
 WITH sampled AS (
     SELECT *,
-        (doc_id * 2654435761) % 4294967296 % 100 AS bucket,
+        {hash_bucket_sql("doc_id", 100)} AS bucket,
         CASE lang WHEN 'en' THEN 50 WHEN 'de' THEN 30 ELSE 20 END AS pct
     FROM documents
 )
@@ -70,13 +73,13 @@ def q_stratified_doc_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "group_sample_topk",
-    oracle="""
+    oracle=f"""
 SELECT lang, doc_id, n_chars, rn
 FROM (
     SELECT lang, doc_id, n_chars,
            row_number() OVER (
                PARTITION BY lang
-               ORDER BY (doc_id * 2654435761) % 4294967296, doc_id
+               ORDER BY {hash32_sql("doc_id")}, doc_id
            ) AS rn
     FROM documents WHERE doc_id IS NOT NULL
 )
@@ -99,7 +102,7 @@ def q_group_sample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").isNotNull()
     )
     w = Window.partitionBy("lang").orderBy(
-        hash_bucket(F.col("doc_id"), _MOD), F.col("doc_id")
+        hash32(F.col("doc_id")), F.col("doc_id")
     )
     return (
         docs.select("lang", "doc_id", "n_chars")

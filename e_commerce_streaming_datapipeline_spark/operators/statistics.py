@@ -23,7 +23,12 @@ from pyspark.sql import functions as F
 from e_commerce_streaming_datapipeline_spark.functions.checkpoints import round_checkpoint
 from e_commerce_streaming_datapipeline_spark.functions.rounding import fround
 from e_commerce_streaming_datapipeline_spark.functions.scalars import scalar_join
-from e_commerce_streaming_datapipeline_spark.functions.hashing import hash_half, hash_half_sql
+from e_commerce_streaming_datapipeline_spark.functions.hashing import (
+    hash_bucket,
+    hash_bucket_sql,
+    hash_half,
+    hash_half_sql,
+)
 from e_commerce_streaming_datapipeline_spark.plans.registry import query
 from e_commerce_streaming_datapipeline_spark.sources.batch import load_table
 
@@ -3065,10 +3070,10 @@ def q_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "kfold_auc",
-    oracle="""
+    oracle=f"""
 WITH scored AS (
     SELECT
-        (doc_id * 2654435761) % 4294967296 % 5 AS fold,
+        {hash_bucket_sql("doc_id", 5)} AS fold,
         round((len(list_distinct(string_split(text, ' ')))
                / len(string_split(text, ' ')) * 50
                + least(len(string_split(text, ' ')), 100) / 100 * 50)
@@ -3124,7 +3129,6 @@ def q_kfold_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NULL ``doc_id`` docs have no fold (the split hashes doc_id), so they
     are out of the evaluation on BOTH engines (r8 edge pin)."""
-    from e_commerce_streaming_datapipeline_spark.operators.sampling import hash_bucket
     from e_commerce_streaming_datapipeline_spark.operators.text import text_stats
 
     docs = load_table(spark, "documents", sf_dir).where(

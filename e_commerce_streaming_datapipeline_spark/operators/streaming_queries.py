@@ -635,34 +635,12 @@ GROUP BY 1
 """,
 )
 def q_user_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arbitrary-state streaming op (``applyInPandasWithState``): per-user
-    running profiles, hash-checked against the batch GROUP BY oracle.  The
-    memory sink collects every update; the LATEST update per user (max
-    last_seen, n_events as tiebreak) is the current profile.
-
-    Finalization contract: the profile equals the batch GROUP BY only while
-    a user's state has not been idle-evicted — in this availableNow replay
-    the watermark advances once at the end, so no eviction fires and the
-    equality is exact.  In a long-running multi-batch deployment an evicted
-    user's counters restart at zero by design (that IS the bounded-state
-    trade); the latest row then profiles the active horizon, and ordering
-    by last_seen — not by the no-longer-monotonic n_events — is what keeps
-    "latest" meaning latest."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
+    """Per-user running profiles (``streaming_user_stats``, a native
+    stateful aggregation), hash-checked against the batch GROUP BY oracle.
+    Complete mode, so the memory sink holds one row per user: the current
+    profile."""
     events = read_file_stream(spark, sf_dir)
-    updates = _run_to_table(
-        spark, streaming_user_stats(events), "user_stats_stream", output_mode="update"
-    )
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("last_seen").desc(), F.col("n_events").desc()
-    )
-    return (
-        updates.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return _run_to_table(spark, streaming_user_stats(events), "user_stats_stream")
 
 
 @query(

@@ -3,7 +3,9 @@ per-micro-batch health metrics the reference exports through its Prometheus
 servlet sinks (``infrastructure/spark/metrics.properties:1-8``,
 ``infrastructure/prometheus/prometheus.yml:22-33``) — input rows, processed
 rows/sec, batch duration, watermark, and state-store size — without any
-external infrastructure.
+external infrastructure.  Each record also keeps where the batch's time
+went: its phases (``addBatch``, ``queryPlanning``, ``walCommit``,
+``triggerExecution``) and its state operators' commit and update times.
 
 This is the one custom-code component SURVEY §4 sanctions beyond stock
 DataFrame plans ("a custom StreamingQueryListener for Prometheus-style
@@ -18,7 +20,7 @@ the engine's answer to the reference's Grafana panels
 from __future__ import annotations
 
 import threading
-from dataclasses import dataclass, field
+from dataclasses import astuple, dataclass, field, fields
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
@@ -35,6 +37,20 @@ class BatchMetric:
     state_rows: int
     state_memory_bytes: int
     rows_dropped_by_watermark: int = 0
+    # micro-batch phases (progress.durationMs)
+    add_batch_ms: int = 0
+    query_planning_ms: int = 0
+    wal_commit_ms: int = 0
+    trigger_execution_ms: int = 0
+    # summed over the batch's stateful operators
+    state_commit_ms: int = 0
+    state_all_updates_ms: int = 0
+    state_store_instances: int = 0
+
+
+_SQL_TYPES = {"str": "string", "int": "long", "float": "double"}
+# to_df's schema: one column per BatchMetric field, in field order
+_SCHEMA = ", ".join(f"{f.name} {_SQL_TYPES[f.type]}" for f in fields(BatchMetric))
 
 
 @dataclass
@@ -60,6 +76,7 @@ class MetricsCollector(StreamingQueryListener):
         # operator, and total state is the number that must plateau under
         # watermark eviction
         ops = p.stateOperators or []
+        phases = p.durationMs or {}
         m = BatchMetric(
             query_name=p.name or "",
             batch_id=p.batchId,
@@ -72,6 +89,13 @@ class MetricsCollector(StreamingQueryListener):
             rows_dropped_by_watermark=sum(
                 int(s.numRowsDroppedByWatermark) for s in ops
             ),
+            add_batch_ms=int(phases.get("addBatch", 0)),
+            query_planning_ms=int(phases.get("queryPlanning", 0)),
+            wal_commit_ms=int(phases.get("walCommit", 0)),
+            trigger_execution_ms=int(phases.get("triggerExecution", 0)),
+            state_commit_ms=sum(int(s.commitTimeMs) for s in ops),
+            state_all_updates_ms=sum(int(s.allUpdatesTimeMs) for s in ops),
+            state_store_instances=sum(int(s.numStateStoreInstances) for s in ops),
         )
         with self._lock:
             self.records.append(m)
@@ -94,24 +118,5 @@ class MetricsCollector(StreamingQueryListener):
         """The captured metrics as a relation — the queryable surface the
         reference delegates to Prometheus/Grafana."""
         with self._lock:
-            rows = [
-                (
-                    m.query_name,
-                    m.batch_id,
-                    m.num_input_rows,
-                    m.processed_rows_per_sec,
-                    m.batch_duration_ms,
-                    m.watermark,
-                    m.state_rows,
-                    m.state_memory_bytes,
-                    m.rows_dropped_by_watermark,
-                )
-                for m in self.records
-            ]
-        return spark.createDataFrame(
-            rows,
-            "query_name string, batch_id long, num_input_rows long, "
-            "processed_rows_per_sec double, batch_duration_ms long, "
-            "watermark string, state_rows long, state_memory_bytes long, "
-            "rows_dropped_by_watermark long",
-        )
+            rows = [astuple(m) for m in self.records]
+        return spark.createDataFrame(rows, _SCHEMA)

@@ -206,3 +206,40 @@ def test_hash_half_splits_consecutive_ids(spark):
     assert 400 < sum(got[i] for i in range(1000)) < 600
     together = sum(got[i] == got[i + 1] for i in range(999))
     assert 150 < together < 850, together
+
+
+def test_hash_bucket_spreads_consecutive_ids_past_int64_wrap(spark):
+    """Bucketed samples, shards and folds take the Knuth hash's HIGH bits:
+    with the low bits, an even bucket count gives bucket parity ==
+    ``id % 2``.  All 100 buckets fill about evenly, bucket parity is
+    independent of id parity, and Spark equals the DuckDB twin row for row
+    (the full 32-bit hash too), also past ~3.47e9 where an unreduced
+    multiply wraps int64 in Spark."""
+    import duckdb
+
+    from e_commerce_streaming_datapipeline_spark.functions.hashing import (
+        hash32,
+        hash32_sql,
+        hash_bucket,
+        hash_bucket_sql,
+    )
+
+    ids = list(range(10_000)) + [3_500_000_000 + i for i in range(50)] + [2**40 + 7]
+    df = spark.createDataFrame([(i,) for i in ids], "id long")
+    got = {
+        r[0]: (r[1], r[2])
+        for r in df.select("id", hash_bucket(F.col("id"), 100), hash32(F.col("id"))).collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t AS SELECT unnest(?::BIGINT[]) AS id", [ids])
+    oracle = con.execute(
+        f"SELECT id, {hash_bucket_sql('id', 100)}, {hash32_sql('id')} FROM t"
+    ).fetchall()
+    assert {r[0]: (r[1], r[2]) for r in oracle} == got
+    buckets = [got[i][0] for i in range(10_000)]
+    assert set(buckets) == set(range(100))
+    assert max(buckets.count(b) for b in range(100)) < 200
+    same_parity = sum(b % 2 == i % 2 for i, b in enumerate(buckets))
+    assert 4_000 < same_parity < 6_000, same_parity
+    with pytest.raises(ValueError):
+        hash_bucket(F.col("id"), 2**31)

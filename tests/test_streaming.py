@@ -7,6 +7,7 @@ import os
 import tempfile
 import uuid
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -182,29 +183,112 @@ def test_parquet_sink_empty_batch_is_a_no_op(spark, tmp_path):
     assert list(fresh.iterdir()) == []
 
 
-def test_custom_stateful_user_stats_matches_batch(spark, sf_dir):
-    """applyInPandasWithState running profiles converge to the batch GROUP BY."""
-    from e_commerce_streaming_datapipeline_spark.operators.streaming_queries import q_user_stats_stream
+def _batch_user_profiles(events):
+    """The batch GROUP BY every per-user stream profile must equal."""
+    from e_commerce_streaming_datapipeline_spark.functions.rounding import fround
 
-    got = {r["user_id"]: r for r in q_user_stats_stream(spark, sf_dir).collect()}
-    batch = (
-        load_table(spark, "events", sf_dir)
-        .groupBy("user_id")
+    return {
+        r["user_id"]: tuple(r)
+        for r in events.groupBy("user_id")
         .agg(
             F.count("*").alias("n_events"),
-            F.round(F.sum(F.coalesce("value", F.lit(0.0))), 2).alias("total_value"),
-            F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias("n_purchases"),
+            fround(F.sum(F.coalesce("value", F.lit(0.0))), 2).alias("total_value"),
+            F.count(F.when(F.col("event_type") == "purchase", 1)).alias("n_purchases"),
             F.max("ts").alias("last_seen"),
         )
         .collect()
-    )
-    assert len(got) == len(batch)
-    for r in batch:
-        g = got[r["user_id"]]
-        assert (g["n_events"], g["n_purchases"], g["last_seen"]) == (
-            r["n_events"], r["n_purchases"], r["last_seen"]
+    }
+
+
+def test_custom_stateful_user_stats_matches_batch(spark, sf_dir):
+    """Streaming per-user profiles equal the batch GROUP BY exactly."""
+    from e_commerce_streaming_datapipeline_spark.operators.streaming_queries import q_user_stats_stream
+
+    got = {r["user_id"]: tuple(r) for r in q_user_stats_stream(spark, sf_dir).collect()}
+    assert got == _batch_user_profiles(load_table(spark, "events", sf_dir))
+
+
+def test_user_stats_profile_survives_idle_gaps_across_batches(spark, sf_dir, tmp_path):
+    """The profile is never idle-evicted: the events fixture replayed as
+    time-sorted files, one per micro-batch, with users idle for more than
+    an hour of event time across whole batches, still ends at the batch
+    GROUP BY.  A profile that reset a user's counters after an idle hour
+    would depend on when triggers fire."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from e_commerce_streaming_datapipeline_spark.streaming.processors import streaming_user_stats
+
+    tbl = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    tbl = tbl.take(pc.sort_indices(tbl, [("ts", "ascending")]))
+    n_chunks = 20
+    per = -(-tbl.num_rows // n_chunks)
+    chunk_dir = tmp_path / "user_chunks"
+    chunk_dir.mkdir()
+    chunks = []
+    for c in range(n_chunks):
+        part = tbl.slice(c * per, per)
+        path = str(chunk_dir / f"events-{c:02d}.parquet")
+        pq.write_table(part, path)
+        # the file source orders by modification time
+        os.utime(path, (1_700_000_000 + c, 1_700_000_000 + c))
+        chunks.append(part.select(["user_id", "ts"]).to_pandas())
+
+    # precondition: some user sits out a whole batch and is idle for more
+    # than an hour of event time across it
+    last_seen, idle = {}, False
+    for part in chunks:
+        present = set(part["user_id"])
+        batch_end = part["ts"].max()
+        idle |= any(
+            u not in present and batch_end - t > pd.Timedelta(hours=1)
+            for u, t in last_seen.items()
         )
-        assert abs(g["total_value"] - r["total_value"]) < 0.02
+        last_seen.update(part.groupby("user_id")["ts"].max().to_dict())
+    assert idle, "no user is idle for more than an hour across a batch"
+
+    stream = read_file_stream(
+        spark, str(chunk_dir), "events-*.parquet", max_files_per_trigger=1
+    )
+    name = f"t_{uuid.uuid4().hex[:10]}"
+    q = (
+        streaming_user_stats(stream)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert sum(1 for p in q.recentProgress if p["numInputRows"] > 0) == n_chunks
+    # update mode logs every revision; the latest has the largest count
+    latest = (
+        spark.table(name)
+        .groupBy("user_id")
+        .agg(F.max(F.struct("n_events", "total_value", "n_purchases", "last_seen")).alias("p"))
+        .select("user_id", "p.*")
+    )
+    got = {r["user_id"]: tuple(r) for r in latest.collect()}
+    assert got == _batch_user_profiles(load_table(spark, "events", sf_dir))
+
+
+def test_user_stats_plan_has_no_python_state_operator(spark, sf_dir):
+    """The per-user profile runs as a native stateful aggregation: no
+    pandas state operator and no Python worker in its executed plan."""
+    from e_commerce_streaming_datapipeline_spark.streaming.processors import streaming_user_stats
+
+    q = (
+        streaming_user_stats(read_file_stream(spark, sf_dir))
+        .writeStream.format("noop")
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    plan = q._jsq.explainInternal(False)
+    assert "StateStoreSave" in plan, plan
+    assert "FlatMapGroupsInPandasWithState" not in plan, plan
 
 
 def test_checkpoint_restart_resumes_without_reprocessing(spark, sf_dir, tmp_path):
@@ -403,10 +487,41 @@ def test_metrics_collector_captures_batch_health(spark, sf_dir):
         assert total_rows == load_table(spark, "events", sf_dir).count()
         assert all(m.batch_duration_ms >= 0 for m in mine)
         assert any(m.state_rows > 0 for m in mine)  # windowed agg has state
+        # a stateful batch reports its phases and state-store timings
+        assert any(m.add_batch_ms > 0 for m in mine)
+        assert any(m.state_commit_ms > 0 for m in mine)
+        assert all(m.trigger_execution_ms >= m.add_batch_ms for m in mine)
+        assert any(m.state_store_instances > 0 for m in mine)
         mdf = collector.to_df(spark)
         assert mdf.where(F.col("query_name") == name).count() == len(mine)
     finally:
         collector.detach(spark)
+
+
+def test_metrics_collector_schema(spark):
+    """``to_df`` keeps its original columns first and appends the batch
+    phases and state-operator timings."""
+    from e_commerce_streaming_datapipeline_spark.streaming.monitoring import MetricsCollector
+
+    schema = MetricsCollector().to_df(spark).schema
+    assert [(f.name, f.dataType.simpleString()) for f in schema] == [
+        ("query_name", "string"),
+        ("batch_id", "bigint"),
+        ("num_input_rows", "bigint"),
+        ("processed_rows_per_sec", "double"),
+        ("batch_duration_ms", "bigint"),
+        ("watermark", "string"),
+        ("state_rows", "bigint"),
+        ("state_memory_bytes", "bigint"),
+        ("rows_dropped_by_watermark", "bigint"),
+        ("add_batch_ms", "bigint"),
+        ("query_planning_ms", "bigint"),
+        ("wal_commit_ms", "bigint"),
+        ("trigger_execution_ms", "bigint"),
+        ("state_commit_ms", "bigint"),
+        ("state_all_updates_ms", "bigint"),
+        ("state_store_instances", "bigint"),
+    ]
 
 
 def test_python_datasource_stream_matches_batch(spark, tmp_path):
