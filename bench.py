@@ -33,243 +33,236 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
-HEADLINE = [
-    "pricing_summary",        # scan + hash agg (TPC-H Q1 shape)
-    "gmv_minutely",           # tumbling window agg
-    "gmv_sliding",            # sliding windows (2x row expansion)
-    "funnel_hourly",          # conditional aggregation
-    "dropoff_hourly",         # window + key grouping, collect_list sample
-    "payment_hourly",         # JSON decode + grouped agg
-    "complete_funnel",        # aggregate-then-join (3 aggs + 2 joins)
-    "order_details",          # fact-fact shuffle join
-    "shipping_priority",      # TPC-H Q3: selective 3-way join + top-10
-    "order_priority_check",   # TPC-H Q4: EXISTS -> left-semi with residual
-    "returned_item_ranking",  # TPC-H Q10: join + grouped revenue top-20
-    "large_volume_customers", # TPC-H Q18: HAVING subquery -> agg-then-join
-    "bracket_revenue",        # TPC-H Q19: disjunctive bracket predicates
-    "gapfilled_minutely_gmv", # generated spine + zero-fill left join
-    "asof_last_purchase",     # as-of join (union + running last)
-    "user_activity_1h",       # range join (bucketed equi-join rewrite)
-    "region_revenue",         # multi-hop broadcast dim joins
-    "top_orders_per_customer",  # window function top-k
-    "user_sessions",          # gaps-and-islands sessionization
-    "dedup_events",           # keyed dedup via row_number
-    "dedup_docs_bag",         # content-hash dedup
-    "minhash_near_dups",      # MinHash + LSH near-dup pipeline
-    "simhash_docs",           # simhash signatures
-    "text_stats",             # text analysis scan
-    "embedding_topk",         # brute-force cosine top-k
-    "embedding_topk_pandas",  # Arrow/Pandas-UDF similarity path
-    "multimodal_decode",      # mapInPandas decode stage
-    "embedding_topk_lsh",     # random-hyperplane LSH candidate pruning
-    "pii_redaction",          # chained regexp_replace scan
-    "benchmark_decontam",     # n-gram broadcast decontamination
-    "sequence_packing",       # window cumsum token packing
-    "gmv_stream_minutely",    # real Structured Streaming (availableNow)
-]
-
-# Second section (round 2+): the heavy analytics and streaming queries
-# outside the original 32.  Kept separate so the core set stays
-# round-over-round comparable; `core32_total` tracks the original metric.
-EXTENDED = [
-    "scd2_priority_history",  # SCD2 interval build (full-history windowing)
-    "grouping_sets_revenue",  # GROUPING SETS multi-level rollup
-    "journey_stream_join",    # 3-way chained stream-stream join
-    "curation_pipeline",      # end-to-end curation (redact+filter+dedup+pack)
-    "heavy_hitters_cms",      # count-min sketch build + estimate join
-    "chunk_dedup_retention",  # chunk-hash cross-doc dedup (paragraph-style)
-    "embedding_topk_sq",      # int8 scalar-quantized ANN + exact rerank
-    "attribution_first_last", # range join + min_by/max_by attribution
-    "kmeans_lloyd_step",      # exact-integer Lloyd assignment (O(N*K*D) map)
-    "session_dynamic_gap_stats",  # dynamic-gap session_window aggregate
-    "cohort_retention",       # first-seen cohort triangle (distinct + rollup)
-    "unigram_logprob_scores", # corpus LM scoring (vocab agg + token join)
-    "gmv_pattern_topk",       # time-series subsequence search (frame pass)
-    "zorder_layout_stats",    # Z-order clustering quality (layout diagnostics)
-    "bloom_filter_prejoin",   # explicit Bloom runtime filter + fp-rate audit
-    "equi_depth_histogram",   # ntile equal-count optimizer statistics
-    "supplier_triangles",     # degree-oriented triangle census (graph joins)
-    "scd2_pit_lookup",        # point-in-time dimension lookup (temporal join)
-    "k_anonymity_audit",      # privacy QI-group audit (distinct-count agg)
-    "join_size_cms_estimate", # sketch inner-product join-cardinality estimate
-    "attribution_time_decay", # multi-touch credit (pair join + window norm)
-]
-
-# Third section (round 3+): frozen like the others so every round reports
-# core32, extended21, and r3 totals separately (round-over-round comparable).
-EXTENDED_R3 = [
-    "cdc_chunks",             # content-defined chunking + chunk-hash dup counts
-    "semantic_dedup",         # SemDeDup greedy prefix dedup (cluster-blocked)
-    "bigram_perplexity",      # add-k bigram LM scoring (vocab-keyed joins)
-    "dup_ngram_coverage",     # 8-gram exact-substring duplication signal
-    "weighted_doc_sample",    # Efraimidis-Spirakis weighted top-k sample
-    "observed_quality_metrics",  # observe() counters riding the main pass
-    "jdbc_upsert_roundtrip",  # live Derby MERGE stage+merge+replay+readback
-    "lambda_unified_gmv",     # batch layer UNION real streaming speed layer
-    "revenue_cusum_changepoints",  # exact-integer CUSUM over the daily rollup
-    "event_path_ngrams",      # behavioral path mining (1 agg + TakeOrdered)
-    "recursive_reachability", # WITH RECURSIVE BFS (UnionLoop iterate)
-    "rfm_segments",           # RFM quartile grid (dim-sized NTILE windows)
-    "interpurchase_survival", # partitioned lag + one-pass threshold unpivot
-    "bigram_pmi_topk",        # collocation lift (flatMap + broadcast vocab)
-    "incremental_minhash_dedup",  # batch probe vs stored LSH band index
-    "source_unigram_divergence",  # pairwise TV drift (exact-integer fold)
-    "bootstrap_revenue_ci",   # 200-replicate percentile bootstrap (spine-sized)
-    "dpp_partitioned_join",   # runtime dynamicpruning partition filter
-    "scd2_stream_merge",      # incremental SCD2 CDC merge (foreachBatch store)
-    "bm25_topk",              # lexical ranker: query-term postings only shuffle
-    "hybrid_rrf_fusion",      # BM25 + cosine reciprocal-rank fusion
-    "state_store_inspect",    # statestore reader over the dedup checkpoint
-    "checkpoint_resume_stream",  # two-start exactly-once restart proof
-    "promo_window_attribution",  # keyless interval join, bin-bucketized
-    "dq_expectations",        # one-pass declarative data-quality gate
-    "changelog_replay_stream",   # update-mode changelog capture + replay
-    "ngram_udtf_topk",        # polymorphic analyze() UDTF trigram top-k
-    "manifest_time_travel",   # manifest-committed snapshots + time travel
-    "supplier_components",    # iterative min-label connected components
-    "forecast_backtest_snaive",  # seasonal-naive walk-forward backtest
-    "agg_state_inspect",      # statestore reader over agg accumulators
-    "l_diversity_audit",      # homogeneity-attack privacy audit
-    "trained_ivf_topk",       # k-means-trained IVF: train -> index -> search
-    "psi_value_drift",        # PSI input-drift monitor (fixed-point fold)
-    "source_quantile_normalize",  # cross-source score normalization
-    "auc_quality_langid",     # exact tie-aware Mann-Whitney AUC
-    "retrieval_eval_mrr",     # MRR/P@k/R@k of the BM25 ranker
-    "retrieval_eval_ndcg",    # NDCG@10, literal weight table
-    "attribution_linear_cents",  # largest-remainder credit split
-    "calibration_bins",       # reliability bins + exact Brier decomposition
-    "conformal_interval",     # split-conformal coverage, order statistics
-    "revenue_gini",           # exact rank-formulation Gini
-    "t_closeness_audit",      # TVD per QI group vs global (privacy trio)
-    "term_postings",          # inverted-index build, bounded posting heads
-    "psi_drift_stream",       # PSI maintained by a streaming aggregation
-    "kfold_auc",              # per-fold exact CV-AUC (partitioned ranks)
-    "markov_attribution",     # removal-effect attribution, integer chain
-    "cuped_did_lift",         # naive/DiD/CUPED estimator ladder
-    "matryoshka_recall_audit",  # truncated-dim retrieval recall
-    "quantile_pinball_backtest",  # P10/P50/P90 pinball, exact x10 cents
-    "compaction_plan",        # cumulative-fill small-file bin packing
-    "holt_forecast_backtest",  # recursive smoothing: HOF fold vs CTE walk
-    "skew_key_diagnosis",     # heavy keys, skew factor, salt fan-out
-    "popularity_rec_hitrate",  # segment top-5 recommender, temporal eval
-    "chi2_independence",      # lang x source contingency, exact terms
-    "knn_label_accuracy",     # majority-vote kNN classifier eval
-    "eb_rate_shrinkage",      # empirical-Bayes posterior rates
-    "pr_curve_thresholds",    # operating-point table under the AUC
-    "leaderboard_stream",     # complete-mode sorted top-10 on the stream
-    "mmr_diversified_topk",   # greedy diversity re-rank, integer kernel
-    "seasonal_decompose_daily",  # trend/weekday-seasonal/residual split
-    "residual_anomaly_days",  # robust z on the decomposed residuals
-]
-
-# Fourth section (round 4+): frozen like the others.  The rank-rewrite
-# queries stay in their original sections (their per-query deltas are the
-# round-4 regression story); this section holds queries REGISTERED in
-# round 4.
-EXTENDED_R4 = [
-    "salted_join_rewrite",    # diagnosed partial-salting join (hot-key cure)
-    "exact_price_percentiles",  # fact-grain exact percentile_disc (2-phase rank)
-    "supplier_components_star",  # large-star/small-star CC (O(log n) rounds)
-    "embedding_topk_pq",      # product-quantization codebooks + integer ADC
-    "bpe_learn_merges",       # 5-round BPE merge-learning loop
-    "pq_encode_stream",       # streaming PQ index census (literal codebook)
-    "embedding_topk_pq_rerank",  # two-tier ADC shortlist + exact rerank
-    "dp_noisy_lang_counts",   # DP geometric-mechanism count release
-    "neyman_allocation_sample",  # variance-optimal stratified allocation
-]
-
-# Fifth section (round 5+): queries REGISTERED in round 5.
-EXTENDED_R5 = [
-    "embedding_topk_ivf_adc",  # composed IVF-prune x PQ-ADC x exact rerank
-    "bpe_encode_tokens",       # learned merges applied: post-merge census
-    "dsir_importance_sample",  # DSIR unigram log-ratio data selection
-    "pipe_syntax_revenue",     # Spark 4 SQL pipe (|>) rollup
-    "ivf_probe_recall_audit",  # trained-IVF recall-vs-nprobe tuning curve
-    "complete_funnel_stream",  # windowed agg -> windowed agg -> stream join
-    "dsir_admission_stream",   # DSIR gate per micro-batch (foreachBatch)
-]
-
-# Sixth section (round 6+): queries REGISTERED in round 6.
-EXTENDED_R6 = [
-    "hilbert_layout_stats",    # Hilbert vs Z-order span tightness (32-col curve)
-    "logreg_sgd_step",         # two exact fixed-point GD steps (2 corpus aggs)
-    "sql_udf_revenue",         # SQL UDF + table function, 4-row range join
-    "ivm_delta_merge",         # incremental view maintenance (delta + merge)
-    "dim_refresh_stream",      # per-micro-batch refreshed stream-static dim
-    "prefix_filter_simjoin",   # PPJoin exact all-pairs similarity join
-    "kmv_set_overlap",         # KMV/theta sketch: distincts + set algebra
-    "lateness_watermark_profile",  # two-phase prefix-max lateness histogram
-    "dp_user_day_revenue",     # clipped user-level DP sum release
-    "temperature_mixture_weights",  # alpha=1/2 source sampling weights
-    "embedding_drift_centroid",  # exact fixed-point centroid drift monitor
-    "group_by_all_revenue",    # shared-dialect GROUP BY ALL inference
-    "pit_feature_assembly",    # point-in-time feature export (1 user shuffle)
-    "deletion_vector_scan",    # merge-on-read position deletes (anti-join DV)
-    "fisher_discriminative_dims",  # exact-integer class-separation audit
-    "compaction_rewrite_roundtrip",  # OPTIMIZE executed: small files -> bins
-    "index_delta_merge",       # inverted-index stats merged, not rebuilt
-    "shuffle_sizing_advisor",  # partition/file sizing from exact row widths
-    "vacuum_orphan_files",     # manifest-referenced vacuum, snapshots intact
-    "index_tombstone_merge",   # index deletes by per-term subtraction
-    "decontam_threshold_sweep",  # contamination-cutoff tuning curve
-    "telemetry_double_fire_audit",  # near-dup EVENTS via 2-bucket range join
-]
-
-
-# Seventh section (round 7+): queries REGISTERED in round 7.
-EXTENDED_R7 = [
-    "jaccard_threshold_sweep",     # dedup-cutoff tuning curve over LSH pairs
-    "packing_efficiency_sweep",    # context-length budget tuning curve
-    "cross_source_leakage_matrix", # pairwise source n-gram contamination
-    "kanon_generalization_ladder", # QI coarsening ladder to reach k-anon
-    "benford_revenue_audit",       # first-digit forensic data-quality test
-    "conversion_window_sweep",     # attribution-window tuning curve
-    "schema_drift_audit",          # batch-over-batch column stats drift
-    "embedding_outlier_topk",      # diagonal-Mahalanobis vector audit
-    "session_funnel_conversion",   # ordered funnel inside session bounds
-    "cohort_ltv_triangle",         # cohort x week-of-life exact revenue
-    "partition_evolution_scan",    # two partition specs, one logical scan
-    "intra_doc_repetition_audit",  # within-doc n-gram looping detector
-    "column_stats_stream",         # per-micro-batch column-stats monitor
-    "props_schema_census",         # JSON payload key-set fingerprints
-    "experiment_power_advisor",    # MDE -> required-sample-size table
-    "vocabulary_growth_curve",     # Heaps'-law corpus-health diagnostic
-    "revenue_concentration_hhi",   # per-day buyer-concentration monitor
-]
-
-
-# Eighth section (round 8+): queries REGISTERED in round 8.
-EXTENDED_R8 = [
-    "symspell_typo_linkage",       # deletion-neighborhood fuzzy linkage
-    "golden_record_survivorship",  # duplicate-cluster canonical merge
-    "revenue_acf",                 # exact integer-centered autocorrelation
-    "decision_stump_train",        # exact best-split stump over NDV grid
-    "encoding_advisor",            # NDV + run-length encoding advisor
-    "hour_value_heatmap",          # bounded 2-D binned density rollup
-    "ivm_retract_merge",           # signed-delta IVM under deletes/updates
-    "branch_merge_conflicts",      # 3-way catalog branch merge grid
-    "group_kfold_assignment",      # leakage-safe entity-keyed folds
-    "golden_record_stream",        # streaming MDM store (partial merge)
-    "wap_publish_gate",            # write-audit-publish gate, live both ways
-    "session_gap_sensitivity",     # sessionization tuning curve, one pass
-    "kaplan_meier_conversion",     # right-censored KM curve, integer chain
-    "supplier_link_prediction",    # neighborhood-Jaccard wedge join top-k
-    "dsar_access_export",          # broadcast request set + user bundles
-    "purged_timeseries_folds",     # embargoed walk-forward CV splits
-    "sorted_neighborhood_pairs",   # SNM blocking + recall vs interval join
-    "stratified_uplift_ipw",       # subclassification treatment effect
-    "label_propagation_communities",  # 3-round synchronous LPA, unrolled
-    "rake_keyphrases",             # degree/freq keyphrase extraction
-    "supplier_pareto_frontier",    # per-nation skyline, one window pass
-    "stream_state_size_advisor",   # watermark-delay state capacity grid
-    "event_burst_detection",       # integer-threshold burst episodes
-    "ab_srm_check",                # sample-ratio-mismatch guardrail
-    "boolean_and_search",          # conjunctive postings intersection
-    "kcore_decomposition",         # 4-round degree peel, unrolled
-    "peak_concurrent_sessions",    # sweep-line interval concurrency
-    "holt_winters_backtest",       # seasonal-array fold, one-step backtest
-    "burst_detection_stream",      # mergeable arrival-count store twin
-]
+# The frozen bench sections in run order: section -> query names.  Each
+# section reports `<section>_total` (sum of warm min-of-3 times); a name never
+# moves between sections, so every total stays round-over-round comparable.
+# Queries outside every section run once each in the registry tail.
+SECTIONS: dict[str, list[str]] = {
+    # the original 32 headline queries: every physical operator class
+    "core32": [
+        "pricing_summary",        # scan + hash agg (TPC-H Q1 shape)
+        "gmv_minutely",           # tumbling window agg
+        "gmv_sliding",            # sliding windows (2x row expansion)
+        "funnel_hourly",          # conditional aggregation
+        "dropoff_hourly",         # window + key grouping, collect_list sample
+        "payment_hourly",         # JSON decode + grouped agg
+        "complete_funnel",        # aggregate-then-join (3 aggs + 2 joins)
+        "order_details",          # fact-fact shuffle join
+        "shipping_priority",      # TPC-H Q3: selective 3-way join + top-10
+        "order_priority_check",   # TPC-H Q4: EXISTS -> left-semi with residual
+        "returned_item_ranking",  # TPC-H Q10: join + grouped revenue top-20
+        "large_volume_customers", # TPC-H Q18: HAVING subquery -> agg-then-join
+        "bracket_revenue",        # TPC-H Q19: disjunctive bracket predicates
+        "gapfilled_minutely_gmv", # generated spine + zero-fill left join
+        "asof_last_purchase",     # as-of join (union + running last)
+        "user_activity_1h",       # range join (bucketed equi-join rewrite)
+        "region_revenue",         # multi-hop broadcast dim joins
+        "top_orders_per_customer",  # window function top-k
+        "user_sessions",          # gaps-and-islands sessionization
+        "dedup_events",           # keyed dedup via row_number
+        "dedup_docs_bag",         # content-hash dedup
+        "minhash_near_dups",      # MinHash + LSH near-dup pipeline
+        "simhash_docs",           # simhash signatures
+        "text_stats",             # text analysis scan
+        "embedding_topk",         # brute-force cosine top-k
+        "embedding_topk_pandas",  # Arrow/Pandas-UDF similarity path
+        "multimodal_decode",      # mapInPandas decode stage
+        "embedding_topk_lsh",     # random-hyperplane LSH candidate pruning
+        "pii_redaction",          # chained regexp_replace scan
+        "benchmark_decontam",     # n-gram broadcast decontamination
+        "sequence_packing",       # window cumsum token packing
+        "gmv_stream_minutely",    # real Structured Streaming (availableNow)
+    ],
+    # round 2: the heavy analytics and streaming queries outside the 32
+    "extended": [
+        "scd2_priority_history",  # SCD2 interval build (full-history windowing)
+        "grouping_sets_revenue",  # GROUPING SETS multi-level rollup
+        "journey_stream_join",    # 3-way chained stream-stream join
+        "curation_pipeline",      # end-to-end curation (redact+filter+dedup+pack)
+        "heavy_hitters_cms",      # count-min sketch build + estimate join
+        "chunk_dedup_retention",  # chunk-hash cross-doc dedup (paragraph-style)
+        "embedding_topk_sq",      # int8 scalar-quantized ANN + exact rerank
+        "attribution_first_last", # range join + min_by/max_by attribution
+        "kmeans_lloyd_step",      # exact-integer Lloyd assignment (O(N*K*D) map)
+        "session_dynamic_gap_stats",  # dynamic-gap session_window aggregate
+        "cohort_retention",       # first-seen cohort triangle (distinct + rollup)
+        "unigram_logprob_scores", # corpus LM scoring (vocab agg + token join)
+        "gmv_pattern_topk",       # time-series subsequence search (frame pass)
+        "zorder_layout_stats",    # Z-order clustering quality (layout diagnostics)
+        "bloom_filter_prejoin",   # explicit Bloom runtime filter + fp-rate audit
+        "equi_depth_histogram",   # ntile equal-count optimizer statistics
+        "supplier_triangles",     # degree-oriented triangle census (graph joins)
+        "scd2_pit_lookup",        # point-in-time dimension lookup (temporal join)
+        "k_anonymity_audit",      # privacy QI-group audit (distinct-count agg)
+        "join_size_cms_estimate", # sketch inner-product join-cardinality estimate
+        "attribution_time_decay", # multi-touch credit (pair join + window norm)
+    ],
+    # round 3 registrations
+    "r3": [
+        "cdc_chunks",             # content-defined chunking + chunk-hash dup counts
+        "semantic_dedup",         # SemDeDup greedy prefix dedup (cluster-blocked)
+        "bigram_perplexity",      # add-k bigram LM scoring (vocab-keyed joins)
+        "dup_ngram_coverage",     # 8-gram exact-substring duplication signal
+        "weighted_doc_sample",    # Efraimidis-Spirakis weighted top-k sample
+        "observed_quality_metrics",  # observe() counters riding the main pass
+        "jdbc_upsert_roundtrip",  # live Derby MERGE stage+merge+replay+readback
+        "lambda_unified_gmv",     # batch layer UNION real streaming speed layer
+        "revenue_cusum_changepoints",  # exact-integer CUSUM over the daily rollup
+        "event_path_ngrams",      # behavioral path mining (1 agg + TakeOrdered)
+        "recursive_reachability", # WITH RECURSIVE BFS (UnionLoop iterate)
+        "rfm_segments",           # RFM quartile grid (dim-sized NTILE windows)
+        "interpurchase_survival", # partitioned lag + one-pass threshold unpivot
+        "bigram_pmi_topk",        # collocation lift (flatMap + broadcast vocab)
+        "incremental_minhash_dedup",  # batch probe vs stored LSH band index
+        "source_unigram_divergence",  # pairwise TV drift (exact-integer fold)
+        "bootstrap_revenue_ci",   # 200-replicate percentile bootstrap (spine-sized)
+        "dpp_partitioned_join",   # runtime dynamicpruning partition filter
+        "scd2_stream_merge",      # incremental SCD2 CDC merge (foreachBatch store)
+        "bm25_topk",              # lexical ranker: query-term postings only shuffle
+        "hybrid_rrf_fusion",      # BM25 + cosine reciprocal-rank fusion
+        "state_store_inspect",    # statestore reader over the dedup checkpoint
+        "checkpoint_resume_stream",  # two-start exactly-once restart proof
+        "promo_window_attribution",  # keyless interval join, bin-bucketized
+        "dq_expectations",        # one-pass declarative data-quality gate
+        "changelog_replay_stream",   # update-mode changelog capture + replay
+        "ngram_udtf_topk",        # polymorphic analyze() UDTF trigram top-k
+        "manifest_time_travel",   # manifest-committed snapshots + time travel
+        "supplier_components",    # iterative min-label connected components
+        "forecast_backtest_snaive",  # seasonal-naive walk-forward backtest
+        "agg_state_inspect",      # statestore reader over agg accumulators
+        "l_diversity_audit",      # homogeneity-attack privacy audit
+        "trained_ivf_topk",       # k-means-trained IVF: train -> index -> search
+        "psi_value_drift",        # PSI input-drift monitor (fixed-point fold)
+        "source_quantile_normalize",  # cross-source score normalization
+        "auc_quality_langid",     # exact tie-aware Mann-Whitney AUC
+        "retrieval_eval_mrr",     # MRR/P@k/R@k of the BM25 ranker
+        "retrieval_eval_ndcg",    # NDCG@10, literal weight table
+        "attribution_linear_cents",  # largest-remainder credit split
+        "calibration_bins",       # reliability bins + exact Brier decomposition
+        "conformal_interval",     # split-conformal coverage, order statistics
+        "revenue_gini",           # exact rank-formulation Gini
+        "t_closeness_audit",      # TVD per QI group vs global (privacy trio)
+        "term_postings",          # inverted-index build, bounded posting heads
+        "psi_drift_stream",       # PSI maintained by a streaming aggregation
+        "kfold_auc",              # per-fold exact CV-AUC (partitioned ranks)
+        "markov_attribution",     # removal-effect attribution, integer chain
+        "cuped_did_lift",         # naive/DiD/CUPED estimator ladder
+        "matryoshka_recall_audit",  # truncated-dim retrieval recall
+        "quantile_pinball_backtest",  # P10/P50/P90 pinball, exact x10 cents
+        "compaction_plan",        # cumulative-fill small-file bin packing
+        "holt_forecast_backtest",  # recursive smoothing: HOF fold vs CTE walk
+        "skew_key_diagnosis",     # heavy keys, skew factor, salt fan-out
+        "popularity_rec_hitrate",  # segment top-5 recommender, temporal eval
+        "chi2_independence",      # lang x source contingency, exact terms
+        "knn_label_accuracy",     # majority-vote kNN classifier eval
+        "eb_rate_shrinkage",      # empirical-Bayes posterior rates
+        "pr_curve_thresholds",    # operating-point table under the AUC
+        "leaderboard_stream",     # complete-mode sorted top-10 on the stream
+        "mmr_diversified_topk",   # greedy diversity re-rank, integer kernel
+        "seasonal_decompose_daily",  # trend/weekday-seasonal/residual split
+        "residual_anomaly_days",  # robust z on the decomposed residuals
+    ],
+    # round 4 registrations (the rank-rewrite queries stay where they were)
+    "r4": [
+        "salted_join_rewrite",    # diagnosed partial-salting join (hot-key cure)
+        "exact_price_percentiles",  # fact-grain exact percentile_disc (2-phase rank)
+        "supplier_components_star",  # large-star/small-star CC (O(log n) rounds)
+        "embedding_topk_pq",      # product-quantization codebooks + integer ADC
+        "bpe_learn_merges",       # 5-round BPE merge-learning loop
+        "pq_encode_stream",       # streaming PQ index census (literal codebook)
+        "embedding_topk_pq_rerank",  # two-tier ADC shortlist + exact rerank
+        "dp_noisy_lang_counts",   # DP geometric-mechanism count release
+        "neyman_allocation_sample",  # variance-optimal stratified allocation
+    ],
+    # round 5 registrations
+    "r5": [
+        "embedding_topk_ivf_adc",  # composed IVF-prune x PQ-ADC x exact rerank
+        "bpe_encode_tokens",       # learned merges applied: post-merge census
+        "dsir_importance_sample",  # DSIR unigram log-ratio data selection
+        "pipe_syntax_revenue",     # Spark 4 SQL pipe (|>) rollup
+        "ivf_probe_recall_audit",  # trained-IVF recall-vs-nprobe tuning curve
+        "complete_funnel_stream",  # windowed agg -> windowed agg -> stream join
+        "dsir_admission_stream",   # DSIR gate per micro-batch (foreachBatch)
+    ],
+    # round 6 registrations
+    "r6": [
+        "hilbert_layout_stats",    # Hilbert vs Z-order span tightness (32-col curve)
+        "logreg_sgd_step",         # two exact fixed-point GD steps (2 corpus aggs)
+        "sql_udf_revenue",         # SQL UDF + table function, 4-row range join
+        "ivm_delta_merge",         # incremental view maintenance (delta + merge)
+        "dim_refresh_stream",      # per-micro-batch refreshed stream-static dim
+        "prefix_filter_simjoin",   # PPJoin exact all-pairs similarity join
+        "kmv_set_overlap",         # KMV/theta sketch: distincts + set algebra
+        "lateness_watermark_profile",  # two-phase prefix-max lateness histogram
+        "dp_user_day_revenue",     # clipped user-level DP sum release
+        "temperature_mixture_weights",  # alpha=1/2 source sampling weights
+        "embedding_drift_centroid",  # exact fixed-point centroid drift monitor
+        "group_by_all_revenue",    # shared-dialect GROUP BY ALL inference
+        "pit_feature_assembly",    # point-in-time feature export (1 user shuffle)
+        "deletion_vector_scan",    # merge-on-read position deletes (anti-join DV)
+        "fisher_discriminative_dims",  # exact-integer class-separation audit
+        "compaction_rewrite_roundtrip",  # OPTIMIZE executed: small files -> bins
+        "index_delta_merge",       # inverted-index stats merged, not rebuilt
+        "shuffle_sizing_advisor",  # partition/file sizing from exact row widths
+        "vacuum_orphan_files",     # manifest-referenced vacuum, snapshots intact
+        "index_tombstone_merge",   # index deletes by per-term subtraction
+        "decontam_threshold_sweep",  # contamination-cutoff tuning curve
+        "telemetry_double_fire_audit",  # near-dup EVENTS via 2-bucket range join
+    ],
+    # round 7 registrations
+    "r7": [
+        "jaccard_threshold_sweep",     # dedup-cutoff tuning curve over LSH pairs
+        "packing_efficiency_sweep",    # context-length budget tuning curve
+        "cross_source_leakage_matrix", # pairwise source n-gram contamination
+        "kanon_generalization_ladder", # QI coarsening ladder to reach k-anon
+        "benford_revenue_audit",       # first-digit forensic data-quality test
+        "conversion_window_sweep",     # attribution-window tuning curve
+        "schema_drift_audit",          # batch-over-batch column stats drift
+        "embedding_outlier_topk",      # diagonal-Mahalanobis vector audit
+        "session_funnel_conversion",   # ordered funnel inside session bounds
+        "cohort_ltv_triangle",         # cohort x week-of-life exact revenue
+        "partition_evolution_scan",    # two partition specs, one logical scan
+        "intra_doc_repetition_audit",  # within-doc n-gram looping detector
+        "column_stats_stream",         # per-micro-batch column-stats monitor
+        "props_schema_census",         # JSON payload key-set fingerprints
+        "experiment_power_advisor",    # MDE -> required-sample-size table
+        "vocabulary_growth_curve",     # Heaps'-law corpus-health diagnostic
+        "revenue_concentration_hhi",   # per-day buyer-concentration monitor
+    ],
+    # round 8 registrations
+    "r8": [
+        "symspell_typo_linkage",       # deletion-neighborhood fuzzy linkage
+        "golden_record_survivorship",  # duplicate-cluster canonical merge
+        "revenue_acf",                 # exact integer-centered autocorrelation
+        "decision_stump_train",        # exact best-split stump over NDV grid
+        "encoding_advisor",            # NDV + run-length encoding advisor
+        "hour_value_heatmap",          # bounded 2-D binned density rollup
+        "ivm_retract_merge",           # signed-delta IVM under deletes/updates
+        "branch_merge_conflicts",      # 3-way catalog branch merge grid
+        "group_kfold_assignment",      # leakage-safe entity-keyed folds
+        "golden_record_stream",        # streaming MDM store (partial merge)
+        "wap_publish_gate",            # write-audit-publish gate, live both ways
+        "session_gap_sensitivity",     # sessionization tuning curve, one pass
+        "kaplan_meier_conversion",     # right-censored KM curve, integer chain
+        "supplier_link_prediction",    # neighborhood-Jaccard wedge join top-k
+        "dsar_access_export",          # broadcast request set + user bundles
+        "purged_timeseries_folds",     # embargoed walk-forward CV splits
+        "sorted_neighborhood_pairs",   # SNM blocking + recall vs interval join
+        "stratified_uplift_ipw",       # subclassification treatment effect
+        "label_propagation_communities",  # 3-round synchronous LPA, unrolled
+        "rake_keyphrases",             # degree/freq keyphrase extraction
+        "supplier_pareto_frontier",    # per-nation skyline, one window pass
+        "stream_state_size_advisor",   # watermark-delay state capacity grid
+        "event_burst_detection",       # integer-threshold burst episodes
+        "ab_srm_check",                # sample-ratio-mismatch guardrail
+        "boolean_and_search",          # conjunctive postings intersection
+        "kcore_decomposition",         # 4-round degree peel, unrolled
+        "peak_concurrent_sessions",    # sweep-line interval concurrency
+        "holt_winters_backtest",       # seasonal-array fold, one-step backtest
+        "burst_detection_stream",      # mergeable arrival-count store twin
+    ],
+}
+SECTION_QUERIES = [name for names in SECTIONS.values() for name in names]
 
 
 def _cpu_witness_df(spark):
@@ -317,8 +310,7 @@ def main() -> None:
         warm_dir = SF_DIR
     from e_commerce_streaming_datapipeline_spark.functions.ranks import release_rank_caches
 
-    sections = (HEADLINE + EXTENDED + EXTENDED_R3 + EXTENDED_R4
-                + EXTENDED_R5 + EXTENDED_R6 + EXTENDED_R7 + EXTENDED_R8)
+    headline = SECTIONS["core32"]
     # queries whose plans pin a registered persist (the rank family, the
     # simjoin's token-id cache, ...): their min-of-3 is a WARM number by
     # construction (runs 2-3 reuse run 1's materialization), so the bench
@@ -327,7 +319,7 @@ def main() -> None:
     # 10.75 s cold).  Detected, not hand-listed: the warmup run observes
     # which builders register caches.
     persist_heavy: set[str] = set()
-    for warm_query in sections:
+    for warm_query in SECTION_QUERIES:
         registry[warm_query].builder(spark, warm_dir).write.format("noop").mode(
             "overwrite"
         ).save()
@@ -384,7 +376,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
     warm_spread_pct: dict[str, float] = {}
-    for name in sections:
+    for name in SECTION_QUERIES:
         q = registry[name]
         best = float("inf")
         first = None
@@ -463,7 +455,7 @@ def main() -> None:
     # flags a WARM delta as structural only above max(10%, this band);
     # cold deltas keep the plain 10% threshold.
     replay_delta_pct: dict[str, float] = {}
-    for name in HEADLINE:
+    for name in headline:
         q = registry[name]
         best = float("inf")
         for _ in range(3):
@@ -487,7 +479,7 @@ def main() -> None:
     noise_band_pct = round(
         max(
             _p90(list(replay_delta_pct.values())),
-            _p90([warm_spread_pct[n] for n in HEADLINE]),
+            _p90([warm_spread_pct[n] for n in headline]),
         ),
         1,
     )
@@ -498,15 +490,11 @@ def main() -> None:
     except ValueError:
         sf_val = sf
     totals = {
-        "core32_total": round(sum(timings[n] for n in HEADLINE), 3),
-        "extended_total": round(sum(timings[n] for n in EXTENDED), 3),
-        "r3_total": round(sum(timings[n] for n in EXTENDED_R3), 3),
-        "r4_total": round(sum(timings[n] for n in EXTENDED_R4), 3),
-        "r5_total": round(sum(timings[n] for n in EXTENDED_R5), 3),
-        "r6_total": round(sum(timings[n] for n in EXTENDED_R6), 3),
-        "r7_total": round(sum(timings[n] for n in EXTENDED_R7), 3),
-        "r8_total": round(sum(timings[n] for n in EXTENDED_R8), 3),
-        "core32_cold_total": round(sum(cold[n] for n in HEADLINE), 3),
+        **{
+            f"{section}_total": round(sum(timings[n] for n in names), 3)
+            for section, names in SECTIONS.items()
+        },
+        "core32_cold_total": round(sum(cold[n] for n in headline), 3),
         "sections_cold_total": round(sum(cold.values()), 3),
     }
     # core-count contract, made legible to the driver (r9 VERDICT task #2:
@@ -559,7 +547,7 @@ def main() -> None:
         "value": full["value"],
         "unit": "sec",
         "queries": {
-            **{n: timings[n] for n in HEADLINE},
+            **{n: timings[n] for n in headline},
             "cpu_scaling_witness": witness_s,
         },
         **core_contract,

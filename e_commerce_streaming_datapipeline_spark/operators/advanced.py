@@ -24,7 +24,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from e_commerce_streaming_datapipeline_spark.functions.rounding import cents_sum_double, fround
+from e_commerce_streaming_datapipeline_spark.functions.rounding import (
+    cents,
+    cents_sum,
+    cents_sum_double,
+    fround,
+)
 from e_commerce_streaming_datapipeline_spark.operators.payment import with_payment_type
 from e_commerce_streaming_datapipeline_spark.plans.registry import query
 from e_commerce_streaming_datapipeline_spark.schemas import PAYMENT_TYPES
@@ -355,9 +360,7 @@ def q_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         (bucket * _HIST_WIDTH).alias("bucket_lo"),
     ).agg(
         F.count("*").cast("int").alias("n"),
-        (F.round(F.sum(F.round(F.col("value") * 100, 0).cast("long")), 0) / 100.0).alias(
-            "bucket_value"
-        ),
+        (F.round(cents_sum(F.col("value")), 0) / 100.0).alias("bucket_value"),
     )
 
 
@@ -862,7 +865,7 @@ def q_supplier_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("s_nationkey").alias("nationkey"),
             F.col("s_suppkey").alias("suppkey"),
-            F.round(F.col("s_acctbal") * 100).cast("long").alias("bal_cents"),
+            cents(F.col("s_acctbal")).alias("bal_cents"),
         )
         .join(
             load_table(spark, "lineitem", sf_dir)

@@ -17,7 +17,12 @@ import datetime
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from e_commerce_streaming_datapipeline_spark.functions.rounding import fround
+from e_commerce_streaming_datapipeline_spark.functions.rounding import (
+    cents,
+    cents_sum,
+    cents_sum_double,
+    fround,
+)
 from pyspark.sql.functions import broadcast
 
 from e_commerce_streaming_datapipeline_spark.plans.registry import query
@@ -60,23 +65,17 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Money/quantity sums use fixed-point longs (scaled by 10^decimals): exact
     and order-independent like DECIMAL but on the fast codegen'd long-sum
-    path.  Headroom: 9.2e18 scaled units per group ≈ 9e12 rows at sf-scale
-    prices with the 1e4 scale factor; beyond that switch the two hot sums to
-    ``decimal(38, n)`` (one-line change, same semantics)."""
+    path (headroom: ``functions/rounding.py``)."""
     li = load_table(spark, "lineitem", sf_dir)
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-
-    def cents(col: F.Column, scale: int) -> F.Column:
-        return F.sum(F.round(col * scale, 0).cast("long"))
-
-    qty_sum = cents(F.col("l_quantity"), 100) / 100.0
-    price_sum = cents(F.col("l_extendedprice"), 100) / 100.0
-    disc_sum = cents(F.col("l_discount"), 100) / 100.0
+    qty_sum = cents_sum(F.col("l_quantity")) / 100.0
+    price_sum = cents_sum(F.col("l_extendedprice")) / 100.0
+    disc_sum = cents_sum(F.col("l_discount")) / 100.0
     return li.groupBy("l_returnflag", "l_linestatus").agg(
         qty_sum.alias("sum_qty"),
         price_sum.alias("sum_base_price"),
-        fround(cents(disc_price, 10000) / 10000.0, 2).alias("sum_disc_price"),
-        fround(cents(disc_price * (1 + F.col("l_tax")), 1000000) / 1000000.0, 2)
+        fround(F.sum(cents(disc_price, 10000)) / 10000.0, 2).alias("sum_disc_price"),
+        fround(F.sum(cents(disc_price * (1 + F.col("l_tax")), 1000000)) / 1000000.0, 2)
         .alias("sum_charge"),
         fround(qty_sum / F.count("*"), 2).alias("avg_qty"),
         fround(price_sum / F.count("*"), 2).alias("avg_price"),
@@ -309,12 +308,11 @@ def q_status_priority_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     The grand-total group sums the WHOLE orders table: money rides as
     scaled-long cents (exact, order-independent), not a raw double sum
     whose engine-specific summation order could flip the 2dp rounding on a
-    half-cent knife edge (the pricing_summary fixed-point rationale)."""
+    half-cent knife edge (fixed point: ``functions/rounding.py``)."""
     orders = load_table(spark, "orders", sf_dir)
     return orders.rollup("o_orderstatus", "o_orderpriority").agg(
         F.count("*").alias("n_orders"),
-        (F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long")).cast("double") / 100)
-        .alias("revenue"),
+        (cents_sum(F.col("o_totalprice")).cast("double") / 100).alias("revenue"),
     )
 
 
@@ -347,10 +345,10 @@ def q_cascaded_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     costs ~nothing.  Money sums use scaled-long cents at the fine grain so
     the re-aggregation is exact integer addition — no float drift between
     resolution levels (the property that makes cascading safe; see
-    pricing_summary for the fixed-point rationale)."""
+    ``functions/rounding.py`` for the fixed-point contract)."""
     events = load_table(spark, "events", sf_dir).where(F.col("event_type") == "purchase")
     minutely = events.groupBy(F.date_trunc("minute", F.col("ts")).alias("m")).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
+        cents_sum(F.col("value")).alias("cents"),
         F.count("*").alias("n"),
     )
     return minutely.groupBy(F.date_trunc("hour", F.col("m")).alias("window_start")).agg(
@@ -383,7 +381,7 @@ def q_running_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     scaled-long arithmetic, converted to currency only at the edge."""
     events = load_table(spark, "events", sf_dir).where(F.col("event_type") == "purchase")
     daily = events.groupBy(F.date_trunc("day", F.col("ts")).alias("day")).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents")
+        cents_sum(F.col("value")).alias("cents")
     )
     w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return daily.select(
@@ -422,10 +420,9 @@ def q_quantity_price_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("metric") == "l_quantity", "quantity").otherwise("price"),
     )
     # table-sized money groups: scaled-long cents, never an order-dependent
-    # raw double sum (see pricing_summary)
+    # raw double sum (functions/rounding.py)
     return long.groupBy("l_returnflag", "metric").agg(
-        (F.sum(F.round(F.col("val") * 100, 0).cast("long")).cast("double") / 100)
-        .alias("total")
+        (cents_sum(F.col("val")).cast("double") / 100).alias("total")
     )
 
 
@@ -480,7 +477,7 @@ def q_gapfilled_minutely_gmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.where(F.col("event_type") == "purchase")
         .groupBy(F.date_trunc("minute", F.col("ts")).alias("minute"))
         .agg(
-            F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias("cents"),
+            cents_sum(F.col("value")).alias("cents"),
             F.count("*").alias("purchases"),
         )
     )
@@ -523,9 +520,10 @@ def q_orders_vs_customer_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically in both engines."""
     orders = load_table(spark, "orders", sf_dir)
     w = Window.partitionBy("o_custkey")
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
     cust_avg_raw = (
-        F.sum(cents).over(w).cast("double") / 100 / F.count("*").over(w)
+        F.sum(cents(F.col("o_totalprice"))).over(w).cast("double")
+        / 100
+        / F.count("*").over(w)
     )
     return (
         orders.withColumn("cust_avg_raw", cust_avg_raw)
@@ -1035,9 +1033,7 @@ def q_locf_value_15min(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = events.groupBy(
         "event_type", bucket15("ts").alias("bucket_start")
     ).agg(
-        F.sum(
-            F.round(F.coalesce(F.col("value"), F.lit(0.0)) * 100, 0).cast("long")
-        ).alias("cents"),
+        cents_sum(F.coalesce(F.col("value"), F.lit(0.0))).alias("cents"),
         F.count("*").alias("cnt"),
     )
     grid = (
@@ -1256,14 +1252,7 @@ def q_gmv_local_tz_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count("*").alias("n_purchases"),
-            (
-                F.sum(
-                    F.round(F.coalesce(F.col("value"), F.lit(0.0)) * 100, 0).cast(
-                        "long"
-                    )
-                ).cast("double")
-                / 100
-            ).alias("gmv"),
+            cents_sum_double(F.col("value")).alias("gmv"),
         )
     )
 

@@ -26,7 +26,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from e_commerce_streaming_datapipeline_spark.functions.rounding import cents_sum_double, fround
+from e_commerce_streaming_datapipeline_spark.functions.rounding import cents_sum, cents_sum_double, fround
 from e_commerce_streaming_datapipeline_spark.plans.registry import query
 from e_commerce_streaming_datapipeline_spark.sources.batch import load_table
 
@@ -304,9 +304,7 @@ def q_bucketed_order_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exchange left in the plan is the final small-key aggregation).  Results
     are identical to the plain parquet join, which is what the oracle
     computes."""
-    cents = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast(
-        "long"
-    )
+    revenue = cents_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     return (
         bucketed_order_lineitem_join(spark, sf_dir)
         .groupBy(
@@ -315,7 +313,7 @@ def q_bucketed_order_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count("*").alias("line_items"),
-            (F.sum(cents).cast("double") / 100).alias("revenue"),
+            (revenue.cast("double") / 100).alias("revenue"),
         )
     )
 
@@ -421,9 +419,7 @@ def q_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).parquet(out_dir)
     return merged.groupBy("channel").agg(
         F.count("*").cast("int").alias("n_events"),
-        (F.sum(F.round(F.col("value") * 100, 0).cast("long")) / 100.0).alias(
-            "total_value"
-        ),
+        (cents_sum(F.col("value")) / 100.0).alias("total_value"),
     )
 
 
@@ -552,8 +548,8 @@ def q_orc_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_dir = _scratch_dir("orc", sf_dir)
     events.write.mode("overwrite").orc(out_dir)
     back = spark.read.orc(out_dir)
-    # scaled-long cents sum, matching the pricing_summary fixed-point
-    # discipline (see csv twin) — immune to summation-order ULP drift
+    # scaled-long cents sum (functions/rounding.py fixed point; see csv
+    # twin) — immune to summation-order ULP drift
     return back.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
         cents_sum_double(F.col("value")).alias("total_value"),

@@ -12,11 +12,17 @@ and every computed column aliased identically in Spark and oracle SQL.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from e_commerce_streaming_datapipeline_spark.functions.rounding import fround
-from e_commerce_streaming_datapipeline_spark.functions.hashing import hash_bucket, hash_bucket_sql
+from e_commerce_streaming_datapipeline_spark.functions.rounding import cents, cents_sum, fround
+from e_commerce_streaming_datapipeline_spark.functions.hashing import (
+    MOD,
+    hash32,
+    hash32_sql,
+    hash_bucket,
+    hash_bucket_sql,
+)
 from e_commerce_streaming_datapipeline_spark.functions.scalars import scalar_join
 from e_commerce_streaming_datapipeline_spark.plans.registry import query
 from e_commerce_streaming_datapipeline_spark.sources.batch import load_table
@@ -909,6 +915,26 @@ def q_user_sequence_export(spark: SparkSession, sf_dir: str) -> DataFrame:
 _NEG_PER_POS = 3
 
 
+def neg_candidate_hash(custkey: Column, partkey: Column, i: Column) -> Column:
+    """Pseudo-random candidate hash in [0, 2^32) for draw ``i`` of one
+    (customer, part) positive: ``hash32`` of the customer plus small
+    multiples of the part and the draw.  Both keys are reduced mod 2^31
+    before their multiplies, so the largest intermediate is ~8.7e13 and
+    Spark never wraps int64 where DuckDB promotes.  SQL twin:
+    ``neg_candidate_hash_sql``."""
+    return (
+        hash32(custkey) + (partkey % F.lit(2**31)) * 40503 + i * 104729
+    ) % F.lit(MOD)
+
+
+def neg_candidate_hash_sql(custkey: str, partkey: str, i: str) -> str:
+    """``neg_candidate_hash`` as DuckDB SQL text, for oracles."""
+    return (
+        f"(({hash32_sql(custkey)} + ({partkey} % 2147483648) * 40503"
+        f" + {i} * 104729) % 4294967296)"
+    )
+
+
 @query(
     "negative_samples",
     oracle=f"""
@@ -919,8 +945,8 @@ WITH pos AS (
     SELECT count(*) AS np FROM part
 ), cand AS (
     SELECT p.custkey,
-           ((p.custkey * 2654435761 + p.partkey * 40503 + i * 104729)
-            % 4294967296) % (SELECT np FROM n_parts) AS cand_part
+           {neg_candidate_hash_sql("p.custkey", "p.partkey", "i")}
+            % (SELECT np FROM n_parts) AS cand_part
     FROM pos p, (SELECT unnest(generate_series(0, {_NEG_PER_POS - 1})) AS i)
 ), valid AS (
     SELECT c.custkey, c.cand_part
@@ -977,12 +1003,7 @@ def q_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "custkey",
             (
-                (
-                    F.col("custkey") * 2654435761
-                    + F.col("partkey") * 40503
-                    + F.col("i") * 104729
-                )
-                % 4294967296
+                neg_candidate_hash(F.col("custkey"), F.col("partkey"), F.col("i"))
                 % F.col("np")
             ).alias("cand_part"),
         )
@@ -1710,7 +1731,7 @@ def q_dp_user_day_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
     ).agg(
         F.least(
-            F.sum(F.round(F.coalesce(F.col("value"), F.lit(0.0)) * 100, 0).cast("long")),
+            cents_sum(F.coalesce(F.col("value"), F.lit(0.0))),
             F.lit(_DP_CLIP_CENTS).cast("long"),
         ).alias("clipped_cents")
     )
@@ -1802,9 +1823,7 @@ def q_pit_feature_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "ts",
         F.unix_timestamp("ts").alias("es"),
-        F.round(F.coalesce(F.col("value"), F.lit(0.0)) * 100, 0)
-        .cast("long")
-        .alias("cents"),
+        cents(F.coalesce(F.col("value"), F.lit(0.0))).alias("cents"),
     )
     # NULLS LAST on the event_id tiebreak in BOTH engines: Spark's default
     # ASC is NULLS FIRST, DuckDB's is NULLS LAST, and a NULL-event_id row
@@ -2335,9 +2354,7 @@ def q_group_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
         .cast("long")
         .alias("n_purchases"),
-        (
-            F.sum(F.round(F.col("value") * 100).cast("long")).cast("double") / 100
-        ).alias("fold_value"),
+        (cents_sum(F.col("value")).cast("double") / 100).alias("fold_value"),
     )
     return (
         scalar_join(per_fold, audit)
@@ -2429,8 +2446,7 @@ def q_dsar_access_export(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(
                     F.when(
                         F.col("event_type") == "purchase",
-                        F.round(F.coalesce(F.col("value"), F.lit(0.0)) * 100)
-                        .cast("long"),
+                        cents(F.coalesce(F.col("value"), F.lit(0.0))),
                     ).otherwise(0)
                 ).cast("double")
                 / 100
@@ -2556,8 +2572,7 @@ def q_purged_timeseries_folds(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.when(
                     F.col("event_type") == "purchase",
-                    F.round(F.coalesce(F.col("value"), F.lit(0.0)) * 100)
-                    .cast("long"),
+                    cents(F.coalesce(F.col("value"), F.lit(0.0))),
                 ).otherwise(0)
             )
             .cast("long")

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from e_commerce_streaming_datapipeline_spark.functions.rounding import fround
+from e_commerce_streaming_datapipeline_spark.functions.rounding import cents, cents_sum, fround
 from pyspark.sql.functions import broadcast
 
 from e_commerce_streaming_datapipeline_spark.operators.dropoff import dropoff_analysis
@@ -166,7 +166,7 @@ def q_order_details(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem = load_table(spark, "lineitem", sf_dir)
     # scaled-long revenue: order-independent exact arithmetic (oracle note);
     # exact partial sums stay exact through the two-level aggregation
-    rev = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000, 0).cast("long")
+    rev = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")), 10000)
     per_part = lineitem.groupBy("l_orderkey", "l_partkey").agg(
         F.count("*").alias("__cnt"), F.sum(rev).alias("__rev")
     )
@@ -326,9 +326,7 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
             # a live cross-engine hash flake on a plain double sum
             fround(
                 F.sum(
-                    F.round(
-                        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000, 0
-                    ).cast("long")
+                    cents(F.col("l_extendedprice") * (1 - F.col("l_discount")), 10000)
                 )
                 / 10000.0,
                 2,
@@ -363,9 +361,7 @@ def q_above_avg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cut inside an ulp gap a real order price falls into
     spark_avg = orders.select(
         (
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long")).cast("double")
-            / 100
-            / F.count("*")
+            cents_sum(F.col("o_totalprice")).cast("double") / 100 / F.count("*")
         ).alias("a")
     )
     return (
@@ -435,18 +431,16 @@ def q_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     The part dim broadcasts (the fact never shuffles for the join); both
     sides of the share ratio aggregate scaled-long cents so the division
     operates on exact integers — the conditional-sum-over-join pattern with
-    no float drift (see pricing_summary for the fixed-point rationale)."""
+    no float drift (fixed point: ``functions/rounding.py``)."""
     lineitem = load_table(spark, "lineitem", sf_dir)
     part = load_table(spark, "part", sf_dir).select("p_partkey", "p_type")
-    cents = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast(
-        "long"
-    )
+    rev = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     joined = lineitem.join(broadcast(part), lineitem.l_partkey == part.p_partkey)
     return (
         joined.groupBy(F.date_trunc("month", F.col("l_shipdate")).alias("ship_month"))
         .agg(
-            F.sum(F.when(F.col("p_type") == "PROMO", cents).otherwise(0)).alias("_p"),
-            F.sum(cents).alias("_t"),
+            F.sum(F.when(F.col("p_type") == "PROMO", rev).otherwise(0)).alias("_p"),
+            F.sum(rev).alias("_t"),
         )
         .select(
             "ship_month",
@@ -487,9 +481,7 @@ def q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = load_table(spark, "customer", sf_dir).select("c_custkey", "c_nationkey")
     supplier = load_table(spark, "supplier", sf_dir).select("s_suppkey", "s_nationkey")
     nation = load_table(spark, "nation", sf_dir)
-    cents = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast(
-        "long"
-    )
+    revenue = cents_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     order_nation = orders.join(
         broadcast(customer), orders.o_custkey == customer.c_custkey
     ).select("o_orderkey", "c_nationkey")
@@ -501,7 +493,7 @@ def q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("n_name").alias("nation"))
         .agg(
             F.count("*").alias("local_lineitems"),
-            (F.sum(cents).cast("double") / 100).alias("local_revenue"),
+            (revenue.cast("double") / 100).alias("local_revenue"),
         )
     )
 
@@ -562,7 +554,7 @@ def q_promo_window_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases = events.where(F.col("event_type") == "purchase")
     top10 = (
         purchases.groupBy(F.date_trunc("minute", "ts").alias("window_peak"))
-        .agg(F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias("rev_cents"))
+        .agg(cents_sum(F.col("value")).alias("rev_cents"))
         .orderBy(F.col("rev_cents").desc(), "window_peak")
         .limit(10)
     )
@@ -601,7 +593,7 @@ def q_promo_window_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(
                     F.when(
                         F.col("event_type") == "purchase",
-                        F.round(F.col("value") * 100, 0).cast("long"),
+                        cents(F.col("value")),
                     )
                 ),
                 F.lit(0),

@@ -35,7 +35,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from e_commerce_streaming_datapipeline_spark.functions.rounding import fround
+from e_commerce_streaming_datapipeline_spark.functions.rounding import cents, cents_sum, cents_sum_double, fround
 from e_commerce_streaming_datapipeline_spark.functions.scalars import scalar_join
 from e_commerce_streaming_datapipeline_spark.functions.scratch import scratch_dir
 from e_commerce_streaming_datapipeline_spark.plans.registry import query
@@ -598,7 +598,7 @@ def equi_depth_histogram(orders: DataFrame) -> DataFrame:
         ntile_from_rank,
     )
 
-    cents = F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long"))
+    total_cents = cents_sum(F.col("o_totalprice"))
     return (
         global_row_number(
             orders,
@@ -618,8 +618,8 @@ def equi_depth_histogram(orders: DataFrame) -> DataFrame:
             F.count("*").alias("n_orders"),
             fround(F.min("o_totalprice"), 2).alias("lo"),
             fround(F.max("o_totalprice"), 2).alias("hi"),
-            fround(cents / 100.0 / F.count("*"), 2).alias("avg_price"),
-            (cents.cast("double") / 100.0).alias("total_price"),
+            fround(total_cents / 100.0 / F.count("*"), 2).alias("avg_price"),
+            (total_cents.cast("double") / 100.0).alias("total_price"),
         )
         .orderBy("bucket")
     )
@@ -700,10 +700,7 @@ def q_manifest_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderstatus").alias("status"),
     ).agg(
         F.count("*").alias("n_orders"),
-        (
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long")).cast("double")
-            / 100
-        ).alias("day_revenue"),
+        (cents_sum(F.col("o_totalprice")).cast("double") / 100).alias("day_revenue"),
     )
 
     def commit(version: int, df: DataFrame) -> None:
@@ -1003,8 +1000,7 @@ def q_deletion_vector_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.when(
                         F.col("is_live").isNotNull()
                         & (F.col("l_type") == "purchase"),
-                        F.round(F.coalesce(F.col("l_value"), F.lit(0.0)) * 100, 0)
-                        .cast("long"),
+                        cents(F.coalesce(F.col("l_value"), F.lit(0.0))),
                     ).otherwise(0)
                 ).cast("double")
                 / 100
@@ -1123,12 +1119,7 @@ def q_compaction_rewrite_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
         F.count_distinct("bin").cast("long").alias("n_bins"),
         F.count("*").alias("n_rows"),
         F.count_distinct("event_id").alias("n_distinct_events"),
-        (
-            F.sum(
-                F.round(F.coalesce(F.col("value"), F.lit(0.0)) * 100, 0).cast("long")
-            ).cast("double")
-            / 100
-        ).alias("total_value"),
+        cents_sum_double(F.col("value")).alias("total_value"),
     )
     return scalar_join(stats, n_src).select(
         "n_source_files", "n_bins", "n_rows", "n_distinct_events", "total_value"
@@ -1364,9 +1355,7 @@ def q_partition_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_day = ev.select(
         F.dayofmonth("ts").alias("day"),
         "event_type",
-        F.round(F.coalesce(F.col("value"), F.lit(0.0)) * 100, 0)
-        .cast("long")
-        .alias("cents"),
+        cents(F.coalesce(F.col("value"), F.lit(0.0))).alias("cents"),
     )
     # hash-distribute to the partition key before each partitioned write
     # (guide §6): one writer task per leaf directory instead of every scan
@@ -1618,7 +1607,7 @@ def q_branch_merge_conflicts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderkey").isNotNull() & F.col("o_totalprice").isNotNull())
         .select(
             F.col("o_orderkey").alias("k"),
-            F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
+            cents(F.col("o_totalprice")).alias("cents"),
         )
     )
     change_a = (
@@ -1709,10 +1698,7 @@ def q_wap_publish_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderstatus").alias("status"),
     ).agg(
         F.count("*").alias("n_orders"),
-        (
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long")).cast("double")
-            / 100
-        ).alias("day_revenue"),
+        (cents_sum(F.col("o_totalprice")).cast("double") / 100).alias("day_revenue"),
     )
     baseline_rows = rollup.count()  # the published table's row count
 

@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from e_commerce_streaming_datapipeline_spark.functions.rounding import fround
+from e_commerce_streaming_datapipeline_spark.functions.rounding import cents, fround
 from e_commerce_streaming_datapipeline_spark.plans.registry import query
 from e_commerce_streaming_datapipeline_spark.sources.batch import load_table
 
@@ -446,7 +446,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         ",",
         F.transform(
             F.col("features"),
-            lambda x: F.round(x * 1000000).cast("long").cast("string"),
+            lambda x: cents(x, 1000000).cast("string"),
         ),
     )
     return vectors.select(

@@ -25,7 +25,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from e_commerce_streaming_datapipeline_spark.functions.rounding import fround
+from e_commerce_streaming_datapipeline_spark.functions.rounding import cents, fround
 from e_commerce_streaming_datapipeline_spark.functions.scalars import scalar_join
 from e_commerce_streaming_datapipeline_spark.functions.vector import (
     cosine_similarity_expr,
@@ -83,9 +83,7 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # fixed-point micros BEFORE the sum: per-term math is one identical IEEE
     # expression on both engines; the integer sum is order-independent
-    contrib = joined.select(
-        "doc_id", F.round(idf * tfn * 1000000, 0).cast("long").alias("c")
-    )
+    contrib = joined.select("doc_id", cents(idf * tfn, 1000000).alias("c"))
     return contrib.groupBy("doc_id").agg(
         fround(F.sum("c").cast("double") / 1000000, 4).alias("bm25")
     )
@@ -346,9 +344,7 @@ def _term_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     tfn = (F.col("tf") * F.lit(K1 + 1)) / (
         F.col("tf") + F.lit(K1) * (F.lit(1 - B) + F.lit(B) * F.col("dl") / F.col("avgdl"))
     )
-    return joined.select(
-        "term", "doc_id", F.round(idf * tfn * 1000000, 0).cast("long").alias("s")
-    )
+    return joined.select("term", "doc_id", cents(idf * tfn, 1000000).alias("s"))
 
 
 def _term_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,14 +22,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from e_commerce_streaming_datapipeline_spark.functions.hashing import (
-    KNUTH as _KNUTH,
     MOD as _MOD,
     hash32,
     hash32_sql,
     hash_bucket,
     hash_bucket_sql,
 )
-from e_commerce_streaming_datapipeline_spark.functions.rounding import fround
+from e_commerce_streaming_datapipeline_spark.functions.rounding import cents, fround
 from e_commerce_streaming_datapipeline_spark.plans.registry import query
 from e_commerce_streaming_datapipeline_spark.sources.batch import load_table, load_valid_embeddings
 
@@ -166,7 +165,7 @@ _WEIGHTED_K = 50
 WITH keyed AS (
     SELECT doc_id, lang, n_chars,
         round(
-            ln(((doc_id * 2654435761) % 4294967296 + 0.5) / 4294967296.0)
+            ln(({hash32_sql("doc_id")} + 0.5) / 4294967296.0)
             / n_chars, 9
         ) AS wkey
     FROM documents
@@ -194,9 +193,7 @@ def q_weighted_doc_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine RNG).  ln(u)/w is the log-domain form of u^(1/w): same order,
     no pow() underflow for huge weights."""
     docs = load_table(spark, "documents", sf_dir)
-    u = (
-        (F.col("doc_id") * F.lit(_KNUTH)) % F.lit(_MOD) + F.lit(0.5)
-    ) / F.lit(float(_MOD))
+    u = (hash32(F.col("doc_id")) + F.lit(0.5)) / F.lit(float(_MOD))
     keyed = docs.select(
         "doc_id",
         "lang",
@@ -320,7 +317,7 @@ def q_neyman_allocation_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         "cnt",
         F.greatest(
-            F.round(F.col("cnt") * F.sqrt(var) * 100).cast("long"),
+            cents(F.col("cnt") * F.sqrt(var)),
             F.lit(1).cast("long"),
         ).alias("w_q"),
     )
@@ -419,7 +416,7 @@ def q_temperature_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     scaled = per_source.withColumn(
         "s_x1e6",
-        F.round(F.sqrt(F.col("n_tokens").cast("double")) * 1_000_000, 0).cast("long"),
+        cents(F.sqrt(F.col("n_tokens").cast("double")), 1_000_000),
     )
     from e_commerce_streaming_datapipeline_spark.functions.scalars import scalar_join
 

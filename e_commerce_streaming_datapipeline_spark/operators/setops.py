@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from e_commerce_streaming_datapipeline_spark.functions.rounding import fround
+from e_commerce_streaming_datapipeline_spark.functions.rounding import cents, cents_sum, fround
 from e_commerce_streaming_datapipeline_spark.functions.windows import tumbling_window
 from e_commerce_streaming_datapipeline_spark.functions.scalars import scalar_join
 from e_commerce_streaming_datapipeline_spark.plans.registry import query
@@ -463,9 +463,7 @@ def q_ivm_delta_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderstatus").alias("status"),
         ).agg(
             F.count("*").alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long")).alias(
-                "__cents"
-            ),
+            cents_sum(F.col("o_totalprice")).alias("__cents"),
         )
 
     cutoff = F.lit(_IVM_CUTOFF).cast("date")
@@ -540,12 +538,12 @@ def q_ivm_retract_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     month = F.date_trunc("month", F.col("o_orderdate")).cast("date").alias(
         "order_month"
     )
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
+    price_cents = cents(F.col("o_totalprice"))
 
     def rollup(df: DataFrame, weight) -> DataFrame:
         return df.groupBy(month, F.col("o_orderstatus").alias("status")).agg(
             F.sum(F.lit(weight)).alias("n_orders"),
-            F.sum(F.lit(weight) * cents).alias("__cents"),
+            F.sum(F.lit(weight) * price_cents).alias("__cents"),
         )
 
     is_del = F.coalesce(F.col("o_orderkey") % 97, F.lit(1)) == 0

@@ -23,7 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from e_commerce_streaming_datapipeline_spark.functions.rounding import fround
+from e_commerce_streaming_datapipeline_spark.functions.rounding import cents, fround
 
 from e_commerce_streaming_datapipeline_spark.functions.vector import cosine_similarity_expr, norm_expr, to_double_array
 from e_commerce_streaming_datapipeline_spark.plans.registry import query
@@ -679,7 +679,7 @@ def q_embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.collect_list(
                         F.struct(
                             F.col("pos"),
-                            F.round(fround(F.col("c"), 4) * 10000).cast("long").alias("cq"),
+                            cents(fround(F.col("c"), 4), 10000).alias("cq"),
                         )
                     )
                 ),
@@ -773,9 +773,7 @@ def q_training_record_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         # norm_expr folds acc + x*x left-to-right — bit-identical to the
         # oracle's list_inner_product(e, e) sequential sum
-        F.round(norm_expr(to_double_array("embedding")) * 10000, 0)
-        .cast("long")
-        .alias("norm_e4"),
+        cents(norm_expr(to_double_array("embedding")), 10000).alias("norm_e4"),
     )
     n_tokens = F.size(F.split(F.col("text"), " ")).cast("int")
     return (
@@ -863,9 +861,7 @@ def q_cogrouped_doc_vec_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         # norm_expr folds acc + x*x left-to-right — bit-identical to the
         # oracle's list_inner_product(e, e) sequential sum
-        F.round(norm_expr(to_double_array("embedding")) * 10000, 0)
-        .cast("long")
-        .alias("norm_e4"),
+        cents(norm_expr(to_double_array("embedding")), 10000).alias("norm_e4"),
         (F.col("vec_id") % _COGROUP_BUCKETS).alias("bucket"),
     )
 
@@ -1165,17 +1161,14 @@ def q_kmeans_lloyd_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_valid_embeddings(spark, sf_dir).select(
         "vec_id",
         "label",
-        F.transform(
-            to_double_array("embedding"),
-            lambda x: F.round(x * 10000).cast("long"),
-        ).alias("v"),
+        F.transform(to_double_array("embedding"), lambda x: cents(x, 10000)).alias("v"),
     )
     dims = (
         emb.select("label", F.posexplode("v").alias("dim", "x"))
         .groupBy("label", "dim")
         .agg(F.sum("x").alias("s"), F.count("*").alias("n"))
     )
-    cents = dims.groupBy(F.col("label").alias("c_label")).agg(
+    centroids = dims.groupBy(F.col("label").alias("c_label")).agg(
         F.any_value("n").alias("n"),
         F.transform(
             F.array_sort(F.collect_list(F.struct("dim", "s"))), lambda p: p["s"]
@@ -1190,7 +1183,7 @@ def q_kmeans_lloyd_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("long"),
         lambda acc, t: acc + t,
     ).cast("double") / (F.col("n") * F.col("n"))
-    dists = emb.crossJoin(F.broadcast(cents)).select(
+    dists = emb.crossJoin(F.broadcast(centroids)).select(
         "vec_id",
         F.col("label").alias("old_label"),
         "c_label",
@@ -1420,10 +1413,7 @@ def ivf_input(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_valid_embeddings(spark, sf_dir).select(
         "vec_id",
         (F.col("vec_id") % _IVF_K).alias("lab"),
-        F.transform(
-            to_double_array("embedding"),
-            lambda x: F.round(x * 10000).cast("long"),
-        ).alias("v"),
+        F.transform(to_double_array("embedding"), lambda x: cents(x, 10000)).alias("v"),
         to_double_array("embedding").alias("e"),
     )
 
@@ -2026,11 +2016,7 @@ def q_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             F.col("vec_id").alias("nid"),
-            F.round(
-                fround(cosine_similarity_expr(F.col("qe"), F.col("e")), 6) * 1000000,
-                0,
-            )
-            .cast("long")
+            cents(fround(cosine_similarity_expr(F.col("qe"), F.col("e")), 6), 1000000)
             .alias("rel"),
             "e",
         )
@@ -2049,10 +2035,7 @@ def q_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id",
         "a",
         "b",
-        F.round(
-            fround(cosine_similarity_expr(F.col("ea"), F.col("eb")), 6) * 1000000, 0
-        )
-        .cast("long")
+        cents(fround(cosine_similarity_expr(F.col("ea"), F.col("eb")), 6), 1000000)
         .alias("s"),
     )
     rel_rows = cands.select(
@@ -2151,9 +2134,7 @@ def pq_subvectors(emb: DataFrame) -> DataFrame:
     embedding — the PQ representation both the batch search and the
     streaming encoder start from.  Row-local (slice + explode), no
     shuffle."""
-    v = F.transform(
-        to_double_array("embedding"), lambda x: F.round(x * 10000).cast("long")
-    )
+    v = F.transform(to_double_array("embedding"), lambda x: cents(x, 10000))
     subs = F.array(
         *[
             F.struct(

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from e_commerce_streaming_datapipeline_spark.functions.checkpoints import round_checkpoint
-from e_commerce_streaming_datapipeline_spark.functions.rounding import fround
+from e_commerce_streaming_datapipeline_spark.functions.rounding import cents, cents_sum, fround
 from e_commerce_streaming_datapipeline_spark.functions.scalars import scalar_join
 from e_commerce_streaming_datapipeline_spark.functions.hashing import (
     hash_bucket,
@@ -48,9 +48,7 @@ def _purchase_cents_rollup(events: DataFrame, key, key_name: str) -> DataFrame:
         events.where(F.col("event_type") == "purchase")
         .groupBy(key.alias(key_name))
         .agg(
-            F.sum(
-                F.round(F.coalesce(F.col("value"), F.lit(0.0)) * 100, 0).cast("long")
-            ).alias("cents")
+            cents_sum(F.coalesce(F.col("value"), F.lit(0.0))).alias("cents")
         )
     )
 
@@ -351,7 +349,7 @@ def q_attribution_linear_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("purchase_id"),
         F.col("user_id"),
         F.col("ts").alias("p_ts"),
-        F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
+        cents(F.col("value")).alias("cents"),
     )
     c = events.where(F.col("event_type") == "click").select(
         F.col("user_id").alias("c_user"),
@@ -658,7 +656,7 @@ def q_revenue_rolling_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = orders.groupBy(
         F.date_trunc("day", F.col("o_orderdate")).alias("day"),
         F.datediff(F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")).alias("day_num"),
-    ).agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev_c"))
+    ).agg(cents_sum(F.col("o_totalprice")).alias("rev_c"))
     w = Window.orderBy("day_num").rangeBetween(-6, 0)
     return daily.select(
         "day",
@@ -742,7 +740,7 @@ def q_user_behavior_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(
             F.when(
                 F.col("event_type") == "purchase",
-                F.round(F.coalesce("value", F.lit(0.0)) * 100).cast("long"),
+                cents(F.coalesce("value", F.lit(0.0))),
             ).otherwise(F.lit(0).cast("long"))
         ).alias("purchase_cents"),
     )
@@ -1472,7 +1470,7 @@ def q_winsorized_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     — integer cents end to end, float only in the final two averages."""
     events = load_table(spark, "events", sf_dir)
     vals = events.where(F.col("value").isNotNull()).select(
-        "event_type", F.round(F.col("value") * 100).cast("long").alias("cents")
+        "event_type", cents(F.col("value")).alias("cents")
     )
     w = Window.partitionBy("event_type").orderBy("cents")
     wn = Window.partitionBy("event_type")
@@ -1676,12 +1674,9 @@ def q_attribution_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     norm = Window.partitionBy("purchase_id")
     credited = pairs.select(
         "click_ts",
-        F.round(
-            F.col("purchase_value") * F.col("w") / F.sum("w").over(norm) * 1_000_000,
-            0,
-        )
-        .cast("long")
-        .alias("credit_micro"),
+        cents(
+            F.col("purchase_value") * F.col("w") / F.sum("w").over(norm), 1_000_000
+        ).alias("credit_micro"),
     )
     return (
         credited.groupBy(F.date_trunc("hour", "click_ts").alias("click_hour"))
@@ -1743,16 +1738,16 @@ def q_value_imputation(spark: SparkSession, sf_dir: str) -> DataFrame:
     then one broadcast of the tiny per-type median table into a map-side
     coalesce.  No global sort, no second scan of raw data."""
     events = load_table(spark, "events", sf_dir)
-    cents = events.select(
+    observed = events.select(
         "event_type",
         F.when(
             F.col("value").isNotNull() & (F.pmod(F.col("event_id"), F.lit(13)) != 0),
-            F.round(F.col("value") * 100, 0).cast("long"),
+            cents(F.col("value")),
         ).alias("c"),
     )
     # discrete median over the distinct-value count relation
     vc = (
-        cents.where(F.col("c").isNotNull())
+        observed.where(F.col("c").isNotNull())
         .groupBy("event_type", "c")
         .agg(F.count("*").alias("k"))
     )
@@ -1773,7 +1768,7 @@ def q_value_imputation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.min("c").alias("median_cents"))
     )
-    joined = cents.join(F.broadcast(med), "event_type")
+    joined = observed.join(F.broadcast(med), "event_type")
     return (
         joined.groupBy("event_type", "median_cents")
         .agg(
@@ -2380,7 +2375,7 @@ def q_bootstrap_revenue_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderdate").isNotNull()
     )
     daily = orders.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long")).alias("cents")
+        cents_sum(F.col("o_totalprice")).alias("cents")
     )
     reps = daily.select(
         "d",
@@ -2514,9 +2509,7 @@ def psi_from_bin_counts(counts: DataFrame) -> DataFrame:
         "bin",
         F.col("c_ref").cast("long").alias("c_ref"),
         F.col("c_cur").cast("long").alias("c_cur"),
-        F.round((p_cur - p_ref) * F.log(p_cur / p_ref) * 1000000, 0)
-        .cast("long")
-        .alias("c_micro"),
+        cents((p_cur - p_ref) * F.log(p_cur / p_ref), 1000000).alias("c_micro"),
     )
     total_w = Window.partitionBy()
     return contrib.select(
@@ -2831,18 +2824,14 @@ def q_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t2 = terms.select(
         "*",
-        F.round(
-            F.col("n_te") * (F.col("p_b") - F.col("o_b")) * (F.col("p_b") - F.col("o_b")) * 1000000,
-            0,
-        )
-        .cast("long")
-        .alias("rel_t"),
-        F.round(
-            F.col("n_te") * (F.col("o_b") - F.col("obar")) * (F.col("o_b") - F.col("obar")) * 1000000,
-            0,
-        )
-        .cast("long")
-        .alias("res_t"),
+        cents(
+            F.col("n_te") * (F.col("p_b") - F.col("o_b")) * (F.col("p_b") - F.col("o_b")),
+            1000000,
+        ).alias("rel_t"),
+        cents(
+            F.col("n_te") * (F.col("o_b") - F.col("obar")) * (F.col("o_b") - F.col("obar")),
+            1000000,
+        ).alias("res_t"),
     )
     return t2.select(
         "bin",
@@ -2940,7 +2929,7 @@ def q_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = orders.select(
         F.col("o_orderpriority").alias("grp"),
         F.col("o_orderkey").alias("okey"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
+        cents(F.col("o_totalprice")).alias("cents"),
     )
     cal = c.where(F.col("okey") % 2 == 0)
     te = c.where(F.col("okey") % 2 == 1)
@@ -3046,7 +3035,7 @@ def q_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").isNotNull()
     )
     x = orders.groupBy("o_custkey").agg(
-        F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long")).alias("cents")
+        cents_sum(F.col("o_totalprice")).alias("cents")
     )
     r = global_row_number(
         x, [F.col("cents").asc(), F.col("o_custkey").asc_nulls_last()], rank_col="rn"
@@ -3516,7 +3505,7 @@ def q_cuped_did_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     mid = events.where(F.col("ts").isNotNull()).agg(
         F.expr("(min(unix_micros(ts)) + max(unix_micros(ts))) DIV 2").alias("mid_us")
     )
-    cents = F.coalesce(F.round(F.col("value") * 100, 0).cast("long"), F.lit(0))
+    value_cents = F.coalesce(cents(F.col("value")), F.lit(0))
     is_purch = (F.col("event_type") == "purchase") & F.col("ts").isNotNull()
     us = F.unix_micros(F.col("ts"))
     per_user = (
@@ -3527,12 +3516,12 @@ def q_cuped_did_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.sum(
-                F.when(is_purch & (us < F.col("mid_us")), cents).otherwise(F.lit(0))
+                F.when(is_purch & (us < F.col("mid_us")), value_cents).otherwise(F.lit(0))
             )
             .cast("long")
             .alias("pre_c"),
             F.sum(
-                F.when(is_purch & (us >= F.col("mid_us")), cents).otherwise(F.lit(0))
+                F.when(is_purch & (us >= F.col("mid_us")), value_cents).otherwise(F.lit(0))
             )
             .cast("long")
             .alias("post_c"),
@@ -3968,9 +3957,7 @@ def q_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = margins.select(
         "*",
         e.alias("e"),
-        F.round((F.col("o") - e) * (F.col("o") - e) / e * 1000000, 0)
-        .cast("long")
-        .alias("t_micro"),
+        cents((F.col("o") - e) * (F.col("o") - e) / e, 1000000).alias("t_micro"),
     )
     return terms.select(
         "lang",
@@ -4064,10 +4051,7 @@ def q_eb_rate_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate = F.col("k").cast("double") / F.col("n")
     v_df = scalar_join(per_user, mu_df).agg(
         (
-            F.sum(
-                F.round((rate - F.col("mu")) * (rate - F.col("mu")) * 1000000, 0)
-                .cast("long")
-            ).cast("double")
+            F.sum(cents((rate - F.col("mu")) * (rate - F.col("mu")), 1000000)).cast("double")
             / (F.count("*") * 1000000.0)
         ).alias("v"),
         F.first("mu").alias("mu"),
@@ -4252,9 +4236,9 @@ def q_seasonal_decompose_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day_num",
         "cents",
         F.count("*").over(w7).alias("n7"),
-        F.round(F.sum("cents").over(w7).cast("double") / F.count("*").over(w7) * 1000, 0)
-        .cast("long")
-        .alias("trend_milli"),
+        cents(F.sum("cents").over(w7).cast("double") / F.count("*").over(w7), 1000).alias(
+            "trend_milli"
+        ),
     )
     detrended = trended.where(F.col("n7") == 7).select(
         "day_num",
@@ -4360,9 +4344,9 @@ def q_residual_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day_num",
         "cents",
         F.count("*").over(w7).alias("n7"),
-        F.round(F.sum("cents").over(w7).cast("double") / F.count("*").over(w7) * 1000, 0)
-        .cast("long")
-        .alias("trend_milli"),
+        cents(F.sum("cents").over(w7).cast("double") / F.count("*").over(w7), 1000).alias(
+            "trend_milli"
+        ),
     )
     detrended = trended.where(F.col("n7") == 7).select(
         "day_num",
@@ -4624,16 +4608,12 @@ def q_benford_revenue_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 9-row literal expectation table.  This is the cheapest audit in
     the quality family — at 100 TB it rides along any existing pass over
     the fact table via multi-aggregate pushdown."""
-    cents = (
+    prices = (
         load_table(spark, "orders", sf_dir)
         .where(F.col("o_totalprice").isNotNull() & (F.col("o_totalprice") > 0))
-        .select(
-            F.round(F.col("o_totalprice") * 100)
-            .cast("long")
-            .alias("c")
-        )
+        .select(cents(F.col("o_totalprice")).alias("c"))
     )
-    digits = cents.select(
+    digits = prices.select(
         F.substring(F.col("c").cast("string"), 1, 1).cast("int").alias("digit")
     ).groupBy("digit").agg(F.count("*").alias("n_orders"))
     total = digits.groupBy().agg(F.sum("n_orders").alias("__n"))
@@ -4740,9 +4720,7 @@ def q_cohort_ltv_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "datediff(CAST(date_trunc('day', ts) AS DATE), "
                 "CAST(cohort_day AS DATE)) div 7"
             ).alias("week_offset"),
-            F.round(F.coalesce(F.col("value"), F.lit(0.0)) * 100, 0)
-            .cast("long")
-            .alias("cents"),
+            cents(F.coalesce(F.col("value"), F.lit(0.0))).alias("cents"),
         )
     )
     sizes = firsts.groupBy("cohort_day").agg(F.count("*").alias("cohort_size"))
@@ -4946,11 +4924,7 @@ def q_revenue_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
         )
         .agg(
-            F.sum(
-                F.round(F.coalesce(F.col("value"), F.lit(0.0)) * 100, 0).cast(
-                    "long"
-                )
-            )
+            cents_sum(F.coalesce(F.col("value"), F.lit(0.0)))
             .cast("long")
             .alias("cents")
         )
@@ -5047,9 +5021,7 @@ def q_revenue_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where((F.col("event_type") == "purchase") & F.col("ts").isNotNull())
         .groupBy(F.date_trunc("day", F.col("ts")).cast("date").alias("day"))
         .agg(
-            F.sum(
-                F.round(F.coalesce(F.col("value"), F.lit(0.0)) * 100).cast("long")
-            ).alias("cents")
+            cents_sum(F.coalesce(F.col("value"), F.lit(0.0))).alias("cents")
         )
     )
     stats = daily.agg(
@@ -5340,7 +5312,7 @@ def q_stratified_uplift_ipw(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(0)
         .alias("treated"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents(F.col("o_totalprice")).alias("cents"),
     )
     s = o.groupBy("stratum").agg(
         F.count("*").alias("n_orders"),

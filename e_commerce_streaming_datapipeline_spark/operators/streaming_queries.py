@@ -22,6 +22,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from e_commerce_streaming_datapipeline_spark.functions.rounding import cents, cents_sum
 from e_commerce_streaming_datapipeline_spark.functions.scratch import scratch_dir
 from e_commerce_streaming_datapipeline_spark.plans.registry import query
 from e_commerce_streaming_datapipeline_spark.sources.streaming import read_file_stream
@@ -825,7 +826,7 @@ def q_multi_metric_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .agg(
                 F.count("*").alias("cnt"),
-                F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias("cents"),
+                cents_sum(F.col("value")).alias("cents"),
             )
             .collect()
         )
@@ -1919,8 +1920,7 @@ def q_changelog_replay_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "7 days"))
         .agg(
-            (F.sum(F.round(F.col("value") * 100, 0).cast("long")).cast("double") / 100)
-            .alias("gmv"),
+            (cents_sum(F.col("value")).cast("double") / 100).alias("gmv"),
             F.count("*").alias("item_count"),
         )
         .select(F.col("window.start").alias("window_start"), "gmv", "item_count")
@@ -1978,7 +1978,7 @@ def q_agg_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("event_type") == "purchase")
         .groupBy(F.date_trunc("hour", "ts").alias("hour"))
         .agg(
-            F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias("cents"),
+            cents_sum(F.col("value")).alias("cents"),
             F.count("*").alias("n_purchases"),
         )
     )
@@ -2098,8 +2098,8 @@ def q_leaderboard_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_file_stream(spark, sf_dir).where(
         (F.col("event_type") == "purchase") & F.col("user_id").isNotNull()
     )
-    cents = F.coalesce(F.round(F.col("value") * 100, 0).cast("long"), F.lit(0))
-    totals = stream.groupBy("user_id").agg(F.sum(cents).alias("cents"))
+    value_cents = F.coalesce(cents(F.col("value")), F.lit(0))
+    totals = stream.groupBy("user_id").agg(F.sum(value_cents).alias("cents"))
     board = totals.orderBy(F.col("cents").desc(), "user_id").limit(10)
     collected = _run_to_table(spark, board, "leaderboard_stream")
     w = Window.orderBy(F.col("cents").desc(), "user_id")
@@ -2308,10 +2308,7 @@ def build_complete_funnel_joined(
         events.where(F.col("event_type") == "purchase")
         .groupBy(hour.alias("w"))
         .agg(
-            (
-                F.sum(F.round(F.col("value") * 100).cast("long")).cast("double")
-                / 100
-            ).alias("gmv"),
+            (cents_sum(F.col("value")).cast("double") / 100).alias("gmv"),
             F.count("*").alias("item_count"),
         )
     )
@@ -2532,9 +2529,7 @@ def q_dim_refresh_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             ((F.dayofmonth("ts") - 1).cast("long") / 7)
             .cast("long")
             .alias("wk"),
-            F.round(F.coalesce(F.col("value"), F.lit(0.0)) * 100, 0)
-            .cast("long")
-            .alias("cents"),
+            cents(F.coalesce(F.col("value"), F.lit(0.0))).alias("cents"),
         )
         # the CURRENT dimension snapshot for this batch: in production this
         # is a read of the live lookup table; the version key is the

@@ -62,151 +62,11 @@ _OPERATOR_MODULES = [
 # registration order.  Round-2 verdict finding #1: appending modules rotated
 # views.py proof queries out of the driver window — this makes the window
 # content explicit and insertion-order-proof.
-# Rotation ledger: the driver hash-checks only the first 50 entries of
-# ``queries()``, so per-round the prefix rotates through the registry while
-# keeping one witness per SURVEY §2 / LLM-pipeline family.  Names witnessed
-# by a driver CORRECTNESS row in any earlier round (r1-r4 windows; see
-# CORRECTNESS_r0{1,2,3,4}.json) — kept so each round's rotation can prove it
-# adds never-before-witnessed queries:
-_DRIVER_WITNESSED_PRIOR = frozenset(
-    {
-        # the round-9 window (CORRECTNESS_r09.json): 50/50 all-green — the
-        # first fully-green hash-checked round including all three
-        # bounds-oracle sketches.  The 35 rotated-in first-witness queries
-        # below all got green rows
-        "holt_winters_backtest", "kcore_decomposition",
-        "peak_concurrent_sessions", "boolean_and_search",
-        "supplier_pareto_frontier", "label_propagation_communities",
-        "purged_timeseries_folds", "sorted_neighborhood_pairs",
-        "stratified_uplift_ipw", "rake_keyphrases",
-        "stream_state_size_advisor", "event_burst_detection", "ab_srm_check",
-        "burst_detection_stream", "cart_abandonment_stream",
-        "funnel_completion_stream", "multi_metric_stream",
-        "gmv_cascade_stream", "session_stream", "attribution_stream_join",
-        "click_purchase_full_outer_stream", "attributed_clicks_semi_stream",
-        "complete_funnel_stream", "funnel_stream_hourly",
-        "gmv_sliding_stream", "golden_record_stream",
-        "hll_users_daily_to_monthly", "approx_value_percentiles",
-        "kaplan_meier_conversion", "encoding_advisor", "hour_value_heatmap",
-        "embedding_topk_lsh_multiprobe", "multimodal_frame_sample",
-        "min_cost_supplier", "python_datasource_sink_roundtrip",
-    }
-) | frozenset(
-    {
-        # the round-8 window (CORRECTNESS_r08.json): 49/50 all-green, the
-        # 50th (approx_unique_users_hourly, rows-only by design then —
-        # bounds-oracle since r9) witnessed in r1-r3.  The 28 rotated-in
-        # first-witness queries below all got green rows
-        "jaccard_threshold_sweep", "packing_efficiency_sweep",
-        "cross_source_leakage_matrix", "kanon_generalization_ladder",
-        "benford_revenue_audit", "conversion_window_sweep",
-        "schema_drift_audit", "partition_evolution_scan",
-        "embedding_outlier_topk", "session_funnel_conversion",
-        "cohort_ltv_triangle", "vocabulary_growth_curve",
-        "revenue_concentration_hhi", "props_schema_census",
-        "scd2_priority_history", "term_postings", "attribution_first_last",
-        "forecast_backtest_snaive", "nation_pagerank", "cohort_retention",
-        "grouping_sets_revenue", "top_customers", "daily_revenue_ma",
-        "session_window_stats", "xml_source_stats", "multimodal_resize",
-        "unique_buyers_stream", "embedding_near_dups",
-    }
-) | frozenset(
-    {
-        # the round-7 window (CORRECTNESS_r07.json): 49/50 all-green, the
-        # 50th (approx_unique_users_hourly) rows-only by design — the first
-        # fully-green driver round since r2.  The six r6 keepers-by-
-        # exception all went green and leave the window; the 20 rotated-in
-        # first-witness queries are recorded here
-        "zorder_layout_stats", "leaderboard_stream", "bloom_filter_prejoin",
-        "compaction_plan", "supplier_triangles", "conformal_interval",
-        "ivm_delta_merge", "deletion_vector_scan",
-        "compaction_rewrite_roundtrip", "vacuum_orphan_files",
-        "index_delta_merge", "index_tombstone_merge", "pit_feature_assembly",
-        "logreg_sgd_step", "fisher_discriminative_dims",
-        "temperature_mixture_weights", "decontam_threshold_sweep",
-        "embedding_drift_centroid", "dp_user_day_revenue",
-        "prefix_filter_simjoin", "telemetry_double_fire_audit",
-        "shuffle_sizing_advisor", "lateness_watermark_profile",
-        "hilbert_layout_stats", "dim_refresh_stream", "kmv_set_overlap",
-    }
-) | frozenset(
-    {
-        # the round-6 window (CORRECTNESS_r06.json): every name below got a
-        # GREEN driver row in r6.  The six r6 hash-mismatch rows
-        # (zorder_layout_stats, leaderboard_stream, bloom_filter_prejoin,
-        # compaction_plan, supplier_triangles, conformal_interval) are
-        # deliberately NOT listed — all six were the uncast-integer-sum
-        # oracle typing bug (fixed r7, gated by tests/test_oracle_dtypes.py)
-        # and stay in the r7 window as keepers-by-exception until
-        # driver-green
-        "dsir_admission_stream", "skew_key_diagnosis",
-        "recursive_reachability", "dsir_importance_sample",
-        "curation_pipeline", "l_diversity_audit", "target_encoding_loo",
-        "psi_value_drift", "event_transition_matrix", "embedding_topk_ivf",
-        "ivf_probe_recall_audit", "hard_negative_mining", "multimodal_dedup",
-        "multimodal_features", "bpe_encode_tokens", "bigram_pmi_topk",
-        "semantic_dedup_autoblock", "minhash_admission_stream",
-        "orc_source_stats", "corrupt_dlq_roundtrip",
-    }
-) | frozenset(
-    {
-        # the round-5 window (CORRECTNESS_r05.json): every name below got a
-        # green driver row in r5 — zorder_layout_stats AND leaderboard_stream
-        # are deliberately NOT listed (their r5 rows were the two hash
-        # mismatches; both stay in the r6 window until driver-green, per the
-        # rotation rule's keeper-by-exception clause)
-        "dup_clusters", "dedup_rewrite_docs", "bigram_perplexity",
-        "cdc_apply_latest", "locf_value_15min", "lateral_top_lineitems",
-        "supplier_components_star", "embedding_topk_pq_rerank",
-        "pq_encode_stream", "bpe_learn_merges", "dp_noisy_lang_counts",
-        "neyman_allocation_sample", "exact_price_percentiles",
-        "salted_join_rewrite", "gmv_pattern_topk", "holt_forecast_backtest",
-        "embedding_topk_ivf_adc", "retrieval_eval_mrr", "pr_curve_thresholds",
-        "journey_stream_join", "k_anonymity_audit", "tfidf_top_terms",
-        "copurchase_pairs", "scd2_pit_lookup",
-    }
-) | frozenset(
-    {
-        # the round-4 window (CORRECTNESS_r04.json): every name below got a
-        # driver row in r4
-        "trained_ivf_topk", "scd2_stream_merge", "bm25_topk",
-        "markov_attribution", "mmr_diversified_topk", "psi_drift_stream",
-        "calibration_bins", "semantic_dedup", "checkpoint_resume_stream",
-        "supplier_components", "ngram_zipf_slope", "conversion_latency_stats",
-        "revenue_gini", "rfm_segments", "clv_pareto_deciles",
-        "equi_depth_histogram", "source_quantile_normalize",
-        "lambda_unified_gmv", "hybrid_rrf_fusion", "retrieval_eval_ndcg",
-        "auc_quality_langid", "dq_expectations", "manifest_time_travel",
-        "t_closeness_audit", "embedding_topk_pq",
-    }
-) | frozenset(
-    {
-        # r3 curated prefix (== r1/r2 union plus the restored views queries)
-        "gmv_minutely", "gmv_sliding", "funnel_hourly", "ordered_funnel",
-        "dropoff_hourly", "payment_hourly", "enrich_lineitem", "status_flags",
-        "payment_rollup", "active_alerts", "stats_rollup",
-        "latest_gmv_windows", "retention_filter", "complete_funnel",
-        "order_details", "orders_without_items", "dedup_events",
-        "approx_unique_users_hourly", "kafka_payload_roundtrip",
-        "csv_source_stats", "jdbc_upsert_roundtrip", "corrupt_record_drop",
-        "python_datasource_feed", "replay_rate_source", "bucketed_order_join",
-        "median_price_udaf", "variant_props_stats", "doc_chunks_udtf",
-        "dedup_docs_exact", "minhash_near_dups", "simhash_dup_groups",
-        "incremental_dedup", "embedding_topk", "embedding_topk_lsh",
-        "kmeans_lloyd_step", "text_stats", "lang_id", "token_count_estimates",
-        "doc_fingerprints", "pii_redaction", "benchmark_decontam",
-        "train_test_split", "stratified_doc_sample", "multimodal_decode",
-        "gmv_stream_minutely", "dedup_stream_counts", "metrics_merge_upsert",
-        "pricing_summary", "user_sessions", "heavy_hitters_cms",
-        # r1/r2 windows additionally witnessed (registration-order spill
-        # before the r3 curation): recorded in CORRECTNESS_r01/r02.json
-        "dedup_docs_bag", "embedding_topk_pandas", "gapfilled_minutely_gmv",
-        "asof_last_purchase", "user_activity_1h", "region_revenue",
-        "top_orders_per_customer", "shipping_priority",
-        "order_priority_check", "returned_item_ranking",
-        "large_volume_customers", "bracket_revenue", "sequence_packing",
-    }
-)
+# Rotation: the driver hash-checks only the first 50 entries of
+# ``queries()``, so per round the prefix rotates through the registry while
+# keeping one witness per SURVEY §2 / LLM-pipeline family.  The names earlier
+# windows witnessed are the keys of the committed CORRECTNESS_r*.json files
+# (tests/test_round3_ops.py::test_rotation_adds_never_witnessed_queries).
 
 _PROOF_PREFIX = (
     # ---- round-10 window: 15 SURVEY §2 flagship keepers + 35 rotated-in

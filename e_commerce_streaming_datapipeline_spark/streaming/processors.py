@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from e_commerce_streaming_datapipeline_spark.functions.rounding import fround
+from e_commerce_streaming_datapipeline_spark.functions.rounding import cents_sum, fround
 
 WATERMARK_DELAY = "10 minutes"  # honoring the reference's orphaned config
 
@@ -201,9 +201,7 @@ def streaming_gmv_cascade(events: DataFrame) -> DataFrame:
         _ensure_watermark(events.where(F.col("event_type") == "purchase"))
         .groupBy(F.window("ts", "1 minute").alias("w1"))
         .agg(
-            F.sum(
-                F.round(F.coalesce("value", F.lit(0.0)) * 100, 0).cast("long")
-            ).alias("m_cents"),
+            cents_sum(F.coalesce("value", F.lit(0.0))).alias("m_cents"),
             F.count("*").alias("m_n"),
         )
     )

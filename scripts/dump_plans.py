@@ -50,9 +50,7 @@ def main() -> None:
     # their interesting plans are documented in SCALE.md, not here
     side_effecting = {"jdbc_upsert_roundtrip", "lambda_unified_gmv",
                       "observed_quality_metrics"}
-    for name in (bench.HEADLINE + bench.EXTENDED + bench.EXTENDED_R3
-                 + bench.EXTENDED_R4 + bench.EXTENDED_R5 + bench.EXTENDED_R6
-                 + bench.EXTENDED_R7 + bench.EXTENDED_R8 + extra):
+    for name in bench.SECTION_QUERIES + extra:
         if name.endswith("_stream") or "_stream_" in name or name == "gmv_stream_minutely":
             continue
         if name in side_effecting:

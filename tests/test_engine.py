@@ -3,6 +3,9 @@ cross-engine rounding, vector math, source normalization."""
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import duckdb
 import numpy as np
 import pytest
@@ -25,6 +28,64 @@ def test_fround_matches_duckdb_on_halves(spark):
         duckdb.sql(f"SELECT round({v!r}::DOUBLE, 2)").fetchone()[0] for v in values
     ]
     assert got == expected
+
+
+def _inline_fixed_point_sites(package: Path) -> list[str]:
+    """``round(<expr> * 10^k[, 0]).cast("long")`` outside the kernel."""
+    powers_of_ten = {10**k for k in range(1, 19)}
+
+    def is_power_of_ten(node: ast.AST) -> bool:
+        return (
+            isinstance(node, ast.Constant)
+            and type(node.value) is int
+            and node.value in powers_of_ten
+        )
+
+    sites = []
+    for path in sorted(package.rglob("*.py")):
+        if path.relative_to(package).as_posix() == "functions/rounding.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "cast"
+                and node.args
+                and isinstance(node.args[0], ast.Constant)
+                and node.args[0].value in ("long", "bigint")
+            ):
+                continue
+            rounded = node.func.value
+            if not (
+                isinstance(rounded, ast.Call)
+                and getattr(rounded.func, "attr", getattr(rounded.func, "id", None))
+                == "round"
+                and rounded.args
+            ):
+                continue
+            product = rounded.args[0]
+            if isinstance(product, ast.BinOp) and isinstance(product.op, ast.Mult) and (
+                is_power_of_ten(product.left) or is_power_of_ten(product.right)
+            ):
+                sites.append(f"{path.relative_to(package)}:{node.lineno}")
+    return sites
+
+
+def test_fixed_point_lives_in_one_kernel(tmp_path):
+    """The scaled-long fixed-point format (scale, integer literal, round at
+    0 dp, cast to long) is spelled once, in ``functions/rounding.py::cents``;
+    every operator calls it.  A hand-inlined copy can drift from its
+    streaming or batch twin and show up only as an oracle hash mismatch.
+    AST scan, so multi-line expressions are caught too."""
+    import e_commerce_streaming_datapipeline_spark as pkg
+
+    package = Path(pkg.__file__).resolve().parent
+    assert _inline_fixed_point_sites(package) == []
+    # the scan sees a planted multi-line copy
+    (tmp_path / "m.py").write_text(
+        'x = F.round(\n    F.col("v")\n    * 1_000_000,\n    0,\n).cast("long")\n'
+    )
+    assert _inline_fixed_point_sites(tmp_path) == ["m.py:1"]
 
 
 def test_dedup_winner_stable_under_repartition(spark, sf_dir):

@@ -214,7 +214,10 @@ def test_hash_bucket_spreads_consecutive_ids_past_int64_wrap(spark):
     ``id % 2``.  All 100 buckets fill about evenly, bucket parity is
     independent of id parity, and Spark equals the DuckDB twin row for row
     (the full 32-bit hash too), also past ~3.47e9 where an unreduced
-    multiply wraps int64 in Spark."""
+    multiply wraps int64 in Spark.  The same keys drive the two other
+    hashed keys of oracle-checked queries: ``weighted_doc_sample``'s
+    uniform is ``hash32(doc_id)``, and ``negative_samples``' candidate hash
+    takes the id as both customer and part key."""
     import duckdb
 
     from e_commerce_streaming_datapipeline_spark.functions.hashing import (
@@ -223,19 +226,30 @@ def test_hash_bucket_spreads_consecutive_ids_past_int64_wrap(spark):
         hash_bucket,
         hash_bucket_sql,
     )
+    from e_commerce_streaming_datapipeline_spark.operators.curation import (
+        neg_candidate_hash,
+        neg_candidate_hash_sql,
+    )
 
     ids = list(range(10_000)) + [3_500_000_000 + i for i in range(50)] + [2**40 + 7]
     df = spark.createDataFrame([(i,) for i in ids], "id long")
     got = {
-        r[0]: (r[1], r[2])
-        for r in df.select("id", hash_bucket(F.col("id"), 100), hash32(F.col("id"))).collect()
+        r[0]: (r[1], r[2], r[3])
+        for r in df.select(
+            "id",
+            hash_bucket(F.col("id"), 100),
+            hash32(F.col("id")),
+            neg_candidate_hash(F.col("id"), F.col("id"), F.lit(2)),
+        ).collect()
     }
     con = duckdb.connect()
     con.execute("CREATE TABLE t AS SELECT unnest(?::BIGINT[]) AS id", [ids])
     oracle = con.execute(
-        f"SELECT id, {hash_bucket_sql('id', 100)}, {hash32_sql('id')} FROM t"
+        f"SELECT id, {hash_bucket_sql('id', 100)}, {hash32_sql('id')},"
+        f" {neg_candidate_hash_sql('id', 'id', '2')} FROM t"
     ).fetchall()
-    assert {r[0]: (r[1], r[2]) for r in oracle} == got
+    assert {r[0]: (r[1], r[2], r[3]) for r in oracle} == got
+    assert all(0 <= v[2] < 2**32 for v in got.values())
     buckets = [got[i][0] for i in range(10_000)]
     assert set(buckets) == set(range(100))
     assert max(buckets.count(b) for b in range(100)) < 200

@@ -4,12 +4,17 @@ census, fixed-point source-stats sums)."""
 
 from __future__ import annotations
 
+import json
+from pathlib import Path
+
 import pyarrow as pa
 import pytest
 
 from pyspark.sql import functions as F
 
 from e_commerce_streaming_datapipeline_spark.plans import registry
+
+REPO_ROOT = Path(__file__).resolve().parent.parent
 
 
 class TestProofPrefix:
@@ -83,9 +88,16 @@ class TestProofPrefix:
         task #1 and again by r8 task #1 — registry growth was outpacing
         driver-window throughput): the current window must witness >= 35
         queries that never had a driver CORRECTNESS row in any earlier
-        round."""
-        window = set(registry._PROOF_PREFIX)
-        fresh = window - registry._DRIVER_WITNESSED_PRIOR
+        round.  The earlier rounds' witnesses are the keys of every committed
+        ``CORRECTNESS_r*.json`` except the current window's own run (the
+        file whose key order is the proof prefix)."""
+        window = registry._PROOF_PREFIX
+        runs = [
+            json.loads(p.read_text())
+            for p in sorted(REPO_ROOT.glob("CORRECTNESS_r*.json"))
+        ]
+        witnessed = set().union(*(run for run in runs if tuple(run) != window))
+        fresh = set(window) - witnessed
         assert len(fresh) >= 35, sorted(fresh)
 
     def test_reorder_loses_no_queries(self):

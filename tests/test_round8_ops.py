@@ -157,9 +157,7 @@ class TestBenchCoverageContract:
         construction — so sections ∪ (registry − sections) == registry."""
         import bench
 
-        sections = (bench.HEADLINE + bench.EXTENDED + bench.EXTENDED_R3
-                    + bench.EXTENDED_R4 + bench.EXTENDED_R5 + bench.EXTENDED_R6
-                    + bench.EXTENDED_R7 + bench.EXTENDED_R8)
+        sections = bench.SECTION_QUERIES
         assert len(sections) == len(set(sections)), "duplicate section entry"
         unknown = set(sections) - set(reg)
         assert not unknown, f"bench sections name unregistered queries: {unknown}"
