@@ -675,23 +675,21 @@ def q_warehouse_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataF
     # location too, or a re-CREATE would recover stale partitions from a
     # previous fixture revision (round-3 review finding)
     shutil.rmtree(loc, ignore_errors=True)
+    # dynamic overwrite as a TABLE option: builders share one session, so
+    # its partitionOverwriteMode stays untouched
     spark.sql(
         "CREATE TABLE events_wh (event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
         "event_type STRING, value DOUBLE, props STRING, event_date DATE) "
-        f"USING parquet PARTITIONED BY (event_date) LOCATION '{loc}'"
+        f"USING parquet PARTITIONED BY (event_date) LOCATION '{loc}' "
+        "OPTIONS ('partitionOverwriteMode'='dynamic')"
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        insert = (
-            "INSERT OVERWRITE TABLE events_wh PARTITION (event_date) "
-            "SELECT event_id, ts, user_id, event_type, value, props, "
-            "to_date(ts) AS event_date FROM events_src_wh"
-        )
-        spark.sql(insert)
-        spark.sql(insert)  # partition-level overwrite idempotence
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    insert = (
+        "INSERT OVERWRITE TABLE events_wh PARTITION (event_date) "
+        "SELECT event_id, ts, user_id, event_type, value, props, "
+        "to_date(ts) AS event_date FROM events_src_wh"
+    )
+    spark.sql(insert)
+    spark.sql(insert)  # partition-level overwrite idempotence
     return (
         spark.table("events_wh")
         .groupBy("event_date")

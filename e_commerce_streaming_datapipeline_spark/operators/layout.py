@@ -1114,14 +1114,18 @@ def q_compaction_rewrite_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
     back = spark.read.parquet(compact_dir)
+    # the file counts come from the metadata-sized inventory and bin map (as
+    # the oracle takes n_bins from `binned`), leaving the data aggregate one
+    # distinct group: two would plan an Expand whose group order varies
+    # between builds of the same code
     n_src = inventory.agg(F.count("*").cast("long").alias("n_source_files"))
+    n_bins = assignment.agg(F.count_distinct("bin").cast("long").alias("n_bins"))
     stats = back.agg(
-        F.count_distinct("bin").cast("long").alias("n_bins"),
         F.count("*").alias("n_rows"),
         F.count_distinct("event_id").alias("n_distinct_events"),
         cents_sum_double(F.col("value")).alias("total_value"),
     )
-    return scalar_join(stats, n_src).select(
+    return scalar_join(scalar_join(stats, n_src), n_bins).select(
         "n_source_files", "n_bins", "n_rows", "n_distinct_events", "total_value"
     )
 

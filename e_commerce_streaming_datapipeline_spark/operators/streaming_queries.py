@@ -18,6 +18,7 @@ import os
 import shutil
 import tempfile
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -39,12 +40,12 @@ from e_commerce_streaming_datapipeline_spark.streaming.processors import (
 # partition materializes a state-store instance for the life of the query, so
 # the partition count must be sized to state volume, not to batch-CPU count.
 # Windowed-agg state here is #windows/#users rows (tiny); at real scale raise
-# this with expected state size, not with core count.  Default measured at
+# this with expected state size, not with core count.  The 4 was measured at
 # sf0.1: 4 beats 8 on the chained stream-stream joins (per-partition state
 # store open/commit dominates over parallelism at this state volume —
 # journey_stream_join 6.4s→4.2s) while costing <5% on the Python-worker
 # stateful queries that like parallelism.
-_STREAM_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "4"))
+_STREAM_SHUFFLE_PARTITIONS = 4
 
 
 def _stream_leg(
@@ -88,9 +89,12 @@ def _stream_run(spark: SparkSession, name_prefix: str):
     checkpoint path, and the pinned stream shuffle partitions — the conf is
     restored and the checkpoint directory REMOVED when the run ends (each
     run gets a fresh checkpoint anyway, so keeping it only leaks /tmp state
-    per invocation).  Shared by _run_to_table and the custom-sink/trigger
-    queries (rate source, multi-metric fan-out) so the save/set/restore
-    guard exists once."""
+    per invocation).  The pin is the package's one per-run conf write:
+    Spark has no per-query setting for a stream's state-partition count; it
+    is read from the session when the stream starts and then fixed in the
+    checkpoint.  ``run_stream`` runs every availableNow stream through
+    here; ``q_replay_rate_source`` uses it directly to poll an unbounded
+    source."""
     name = f"{name_prefix}_{uuid.uuid4().hex[:8]}"
     checkpoint = os.path.join(tempfile.gettempdir(), "e_commerce_streaming_datapipeline_ckpt", name)
     prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
@@ -102,20 +106,27 @@ def _stream_run(spark: SparkSession, name_prefix: str):
         shutil.rmtree(checkpoint, ignore_errors=True)
 
 
-def _run_to_table(
-    spark: SparkSession, stream_df: DataFrame, name_prefix: str, output_mode: str = "complete"
-) -> DataFrame:
+def run_stream(
+    spark: SparkSession,
+    stream_df: DataFrame,
+    name_prefix: str,
+    output_mode: str = "complete",
+    sink: Callable[[DataFrame, int], None] | None = None,
+) -> DataFrame | None:
+    """Run ``stream_df`` to the end of its input (``availableNow``) inside
+    ``_stream_run``.  With no ``sink`` the rows land in a memory table,
+    which is returned; otherwise every micro-batch goes to
+    ``sink(batch_df, batch_id)`` (``foreachBatch``) and None is returned."""
     with _stream_run(spark, name_prefix) as (name, checkpoint):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
+        writer = (
+            stream_df.writeStream.queryName(name)
             .outputMode(output_mode)
             .option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
-    return spark.table(name)
+        writer = writer.format("memory") if sink is None else writer.foreachBatch(sink)
+        writer.start().awaitTermination()
+    return spark.table(name) if sink is None else None
 
 
 @query(
@@ -140,7 +151,7 @@ def q_gmv_stream_minutely(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the same oracle as the batch twin — the streaming-vs-batch
     equivalence gate."""
     events = read_file_stream(spark, sf_dir)
-    return _run_to_table(spark, streaming_gmv(events, "1 minute"), "gmv_stream")
+    return run_stream(spark, streaming_gmv(events, "1 minute"), "gmv_stream")
 
 
 @query(
@@ -160,7 +171,7 @@ def q_unique_buyers_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     count_distinct, so this is the two-stage dropDuplicates-then-count plan,
     hash-checked against the batch COUNT(DISTINCT) oracle."""
     events = read_file_stream(spark, sf_dir)
-    return _run_to_table(
+    return run_stream(
         spark, streaming_unique_buyers(events, "1 minute"), "unique_buyers_stream"
     )
 
@@ -195,7 +206,7 @@ def q_funnel_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch funnel — streaming-vs-batch equivalence as a driver-visible gate,
     not just a pytest."""
     events = read_file_stream(spark, sf_dir)
-    return _run_to_table(spark, streaming_funnel(events, "1 hour"), "funnel_stream")
+    return run_stream(spark, streaming_funnel(events, "1 hour"), "funnel_stream")
 
 
 @query(
@@ -234,7 +245,7 @@ def q_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     gaps-and-islands oracle above (note >=, where the batch
     ``user_sessions`` twin uses > per its own window-function definition)."""
     events = read_file_stream(spark, sf_dir)
-    return _run_to_table(spark, streaming_sessions(events, "30 minutes"), "session_stream")
+    return run_stream(spark, streaming_sessions(events, "30 minutes"), "session_stream")
 
 
 @query(
@@ -273,7 +284,7 @@ def q_dedup_stream_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             fround(F.sum(F.coalesce(F.col("value"), F.lit(0.0))), 2).alias("total_value"),
         )
     )
-    return _run_to_table(spark, counts, "dedup_stream")
+    return run_stream(spark, counts, "dedup_stream")
 
 
 @query(
@@ -331,7 +342,7 @@ def q_attribution_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "click_ts",
         fround(F.col("value"), 2).alias("purchase_value"),
     )
-    return _run_to_table(spark, joined, "attribution_stream", output_mode="append")
+    return run_stream(spark, joined, "attribution_stream", output_mode="append")
 
 
 @query(
@@ -407,7 +418,7 @@ def q_journey_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_ts").alias("click_ts"),
         F.col("p_ts").alias("purchase_ts"),
     )
-    return _run_to_table(spark, journeys, "journey_stream", output_mode="append")
+    return run_stream(spark, journeys, "journey_stream", output_mode="append")
 
 
 @query(
@@ -444,7 +455,7 @@ def q_gmv_cascade_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     events = read_file_stream(spark, sf_dir)
-    return _run_to_table(
+    return run_stream(
         spark, streaming_gmv_cascade(events), "gmv_cascade", output_mode="append"
     )
 
@@ -492,7 +503,7 @@ def q_cart_abandonment_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     events = read_file_stream(spark, sf_dir)
-    return _run_to_table(
+    return run_stream(
         spark, streaming_cart_abandonment(events), "cart_abandonment", output_mode="append"
     )
 
@@ -545,7 +556,7 @@ def q_funnel_completion_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     events = read_file_stream(spark, sf_dir)
-    return _run_to_table(
+    return run_stream(
         spark, streaming_funnel_completion(events), "funnel_completion", output_mode="append"
     )
 
@@ -619,7 +630,7 @@ def q_unattributed_purchases_stream(spark: SparkSession, sf_dir: str) -> DataFra
             fround(F.coalesce(F.col("value"), F.lit(0.0)), 2).alias("purchase_value"),
         )
     )
-    return _run_to_table(spark, joined, "unattributed_stream", output_mode="append")
+    return run_stream(spark, joined, "unattributed_stream", output_mode="append")
 
 
 @query(
@@ -641,7 +652,7 @@ def q_user_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     Complete mode, so the memory sink holds one row per user: the current
     profile."""
     events = read_file_stream(spark, sf_dir)
-    return _run_to_table(spark, streaming_user_stats(events), "user_stats_stream")
+    return run_stream(spark, streaming_user_stats(events), "user_stats_stream")
 
 
 @query(
@@ -682,7 +693,7 @@ def q_segment_revenue_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("purchases"),
         fround(F.sum("value"), 2).alias("revenue"),
     )
-    return _run_to_table(spark, rolled, "segment_revenue_stream")
+    return run_stream(spark, rolled, "segment_revenue_stream")
 
 
 @query(
@@ -832,14 +843,7 @@ def q_multi_metric_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     stream = read_file_stream(spark, sf_dir)
-    with _stream_run(spark, "multi_metric") as (name, checkpoint):
-        q = (
-            stream.writeStream.foreachBatch(reduce_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_stream(spark, stream, "multi_metric", output_mode="append", sink=reduce_batch)
 
     # merge per-batch partials (exact: counts and cents are both sums)
     p = (
@@ -950,7 +954,7 @@ def q_gmv_sliding_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "min_item_price",
         )
     )
-    return _run_to_table(spark, rolled, "gmv_sliding_stream")
+    return run_stream(spark, rolled, "gmv_sliding_stream")
 
 
 @query(
@@ -1021,7 +1025,7 @@ def q_click_purchase_full_outer_stream(spark: SparkSession, sf_dir: str) -> Data
     column stays scalar-typed and NaN-free for downstream canonicalizers;
     null timestamps stay NULL (NaT is hashable)."""
     joined = build_full_outer_click_purchase(spark, sf_dir)
-    return _run_to_table(
+    return run_stream(
         spark, joined, "full_outer_stream", output_mode="append"
     )
 
@@ -1143,7 +1147,7 @@ def q_unattributed_asym_watermark_stream(spark: SparkSession, sf_dir: str) -> Da
             "purchase_ts",
         )
     )
-    return _run_to_table(
+    return run_stream(
         spark, joined, "unattributed_asym_stream", output_mode="append"
     )
 
@@ -1190,7 +1194,7 @@ def q_session_dynamic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_purchases",
         )
     )
-    return _run_to_table(spark, sessions, "session_dynamic_stream")
+    return run_stream(spark, sessions, "session_dynamic_stream")
 
 
 @query(
@@ -1243,7 +1247,7 @@ def q_attributed_clicks_semi_stream(spark: SparkSession, sf_dir: str) -> DataFra
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
         "left_semi",
     ).select("user_id", "click_id", "click_ts")
-    return _run_to_table(spark, joined, "attributed_semi_stream", output_mode="append")
+    return run_stream(spark, joined, "attributed_semi_stream", output_mode="append")
 
 
 @query(
@@ -1297,7 +1301,7 @@ def q_unique_buyers_bitmap_stream(spark: SparkSession, sf_dir: str) -> DataFrame
             ).alias("bucket_users")
         )
     )
-    sink = _run_to_table(
+    sink = run_stream(
         spark, per_bucket, "unique_buyers_bitmap_stream", output_mode="complete"
     )
     return (
@@ -1378,7 +1382,7 @@ def q_lambda_unified_gmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "10 minutes")
     )
     w = F.window(F.col("ts"), "1 hour").alias("w")
-    speed_layer_raw = _run_to_table(
+    speed_layer_raw = run_stream(
         spark,
         stream.groupBy(w).agg(
             cents_sum_double(F.col("value")).alias("gmv"),
@@ -1440,7 +1444,7 @@ def q_histogram_stream_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     binned = stream.groupBy(
         F.window(F.col("ts"), "1 day").alias("w"), hist_bin(F.col("value")).alias("bin")
     ).count()
-    collected = _run_to_table(spark, binned, "hist_stream", output_mode="update")
+    collected = run_stream(spark, binned, "hist_stream", output_mode="update")
     # finalize per (day, bin): update mode logs every per-batch revision of
     # a cell; counts only grow, so max = the final value (same finalization
     # the CMS twin applies) — without it a multi-batch replay sums a cell's
@@ -1483,7 +1487,7 @@ def q_heavy_hitters_cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(_cms_bucket_structs("user_id")).alias("s")
     ).select("s.j", "s.bkt")
     cells_stream = stream.groupBy("j", "bkt").count()
-    collected = _run_to_table(spark, cells_stream, "cms_stream", output_mode="update")
+    collected = run_stream(spark, cells_stream, "cms_stream", output_mode="update")
     # update-mode memory sink logs every per-batch update; counts only grow,
     # so the final cell value is the max observed per (j, bkt)
     cells = collected.groupBy("j", "bkt").agg(F.max("count").alias("c"))
@@ -1552,14 +1556,7 @@ def q_minhash_admission_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     stream = read_file_stream(spark, sf_dir, "documents.parquet")
-    with _stream_run(spark, "minhash_admission") as (name, checkpoint):
-        q = (
-            stream.writeStream.foreachBatch(admit)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_stream(spark, stream, "minhash_admission", output_mode="append", sink=admit)
 
     return spark.createDataFrame(
         accepted, schema="doc_new long, doc_index long, jaccard double"
@@ -1685,14 +1682,7 @@ def q_scd2_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_file_stream(
         spark, cdc_dir, "orders-*.parquet", max_files_per_trigger=1
     )
-    with _stream_run(spark, "scd2_merge") as (name, checkpoint):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_stream(spark, stream, "scd2_merge", output_mode="append", sink=merge_batch)
     # the final store = every version's immutable newly-closed rows plus
     # the live snapshot from the last version; superseded current
     # snapshots stay on disk but the run dir is /tmp-scoped like the
@@ -1925,15 +1915,7 @@ def q_changelog_replay_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("window.start").alias("window_start"), "gmv", "item_count")
     )
-    with _stream_run(spark, "changelog") as (name, checkpoint):
-        q = (
-            agg.writeStream.foreachBatch(capture)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_stream(spark, agg, "changelog", output_mode="update", sink=capture)
     changelog = spark.read.parquet(changelog_dir)
     latest = Window.partitionBy("window_start").orderBy(F.col("batch_id").desc())
     return (
@@ -2047,7 +2029,7 @@ def q_psi_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("half"),
     )
     cells_stream = keyed.groupBy("bin", "half").count()
-    collected = _run_to_table(spark, cells_stream, "psi_stream", output_mode="update")
+    collected = run_stream(spark, cells_stream, "psi_stream", output_mode="update")
     # update-mode memory sink logs every per-batch revision; counts only
     # grow, so the final cell value is the max observed per (bin, half)
     cells = collected.groupBy("bin", "half").agg(F.max("count").alias("c"))
@@ -2101,7 +2083,7 @@ def q_leaderboard_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     value_cents = F.coalesce(cents(F.col("value")), F.lit(0))
     totals = stream.groupBy("user_id").agg(F.sum(value_cents).alias("cents"))
     board = totals.orderBy(F.col("cents").desc(), "user_id").limit(10)
-    collected = _run_to_table(spark, board, "leaderboard_stream")
+    collected = run_stream(spark, board, "leaderboard_stream")
     w = Window.orderBy(F.col("cents").desc(), "user_id")
     return collected.select(
         "user_id",
@@ -2219,7 +2201,7 @@ def q_pq_encode_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("vec_id").alias("min_vec_id"),
         F.max("vec_id").alias("max_vec_id"),
     )
-    return _run_to_table(spark, census, "pq_encode_stream")
+    return run_stream(spark, census, "pq_encode_stream")
 
 
 # --------------------------------------------------------------------------
@@ -2280,7 +2262,7 @@ def q_complete_funnel_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark horizon, evicted as it advances.  No raw event ever reaches
     the join."""
     joined = build_complete_funnel_joined(spark, sf_dir)
-    return _run_to_table(
+    return run_stream(
         spark, joined, "complete_funnel_stream", output_mode="append"
     )
 
@@ -2421,14 +2403,7 @@ def q_dsir_admission_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).write.mode("append").parquet(sink_dir)
 
     stream = read_file_stream(spark, sf_dir, "documents.parquet")
-    with _stream_run(spark, "dsir_admission") as (name, checkpoint):
-        q = (
-            stream.writeStream.foreachBatch(admit)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_stream(spark, stream, "dsir_admission", output_mode="append", sink=admit)
 
     if not os.path.isdir(sink_dir):  # no batch admitted anything
         return spark.createDataFrame(
@@ -2564,14 +2539,7 @@ def q_dim_refresh_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(feed_dir)
     )
-    with _stream_run(spark, "dim_refresh") as (name, checkpoint):
-        q = (
-            stream.writeStream.foreachBatch(enrich)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_stream(spark, stream, "dim_refresh", output_mode="append", sink=enrich)
 
     per_batch = spark.read.parquet(sink_dir)
     return per_batch.groupBy("event_type").agg(
@@ -2704,14 +2672,7 @@ def q_column_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(feed_dir)
     )
-    with _stream_run(spark, "column_stats") as (name, checkpoint):
-        q = (
-            stream.writeStream.foreachBatch(monitor)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_stream(spark, stream, "column_stats", output_mode="append", sink=monitor)
 
     # batches are week-exact by construction, so the sink is already at
     # (wk, col) grain; the max-merge makes a replayed batch idempotent
@@ -2854,15 +2815,7 @@ def q_golden_record_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = read_file_stream(spark, feed_dir, "events-*.parquet",
                               max_files_per_trigger=5)
-    with _stream_run(spark, "goldenstream") as (name, checkpoint):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_stream(spark, stream, "goldenstream", output_mode="append", sink=fold)
     store = spark.read.parquet(store_dir)
     merged = store.groupBy("user_id", "event_type", "hour_bucket").agg(
         F.sum("n_dupes").cast("long").alias("n_dupes"),
@@ -2964,15 +2917,7 @@ def q_burst_detection_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_file_stream(
         spark, feed_dir, "events-*.parquet", max_files_per_trigger=5
     )
-    with _stream_run(spark, "burststream") as (name, checkpoint):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_stream(spark, stream, "burststream", output_mode="append", sink=fold)
     merged = (
         spark.read.parquet(store_dir)
         .groupBy("event_type", "hour")

@@ -24,6 +24,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType
 
 from e_commerce_streaming_datapipeline_spark.schemas import TESTDATA_TABLES
+from e_commerce_streaming_datapipeline_spark.session import (
+    FIXTURE_CONF,
+    _default_parallelism,
+)
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -99,19 +103,17 @@ def _ship_package(spark: SparkSession) -> None:
 def ensure_session_conf(spark: SparkSession) -> None:
     """Make an externally-provided SparkSession (e.g. the driver's) safe for
     the fixture tables: ns-timestamp parquet needs the legacy long fallback,
-    and all window bucketing/oracle comparison assumes UTC.  Both are
-    runtime-settable SQL confs; idempotent."""
+    and all window bucketing/oracle comparison assumes UTC.  Pins
+    ``session.FIXTURE_CONF``, writing a key only when its value differs, so
+    a ``get_spark`` session gets no writes; idempotent."""
     _ship_package(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # fixtures write timestamp[us] with isAdjustedToUTC=false; read as plain
-    # TIMESTAMP (UTC session) so window()/unix_micros/etc. accept the column
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    for key, value in FIXTURE_CONF.items():
+        if spark.conf.get(key, None) != value:
+            spark.conf.set(key, value)
     # right-size shuffles if the session still carries Spark's static default
     # (AQE coalesces batch shuffles, but streaming stateful ops can't)
     if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
-        spark.conf.set("spark.sql.shuffle.partitions", str(os.cpu_count() or 8))
+        spark.conf.set("spark.sql.shuffle.partitions", str(_default_parallelism()))
 
 
 # path -> (st_size, st_mtime_ns, inferred schema) of single-file tables.

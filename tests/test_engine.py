@@ -88,6 +88,149 @@ def test_fixed_point_lives_in_one_kernel(tmp_path):
     assert _inline_fixed_point_sites(tmp_path) == ["m.py:1"]
 
 
+# module -> the one function in it allowed to write session conf (None: the
+# whole module; a module not listed may not write it)
+_CONF_WRITERS = {
+    "session.py": None,
+    "sources/batch.py": "ensure_session_conf",
+    "operators/streaming_queries.py": "_stream_run",
+}
+# the modules that read deployment settings from the environment
+_ENV_READERS = {
+    "session.py",
+    "sources/batch.py",
+    "functions/checkpoints.py",
+    "__main__.py",
+}
+
+
+def _conf_and_env_sites(package: Path) -> tuple[list[str], set[str]]:
+    """``.conf.set``/``.conf.unset`` calls outside their owners and
+    ``SPARK_GRAFT_*`` environment reads outside the deployment modules, plus
+    every ``SPARK_GRAFT_*`` name read anywhere."""
+
+    def is_conf_write(node: ast.AST) -> bool:
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("set", "unset")
+            and getattr(node.func.value, "attr", None) == "conf"
+        )
+
+    def env_read(node: ast.AST) -> str | None:
+        """The name read by ``environ.get(NAME)``/``getenv(NAME)``/``environ[NAME]``."""
+        if isinstance(node, ast.Call) and getattr(node.func, "attr", None) in (
+            "get",
+            "getenv",
+        ):
+            key = node.args[0] if node.args else None
+        elif isinstance(node, ast.Subscript):
+            key = node.slice
+        else:
+            return None
+        if isinstance(key, ast.Constant) and str(key.value).startswith("SPARK_GRAFT_"):
+            return key.value
+        return None
+
+    sites, names = [], set()
+    for path in sorted(package.rglob("*.py")):
+        rel = path.relative_to(package).as_posix()
+        for stmt in ast.parse(path.read_text()).body:
+            owner = getattr(stmt, "name", None)
+            for node in ast.walk(stmt):
+                if is_conf_write(node) and _CONF_WRITERS.get(rel, "") not in (None, owner):
+                    sites.append(f"{rel}:{node.lineno}")
+                name = env_read(node)
+                if name:
+                    names.add(name)
+                    if rel not in _ENV_READERS:
+                        sites.append(f"{rel}:{node.lineno}")
+    return sites, names
+
+
+def test_session_conf_and_env_settings_live_in_one_place(tmp_path):
+    """Session conf is written only by ``session.py``, ``ensure_session_conf``
+    and the stream-run pin; no builder changes the shared session while it
+    runs.  The environment carries deployment settings only; every SQL conf
+    has one value in ``session.SESSION_CONF`` and is overridden through
+    ``SPARK_GRAFT_EXTRA_CONF``."""
+    import e_commerce_streaming_datapipeline_spark as pkg
+
+    package = Path(pkg.__file__).resolve().parent
+    sites, names = _conf_and_env_sites(package)
+    assert sites == []
+    assert names == {
+        "SPARK_GRAFT_CPUS",
+        "SPARK_GRAFT_DRIVER_MEM",
+        "SPARK_GRAFT_EXTRA_CONF",
+        "SPARK_GRAFT_SF_DIR",
+        "SPARK_GRAFT_CHECKPOINT_DIR",
+    }
+    # the scan sees a planted conf flip and knob read
+    (tmp_path / "m.py").write_text(
+        "import os\n"
+        "def f(spark):\n"
+        '    spark.conf.set("k", "v")\n'
+        '    return os.environ.get("SPARK_GRAFT_X", "1")\n'
+    )
+    assert _conf_and_env_sites(tmp_path) == (["m.py:3", "m.py:4"], {"SPARK_GRAFT_X"})
+
+
+def test_ensure_session_conf_writes_only_what_differs(spark, monkeypatch):
+    """A ``get_spark`` session already holds the fixture conf, so
+    ``ensure_session_conf`` (run by every ``load_table``) writes nothing to
+    it; a session with another time zone is pinned back to UTC."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from e_commerce_streaming_datapipeline_spark.sources.batch import ensure_session_conf
+
+    other = spark.newSession()
+    other.conf.set("spark.sql.session.timeZone", "America/New_York")
+    writes = []
+    real_set = RuntimeConfig.set
+
+    def counting_set(self, key, value):
+        writes.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", counting_set)
+    ensure_session_conf(spark)
+    assert writes == []
+    ensure_session_conf(other)
+    assert writes == ["spark.sql.session.timeZone"]
+    assert other.conf.get("spark.sql.session.timeZone") == "UTC"
+
+
+def test_warehouse_overwrite_is_dynamic_without_touching_session_conf(spark, sf_dir):
+    """``warehouse_partitioned_roundtrip`` gets dynamic partition overwrite
+    from its table option: the session's overwrite mode is unchanged after
+    the query, and one more INSERT OVERWRITE of a single day replaces that
+    day only."""
+    from e_commerce_streaming_datapipeline_spark.operators.connectors import (
+        q_warehouse_partitioned_roundtrip,
+    )
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    days = {
+        r["event_date"]: r["n_events"]
+        for r in q_warehouse_partitioned_roundtrip(spark, sf_dir).collect()
+    }
+    assert spark.conf.get(key) == before
+    day = min(d for d in days if d is not None)
+    spark.sql(
+        "INSERT OVERWRITE TABLE events_wh PARTITION (event_date) "
+        "SELECT event_id, ts, user_id, event_type, value, props, "
+        f"to_date(ts) AS event_date FROM events_src_wh "
+        f"WHERE to_date(ts) = DATE '{day}' LIMIT 1"
+    )
+    after = {
+        r["event_date"]: r["count"]
+        for r in spark.table("events_wh").groupBy("event_date").count().collect()
+    }
+    assert after == {**days, day: 1}
+
+
 def test_dedup_winner_stable_under_repartition(spark, sf_dir):
     from e_commerce_streaming_datapipeline_spark.operators.dedup import q_dedup_events
 

@@ -735,7 +735,7 @@ class TestMinhashAdmissionStream:
             q_incremental_minhash_dedup,
         )
         from e_commerce_streaming_datapipeline_spark.operators.streaming_queries import (
-            _stream_run,
+            run_stream,
         )
         from e_commerce_streaming_datapipeline_spark.sources.batch import load_table
         from e_commerce_streaming_datapipeline_spark.sources.streaming import (
@@ -772,14 +772,7 @@ class TestMinhashAdmissionStream:
         stream = read_file_stream(
             spark, str(chunk_dir), "documents-*.parquet", max_files_per_trigger=1
         )
-        with _stream_run(spark, "admission_mb") as (name, checkpoint):
-            q = (
-                stream.writeStream.foreachBatch(admit)
-                .option("checkpointLocation", checkpoint)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        run_stream(spark, stream, "admission_mb", output_mode="append", sink=admit)
 
         assert len(batches) >= 4  # it really ran multi-batch
         got = {(r.doc_new, r.doc_index) for r in accepted}

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from e_commerce_streaming_datapipeline_spark.operators.gmv import gmv_tumbling
+from e_commerce_streaming_datapipeline_spark.operators.streaming_queries import run_stream
 from e_commerce_streaming_datapipeline_spark.sources.batch import load_table
 from e_commerce_streaming_datapipeline_spark.sources.streaming import read_file_stream
 from e_commerce_streaming_datapipeline_spark.streaming.processors import (
@@ -22,26 +23,13 @@ from e_commerce_streaming_datapipeline_spark.streaming.processors import (
 from e_commerce_streaming_datapipeline_spark.streaming.sinks import idempotent_parquet_sink
 
 
-def _run_stream(spark, stream_df, output_mode="complete"):
-    name = f"t_{uuid.uuid4().hex[:10]}"
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
-
-
 def _rows(df, *order_cols):
     return [tuple(r) for r in df.orderBy(*order_cols).collect()]
 
 
 def test_streaming_gmv_equals_batch(spark, sf_dir):
     stream = streaming_gmv(read_file_stream(spark, sf_dir), "1 minute")
-    got = _run_stream(spark, stream)
+    got = run_stream(spark, stream, "t")
 
     batch_events = load_table(spark, "events", sf_dir).where(F.col("event_type") == "purchase")
     expected = gmv_tumbling(batch_events, "1 minute").drop("unique_buyers")
@@ -51,7 +39,9 @@ def test_streaming_gmv_equals_batch(spark, sf_dir):
 def test_streaming_sessions_match_gaps_and_islands(spark, sf_dir):
     """session_window on a stream produces the same (user, start, end, count)
     sessions as the batch gaps-and-islands plan."""
-    got = _run_stream(spark, streaming_sessions(read_file_stream(spark, sf_dir), "30 minutes"))
+    got = run_stream(
+        spark, streaming_sessions(read_file_stream(spark, sf_dir), "30 minutes"), "t"
+    )
     from e_commerce_streaming_datapipeline_spark.operators.analytics import q_user_sessions
 
     batch = q_user_sessions(spark, sf_dir).select(
@@ -69,7 +59,7 @@ def test_watermarked_dedup_drops_duplicates(spark, sf_dir):
     deduped = with_event_time_discipline(doubled).select("event_id")
     # distinct aggregation isn't allowed on a stream — land rows in a memory
     # sink (append mode) and assert in batch
-    got = _run_stream(spark, deduped, output_mode="append")
+    got = run_stream(spark, deduped, "t", output_mode="append")
     distinct_expected = load_table(spark, "events", sf_dir).select("event_id").distinct().count()
     assert got.count() == distinct_expected
     assert got.distinct().count() == distinct_expected
@@ -651,7 +641,9 @@ def test_cart_abandonment_late_view_cancelled_by_earlier_batch_purchase(
         .option("maxFilesPerTrigger", 1)
         .parquet(str(stream_dir))
     )
-    got = _run_stream(spark, streaming_cart_abandonment(stream), output_mode="append")
+    got = run_stream(
+        spark, streaming_cart_abandonment(stream), "t", output_mode="append"
+    )
     emitted = {(r["user_id"], r["view_event_id"]) for r in got.collect()}
     assert (1, 101) not in emitted, "late view covered by earlier-batch purchase"
     assert (2, 102) in emitted, "uncovered late view must still abandon"
@@ -742,8 +734,8 @@ def test_funnel_completion_fold_handles_late_view(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(stream_dir))
     )
-    got = _run_stream(
-        spark, streaming_funnel_completion(stream), output_mode="append"
+    got = run_stream(
+        spark, streaming_funnel_completion(stream), "t", output_mode="append"
     )
     rows = {r["user_id"]: r for r in got.collect()}
     assert set(rows) == {1}, "only user 1 completes the ordered funnel"
@@ -753,8 +745,9 @@ def test_funnel_completion_fold_handles_late_view(spark, tmp_path):
 
 
 def test_rocksdb_state_store_produces_identical_results(spark, sf_dir):
-    """The large-state scale path: SPARK_GRAFT_STATESTORE=rocksdb flips the
-    provider (session.py) — state spills to disk instead of executor heap.
+    """The large-state scale path: a deployment sets the state-store
+    provider key to RocksDB (one SPARK_GRAFT_EXTRA_CONF entry over
+    session.py's table) — state spills to disk instead of executor heap.
     The provider is read per query start, so this runs one watermarked
     aggregation under RocksDB and asserts bit-identical output to the batch
     equivalent (same contract the default provider satisfies)."""
@@ -765,7 +758,9 @@ def test_rocksdb_state_store_produces_identical_results(spark, sf_dir):
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        got = _run_stream(spark, streaming_gmv(read_file_stream(spark, sf_dir), "1 minute"))
+        got = run_stream(
+            spark, streaming_gmv(read_file_stream(spark, sf_dir), "1 minute"), "t"
+        )
         batch_events = load_table(spark, "events", sf_dir).where(
             F.col("event_type") == "purchase"
         )
@@ -893,10 +888,11 @@ def test_full_outer_join_multi_batch_equals_single_batch(spark, sf_dir, tmp_path
     n = tbl.num_rows
     bounds = [0, n // 4, n // 2, 3 * n // 4, n]
     for i in range(4):
-        pq.write_table(
-            tbl.slice(bounds[i], bounds[i + 1] - bounds[i]),
-            str(chunk_dir / f"events-{i}.parquet"),
-        )
+        path = str(chunk_dir / f"events-{i}.parquet")
+        pq.write_table(tbl.slice(bounds[i], bounds[i + 1] - bounds[i]), path)
+        # the file source orders files by mtime in ms; four quick writes
+        # share one, and a later chunk read first drops earlier rows as late
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
 
     def run(src_dir, filename, mfpt, name):
         joined = build_full_outer_click_purchase(
@@ -1537,8 +1533,8 @@ def test_funnel_completion_fires_once_despite_second_sequence(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(stream_dir))
     )
-    got = _run_stream(
-        spark, streaming_funnel_completion(stream), output_mode="append"
+    got = run_stream(
+        spark, streaming_funnel_completion(stream), "t", output_mode="append"
     ).where(F.col("user_id") == 1)
     rows = got.collect()
     assert len(rows) == 1, f"funnel fired {len(rows)} times for user 1, want exactly 1"
@@ -1568,10 +1564,11 @@ def test_agg_join_chain_multi_batch_equals_single_batch(spark, sf_dir, tmp_path)
     n = tbl.num_rows
     bounds = [0, n // 4, n // 2, 3 * n // 4, n]
     for i in range(4):
-        pq.write_table(
-            tbl.slice(bounds[i], bounds[i + 1] - bounds[i]),
-            str(chunk_dir / f"events-{i}.parquet"),
-        )
+        path = str(chunk_dir / f"events-{i}.parquet")
+        pq.write_table(tbl.slice(bounds[i], bounds[i + 1] - bounds[i]), path)
+        # the file source orders files by mtime in ms; four quick writes
+        # share one, and a later chunk read first drops earlier rows as late
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
 
     def run(src_dir, filename, mfpt, name):
         joined = build_complete_funnel_joined(
