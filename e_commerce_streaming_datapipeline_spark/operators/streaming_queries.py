@@ -20,13 +20,21 @@ import tempfile
 import uuid
 from collections.abc import Callable
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from e_commerce_streaming_datapipeline_spark.functions.rounding import cents, cents_sum
 from e_commerce_streaming_datapipeline_spark.functions.scratch import scratch_dir
 from e_commerce_streaming_datapipeline_spark.plans.registry import query
-from e_commerce_streaming_datapipeline_spark.sources.streaming import read_file_stream
+from e_commerce_streaming_datapipeline_spark.sources.streaming import (
+    FEED_GLOB,
+    append_feed,
+    read_file_stream,
+    split_by_key,
+)
 from e_commerce_streaming_datapipeline_spark.streaming.processors import (
     streaming_funnel,
     streaming_user_stats,
@@ -127,6 +135,19 @@ def run_stream(
         writer = writer.format("memory") if sink is None else writer.foreachBatch(sink)
         writer.start().awaitTermination()
     return spark.table(name) if sink is None else None
+
+
+def _epoch_days(ts: pa.ChunkedArray) -> pa.ChunkedArray:
+    """The UTC epoch day of each timestamp (NULL for a NULL ts): the chunk
+    key of the per-day event feeds."""
+    micros = pc.cast(pc.cast(ts, "timestamp[us]"), "int64")
+    return pc.cast(pc.floor(pc.divide(micros, 86_400_000_000)), "int64")
+
+
+def _week_of_month(ts: pa.ChunkedArray) -> pa.ChunkedArray:
+    """``(day - 1) // 7`` of each timestamp: the chunk key of the per-week
+    event feeds (integer division on the int day)."""
+    return pc.divide(pc.subtract(pc.day(ts), 1), 7)
 
 
 @query(
@@ -1606,28 +1627,17 @@ def q_scd2_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     year-chunking below is test-harness scaffolding for what a Kafka CDC
     feed provides naturally.
     """
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
     from e_commerce_streaming_datapipeline_spark.operators.analytics import scd2_history
 
     run_dir = scratch_dir("scd2")
     cdc_dir = os.path.join(run_dir, "cdc")
-    os.makedirs(cdc_dir)
     tbl = pq.read_table(
         os.path.join(sf_dir, "orders.parquet"),
         columns=["o_custkey", "o_orderpriority", "o_orderdate", "o_orderkey"],
     )
-    years = pc.year(tbl["o_orderdate"])
-    base_mtime = os.stat(sf_dir).st_mtime
-    for i, y in enumerate(sorted(pc.unique(years).to_pylist())):
-        path = os.path.join(cdc_dir, f"orders-{i:02d}.parquet")
-        pq.write_table(tbl.filter(pc.equal(years, y)), path)
-        # the file source orders batches by modification time — small chunks
-        # written back-to-back can share an mtime millisecond, which would
-        # replay years out of order and void the only-current-rows-mutable
-        # invariant; stamp strictly ascending mtimes to pin arrival order
-        os.utime(path, (base_mtime + i, base_mtime + i))
+    # years replayed out of order would void the only-current-rows-mutable
+    # invariant; the feed pins arrival order
+    append_feed(cdc_dir, split_by_key(tbl, pc.year(tbl["o_orderdate"])))
 
     # current = latest version dir (its is_current rows are the live
     # snapshot); versions = the append-only list of per-batch dirs, whose
@@ -1679,9 +1689,7 @@ def q_scd2_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         store["versions"].append(out)
         store["current"] = out
 
-    stream = read_file_stream(
-        spark, cdc_dir, "orders-*.parquet", max_files_per_trigger=1
-    )
+    stream = read_file_stream(spark, cdc_dir, FEED_GLOB, max_files_per_trigger=1)
     run_stream(spark, stream, "scd2_merge", output_mode="append", sink=merge_batch)
     # the final store = every version's immutable newly-closed rows plus
     # the live snapshot from the last version; superseded current
@@ -1786,22 +1794,18 @@ def q_checkpoint_resume_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink's ``_spark_metadata`` commit log keeps half-written batches out of
     the read-back.
     """
-    import pyarrow.parquet as pq
-
     run_dir = scratch_dir("resume")
     feed_dir = os.path.join(run_dir, "feed")
     checkpoint = os.path.join(run_dir, "ckpt")
     out_dir = os.path.join(run_dir, "out")
-    os.makedirs(feed_dir)
     tbl = pq.read_table(os.path.join(sf_dir, "events.parquet"))
     half = tbl.num_rows // 2
-    base_mtime = os.stat(sf_dir).st_mtime
 
     def run_phase() -> None:
         # keyless rows dropped pre-dedup (wire contract, mirrored in the
         # oracle): NULL keys would collapse nondeterministically in state
         deduped = (
-            read_file_stream(spark, feed_dir, "chunk-*.parquet")
+            read_file_stream(spark, feed_dir, FEED_GLOB)
             .where(F.col("event_id").isNotNull())
             .dropDuplicates(["event_id"])
         )
@@ -1814,20 +1818,12 @@ def q_checkpoint_resume_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
 
-    chunk0 = os.path.join(feed_dir, "chunk-0.parquet")
-    pq.write_table(tbl.slice(0, half), chunk0)
-    os.utime(chunk0, (base_mtime, base_mtime))
+    append_feed(feed_dir, [tbl.slice(0, half)])
     run_phase()
     # phase B arrives AFTER the first run finished: the rest of the feed plus
     # a replayed prefix of phase A (at-least-once upstream delivery) — only
     # recovered dedup state can suppress it
-    chunk1 = os.path.join(feed_dir, "chunk-1.parquet")
-    replay = min(200, half)
-    pq.write_table(tbl.slice(half), chunk1)
-    chunk2 = os.path.join(feed_dir, "chunk-2.parquet")
-    pq.write_table(tbl.slice(0, replay), chunk2)
-    os.utime(chunk1, (base_mtime + 1, base_mtime + 1))
-    os.utime(chunk2, (base_mtime + 2, base_mtime + 2))
+    append_feed(feed_dir, [tbl.slice(half), tbl.slice(0, min(200, half))])
     run_phase()
     return (
         spark.read.parquet(out_dir)
@@ -1874,26 +1870,11 @@ def q_changelog_replay_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming layer and any store that can upsert; per-batch volume is
     #changed-windows, not #events.
     """
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
     run_dir = scratch_dir("changelog")
     feed_dir = os.path.join(run_dir, "feed")
     changelog_dir = os.path.join(run_dir, "changelog")
-    os.makedirs(feed_dir)
     tbl = pq.read_table(os.path.join(sf_dir, "events.parquet"))
-    days = pc.cast(pc.floor(pc.divide(pc.cast(pc.cast(
-        tbl["ts"], "timestamp[us]"), "int64"), 86_400_000_000)), "int64")
-    base_mtime = os.stat(sf_dir).st_mtime
-    uniq = [d for d in pc.unique(days).to_pylist() if d is not None]
-    for i, d in enumerate(sorted(uniq)):
-        path = os.path.join(feed_dir, f"events-{i:03d}.parquet")
-        pq.write_table(tbl.filter(pc.equal(days, d)), path)
-        os.utime(path, (base_mtime + i, base_mtime + i))
-    if tbl.filter(pc.is_null(tbl["ts"])).num_rows:
-        path = os.path.join(feed_dir, "events-nullts.parquet")
-        pq.write_table(tbl.filter(pc.is_null(tbl["ts"])), path)
-        os.utime(path, (base_mtime, base_mtime))
+    append_feed(feed_dir, split_by_key(tbl, _epoch_days(tbl["ts"])))
 
     def capture(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode(
@@ -1905,7 +1886,7 @@ def q_changelog_replay_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 7-day window still spans >=2 of them (real supersessions, pinned
         # by test) at roughly half the micro-batch machinery cost of
         # smaller triggers
-        read_file_stream(spark, feed_dir, "events-*.parquet", max_files_per_trigger=5)
+        read_file_stream(spark, feed_dir, FEED_GLOB, max_files_per_trigger=5)
         .where(F.col("event_type") == "purchase")
         .withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "7 days"))
@@ -2452,8 +2433,8 @@ def q_dim_refresh_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate table (version = batch ordinal), so later events settle at later
     rates.
 
-    Determinism scaffolding: events are replayed as week-chunk files with
-    pinned ascending mtimes (the ``scd2_stream_merge`` mechanism), so each
+    Determinism scaffolding: events are replayed as a week-chunked
+    ``sources/streaming.py::append_feed`` replay feed, so each
     micro-batch carries exactly one event-week and the "current dimension
     snapshot" is the rate table versioned by that week — re-derived inside
     the callback per batch, exactly where a production job would re-read
@@ -2468,35 +2449,15 @@ def q_dim_refresh_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-read per batch is exactly how production refreshes lookup tables
     without restarting the query.
     """
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    # this builder bypasses load_table (it re-chunks events via pyarrow and
-    # streams the chunks), so pin the session contract explicitly: UTC
-    # session tz (F.dayofmonth below must agree with the oracle's naive
-    # day()) and the ns-timestamp legacy fallback (a VANILLA session would
-    # otherwise throw PARQUET_TYPE_ILLEGAL on the rewritten chunks) —
-    # r6 ADVICE #4 named exactly this query as the tz-sensitivity escape
-    from e_commerce_streaming_datapipeline_spark.sources.batch import ensure_session_conf
-
-    ensure_session_conf(spark)
-
     run_dir = scratch_dir("dimref")
     feed_dir = os.path.join(run_dir, "feed")
     sink_dir = os.path.join(run_dir, "admitted")
-    os.makedirs(feed_dir)
-
     tbl = pq.read_table(
         os.path.join(sf_dir, "events.parquet"),
         columns=["ts", "event_type", "value"],
     )
     tbl = tbl.filter(pc.is_valid(tbl["ts"]))
-    weeks = pc.divide(pc.subtract(pc.day(tbl["ts"]), 1), 7)  # int division
-    base_mtime = os.stat(sf_dir).st_mtime
-    for i, w in enumerate(sorted(pc.unique(weeks).to_pylist())):
-        path = os.path.join(feed_dir, f"events-wk{i:02d}.parquet")
-        pq.write_table(tbl.filter(pc.equal(weeks, w)), path)
-        os.utime(path, (base_mtime + i, base_mtime + i))
+    append_feed(feed_dir, split_by_key(tbl, _week_of_month(tbl["ts"])))
 
     def enrich(batch_df: DataFrame, batch_id: int) -> None:
         typed = batch_df.where(F.col("event_type").isNotNull()).select(
@@ -2533,12 +2494,9 @@ def q_dim_refresh_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(sink_dir)
         )
 
-    schema = spark.read.option("pathGlobFilter", "*.parquet").parquet(feed_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
-    )
+    # read_file_stream pins the session tz to UTC: F.dayofmonth above must
+    # agree with the oracle's naive day()
+    stream = read_file_stream(spark, feed_dir, FEED_GLOB, max_files_per_trigger=1)
     run_stream(spark, stream, "dim_refresh", output_mode="append", sink=enrich)
 
     per_batch = spark.read.parquet(sink_dir)
@@ -2597,8 +2555,8 @@ def q_column_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch appends its own per-column row count, null count, and
     exact distinct-value count to a stats sink, so an upstream field going
     dark or collapsing to a constant is visible IN the batch that did it,
-    not at the next nightly audit.  Events replay as week-chunk files with
-    pinned ascending mtimes (the `scd2_stream_merge` mechanism), so each
+    not at the next nightly audit.  Events replay as a week-chunked
+    `sources/streaming.py::append_feed` replay feed, so each
     batch is one event-week and the oracle reconstructs every batch's
     stats from the week column — proving the per-batch monitor equals a
     batch recomputation.
@@ -2608,29 +2566,15 @@ def q_column_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     state at all (the sink table IS the state), which is why this pattern
     deploys on any stream without watermark tuning.  The final read
     aggregates the batch-grain sink."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from e_commerce_streaming_datapipeline_spark.sources.batch import ensure_session_conf
-
-    ensure_session_conf(spark)
-
     run_dir = scratch_dir("colstats")
     feed_dir = os.path.join(run_dir, "feed")
     sink_dir = os.path.join(run_dir, "stats")
-    os.makedirs(feed_dir)
-
     tbl = pq.read_table(
         os.path.join(sf_dir, "events.parquet"),
         columns=["ts", "user_id", "event_type", "value"],
     )
     tbl = tbl.filter(pc.is_valid(tbl["ts"]))
-    weeks = pc.divide(pc.subtract(pc.day(tbl["ts"]), 1), 7)
-    base_mtime = os.stat(sf_dir).st_mtime
-    for i, w in enumerate(sorted(pc.unique(weeks).to_pylist())):
-        path = os.path.join(feed_dir, f"events-wk{i:02d}.parquet")
-        pq.write_table(tbl.filter(pc.equal(weeks, w)), path)
-        os.utime(path, (base_mtime + i, base_mtime + i))
+    append_feed(feed_dir, split_by_key(tbl, _week_of_month(tbl["ts"])))
 
     stack_expr = ", ".join(
         f"'{name}', {expr.format(S='STRING')}" for name, expr in _COLSTATS_COLS
@@ -2666,12 +2610,7 @@ def q_column_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(sink_dir)
         )
 
-    schema = spark.read.option("pathGlobFilter", "*.parquet").parquet(feed_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
-    )
+    stream = read_file_stream(spark, feed_dir, FEED_GLOB, max_files_per_trigger=1)
     run_stream(spark, stream, "column_stats", output_mode="append", sink=monitor)
 
     # batches are week-exact by construction, so the sink is already at
@@ -2750,38 +2689,13 @@ def q_golden_record_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the store holds cluster-grain partials (bounded by live clusters x
     batches between compactions), and the merge is a cluster-keyed hash
     aggregate over the store — the compaction itself."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from e_commerce_streaming_datapipeline_spark.sources.batch import load_table
-
     run_dir = scratch_dir("goldenstream")
     feed_dir = os.path.join(run_dir, "feed")
     store_dir = os.path.join(run_dir, "store")
-    os.makedirs(feed_dir, exist_ok=True)
-    # per-day feed files so availableNow + maxFilesPerTrigger replays as a
-    # genuine multi-batch stream (the changelog_replay_stream feed recipe)
-    src = os.path.join(sf_dir, "events.parquet")
-    tbl = pq.read_table(src)
-    days = pc.cast(
-        pc.floor(
-            pc.divide(
-                pc.cast(pc.cast(tbl["ts"], "timestamp[us]"), "int64"),
-                86_400_000_000,
-            )
-        ),
-        "int64",
-    )
-    base_mtime = os.stat(sf_dir).st_mtime
-    for i, d in enumerate(sorted(x for x in pc.unique(days).to_pylist() if x is not None)):
-        path = os.path.join(feed_dir, f"events-{i:03d}.parquet")
-        pq.write_table(tbl.filter(pc.equal(days, d)), path)
-        os.utime(path, (base_mtime + i, base_mtime + i))
-    if tbl.filter(pc.is_null(tbl["ts"])).num_rows:
-        path = os.path.join(feed_dir, "events-nullts.parquet")
-        pq.write_table(tbl.filter(pc.is_null(tbl["ts"])), path)
-        os.utime(path, (base_mtime, base_mtime))
+    # per-day feed chunks so availableNow + maxFilesPerTrigger replays as a
+    # genuine multi-batch stream
+    tbl = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    append_feed(feed_dir, split_by_key(tbl, _epoch_days(tbl["ts"])))
 
     surv_key = F.struct(
         F.unix_micros("ts").alias("us"),
@@ -2813,8 +2727,7 @@ def q_golden_record_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "append"
         ).parquet(store_dir)
 
-    stream = read_file_stream(spark, feed_dir, "events-*.parquet",
-                              max_files_per_trigger=5)
+    stream = read_file_stream(spark, feed_dir, FEED_GLOB, max_files_per_trigger=5)
     run_stream(spark, stream, "goldenstream", output_mode="append", sink=fold)
     store = spark.read.parquet(store_dir)
     merged = store.groupBy("user_id", "event_type", "hour_bucket").agg(
@@ -2872,32 +2785,12 @@ def q_burst_detection_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per batch ONE hash aggregate at (type, hour) grain
     (batch-sized); the store holds calendar-bounded partials (hours ×
     batches between compactions); the merge is the compaction."""
-    import pyarrow as pa  # noqa: F401 — parity with the feed recipe twins
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
     run_dir = scratch_dir("burststream")
     feed_dir = os.path.join(run_dir, "feed")
     store_dir = os.path.join(run_dir, "store")
-    os.makedirs(feed_dir, exist_ok=True)
-    src = os.path.join(sf_dir, "events.parquet")
-    tbl = pq.read_table(src)
-    days = pc.cast(
-        pc.floor(
-            pc.divide(
-                pc.cast(pc.cast(tbl["ts"], "timestamp[us]"), "int64"),
-                86_400_000_000,
-            )
-        ),
-        "int64",
-    )
-    base_mtime = os.stat(sf_dir).st_mtime
-    for i, d in enumerate(
-        sorted(x for x in pc.unique(days).to_pylist() if x is not None)
-    ):
-        path = os.path.join(feed_dir, f"events-{i:03d}.parquet")
-        pq.write_table(tbl.filter(pc.equal(days, d)), path)
-        os.utime(path, (base_mtime + i, base_mtime + i))
+    tbl = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    tbl = tbl.filter(pc.is_valid(tbl["ts"]))  # NULL-ts rows belong to no day
+    append_feed(feed_dir, split_by_key(tbl, _epoch_days(tbl["ts"])))
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -2914,9 +2807,7 @@ def q_burst_detection_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(store_dir)
         )
 
-    stream = read_file_stream(
-        spark, feed_dir, "events-*.parquet", max_files_per_trigger=5
-    )
+    stream = read_file_stream(spark, feed_dir, FEED_GLOB, max_files_per_trigger=5)
     run_stream(spark, stream, "burststream", output_mode="append", sink=fold)
     merged = (
         spark.read.parquet(store_dir)

@@ -632,13 +632,18 @@ def q_late_sole_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     missing receipt/commit dates).
 
     The spec's EXISTS + NOT-EXISTS pair of correlated self-joins collapses
-    into ONE per-order aggregate: distinct suppliers, distinct late
-    suppliers, and (when exactly one is late) that supplier's key via
-    ``max(when(late, suppkey))`` — deterministic because n_late=1 means the
-    max ranges over a single value.  This replaces two extra shuffles of the
-    fact with one, the decisive rewrite at 100 TB.  Late-ness needs
-    o_orderdate, so lineitem⋈orders shuffles on orderkey first — the same
-    key as the aggregate, so Catalyst plans one exchange for both."""
+    into per-order aggregates: each (order, supplier) pair first folds to
+    ``any_late``, then per order a plain count gives the suppliers, a count
+    of ``when(any_late, suppkey)`` the late suppliers (NULL supplier keys
+    count in neither, as in COUNT(DISTINCT)), and (when exactly one is
+    late) that supplier's key via ``max(when(any_late, suppkey))`` —
+    deterministic because n_late=1 means the max ranges over a single
+    value.  This replaces two extra shuffles of the fact with one, the
+    decisive rewrite at 100 TB.  Late-ness needs o_orderdate, so
+    lineitem⋈orders shuffles on orderkey first — the same key as both
+    aggregates, so Catalyst plans one exchange for all three.  No distinct
+    aggregate, so no Expand: its group order would follow the JVM's
+    expression-id counter and change the plan text between builds."""
     orders = load_table(spark, "orders", sf_dir).where(
         F.col("o_orderstatus") == "F"
     ).select("o_orderkey", "o_orderdate")
@@ -648,14 +653,13 @@ def q_late_sole_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_late = F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
     per_order = (
         lineitem.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .select("l_orderkey", "l_suppkey", is_late.alias("is_late"))
+        .groupBy("l_orderkey", "l_suppkey")
+        .agg(F.max(is_late).alias("any_late"))
         .groupBy("l_orderkey")
         .agg(
-            F.count_distinct("l_suppkey").alias("n_supp"),
-            F.count_distinct(
-                F.when(F.col("is_late"), F.col("l_suppkey"))
-            ).alias("n_late"),
-            F.max(F.when(F.col("is_late"), F.col("l_suppkey"))).alias("sole_late"),
+            F.count("l_suppkey").alias("n_supp"),
+            F.count(F.when(F.col("any_late"), F.col("l_suppkey"))).alias("n_late"),
+            F.max(F.when(F.col("any_late"), F.col("l_suppkey"))).alias("sole_late"),
         )
     )
     supplier = load_table(spark, "supplier", sf_dir).select("s_suppkey", "s_name")

@@ -102,6 +102,28 @@ SESSION_CONF: dict[str, str] = {
 }
 
 
+def parse_extra_conf(text: str) -> dict[str, str]:
+    """The ``SPARK_GRAFT_EXTRA_CONF`` override list, ``"k=v;k2=v2"``, as a
+    dict.  Limitation: ';' separates pairs, so VALUES cannot contain ';' —
+    use spark-defaults.conf / --conf for those.  An entry without '=' is a
+    typo'd override that would otherwise be silently ignored: warn loudly
+    (r9 ADVICE #4)."""
+    conf = {}
+    for pair in text.split(";"):
+        if "=" in pair:
+            k, _, v = pair.partition("=")
+            conf[k.strip()] = v.strip()
+        elif pair.strip():
+            import warnings
+
+            warnings.warn(
+                f"SPARK_GRAFT_EXTRA_CONF entry {pair!r} has no '=' and was "
+                "ignored (format: 'key=value;key2=value2')",
+                stacklevel=2,
+            )
+    return conf
+
+
 def get_spark(
     app_name: str = "e_commerce_streaming_datapipeline_spark",
     master: str | None = None,
@@ -109,6 +131,11 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
+
+    A second call in one process returns the live session, and pyspark's
+    ``getOrCreate`` applies this call's builder options to it: its shuffle
+    partitions, ``SESSION_CONF`` and the overrides replace what the session
+    held.  Build once per process and pass the session around.
 
     Cluster-scale notes: everything here is config, not code — on a 1000-
     executor cluster the same plans run with ``master=yarn``/``k8s`` and a
@@ -125,27 +152,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config(map=SESSION_CONF)
+        # deployment-specific overrides without code changes (e.g. cluster
+        # shuffle codecs, memoryOverhead)
+        .config(map=parse_extra_conf(os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")))
+        .config(map=extra_conf or {})
     )
-    # deployment-specific overrides without code changes (e.g. cluster
-    # shuffle codecs, memoryOverhead):  SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2".
-    # Limitation: ';' separates pairs, so VALUES cannot contain ';' — use
-    # spark-defaults.conf / --conf for those.  Entries without '=' are a
-    # typo'd override that would otherwise be silently ignored: warn loudly
-    # (r9 ADVICE #4).
-    for pair in os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";"):
-        if "=" in pair:
-            k, _, v = pair.partition("=")
-            builder = builder.config(k.strip(), v.strip())
-        elif pair.strip():
-            import warnings
-
-            warnings.warn(
-                f"SPARK_GRAFT_EXTRA_CONF entry {pair!r} has no '=' and was "
-                "ignored (format: 'key=value;key2=value2')",
-                stacklevel=2,
-            )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
     return builder.getOrCreate()
 
 

@@ -13,6 +13,11 @@ Two interchangeable builders behind one API:
   plan over a parquet file source with ``trigger(availableNow=True)``
   (SURVEY §2.1 S1 "test harness substitutes parquet").
 
+``append_feed`` (with ``split_by_key``) is the one definition of a replay
+feed — the reference producer's ordered replay of stored tables — as a
+directory of parquet chunks that ``read_file_stream`` reads in arrival
+order.
+
 Upgrade over the reference (SURVEY §2.5 D3): callers get event-time columns
 and are expected to ``withWatermark`` — the reference configured a watermark
 (.env.example SPARK_WATERMARK_DELAY) and never applied it, so its streaming
@@ -21,14 +26,22 @@ state grows unboundedly.
 
 from __future__ import annotations
 
+import os
+import time
+from collections.abc import Iterable
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 DEFAULT_MAX_OFFSETS_PER_TRIGGER = 10_000  # reference: stream_processor.py:108
 
-# (sf_dir, glob) -> StructType; see read_file_stream
-_SCHEMA_CACHE: dict[tuple[str, str], StructType] = {}
+# the chunk names append_feed writes; read a feed with
+# read_file_stream(spark, feed_dir, FEED_GLOB, max_files_per_trigger=N)
+FEED_GLOB = "chunk-*.parquet"
 
 
 def read_kafka_stream(
@@ -87,21 +100,54 @@ def read_file_stream(
     """
     from e_commerce_streaming_datapipeline_spark.sources.batch import (
         _normalize_ns_timestamps,
+        _read_parquet,
         ensure_session_conf,
     )
 
     ensure_session_conf(spark)
-    # footer-read once per (dir, glob): a multi-leg stream query (e.g. the
-    # 3-way journey join) builds this source repeatedly, and the fixture
-    # schema never changes within a process
-    key = (sf_dir, filename)
-    physical = _SCHEMA_CACHE.get(key)
-    if physical is None:
+    path = os.path.join(sf_dir, filename)
+    if os.path.isfile(path):
+        # a multi-leg stream query (e.g. the 3-way journey join) builds this
+        # source repeatedly: reuse the file's schema while it is unchanged
+        physical = _read_parquet(spark, path).schema
+    else:
         physical = (
             spark.read.option("pathGlobFilter", filename).parquet(sf_dir).schema
         )
-        _SCHEMA_CACHE[key] = physical
     reader = spark.readStream.schema(physical).option("pathGlobFilter", filename)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return _normalize_ns_timestamps(reader.parquet(sf_dir))
+
+
+def split_by_key(table: pa.Table, keys: pa.ChunkedArray | pa.Array) -> list[pa.Table]:
+    """``table``'s rows as feed chunks by ``keys`` (one key per row): the
+    null-key rows first, as one chunk, then one chunk per distinct key in
+    ascending order."""
+    chunks = [table.filter(pc.is_null(keys))] if keys.null_count else []
+    for key in sorted(pc.unique(keys).drop_null().to_pylist()):
+        chunks.append(table.filter(pc.equal(keys, key)))
+    return chunks
+
+
+def append_feed(feed_dir: str, tables: Iterable[pa.Table]) -> list[str]:
+    """Append ``tables`` to the replay feed in ``feed_dir``, one parquet
+    chunk each, and return the chunk paths.
+
+    The file source turns file order into micro-batch order, and it orders
+    files by modification time: chunks written back to back can share an
+    mtime millisecond and replay out of order.  So each chunk is stamped
+    one second after the previous one, and the first one after every file
+    already in ``feed_dir`` — a later append (a restarted job's new input)
+    arrives strictly after what the stream has seen."""
+    os.makedirs(feed_dir, exist_ok=True)
+    existing = [e for e in os.scandir(feed_dir) if e.is_file()]
+    mtime = max([time.time()] + [e.stat().st_mtime + 1 for e in existing])
+    paths = []
+    for i, table in enumerate(tables, start=len(existing)):
+        path = os.path.join(feed_dir, FEED_GLOB.replace("*", f"{i:05d}"))
+        pq.write_table(table, path)
+        os.utime(path, (mtime, mtime))
+        mtime += 1
+        paths.append(path)
+    return paths

@@ -88,6 +88,41 @@ def test_fixed_point_lives_in_one_kernel(tmp_path):
     assert _inline_fixed_point_sites(tmp_path) == ["m.py:1"]
 
 
+def _utime_sites(root: Path, dirs: tuple[str, ...]) -> list[str]:
+    """``utime`` calls in ``dirs`` under ``root``, outside the replay-feed
+    helper ``sources/streaming.py::append_feed``."""
+    helper = ("e_commerce_streaming_datapipeline_spark/sources/streaming.py", "append_feed")
+    sites = []
+    for path in sorted(p for d in dirs for p in (root / d).rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for stmt in ast.parse(path.read_text()).body:
+            if (rel, getattr(stmt, "name", None)) == helper:
+                continue
+            for node in ast.walk(stmt):
+                if isinstance(node, ast.Call) and "utime" in (
+                    getattr(node.func, "attr", None),
+                    getattr(node.func, "id", None),
+                ):
+                    sites.append(f"{rel}:{node.lineno}")
+    return sites
+
+
+def test_feed_mtimes_are_stamped_in_one_helper(tmp_path):
+    """The file source turns file mtime order into micro-batch order, so a
+    replay feed's arrival order is only as good as its mtime stamps.  They
+    are stamped in one place, ``sources/streaming.py::append_feed``; a
+    hand-written feed that forgets the stamp replays out of order only
+    now and then."""
+    import e_commerce_streaming_datapipeline_spark as pkg
+
+    repo = Path(pkg.__file__).resolve().parent.parent
+    assert _utime_sites(repo, ("e_commerce_streaming_datapipeline_spark", "tests")) == []
+    # the scan sees a planted stamp
+    (tmp_path / "t").mkdir()
+    (tmp_path / "t" / "m.py").write_text("import os\ndef f(p):\n    os.utime(p, (1, 1))\n")
+    assert _utime_sites(tmp_path, ("t",)) == ["t/m.py:3"]
+
+
 # module -> the one function in it allowed to write session conf (None: the
 # whole module; a module not listed may not write it)
 _CONF_WRITERS = {

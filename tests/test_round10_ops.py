@@ -74,16 +74,20 @@ def test_gen_arrow_matches_gen_rowwise():
     ]
 
 
-def test_extra_conf_malformed_entry_warns(monkeypatch):
+def test_extra_conf_malformed_entry_warns(spark):
+    """A typo'd ``SPARK_GRAFT_EXTRA_CONF`` entry warns and is dropped; the
+    check parses the list without building a session, so the shared test
+    session keeps its conf."""
     import warnings
 
     from e_commerce_streaming_datapipeline_spark import session as sess
 
-    monkeypatch.setenv("SPARK_GRAFT_EXTRA_CONF", "spark.foo=1;oops-no-equals")
+    before = spark.conf.getAll
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        sess.get_spark(app_name="extra-conf-warn-probe")
+        assert sess.parse_extra_conf("spark.foo=1;oops-no-equals") == {"spark.foo": "1"}
     assert any("oops-no-equals" in str(w.message) for w in caught)
+    assert spark.conf.getAll == before
 
 
 def test_arrow_stage_bytes_identical_to_row_stage(spark, tmp_path):

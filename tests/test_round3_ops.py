@@ -739,6 +739,8 @@ class TestMinhashAdmissionStream:
         )
         from e_commerce_streaming_datapipeline_spark.sources.batch import load_table
         from e_commerce_streaming_datapipeline_spark.sources.streaming import (
+            FEED_GLOB,
+            append_feed,
             read_file_stream,
         )
 
@@ -748,13 +750,9 @@ class TestMinhashAdmissionStream:
 
         docs_tbl = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
         n = docs_tbl.num_rows
-        chunk_dir = tmp_path / "docs_chunks"
-        chunk_dir.mkdir()
+        chunk_dir = str(tmp_path / "docs_chunks")
         step = (n + 3) // 4
-        for i in range(4):
-            pq.write_table(
-                docs_tbl.slice(i * step, step), chunk_dir / f"documents-{i}.parquet"
-            )
+        append_feed(chunk_dir, [docs_tbl.slice(i * step, step) for i in range(4)])
 
         docs = load_table(spark, "documents", sf_dir)
         index_sets, index_bands = minhash_index(
@@ -769,9 +767,7 @@ class TestMinhashAdmissionStream:
             batches.append(len(rows))
             accepted.extend(rows)
 
-        stream = read_file_stream(
-            spark, str(chunk_dir), "documents-*.parquet", max_files_per_trigger=1
-        )
+        stream = read_file_stream(spark, chunk_dir, FEED_GLOB, max_files_per_trigger=1)
         run_stream(spark, stream, "admission_mb", output_mode="append", sink=admit)
 
         assert len(batches) >= 4  # it really ran multi-batch
@@ -1227,30 +1223,26 @@ class TestWatermarkEvictionViaStateReader:
 
         from pyspark.sql import functions as SF
 
-        from e_commerce_streaming_datapipeline_spark.sources.streaming import read_file_stream
+        from e_commerce_streaming_datapipeline_spark.operators.streaming_queries import (
+            _epoch_days,
+        )
+        from e_commerce_streaming_datapipeline_spark.sources.streaming import (
+            FEED_GLOB,
+            append_feed,
+            read_file_stream,
+            split_by_key,
+        )
 
         run = os.path.join(tempfile.gettempdir(), "evict_probe", uuid.uuid4().hex)
         feed = os.path.join(run, "feed")
-        os.makedirs(feed)
         tbl = pq.read_table(os.path.join(sf_dir, "events.parquet"))
-        days = pc.cast(
-            pc.floor(
-                pc.divide(
-                    pc.cast(pc.cast(tbl["ts"], "timestamp[us]"), "int64"),
-                    86_400_000_000,
-                )
-            ),
-            "int64",
-        )
-        base = os.stat(sf_dir).st_mtime
-        uniq = sorted(d for d in pc.unique(days).to_pylist() if d is not None)
-        for i, d in enumerate(uniq):
-            p = os.path.join(feed, f"d{i:03d}.parquet")
-            pq.write_table(tbl.filter(pc.equal(days, d)), p)
-            os.utime(p, (base + i, base + i))
+        valid = tbl.filter(pc.is_valid(tbl["ts"]))
+        days = _epoch_days(valid["ts"])
+        uniq = sorted(pc.unique(days).to_pylist())
+        append_feed(feed, split_by_key(valid, days))
 
         deduped = (
-            read_file_stream(spark, feed, "d*.parquet", max_files_per_trigger=1)
+            read_file_stream(spark, feed, FEED_GLOB, max_files_per_trigger=1)
             .where(SF.col("event_id").isNotNull())
             .withWatermark("ts", "10 minutes")
             .dropDuplicatesWithinWatermark(["event_id"])

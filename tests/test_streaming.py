@@ -14,7 +14,11 @@ from pyspark.sql import functions as F
 from e_commerce_streaming_datapipeline_spark.operators.gmv import gmv_tumbling
 from e_commerce_streaming_datapipeline_spark.operators.streaming_queries import run_stream
 from e_commerce_streaming_datapipeline_spark.sources.batch import load_table
-from e_commerce_streaming_datapipeline_spark.sources.streaming import read_file_stream
+from e_commerce_streaming_datapipeline_spark.sources.streaming import (
+    FEED_GLOB,
+    append_feed,
+    read_file_stream,
+)
 from e_commerce_streaming_datapipeline_spark.streaming.processors import (
     streaming_gmv,
     streaming_sessions,
@@ -90,14 +94,10 @@ def test_parquet_sink_runs_one_job_per_micro_batch(spark, sf_dir, tmp_path):
 
     from tests.conftest import sync_status_store
 
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
+    in_dir = str(tmp_path / "in")
     table = pq.read_table(os.path.join(sf_dir, "events.parquet")).sort_by("ts")
     cuts = [table.num_rows * i // 3 for i in range(4)]
-    for i in range(3):
-        pq.write_table(
-            table.slice(cuts[i], cuts[i + 1] - cuts[i]), in_dir / f"part{i}.parquet"
-        )
+    append_feed(in_dir, [table.slice(cuts[i], cuts[i + 1] - cuts[i]) for i in range(3)])
 
     sc = spark.sparkContext
     sink = idempotent_parquet_sink(str(tmp_path / "out"))
@@ -116,7 +116,7 @@ def test_parquet_sink_runs_one_job_per_micro_batch(spark, sf_dir, tmp_path):
         lvl = batch_df.storageLevel
         cached[batch_id] = lvl.useMemory or lvl.useDisk
 
-    events = read_file_stream(spark, str(in_dir), "*.parquet", max_files_per_trigger=1)
+    events = read_file_stream(spark, in_dir, FEED_GLOB, max_files_per_trigger=1)
     q = (
         streaming_gmv(events, "1 hour")
         .writeStream.foreachBatch(counted)
@@ -213,16 +213,10 @@ def test_user_stats_profile_survives_idle_gaps_across_batches(spark, sf_dir, tmp
     tbl = tbl.take(pc.sort_indices(tbl, [("ts", "ascending")]))
     n_chunks = 20
     per = -(-tbl.num_rows // n_chunks)
-    chunk_dir = tmp_path / "user_chunks"
-    chunk_dir.mkdir()
-    chunks = []
-    for c in range(n_chunks):
-        part = tbl.slice(c * per, per)
-        path = str(chunk_dir / f"events-{c:02d}.parquet")
-        pq.write_table(part, path)
-        # the file source orders by modification time
-        os.utime(path, (1_700_000_000 + c, 1_700_000_000 + c))
-        chunks.append(part.select(["user_id", "ts"]).to_pandas())
+    chunk_dir = str(tmp_path / "user_chunks")
+    parts = [tbl.slice(c * per, per) for c in range(n_chunks)]
+    append_feed(chunk_dir, parts)
+    chunks = [part.select(["user_id", "ts"]).to_pandas() for part in parts]
 
     # precondition: some user sits out a whole batch and is idle for more
     # than an hour of event time across it
@@ -237,9 +231,7 @@ def test_user_stats_profile_survives_idle_gaps_across_batches(spark, sf_dir, tmp
         last_seen.update(part.groupby("user_id")["ts"].max().to_dict())
     assert idle, "no user is idle for more than an hour across a batch"
 
-    stream = read_file_stream(
-        spark, str(chunk_dir), "events-*.parquet", max_files_per_trigger=1
-    )
+    stream = read_file_stream(spark, chunk_dir, FEED_GLOB, max_files_per_trigger=1)
     name = f"t_{uuid.uuid4().hex[:10]}"
     q = (
         streaming_user_stats(stream)
@@ -296,8 +288,7 @@ def test_checkpoint_restart_resumes_without_reprocessing(spark, sf_dir, tmp_path
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
+    in_dir = str(tmp_path / "in")
     ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "out")
 
@@ -311,10 +302,10 @@ def test_checkpoint_restart_resumes_without_reprocessing(spark, sf_dir, tmp_path
     first = table.filter(pc.less(table["ts"], cutoff))
     second = table.filter(pc.greater_equal(table["ts"], cutoff))
     assert first.num_rows > 0 and second.num_rows > 0
-    pq.write_table(first, in_dir / "part1.parquet")
+    append_feed(in_dir, [first])
 
     def run_once():
-        stream = read_file_stream(spark, str(in_dir), "*.parquet")
+        stream = read_file_stream(spark, in_dir, FEED_GLOB)
         q = (
             streaming_gmv(stream, "1 hour")
             .writeStream.foreachBatch(idempotent_parquet_sink(out))
@@ -328,7 +319,7 @@ def test_checkpoint_restart_resumes_without_reprocessing(spark, sf_dir, tmp_path
 
     assert run_once() == first.num_rows
 
-    pq.write_table(second, in_dir / "part2.parquet")
+    append_feed(in_dir, [second])
     assert run_once() == second.num_rows  # only the NEW file is read
 
     expect = {
@@ -359,8 +350,6 @@ def test_watermark_bounds_state_and_append_emits_once(spark, sf_dir, tmp_path):
     once.  (The late-row input drop itself is documented best-effort —
     Spark 4 admits stragglers and immediately finalizes them — so this
     pins eviction + exactly-once emission, not the drop.)"""
-    import shutil
-    import time as _time
     import datetime
 
     events = load_table(spark, "events", sf_dir).select(
@@ -371,30 +360,10 @@ def test_watermark_bounds_state_and_append_emits_once(spark, sf_dir, tmp_path):
     late = events.where(F.col("ts") < cut)
     assert late.count() > 0 and on_time.count() > 0
 
-    stream_dir = tmp_path / "stream_in"
-    stream_dir.mkdir()
-
-    def _write_one(df, name, mtime_offset):
-        staging = tmp_path / f"stage_{name}"
-        df.coalesce(1).write.mode("overwrite").parquet(str(staging))
-        part = next(staging.glob("part-*.parquet"))
-        dest = stream_dir / f"{name}.parquet"
-        shutil.move(str(part), str(dest))
-        ts = _time.time() + mtime_offset
-        os.utime(dest, (ts, ts))
-
-    # file source processes oldest-mtime first: on-time batch, THEN stragglers
-    _write_one(on_time, "a_on_time", -1000)
-    _write_one(late, "b_late", 0)
-
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, value double"
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(stream_dir))
-    )
+    # the feed replays the on-time batch, THEN the stragglers
+    stream_dir = str(tmp_path / "stream_in")
+    append_feed(stream_dir, [on_time.toArrow(), late.toArrow()])
+    stream = read_file_stream(spark, stream_dir, FEED_GLOB, max_files_per_trigger=1)
     agg = (
         stream.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"))
@@ -598,8 +567,6 @@ def test_cart_abandonment_late_view_cancelled_by_earlier_batch_purchase(
     timestamps retained in state; a pending-views-only state diverges from
     the NOT EXISTS oracle here."""
     import datetime
-    import shutil
-    import time as _time
 
     from e_commerce_streaming_datapipeline_spark.streaming.processors import (
         streaming_cart_abandonment,
@@ -621,26 +588,12 @@ def test_cart_abandonment_late_view_cancelled_by_earlier_batch_purchase(
     # view stays pending (deadline T+110 > final watermark)
     batch_c = [(103, 3, m(80), "view")]
 
-    stream_dir = tmp_path / "ca_stream"
-    stream_dir.mkdir()
-    for i, (name, rows) in enumerate(
-        [("a", batch_a), ("b", batch_b), ("c", batch_c)]
-    ):
-        staging = tmp_path / f"ca_stage_{name}"
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(staging))
-        part = next(staging.glob("part-*.parquet"))
-        dest = stream_dir / f"{name}.parquet"
-        shutil.move(str(part), str(dest))
-        ts = _time.time() - 1000 + i
-        os.utime(dest, (ts, ts))
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(stream_dir))
+    stream_dir = str(tmp_path / "ca_stream")
+    append_feed(
+        stream_dir,
+        [spark.createDataFrame(rows, schema).toArrow() for rows in (batch_a, batch_b, batch_c)],
     )
+    stream = read_file_stream(spark, stream_dir, FEED_GLOB, max_files_per_trigger=1)
     got = run_stream(
         spark, streaming_cart_abandonment(stream), "t", output_mode="append"
     )
@@ -698,8 +651,6 @@ def test_funnel_completion_fold_handles_late_view(spark, tmp_path):
     fold buffers all three and folds them in event-time order, emitting the
     completion with the correct triple."""
     import datetime
-    import shutil
-    import time as _time
 
     from e_commerce_streaming_datapipeline_spark.streaming.processors import (
         streaming_funnel_completion,
@@ -716,24 +667,9 @@ def test_funnel_completion_fold_handles_late_view(spark, tmp_path):
         [(102, 1, m(2), "view"), (103, 2, m(3), "view"), (104, 2, m(4), "click")],
         [(105, 3, m(60), "view")],  # watermark pusher to T+50
     ]
-    stream_dir = tmp_path / "fc_stream"
-    stream_dir.mkdir()
-    for i, rows in enumerate(batches):
-        staging = tmp_path / f"fc_stage_{i}"
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(staging))
-        part = next(staging.glob("part-*.parquet"))
-        dest = stream_dir / f"{i}.parquet"
-        shutil.move(str(part), str(dest))
-        ts = _time.time() - 1000 + i
-        os.utime(dest, (ts, ts))
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(stream_dir))
-    )
+    stream_dir = str(tmp_path / "fc_stream")
+    append_feed(stream_dir, [spark.createDataFrame(rows, schema).toArrow() for rows in batches])
+    stream = read_file_stream(spark, stream_dir, FEED_GLOB, max_files_per_trigger=1)
     got = run_stream(
         spark, streaming_funnel_completion(stream), "t", output_mode="append"
     )
@@ -884,15 +820,10 @@ def test_full_outer_join_multi_batch_equals_single_batch(spark, sf_dir, tmp_path
     tbl = pq.read_table(os.path.join(sf_dir, "events.parquet"))
     tbl = tbl.sort_by([("ts", "ascending"), ("event_id", "ascending")])
     chunk_dir = tmp_path / "chunks"
-    chunk_dir.mkdir()
     n = tbl.num_rows
     bounds = [0, n // 4, n // 2, 3 * n // 4, n]
-    for i in range(4):
-        path = str(chunk_dir / f"events-{i}.parquet")
-        pq.write_table(tbl.slice(bounds[i], bounds[i + 1] - bounds[i]), path)
-        # the file source orders files by mtime in ms; four quick writes
-        # share one, and a later chunk read first drops earlier rows as late
-        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+    # a later chunk read first would drop earlier rows as late
+    append_feed(str(chunk_dir), [tbl.slice(lo, hi - lo) for lo, hi in zip(bounds, bounds[1:])])
 
     def run(src_dir, filename, mfpt, name):
         joined = build_full_outer_click_purchase(
@@ -916,7 +847,7 @@ def test_full_outer_join_multi_batch_equals_single_batch(spark, sf_dir, tmp_path
         return batches, rows
 
     single_batches, single_rows = run(sf_dir, "events.parquet", None, "fo_single")
-    multi_batches, multi_rows = run(chunk_dir, "events-*.parquet", 1, "fo_multi")
+    multi_batches, multi_rows = run(chunk_dir, FEED_GLOB, 1, "fo_multi")
     assert multi_batches >= 4, f"expected >=4 data micro-batches, got {multi_batches}"
     assert multi_rows == single_rows, (
         f"multi-batch emission diverged: {len(multi_rows)} vs {len(single_rows)} rows"
@@ -1002,7 +933,6 @@ def _chunked_event_stream_dir(tmp_path, n_minutes=80, per_minute=60, n_chunks=8)
     import datetime
 
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     t0 = datetime.datetime(2024, 3, 1, 0, 0, 0)
     types = ["view", "click", "purchase"]
@@ -1026,18 +956,10 @@ def _chunked_event_stream_dir(tmp_path, n_minutes=80, per_minute=60, n_chunks=8)
         }
     )
     chunk_dir = tmp_path / "state_chunks"
-    chunk_dir.mkdir()
     n = tbl.num_rows
     per = n // n_chunks
-    base_mtime = 1_700_000_000
-    for c in range(n_chunks):
-        lo = c * per
-        hi = n if c == n_chunks - 1 else (c + 1) * per
-        path = str(chunk_dir / f"events-{c}.parquet")
-        pq.write_table(tbl.slice(lo, hi - lo), path)
-        # strictly increasing mtimes: the file source orders by modification
-        # time, and same-second writes would replay chunks out of order
-        os.utime(path, (base_mtime + c, base_mtime + c))
+    bounds = [c * per for c in range(n_chunks)] + [n]
+    append_feed(str(chunk_dir), [tbl.slice(lo, hi - lo) for lo, hi in zip(bounds, bounds[1:])])
     return chunk_dir
 
 
@@ -1102,7 +1024,7 @@ def test_dedup_stream_state_plateaus_under_eviction(spark, tmp_path):
 
     chunk_dir = _chunked_event_stream_dir(tmp_path)
     stream = read_file_stream(
-        spark, str(chunk_dir), "events-*.parquet", max_files_per_trigger=1
+        spark, str(chunk_dir), FEED_GLOB, max_files_per_trigger=1
     )
     counted = (
         with_event_time_discipline(stream)
@@ -1125,7 +1047,7 @@ def test_journey_join_state_plateaus_under_eviction(spark, tmp_path):
     def leg(event_type, prefix):
         return (
             read_file_stream(
-                spark, str(chunk_dir), "events-*.parquet", max_files_per_trigger=1
+                spark, str(chunk_dir), FEED_GLOB, max_files_per_trigger=1
             )
             .where(F.col("event_type") == event_type)
             .select(
@@ -1173,13 +1095,11 @@ def test_late_rows_are_expired_not_aggregated(spark, tmp_path):
     import datetime
 
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from e_commerce_streaming_datapipeline_spark.sources.streaming import read_file_stream
 
     t0 = datetime.datetime(2024, 3, 1, 0, 0, 0)
     chunk_dir = tmp_path / "late_chunks"
-    chunk_dir.mkdir()
 
     def write_chunk(idx, minutes):
         n = len(minutes)
@@ -1195,10 +1115,7 @@ def test_late_rows_are_expired_not_aggregated(spark, tmp_path):
                 "value": pa.array([10.0] * n, pa.float64()),
             }
         )
-        path = str(chunk_dir / f"events-{idx}.parquet")
-        pq.write_table(tbl, path)
-        # file source replays in mtime order; pin it explicitly
-        os.utime(path, (1_700_000_000 + idx, 1_700_000_000 + idx))
+        append_feed(str(chunk_dir), [tbl])
 
     write_chunk(0, [0, 1, 2, 3, 4] * 10)       # watermark -> ~4min - delay
     write_chunk(1, [30, 31, 32, 33] * 10)       # watermark -> ~33min - 5min
@@ -1206,7 +1123,7 @@ def test_late_rows_are_expired_not_aggregated(spark, tmp_path):
     write_chunk(3, [0, 1, 2] * 10)              # LATE: far behind watermark
 
     stream = read_file_stream(
-        spark, str(chunk_dir), "events-*.parquet", max_files_per_trigger=1
+        spark, str(chunk_dir), FEED_GLOB, max_files_per_trigger=1
     )
     agg = (
         stream.withWatermark("ts", "5 minutes")
@@ -1364,7 +1281,7 @@ def test_update_mode_finalization_under_multi_batch_replay(spark, tmp_path):
 
     # histogram shape: hourly-bin cells revised across batches
     stream = read_file_stream(
-        spark, str(chunk_dir), "events-*.parquet", max_files_per_trigger=1
+        spark, str(chunk_dir), FEED_GLOB, max_files_per_trigger=1
     ).withWatermark("ts", "5 minutes")
     binned = stream.groupBy(
         F.window(F.col("ts"), "1 day").alias("w"), hist_bin(F.col("value")).alias("bin")
@@ -1389,7 +1306,7 @@ def test_update_mode_finalization_under_multi_batch_replay(spark, tmp_path):
 
     # gmv speed-layer shape: hourly windows revised across batches
     stream2 = read_file_stream(
-        spark, str(chunk_dir), "events-*.parquet", max_files_per_trigger=1
+        spark, str(chunk_dir), FEED_GLOB, max_files_per_trigger=1
     ).where(F.col("event_type") == "purchase").withWatermark("ts", "5 minutes")
     agg = stream2.groupBy(F.window(F.col("ts"), "1 hour").alias("w")).agg(
         F.round(F.sum("value"), 2).alias("gmv"), F.count("*").alias("purchases")
@@ -1492,8 +1409,6 @@ def test_funnel_completion_fires_once_despite_second_sequence(spark, tmp_path):
     DONE marker must swallow the second sequence: exactly one row per user,
     carrying the FIRST triple."""
     import datetime
-    import shutil
-    import time as _time
 
     from e_commerce_streaming_datapipeline_spark.streaming.processors import (
         streaming_funnel_completion,
@@ -1515,24 +1430,9 @@ def test_funnel_completion_fires_once_despite_second_sequence(spark, tmp_path):
         # watermark pusher: would finalize sequence 2 if state had been removed
         [(8, 9, m(120), "view")],
     ]
-    stream_dir = tmp_path / "ff_stream"
-    stream_dir.mkdir()
-    for i, rows in enumerate(batches):
-        staging = tmp_path / f"ff_stage_{i}"
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(staging))
-        part = next(staging.glob("part-*.parquet"))
-        dest = stream_dir / f"{i}.parquet"
-        shutil.move(str(part), str(dest))
-        ts = _time.time() - 1000 + i
-        os.utime(dest, (ts, ts))
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(stream_dir))
-    )
+    stream_dir = str(tmp_path / "ff_stream")
+    append_feed(stream_dir, [spark.createDataFrame(rows, schema).toArrow() for rows in batches])
+    stream = read_file_stream(spark, stream_dir, FEED_GLOB, max_files_per_trigger=1)
     got = run_stream(
         spark, streaming_funnel_completion(stream), "t", output_mode="append"
     ).where(F.col("user_id") == 1)
@@ -1560,15 +1460,10 @@ def test_agg_join_chain_multi_batch_equals_single_batch(spark, sf_dir, tmp_path)
     tbl = pq.read_table(os.path.join(sf_dir, "events.parquet"))
     tbl = tbl.sort_by([("ts", "ascending"), ("event_id", "ascending")])
     chunk_dir = tmp_path / "funnel_chunks"
-    chunk_dir.mkdir()
     n = tbl.num_rows
     bounds = [0, n // 4, n // 2, 3 * n // 4, n]
-    for i in range(4):
-        path = str(chunk_dir / f"events-{i}.parquet")
-        pq.write_table(tbl.slice(bounds[i], bounds[i + 1] - bounds[i]), path)
-        # the file source orders files by mtime in ms; four quick writes
-        # share one, and a later chunk read first drops earlier rows as late
-        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+    # a later chunk read first would drop earlier rows as late
+    append_feed(str(chunk_dir), [tbl.slice(lo, hi - lo) for lo, hi in zip(bounds, bounds[1:])])
 
     def run(src_dir, filename, mfpt, name):
         joined = build_complete_funnel_joined(
@@ -1592,6 +1487,37 @@ def test_agg_join_chain_multi_batch_equals_single_batch(spark, sf_dir, tmp_path)
         }
 
     single = run(sf_dir, "events.parquet", None, "cf_single")
-    multi = run(chunk_dir, "events-*.parquet", 1, "cf_multi")
+    multi = run(chunk_dir, FEED_GLOB, 1, "cf_multi")
     assert single, "single-batch run emitted nothing"
     assert multi == single
+
+
+def test_replay_feed_arrives_in_order_one_batch_per_chunk(spark, tmp_path):
+    """``split_by_key`` puts the null-key rows first, then one chunk per key
+    in ascending order, and loses no row; ``append_feed`` stamps strictly
+    ascending mtimes, across two appends too; and a stream reading one file
+    per trigger sees one micro-batch per chunk, in that order."""
+    import pyarrow as pa
+
+    from e_commerce_streaming_datapipeline_spark.sources.streaming import split_by_key
+
+    tbl = pa.table({"k": pa.array([3, None, 1, 3, 2, None, 1], pa.int64()),
+                    "v": pa.array(range(7), pa.int64())})
+    chunks = split_by_key(tbl, tbl["k"])
+    assert [c["k"].to_pylist() for c in chunks] == [[None, None], [1, 1], [2], [3, 3]]
+    assert sorted(pa.concat_tables(chunks).to_pylist(), key=lambda r: r["v"]) == tbl.to_pylist()
+
+    feed = str(tmp_path / "feed")
+    paths = append_feed(feed, chunks[:2]) + append_feed(feed, chunks[2:])
+    mtimes = [os.stat(p).st_mtime for p in paths]
+    assert all(a < b for a, b in zip(mtimes, mtimes[1:])), mtimes
+
+    seen = []
+    run_stream(
+        spark,
+        read_file_stream(spark, feed, FEED_GLOB, max_files_per_trigger=1),
+        "feed",
+        output_mode="append",
+        sink=lambda batch_df, batch_id: seen.append(sorted(r["v"] for r in batch_df.collect())),
+    )
+    assert seen == [c["v"].to_pylist() for c in chunks]
