@@ -323,8 +323,8 @@ def q_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE materialized shingle relation feeds signatures AND verification —
     # without the cut, the md5-heavy tokenize+shingle subtree re-evaluates
     # for bands, sh_a and sh_b (3x the dominant cost; cf. the signature
-    # localCheckpoint in similarity.py's LSH path)
-    sets = shingled_docs(docs).localCheckpoint()
+    # round_checkpoint in similarity.py's LSH path)
+    sets = round_checkpoint(shingled_docs(docs))
     bands = minhash_bands(docs, shingled=sets)
     candidates = _band_candidates(bands)
     sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
@@ -1173,7 +1173,7 @@ def q_minhash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # one materialized shingle relation feeds ground truth (exploded, sa,
     # sb) AND the band signatures — 4 consumers, one evaluation
-    sets = shingled_docs(docs).localCheckpoint()
+    sets = round_checkpoint(shingled_docs(docs))
     exploded = sets.where(_audit_sampled(F.col("doc_id"))).select(
         "doc_id", F.explode("shingles").alias("shingle")
     )
@@ -1266,11 +1266,11 @@ def q_minhash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def minhash_index(index_docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """The stored side of the near-dup admission gate: the index corpus's
     shingle sets and LSH band signatures, both materialized
-    (localCheckpoint) so a per-batch probe — batch query or every streaming
+    (round_checkpoint) so a per-batch probe — batch query or every streaming
     micro-batch — reuses them without re-tokenizing the corpus.  In
     production these are bucketed tables keyed by (band, band_sig)."""
-    sets = shingled_docs(index_docs).localCheckpoint()
-    bands = minhash_bands(index_docs, shingled=sets).localCheckpoint()
+    sets = round_checkpoint(shingled_docs(index_docs))
+    bands = round_checkpoint(minhash_bands(index_docs, shingled=sets))
     return sets, bands
 
 

@@ -54,9 +54,6 @@ def gmv_aggs(include_distinct: bool = True):
     return aggs
 
 
-def _gmv_aggs():
-    return gmv_aggs(include_distinct=True)
-
 _GMV_ORACLE_AGGS = """
     round(sum(value), 2)               AS gmv,
     count(*)                           AS item_count,
@@ -73,7 +70,7 @@ def gmv_tumbling(purchases: DataFrame, duration: str = "1 minute") -> DataFrame:
     return (
         tumbling_window(purchases, "ts", duration)
         .groupBy("window_start", "window_end")
-        .agg(*_gmv_aggs())
+        .agg(*gmv_aggs())
     )
 
 
@@ -83,7 +80,7 @@ def gmv_sliding(purchases: DataFrame, duration: str = "1 minute", slide: str = "
     return (
         sliding_window(purchases, "ts", duration, slide)
         .groupBy("window_start", "window_end")
-        .agg(*_gmv_aggs())
+        .agg(*gmv_aggs())
     )
 
 

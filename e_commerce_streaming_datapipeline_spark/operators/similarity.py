@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from e_commerce_streaming_datapipeline_spark.functions.checkpoints import round_checkpoint
 from e_commerce_streaming_datapipeline_spark.functions.rounding import cents, fround
 
 from e_commerce_streaming_datapipeline_spark.functions.vector import cosine_similarity_expr, norm_expr, to_double_array
@@ -298,7 +299,7 @@ def q_embedding_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # side consume this relation, and without a cut Spark re-evaluates the
     # 16-hyperplane HOF subtree on each — at 10^9 vectors that doubles the
     # dominant cost (measured ~11% even at fixture scale).
-    sigs = sigs.localCheckpoint()
+    sigs = round_checkpoint(sigs)
     # Long form: one row per (vec_id, band_idx, band_val).  Candidate search
     # is then ONE equi-join on (band_idx, band_val) instead of one join per
     # band — and the 16-dot-product signature subtree is evaluated twice
@@ -443,9 +444,9 @@ def q_embedding_topk_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFra
     emb = load_valid_embeddings(spark, sf_dir).select(
         "vec_id", to_double_array("embedding").alias("e")
     )
-    sigs = _lsh_band_sigs(
-        emb.repartition(spark.sparkContext.defaultParallelism)
-    ).localCheckpoint()
+    sigs = round_checkpoint(
+        _lsh_band_sigs(emb.repartition(spark.sparkContext.defaultParallelism))
+    )
     cands = _lsh_multiprobe_cands(sigs).drop("min_lvl")
     queries = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("e").alias("qe")
@@ -509,9 +510,9 @@ def q_lsh_multiprobe_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     emb = load_valid_embeddings(spark, sf_dir).select(
         "vec_id", to_double_array("embedding").alias("e")
     )
-    sigs = _lsh_band_sigs(
-        emb.repartition(spark.sparkContext.defaultParallelism)
-    ).localCheckpoint()
+    sigs = round_checkpoint(
+        _lsh_band_sigs(emb.repartition(spark.sparkContext.defaultParallelism))
+    )
     cands = _lsh_multiprobe_cands(sigs)
     bf = q_embedding_topk(spark, sf_dir).where(F.col("rank") <= LSH_TOP_K).select(
         "query_id", "neighbor_id"

@@ -26,6 +26,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from e_commerce_streaming_datapipeline_spark.functions.checkpoints import round_checkpoint
 from e_commerce_streaming_datapipeline_spark.functions.rounding import cents, cents_sum
 from e_commerce_streaming_datapipeline_spark.functions.scratch import scratch_dir
 from e_commerce_streaming_datapipeline_spark.plans.registry import query
@@ -512,13 +513,15 @@ WHERE v.event_type = 'view'
 """,
 )
 def q_cart_abandonment_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stateful CEP drop-off detection (``applyInPandasWithState`` +
-    event-time timeout): a view with no purchase by the same user within 30
-    minutes is emitted as an abandonment once the watermark proves no such
-    purchase can still arrive.  Hash-checked against a NOT EXISTS oracle
-    bounded by the exact watermark emission rule — the reference's drop-off
-    processor approximates this with status-count buckets
-    (dropoff_processor.py:30-70)."""
+    """CEP drop-off detection as a native watermarked left-outer
+    stream-stream join: a view with no purchase by the same user within 30
+    minutes is emitted as an abandonment once the watermark strictly passes
+    its deadline, so no such purchase can still arrive.  Both join legs are
+    split from one watermarked stream, so the join keeps the oracle's single
+    watermark (see streaming/processors.py::streaming_cart_abandonment).
+    Hash-checked against a NOT EXISTS oracle bounded by the exact watermark
+    emission rule — the reference's drop-off processor approximates this
+    with status-count buckets (dropoff_processor.py:30-70)."""
     from e_commerce_streaming_datapipeline_spark.streaming.processors import (
         streaming_cart_abandonment,
     )
@@ -2360,8 +2363,8 @@ def q_dsir_admission_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab, totals = dsir_ratio_model(docs.where(F.col("doc_id") % 10 != 0))
     # the fitted model is reused by EVERY micro-batch: materialize it once
     # (vocabulary-sized) instead of re-aggregating the history per batch
-    vocab = vocab.localCheckpoint(eager=True)
-    totals = totals.localCheckpoint(eager=True)
+    vocab = round_checkpoint(vocab)
+    totals = round_checkpoint(totals)
 
     sink_dir = scratch_dir("dsir_admit")
 

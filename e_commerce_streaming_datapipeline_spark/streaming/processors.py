@@ -20,9 +20,10 @@ paid off (SURVEY §2.5, §4):
   operator the reference's sliding windows approximate.
 * Native stateful operators first, as the reference's processors are plain
   groupBy-aggregations: state is engine-managed, with no per-group callback
-  into a Python worker.  ``applyInPandasWithState`` carries only the CEP
-  shapes no native chain reproduces exactly (``streaming_cart_abandonment``,
-  ``streaming_funnel_completion``).
+  into a Python worker.  Drop-off CEP (``streaming_cart_abandonment``) is a
+  watermarked left-outer stream-stream join; ``applyInPandasWithState``
+  carries only the CEP shape no native chain reproduces exactly
+  (``streaming_funnel_completion``).
 
 At 100 TB/day these queries run with the RocksDB state store (set in
 session.py), watermark-bounded state, and shuffle partitions sized to the
@@ -35,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from e_commerce_streaming_datapipeline_spark.functions.rounding import cents_sum, fround
+from e_commerce_streaming_datapipeline_spark.functions.windows import safe_rate
 
 WATERMARK_DELAY = "10 minutes"  # honoring the reference's orphaned config
 
@@ -124,29 +126,29 @@ def streaming_unique_buyers(events: DataFrame, duration: str = "1 minute") -> Da
 
 
 def streaming_funnel(events: DataFrame, duration: str = "1 hour") -> DataFrame:
-    """A1 on a stream: stage counts + rates per window.  Watermarked so
-    per-window state is evicted in update/append deployments."""
-
-    def stage(t: str):
-        return F.sum(F.when(F.col("event_type") == t, 1).otherwise(0))
+    """A1 on a stream: stage counts + rates per window.  The stage counts and
+    the click rate are SHARED with the batch twin
+    (operators/funnel.py::funnel_metrics), as ``streaming_gmv`` shares
+    ``gmv_aggs``.  Watermarked so per-window state is evicted in
+    update/append deployments."""
+    from e_commerce_streaming_datapipeline_spark.operators.funnel import _stage
 
     agg = (
         _ensure_watermark(events)
         .groupBy(F.window(F.col("ts"), duration).alias("w"))
         .agg(
             F.count("*").alias("total_events"),
-            stage("view").alias("views"),
-            stage("click").alias("clicks"),
-            stage("signup").alias("signups"),
-            stage("purchase").alias("purchases"),
+            _stage("view").alias("views"),
+            _stage("click").alias("clicks"),
+            _stage("signup").alias("signups"),
+            _stage("purchase").alias("purchases"),
         )
     )
     return agg.select(
         F.col("w.start").alias("window_start"),
         F.col("w.end").alias("window_end"),
         "total_events", "views", "clicks", "signups", "purchases",
-        F.when(F.col("views") > 0, fround(F.col("clicks") / F.col("views") * 100, 2))
-        .otherwise(0.0).alias("click_rate"),
+        safe_rate(F.col("clicks"), F.col("views")).alias("click_rate"),
     )
 
 
@@ -225,132 +227,62 @@ def streaming_gmv_cascade(events: DataFrame) -> DataFrame:
 def streaming_cart_abandonment(
     events: DataFrame, timeout_minutes: int = 30
 ) -> DataFrame:
-    """TRUE drop-off detection as stateful CEP — the honest version of the
-    reference's drop-off processor (src/processors/dropoff_processor.py:30-70,
-    which proxies "drop-off" from order_status value counts alone).
+    """TRUE drop-off detection — the honest version of the reference's
+    drop-off processor (src/processors/dropoff_processor.py:30-70, which
+    proxies "drop-off" from order_status value counts alone) — as a native
+    watermarked LEFT OUTER stream-stream join.
 
     Semantics: a ``view`` is abandoned iff NO ``purchase`` by the same user
-    lands in [view_ts, view_ts + 30 min].  Pending views are per-user state;
-    a purchase cancels every pending view in its trailing 30-minute window;
-    an EVENT-TIME TIMEOUT fires once the watermark passes a pending view's
-    deadline — only then is the abandonment emitted, because a late purchase
-    can no longer arrive (the same guarantee the watermark gives windowed
-    aggregation).  Spark tracks event time in milliseconds, so the emission
-    bound is floor_ms(max event time) - delay — reproduced exactly by the
-    oracle's ``date_trunc('milliseconds', max(ts)) - delay``.
+    lands in [view_ts, view_ts + 30 min].  The view leg joins the purchase
+    leg on user and ``view_ts <= p_ts <= view_ts + 30 min``; a view with no
+    match is emitted with a null purchase side, i.e. as an abandonment.
 
-    Cross-batch out-of-order correctness: state retains not only pending
-    views but also PURCHASE timestamps still above the watermark, so a late
-    view (arriving in a later micro-batch, within the allowed lateness) is
-    checked against purchases processed in earlier batches and converted
-    instead of being emitted as a spurious abandonment.  The retention bound
-    is exact: a purchase with ``p_ts < watermark`` could only convert views
-    with ``view_ts <= p_ts < watermark``, and those are dropped as too-late
-    by Spark itself — so purchases are evicted the moment the watermark
-    passes them and state stays bounded.
+    Emission rule: Spark evicts a buffered view, emitting its null row, once
+    the watermark STRICTLY passes ``view_ts + 30 min`` — only then can no
+    covering purchase still arrive.  Spark tracks event time in
+    milliseconds, so the bound is floor_ms(max event time) - delay: the
+    oracle's ``v.ts + INTERVAL '30 minutes' < wm.w`` with
+    ``wm.w = date_trunc('milliseconds', max(ts)) - delay``.
 
-    Scale: state is O(pending views + in-horizon purchases per active user),
-    Arrow-batched per group, evicted by the timeout — bounded at any corpus
-    size; the group-by shuffle is the only data movement.
+    One watermark: both legs are split from ONE watermarked view+purchase
+    stream, so the join's global watermark is that stream's watermark —
+    the oracle's single ``max(ts)`` over views and purchases.  Two
+    separately watermarked reads (the ``_stream_leg`` pattern) would give
+    the minimum of the two legs' watermarks, and the result moves.
+
+    State stays bounded: a view is held until its deadline passes the
+    watermark, a purchase until the watermark passes it (a later view it
+    could cover would be too late to accept).  So a late view, arriving in
+    a later micro-batch within the allowed lateness, is still checked
+    against purchases from earlier batches, and vice versa.
+
+    NULL-user rows are nobody's cart session: they are dropped before the
+    watermark, as the oracle drops them from its views and its watermark
+    (r9 edge pin).
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    timeout_us = timeout_minutes * 60 * 1_000_000
-    out_schema = (
-        "user_id long, view_event_id long, view_ts timestamp, abandoned_at timestamp"
+    timeout = F.expr(f"INTERVAL {timeout_minutes} MINUTES")
+    stream = _ensure_watermark(
+        events.where(
+            F.col("event_type").isin("view", "purchase") & F.col("user_id").isNotNull()
+        )
     )
-    state_schema = "pend_ids array<long>, pend_ts array<long>, purch_ts array<long>"
-
-    def detect(key, pdf_iter, state: GroupState):
-        pend: list[tuple[int, int]] = []  # (event_id, view_ts_us)
-        purch: list[int] = []  # purchase ts_us, retained while >= watermark
-        if state.exists:
-            ids, tss, ptss = state.get
-            pend = list(zip(ids, tss))
-            purch = list(ptss)
-        if not state.hasTimedOut:
-            rows = []
-            for pdf in pdf_iter:
-                for eid, ts, et in zip(
-                    pdf["event_id"], pdf["ts"], pdf["event_type"]
-                ):
-                    # a keyless VIEW still counts as a pending view and a
-                    # keyless PURCHASE still converts — event_id is output
-                    # identity, not semantics (pd.isna: NULL ids arrive as
-                    # NaN through Arrow and int(NaN) would throw)
-                    rows.append((
-                        int(ts.value // 1000),
-                        et == "purchase",
-                        None if pd.isna(eid) else int(eid),
-                    ))
-            # event-time order; views before purchases on equal timestamps so
-            # a same-instant purchase converts the view (BETWEEN is inclusive)
-            rows.sort(key=lambda r: (r[0], r[1]))
-            for ts_us, is_purchase, eid in rows:
-                if is_purchase:
-                    # converts pending views in the trailing window
-                    # [p.ts - 30 min, p.ts]; keep views older than the window
-                    # AND (cross-batch late purchase) views after the purchase
-                    pend = [
-                        p for p in pend
-                        if p[1] < ts_us - timeout_us or p[1] > ts_us
-                    ]
-                    purch.append(ts_us)
-                elif any(ts_us <= p <= ts_us + timeout_us for p in purch):
-                    # late out-of-order view already covered by a purchase
-                    # from an earlier micro-batch (or earlier in this one):
-                    # converted on arrival, never enters pending state
-                    pass
-                else:
-                    pend.append((eid, ts_us))
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        expired = [p for p in pend if p[1] + timeout_us < wm_us]
-        pend = [p for p in pend if p[1] + timeout_us >= wm_us]
-        purch = [p for p in purch if p >= wm_us]
-        if pend or purch:
-            state.update((
-                [p[0] for p in pend],
-                [p[1] for p in pend],
-                purch,
-            ))
-            deadlines = [p[1] + timeout_us for p in pend] + purch
-            next_deadline_ms = min(deadlines) // 1000 + 1
-            state.setTimeoutTimestamp(max(next_deadline_ms, wm_us // 1000 + 1))
-        elif state.exists:
-            state.remove()
-        if expired:
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(expired),
-                    "view_event_id": [p[0] for p in expired],
-                    "view_ts": [pd.Timestamp(p[1], unit="us") for p in expired],
-                    "abandoned_at": [
-                        pd.Timestamp(p[1] + timeout_us, unit="us") for p in expired
-                    ],
-                }
-            )
-
+    views = stream.where(F.col("event_type") == "view").select(
+        "user_id", F.col("event_id").alias("view_event_id"), F.col("ts").alias("view_ts")
+    )
+    purchases = stream.where(F.col("event_type") == "purchase").select(
+        F.col("user_id").alias("p_user_id"), F.col("ts").alias("p_ts")
+    )
     return (
-        _ensure_watermark(
-            # NULL-user rows are nobody's cart session and must not form a
-            # state group: Spark's groupBy treats NULLs as EQUAL (a NULL-user
-            # purchase would convert NULL-user views) while the oracle's
-            # NOT-EXISTS equality correlation never matches NULL — drop them
-            # explicitly on both engines (r9 edge pin)
-            events.where(
-                F.col("event_type").isin("view", "purchase")
-                & F.col("user_id").isNotNull()
-            ).select("user_id", "event_id", "ts", "event_type")
+        views.join(
+            purchases,
+            (F.col("user_id") == F.col("p_user_id"))
+            & (F.col("p_ts") >= F.col("view_ts"))
+            & (F.col("p_ts") <= F.col("view_ts") + timeout),
+            "left_outer",
         )
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            detect,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+        .where(F.col("p_ts").isNull())
+        .select("user_id", "view_event_id", "view_ts",
+                (F.col("view_ts") + timeout).alias("abandoned_at"))
     )
 
 

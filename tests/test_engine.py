@@ -88,6 +88,37 @@ def test_fixed_point_lives_in_one_kernel(tmp_path):
     assert _inline_fixed_point_sites(tmp_path) == ["m.py:1"]
 
 
+def _lineage_cut_sites(package: Path) -> list[str]:
+    """``.localCheckpoint(``/``.checkpoint(`` calls outside
+    ``functions/checkpoints.py``."""
+    sites = []
+    for path in sorted(package.rglob("*.py")):
+        rel = path.relative_to(package).as_posix()
+        if rel == "functions/checkpoints.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call) and getattr(node.func, "attr", None) in (
+                "localCheckpoint",
+                "checkpoint",
+            ):
+                sites.append(f"{rel}:{node.lineno}")
+    return sites
+
+
+def test_lineage_cuts_go_through_round_checkpoint(tmp_path):
+    """Every lineage cut is ``functions/checkpoints.py::round_checkpoint``,
+    so a deployment that sets ``SPARK_GRAFT_CHECKPOINT_DIR`` gets durable
+    checkpoints everywhere; a bare ``localCheckpoint`` keeps executor-only
+    blocks that an executor loss fails the job on."""
+    import e_commerce_streaming_datapipeline_spark as pkg
+
+    package = Path(pkg.__file__).resolve().parent
+    assert _lineage_cut_sites(package) == []
+    # the scan sees planted cuts of both kinds
+    (tmp_path / "m.py").write_text("a = df.localCheckpoint()\nb = df.checkpoint(eager=True)\n")
+    assert _lineage_cut_sites(tmp_path) == ["m.py:1", "m.py:2"]
+
+
 def _utime_sites(root: Path, dirs: tuple[str, ...]) -> list[str]:
     """``utime`` calls in ``dirs`` under ``root``, outside the replay-feed
     helper ``sources/streaming.py::append_feed``."""

@@ -557,15 +557,59 @@ def test_observe_metrics_on_stream(spark, sf_dir):
     ).count()
 
 
-def test_cart_abandonment_late_view_cancelled_by_earlier_batch_purchase(
-    spark, tmp_path
-):
-    """Cross-batch out-of-order correctness for the CEP processor: a view
-    arriving LATE (in a later micro-batch, within the allowed lateness) whose
-    covering purchase was already processed in an earlier batch must be
-    converted — not emitted as a spurious abandonment.  Requires the purchase
-    timestamps retained in state; a pending-views-only state diverges from
-    the NOT EXISTS oracle here."""
+@pytest.mark.parametrize(
+    "batches, abandoned",
+    [
+        pytest.param(
+            [
+                # A: user 1 purchases at T+10 (watermark after A: T)
+                [(100, 1, 10, "purchase")],
+                # B: late out-of-order views at T+5/T+6 (>= watermark T,
+                # accepted); user 1's is covered by the batch-A purchase
+                # (T+5 <= T+10 <= T+35), user 2's is genuinely abandoned
+                [(101, 1, 5, "view"), (102, 2, 6, "view")],
+                # C: watermark pusher to T+70, past both 30-min deadlines;
+                # its own view stays open (deadline T+110)
+                [(103, 3, 80, "view")],
+            ],
+            {(2, 102)},
+            id="late_view_after_purchase",
+        ),
+        pytest.param(
+            [
+                # A: views at T+0 (user 1) and T+15 (user 2); watermark T+5
+                [(101, 1, 0, "view"), (102, 2, 15, "view")],
+                # B: user 1's purchase at T+8 arrives late (below max event
+                # time T+15, above watermark T+5) and covers the batch-A view
+                [(103, 1, 8, "purchase")],
+                # C: watermark pusher to T+70; its own view stays open
+                [(104, 3, 80, "view")],
+            ],
+            {(2, 102)},
+            id="late_purchase_after_view",
+        ),
+        pytest.param(
+            [
+                [(101, 1, 0, "view"), (102, 2, 5, "view")],
+                # B: user 1's purchase covers its view; watermark T+10
+                [(103, 1, 20, "purchase")],
+                # C: only a purchase, by a user with no view; its watermark
+                # push to T+50 passes user 2's deadline (T+35)
+                [(104, 3, 60, "purchase")],
+            ],
+            {(2, 102)},
+            id="purchase_only_final_batch",
+        ),
+    ],
+)
+def test_cart_abandonment_across_micro_batches(spark, tmp_path, batches, abandoned):
+    """Cross-batch out-of-order correctness for drop-off detection: a view
+    and its covering purchase arriving in different micro-batches (either
+    one late, within the allowed lateness) convert, and an uncovered view
+    is emitted once the watermark passes its deadline — whichever event
+    type pushed it there.  The join's legs share ONE watermark; legs read
+    and watermarked separately hold it at the lagging leg and emit
+    nothing here."""
     import datetime
 
     from e_commerce_streaming_datapipeline_spark.streaming.processors import (
@@ -573,34 +617,24 @@ def test_cart_abandonment_late_view_cancelled_by_earlier_batch_purchase(
     )
 
     T = datetime.datetime(2024, 3, 1, 12, 0, 0)
-
-    def m(minutes):
-        return T + datetime.timedelta(minutes=minutes)
-
     schema = "event_id long, user_id long, ts timestamp, event_type string"
-    # batch A: user 1 purchases at T+10 (watermark after A = T+10 - 10min = T)
-    batch_a = [(100, 1, m(10), "purchase")]
-    # batch B: late out-of-order views at T+5/T+6 (>= watermark T, accepted).
-    # user 1's is covered by the batch-A purchase (T+5 <= T+10 <= T+35);
-    # user 2 has no purchase -> genuinely abandoned
-    batch_b = [(101, 1, m(5), "view"), (102, 2, m(6), "view")]
-    # batch C: watermark pusher to T+70, past both 30-min deadlines; its own
-    # view stays pending (deadline T+110 > final watermark)
-    batch_c = [(103, 3, m(80), "view")]
-
     stream_dir = str(tmp_path / "ca_stream")
     append_feed(
         stream_dir,
-        [spark.createDataFrame(rows, schema).toArrow() for rows in (batch_a, batch_b, batch_c)],
+        [
+            spark.createDataFrame(
+                [(eid, uid, T + datetime.timedelta(minutes=mins), et)
+                 for eid, uid, mins, et in rows],
+                schema,
+            ).toArrow()
+            for rows in batches
+        ],
     )
     stream = read_file_stream(spark, stream_dir, FEED_GLOB, max_files_per_trigger=1)
     got = run_stream(
         spark, streaming_cart_abandonment(stream), "t", output_mode="append"
     )
-    emitted = {(r["user_id"], r["view_event_id"]) for r in got.collect()}
-    assert (1, 101) not in emitted, "late view covered by earlier-batch purchase"
-    assert (2, 102) in emitted, "uncovered late view must still abandon"
-    assert (3, 103) not in emitted, "open view must stay unemitted"
+    assert {(r["user_id"], r["view_event_id"]) for r in got.collect()} == abandoned
 
 
 def test_jdbc_upsert_statement_and_no_write_without_driver(spark, monkeypatch):
@@ -709,11 +743,12 @@ def test_rocksdb_state_store_produces_identical_results(spark, sf_dir):
 def test_transform_with_state_probe():
     """Cheap per-round availability probe for ``transformWithStateInPandas``
     (Spark 4's successor to ``applyInPandasWithState``): its Python worker
-    path serializes state via protobuf, which this container does not ship
-    (``import google.protobuf`` fails).  When the probe starts passing, port
-    ``streaming_cart_abandonment`` to a StatefulProcessor variant; until
-    then ``applyInPandasWithState`` (tested above) is the supported CEP
-    path — same semantics, RDD-free, watermark-evicted state.
+    path serializes state via protobuf, and the test skips while
+    ``import google.protobuf`` fails.  When the probe starts passing, port
+    ``funnel_completion_stream`` (``streaming_funnel_completion``, the one
+    processor left on ``applyInPandasWithState``) to a StatefulProcessor
+    variant; until then ``applyInPandasWithState`` (tested above) is the
+    supported CEP path — same semantics, RDD-free, watermark-evicted state.
 
     Probe history: rounds 3-8 all re-probed (``import google``
     still fails, 2026-08-16); the skip below is the suite's single
@@ -729,7 +764,7 @@ def test_transform_with_state_probe():
             "the container; applyInPandasWithState covers stateful CEP"
         )
     raise AssertionError(
-        "protobuf now importable — port cart_abandonment_stream to "
+        "protobuf now importable — port funnel_completion_stream to "
         "transformWithStateInPandas as a second variant"
     )
 
