@@ -11,7 +11,7 @@ designed for 100 TB scale.
 
 Layout:
     session.py    SparkSession factory (AQE, Arrow, UTC, ns-parquet handling)
-    schemas.py    canonical StructTypes (reference event schemas + test tables)
+    schemas.py    fixture table names and event/payment vocabularies
     sources/      batch parquet/csv loaders, streaming (file/kafka) sources
     operators/    the operator inventory from SURVEY.md §2 + scale-up ops
     functions/    reusable column expressions (vector math, hashing, text)

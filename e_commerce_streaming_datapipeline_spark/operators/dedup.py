@@ -28,7 +28,7 @@ from e_commerce_streaming_datapipeline_spark.functions.rounding import fround
 from e_commerce_streaming_datapipeline_spark.functions.hashing import hash_half, hash_half_sql
 
 from e_commerce_streaming_datapipeline_spark.plans.registry import query
-from e_commerce_streaming_datapipeline_spark.sources.batch import load_table, load_valid_embeddings
+from e_commerce_streaming_datapipeline_spark.sources.batch import load_table
 
 # MinHash/LSH parameters: 16 hashes in 4 bands of 4 — standard S-curve puts
 # the candidate threshold near jaccard ≈ (1/4)^(1/4) ≈ 0.71; verification
@@ -911,34 +911,15 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 10^9 vectors the key is a k-means centroid id), then a distinct on
     the dropped side and one broadcast-able anti-join back.  No Python, no
     driver state, no iteration."""
-    from e_commerce_streaming_datapipeline_spark.functions.vector import (
-        dot_expr,
-        norm_expr,
-        to_double_array,
+    from e_commerce_streaming_datapipeline_spark.operators.similarity import (
+        blocked_cosine_pairs,
+        embedding_vectors,
     )
 
-    # norms precomputed ONCE per vector (map-side), so each of the
-    # O((N/K)^2 * K) candidate pairs costs a single dot-product HOF instead
-    # of three (dot + two norm recomputations) — measured 3x on the pair
-    # stage.  dot/(na*nb) is the same float arithmetic as the oracle's
-    # ip/(sqrt(ipa)*sqrt(ipb)), so 6dp-rounded parity is unchanged.
-    emb = load_valid_embeddings(spark, sf_dir).select(
-        "vec_id", "label", to_double_array("embedding").alias("e")
-    )
-    emb = emb.withColumn("nrm", norm_expr(F.col("e")))
-    right = emb.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("label").alias("label_b"),
-        F.col("e").alias("e_b"),
-        F.col("nrm").alias("nrm_b"),
-    )
-    cos = dot_expr(F.col("e"), F.col("e_b")) / (F.col("nrm") * F.col("nrm_b"))
+    emb = embedding_vectors(spark, sf_dir, "label")
     dropped = (
-        emb.join(
-            right,
-            (F.col("label") == F.col("label_b")) & (F.col("vec_id") < F.col("vec_b")),
-        )
-        .where(fround(cos, 6) >= SEMANTIC_DEDUP_COSINE)
+        blocked_cosine_pairs(emb, "label")
+        .where(F.col("cos_sim") >= SEMANTIC_DEDUP_COSINE)
         .select(F.col("vec_b").alias("vec_id"))
         .distinct()
         .withColumn("is_dropped", F.lit(1))
@@ -1021,16 +1002,13 @@ def q_semantic_dedup_autoblock(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output is the operational census: vectors, blocks, max block size (the
     quadratic bound), kept/dropped."""
     from e_commerce_streaming_datapipeline_spark.functions.scalars import scalar_join
-    from e_commerce_streaming_datapipeline_spark.functions.vector import (
-        dot_expr,
-        norm_expr,
-        to_double_array,
+    from e_commerce_streaming_datapipeline_spark.functions.vector import dot_expr, norm_expr
+    from e_commerce_streaming_datapipeline_spark.operators.similarity import (
+        _lsh_band_sigs,
+        embedding_vectors,
     )
-    from e_commerce_streaming_datapipeline_spark.operators.similarity import _lsh_band_sigs
 
-    emb = load_valid_embeddings(spark, sf_dir).select(
-        "vec_id", to_double_array("embedding").alias("e")
-    )
+    emb = embedding_vectors(spark, sf_dir)
     emb = emb.withColumn("nrm", norm_expr(F.col("e")))
     sigs = _lsh_band_sigs(emb.select("vec_id", "e")).select(
         "vec_id", (F.col("band0") + F.col("band1") * 256).alias("sig16")
@@ -1047,6 +1025,10 @@ def q_semantic_dedup_autoblock(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("sig16"), F.expr("CAST(power(2, n_bits) AS BIGINT)")
         ).alias("bucket"),
     )
+    # Not similarity.blocked_cosine_pairs: that kernel carries the vectors
+    # through the bucket self-join, which here plans as a sort-merge join
+    # that shuffles them (measured slower at sf0.1); pairing the narrow
+    # (vec_id, bucket) rows first keeps every vector join a broadcast.
     ka = keyed.select(F.col("vec_id").alias("vec_a"), "bucket")
     kb = keyed.select(F.col("vec_id").alias("vec_b"), F.col("bucket").alias("bucket_b"))
     va = emb.select(F.col("vec_id").alias("vec_a"), F.col("e").alias("e_a"), F.col("nrm").alias("nrm_a"))

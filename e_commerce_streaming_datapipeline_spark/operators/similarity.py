@@ -1,19 +1,44 @@
 """Similarity search over the embeddings table (BASELINE.json scale-up
-mandate): brute-force cosine top-k as the exactness baseline, a
-cluster-pruned (IVF-style) variant as the scale path, and a Pandas-UDF
-batch-vectorized variant showing the Arrow path.
+mandate): brute-force cosine top-k as the exactness baseline and a family of
+approximate (ANN) indexes whose results are all oracle-checked.
+
+Every ANN query is filter-and-refine: a candidate stage proposes
+``(query_id, neighbor_id)`` pairs, then one exact-verification stage
+re-scores them.  The stages are shared kernels, and each query composes
+them instead of re-typing them:
+
+* ``embedding_vectors`` -- the ``(vec_id, [cols], e)`` double-array
+  projection of the valid embeddings that every vector kernel reads.
+* ``rerank_topk`` -- exact cosine of each candidate pair, then each query's
+  top k: ``embedding_topk_lsh``, ``embedding_topk_lsh_multiprobe``,
+  ``embedding_topk_sq``, ``trained_ivf_topk``, ``embedding_topk_pq_rerank``
+  and ``embedding_topk_ivf_adc``.
+* ``ivf_probe_cands`` -- the trained IVF index's candidates: each query's
+  ``nprobe`` nearest centroids joined to the corpus assignment, tagged with
+  the probe rank: ``trained_ivf_topk``, ``embedding_topk_ivf_adc`` and
+  ``ivf_probe_recall_audit``.
+* ``_pq_index`` -- the trained PQ codes plus the per-query ADC distance
+  table: ``embedding_topk_pq``, ``embedding_topk_pq_rerank`` and
+  ``embedding_topk_ivf_adc``.
+* ``_recall_by_level`` -- candidate recall against brute-force truth per
+  probe level: ``lsh_multiprobe_recall_audit`` and
+  ``ivf_probe_recall_audit``.
+* ``blocked_cosine_pairs`` -- cosine of every same-block pair with
+  precomputed norms: ``embedding_near_dups`` here and ``semantic_dedup`` in
+  ``dedup.py``.
+
+The brute-force builders (``embedding_topk``, ``embedding_topk_ivf`` with
+the fixture's label column as the cluster, ``hard_negative_mining``,
+``knn_label_accuracy``), the Matryoshka audit's truncated pair and MMR's
+scaled relevance score their own pairs; ``embedding_topk_pandas`` is the
+Arrow/pandas twin of the brute force.
 
 Determinism contract (SURVEY §7 hard-part 4): all similarity math is DOUBLE
 with left-to-right summation, similarities are rounded to 6dp *before*
 ranking, and ranks tie-break on neighbor id — so Spark, numpy and the DuckDB
-oracle produce the identical top-k.
-
-Scale story: brute force is O(Q x N) — fine for reranking, wrong for
-N=10^9.  The IVF variant prunes candidates to the query's cluster
-(here the fixture's ``label`` column; at scale: k-means centroid ids
-computed offline), turning the cross join into an equi-join on cluster id.
-LSH bucketing (random hyperplanes) composes the same way: equi-join on
-signature prefix.
+oracle produce the identical top-k.  Index training (IVF k-means, PQ
+codebooks) is exact integer arithmetic, so both engines learn the same
+index.
 """
 
 from __future__ import annotations
@@ -26,7 +51,12 @@ from pyspark.sql import functions as F
 from e_commerce_streaming_datapipeline_spark.functions.checkpoints import round_checkpoint
 from e_commerce_streaming_datapipeline_spark.functions.rounding import cents, fround
 
-from e_commerce_streaming_datapipeline_spark.functions.vector import cosine_similarity_expr, norm_expr, to_double_array
+from e_commerce_streaming_datapipeline_spark.functions.vector import (
+    cosine_similarity_expr,
+    dot_expr,
+    norm_expr,
+    to_double_array,
+)
 from e_commerce_streaming_datapipeline_spark.plans.registry import query
 from e_commerce_streaming_datapipeline_spark.sources.batch import load_table, load_valid_embeddings
 
@@ -69,6 +99,41 @@ def _ranked_topk(pairs: DataFrame, top_k: int = TOP_K) -> DataFrame:
     )
 
 
+def embedding_vectors(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """(vec_id, *cols, e): every valid embedding as a double array — the
+    input of every vector kernel in this module."""
+    return load_valid_embeddings(spark, sf_dir).select(
+        "vec_id", *cols, to_double_array("embedding").alias("e")
+    )
+
+
+def rerank_topk(cands: DataFrame, vectors: DataFrame, top_k: int) -> DataFrame:
+    """The exact-verification stage of every ANN query: each
+    ``(query_id, neighbor_id)`` candidate is re-scored with exact cosine
+    (6dp) and each query keeps its top ``top_k``.  ``vectors`` is an
+    ``embedding_vectors`` relation.
+
+    The query vectors (vec_id < N_QUERIES) are broadcast onto the
+    candidates and the neighbor vectors are joined by id, so the only
+    broadcast is Q vectors, whatever the size of the candidate set (LSH and
+    IVF candidates grow with the corpus).  Broadcasting the candidate set
+    instead and joining the corpus twice was no faster at sf0.1 across the
+    six callers, and its broadcast is unbounded for LSH/IVF candidates."""
+    queries = vectors.where(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("q_id"), F.col("e").alias("qe")
+    )
+    scored = (
+        cands.join(F.broadcast(queries), F.col("query_id") == F.col("q_id"))
+        .join(vectors, F.col("neighbor_id") == F.col("vec_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            fround(cosine_similarity_expr(F.col("qe"), F.col("e")), 6).alias("cos_sim"),
+        )
+    )
+    return _ranked_topk(scored, top_k)
+
+
 @query(
     "embedding_topk",
     oracle=_ORACLE_PAIRS.format(
@@ -79,9 +144,7 @@ def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k: query vectors (vec_id < 8) against the full
     table via broadcast nested-loop, dot products as codegen'd higher-order
     functions (zip_with/aggregate) — zero Python in the loop."""
-    emb = load_valid_embeddings(spark, sf_dir).select(
-        "vec_id", to_double_array("embedding").alias("e")
-    )
+    emb = embedding_vectors(spark, sf_dir)
     queries = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
     )
@@ -109,9 +172,7 @@ def q_embedding_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style pruned ANN: candidates restricted to the query's cluster
     (label = coarse centroid id), turning the scan into an equi-join — the
     plan shape that survives N=10^9 vectors."""
-    emb = load_valid_embeddings(spark, sf_dir).select(
-        "vec_id", "label", to_double_array("embedding").alias("e")
-    )
+    emb = embedding_vectors(spark, sf_dir, "label")
     queries = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("qlabel"),
@@ -269,6 +330,21 @@ def _lsh_band_sigs(emb: DataFrame) -> DataFrame:
     )
 
 
+def _lsh_checkpointed_sigs(spark: SparkSession, emb: DataFrame) -> DataFrame:
+    """``_lsh_band_sigs`` of ``emb``, materialized once.
+
+    The input is repartitioned before the 16-dot-product projection so
+    single-file inputs parallelize the HOF math (same rationale as
+    minhash_near_dups; ~10% local win, a no-op cost at scale where the scan
+    is already parallel).  The cut matters because both the query side and
+    the corpus side consume the signatures: without it Spark re-evaluates
+    the 16-hyperplane HOF subtree on each — at 10^9 vectors that doubles
+    the dominant cost (measured ~11% even at fixture scale)."""
+    return round_checkpoint(
+        _lsh_band_sigs(emb.repartition(spark.sparkContext.defaultParallelism))
+    )
+
+
 @query("embedding_topk_lsh", oracle=_ORACLE_LSH)
 def q_embedding_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed ANN: 16 random-hyperplane sign bits per vector, split
@@ -288,18 +364,8 @@ def q_embedding_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-band bucket sizes (~N/256) bound the pair expansion, and recall
     tunes by adding bands (more joins) or multi-probing neighboring
     signatures — the plan shape stays equi-join."""
-    emb = load_valid_embeddings(spark, sf_dir).select(
-        "vec_id", to_double_array("embedding").alias("e")
-    )
-    # repartition before the 16-dot-product projection so single-file inputs
-    # parallelize the HOF math (same rationale as minhash_near_dups; ~10%
-    # local win, a no-op cost at scale where the scan is already parallel)
-    sigs = _lsh_band_sigs(emb.repartition(spark.sparkContext.defaultParallelism))
-    # Materialize the signatures once: both the query side and the corpus
-    # side consume this relation, and without a cut Spark re-evaluates the
-    # 16-hyperplane HOF subtree on each — at 10^9 vectors that doubles the
-    # dominant cost (measured ~11% even at fixture scale).
-    sigs = round_checkpoint(sigs)
+    emb = embedding_vectors(spark, sf_dir)
+    sigs = _lsh_checkpointed_sigs(spark, emb)
     # Long form: one row per (vec_id, band_idx, band_val).  Candidate search
     # is then ONE equi-join on (band_idx, band_val) instead of one join per
     # band — and the 16-dot-product signature subtree is evaluated twice
@@ -318,19 +384,7 @@ def q_embedding_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", F.col("vec_id").alias("neighbor_id"))
         .distinct()
     )
-    queries = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("e").alias("qe")
-    )
-    scored = (
-        cands.join(F.broadcast(queries), F.col("query_id") == F.col("q_id"))
-        .join(emb, F.col("neighbor_id") == F.col("vec_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            fround(cosine_similarity_expr(F.col("qe"), F.col("e")), 6).alias("cos_sim"),
-        )
-    )
-    return _ranked_topk(scored, top_k=LSH_TOP_K)
+    return rerank_topk(cands, emb, LSH_TOP_K)
 
 
 # Multi-probe masks: (xor mask, probe level).  Level 0 = the exact signature
@@ -441,29 +495,43 @@ def q_embedding_topk_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFra
     Scale anatomy unchanged from ``embedding_topk_lsh``: the probe fan-out
     multiplies only the broadcast query side (9 masks x 2 bands per query);
     the corpus signature relation and the equi-join shape are identical."""
-    emb = load_valid_embeddings(spark, sf_dir).select(
-        "vec_id", to_double_array("embedding").alias("e")
-    )
-    sigs = round_checkpoint(
-        _lsh_band_sigs(emb.repartition(spark.sparkContext.defaultParallelism))
-    )
-    cands = _lsh_multiprobe_cands(sigs).drop("min_lvl")
-    queries = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("e").alias("qe")
-    )
-    scored = (
-        cands.join(F.broadcast(queries), F.col("query_id") == F.col("q_id"))
-        .join(emb, F.col("neighbor_id") == F.col("vec_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            fround(cosine_similarity_expr(F.col("qe"), F.col("e")), 6).alias("cos_sim"),
-        )
-    )
-    return _ranked_topk(scored, top_k=LSH_TOP_K)
+    emb = embedding_vectors(spark, sf_dir)
+    cands = _lsh_multiprobe_cands(_lsh_checkpointed_sigs(spark, emb))
+    return rerank_topk(cands.drop("min_lvl"), emb, LSH_TOP_K)
 
 
 _AUDIT_LEVELS = [0, 1, 2, 4, 8]
+
+
+def _recall_by_level(
+    spark: SparkSession,
+    sf_dir: str,
+    tagged: DataFrame,
+    top_k: int,
+    level_col: str,
+    levels: list[int],
+) -> DataFrame:
+    """Candidate recall per probe level: ``tagged`` is the candidate set as
+    (query_id, neighbor_id, min_lvl), each pair tagged with the lowest
+    probe level that surfaces it.  For every level in ``levels`` (output
+    column ``level_col``), count the brute-force top-``top_k`` pairs and
+    those tagged at or below the level — one left join and one broadcast
+    cross join with the level table, no per-level re-join."""
+    bf = q_embedding_topk(spark, sf_dir).where(F.col("rank") <= top_k).select(
+        "query_id", "neighbor_id"
+    )
+    lv = spark.createDataFrame([(p,) for p in levels], f"{level_col} int")
+    hit = F.when(F.col("min_lvl") <= F.col(level_col), 1)
+    return (
+        bf.join(tagged, ["query_id", "neighbor_id"], "left")
+        .crossJoin(F.broadcast(lv))
+        .groupBy(level_col)
+        .agg(
+            F.count("*").cast("int").alias("n_true"),
+            F.count(hit).cast("int").alias("n_hit"),
+            fround(F.count(hit) / F.count("*"), 4).alias("recall"),
+        )
+    )
 
 _ORACLE_MULTIPROBE_AUDIT = f"""
 WITH {_ORACLE_SIG_CTES}, {_ORACLE_PROBE_CTES}, bf AS (
@@ -507,27 +575,9 @@ def q_lsh_multiprobe_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     signal is the SHAPE — recall rises monotonically with probe count at
     fixed index size, which is exactly the trade the knob exists to make
     (on clustered real-world embeddings the same curve starts high)."""
-    emb = load_valid_embeddings(spark, sf_dir).select(
-        "vec_id", to_double_array("embedding").alias("e")
-    )
-    sigs = round_checkpoint(
-        _lsh_band_sigs(emb.repartition(spark.sparkContext.defaultParallelism))
-    )
-    cands = _lsh_multiprobe_cands(sigs)
-    bf = q_embedding_topk(spark, sf_dir).where(F.col("rank") <= LSH_TOP_K).select(
-        "query_id", "neighbor_id"
-    )
-    levels = spark.createDataFrame([(p,) for p in _AUDIT_LEVELS], "probe_bits int")
-    hit = F.when(F.col("min_lvl") <= F.col("probe_bits"), 1)
-    return (
-        bf.join(cands, ["query_id", "neighbor_id"], "left")
-        .crossJoin(F.broadcast(levels))
-        .groupBy("probe_bits")
-        .agg(
-            F.count("*").cast("int").alias("n_true"),
-            F.count(hit).cast("int").alias("n_hit"),
-            fround(F.count(hit) / F.count("*"), 4).alias("recall"),
-        )
+    sigs = _lsh_checkpointed_sigs(spark, embedding_vectors(spark, sf_dir))
+    return _recall_by_level(
+        spark, sf_dir, _lsh_multiprobe_cands(sigs), LSH_TOP_K, "probe_bits", _AUDIT_LEVELS
     )
 
 
@@ -549,9 +599,7 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANN index first (IVF/LSH candidates), then the label filter and exact
     rerank run on candidates only — the same escalation path as
     ``embedding_topk`` -> ``embedding_topk_lsh``."""
-    emb = load_valid_embeddings(spark, sf_dir).select(
-        "vec_id", "label", to_double_array("embedding").alias("e")
-    )
+    emb = embedding_vectors(spark, sf_dir, "label")
     anchors = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("q_label"),
@@ -570,6 +618,34 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 NEAR_DUP_COSINE = 0.4  # fixture has no planted twins; 0.4 captures the tail
+
+
+def blocked_cosine_pairs(vectors: DataFrame, block: str) -> DataFrame:
+    """(vec_a, vec_b, cos_sim) for every pair of ``vectors`` rows (vec_id,
+    ``block``, e) that share a ``block`` value, with vec_a < vec_b: an
+    equi-join on the blocking key, never a cross join, so the pair
+    expansion is quadratic only in block size.
+
+    Norms are precomputed per vector (map-side), so each candidate pair
+    costs one dot-product HOF instead of three (measured 3x on the pair
+    stage); dot/(na*nb) is the same float arithmetic as the oracles'
+    ip/(sqrt(ipa)*sqrt(ipb)), so the 6dp-rounded cosine matches them."""
+    left = vectors.withColumn("nrm", norm_expr(F.col("e")))
+    right = left.select(
+        F.col("vec_id").alias("vec_b"),
+        F.col(block).alias(f"{block}_b"),
+        F.col("e").alias("e_b"),
+        F.col("nrm").alias("nrm_b"),
+    )
+    cos = dot_expr(F.col("e"), F.col("e_b")) / (F.col("nrm") * F.col("nrm_b"))
+    return left.join(
+        right,
+        (F.col(block) == F.col(f"{block}_b")) & (F.col("vec_id") < F.col("vec_b")),
+    ).select(
+        F.col("vec_id").alias("vec_a"),
+        "vec_b",
+        fround(cos, 6).alias("cos_sim"),
+    )
 
 
 @query(
@@ -600,32 +676,9 @@ def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     full cross join — the same IVF blocking as ``embedding_topk_ivf``, here
     used for corpus-vs-corpus dedup.  At 10^9 vectors the blocking key is a
     k-means centroid (or LSH hyperplane signature) computed upstream; the
-    per-block pair expansion is quadratic only in block size.
-
-    Norms are precomputed per vector (map-side) so each candidate pair
-    costs one dot-product HOF, not three; dot/(na*nb) is the oracle's
-    exact float arithmetic, so 6dp parity holds."""
-    from e_commerce_streaming_datapipeline_spark.functions.vector import dot_expr, norm_expr
-
-    emb = load_valid_embeddings(spark, sf_dir).select(
-        "vec_id", "label", to_double_array("embedding").alias("e")
-    )
-    emb = emb.withColumn("nrm", norm_expr(F.col("e")))
-    right = emb.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("label").alias("label_b"),
-        F.col("e").alias("e_b"),
-        F.col("nrm").alias("nrm_b"),
-    )
-    cos = dot_expr(F.col("e"), F.col("e_b")) / (F.col("nrm") * F.col("nrm_b"))
-    pairs = emb.join(
-        right,
-        (F.col("label") == F.col("label_b")) & (F.col("vec_id") < F.col("vec_b")),
-    ).select(
-        F.col("vec_id").alias("vec_a"),
-        "vec_b",
-        fround(cos, 6).alias("cos_sim"),
-    )
+    per-block pair expansion is quadratic only in block size
+    (``blocked_cosine_pairs``, norms precomputed per vector)."""
+    pairs = blocked_cosine_pairs(embedding_vectors(spark, sf_dir, "label"), "label")
     return pairs.where(F.col("cos_sim") >= NEAR_DUP_COSINE)
 
 
@@ -965,9 +1018,7 @@ def q_embedding_topk_sq(spark: SparkSession, sf_dir: str) -> DataFrame:
     (partial top-k before the shuffle); rerank touches ≤ 4k candidate
     rows/query.  Composes with the IVF/LSH pruners — quantize the bucketed
     candidates instead of the corpus."""
-    emb = load_valid_embeddings(spark, sf_dir).select(
-        "vec_id", to_double_array("embedding").alias("e")
-    )
+    emb = embedding_vectors(spark, sf_dir)
     scale = 127.0 / F.greatest(
         F.array_max(F.transform(F.col("e"), lambda x: F.abs(x))), F.lit(1e-12)
     )
@@ -1013,19 +1064,7 @@ def q_embedding_topk_sq(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = approx.withColumn("arn", F.row_number().over(aw)).where(
         F.col("arn") <= _SQ_CANDIDATES
     )
-    qvecs = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("e").alias("qe")
-    )
-    exact = (
-        cand.join(F.broadcast(qvecs), F.col("query_id") == F.col("q_id"))
-        .join(emb, F.col("neighbor_id") == F.col("vec_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            fround(cosine_similarity_expr(F.col("qe"), F.col("e")), 6).alias("cos_sim"),
-        )
-    )
-    return _ranked_topk(exact)
+    return rerank_topk(cand, emb, TOP_K)
 
 
 # --------------------------------------------------------------------------
@@ -1513,6 +1552,29 @@ def ivf_train(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
     )
     return a2, cents2
 
+
+def ivf_probe_cands(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
+    """(query_id, neighbor_id, rn): the trained IVF index's candidates —
+    every corpus vector assigned to one of each query's ``nprobe`` nearest
+    trained centroids, tagged with that centroid's probe rank ``rn``.  A
+    vector has one cluster and a query's probes are distinct clusters, so
+    each pair appears once.  The search is an equi-join on cluster id
+    (candidate fraction ≈ nprobe/K)."""
+    emb = ivf_input(spark, sf_dir)
+    assigned, cents = ivf_train(emb)
+    probes = ivf_assign(
+        emb.where(F.col("vec_id") < N_QUERIES), cents, top=nprobe
+    ).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("c_label").alias("probe_label"),
+        "rn",
+    )
+    return probes.join(
+        assigned,
+        (F.col("probe_label") == F.col("cluster"))
+        & (F.col("query_id") != F.col("vec_id")),
+    ).select("query_id", F.col("vec_id").alias("neighbor_id"), "rn")
+
 # one Lloyd stage in DuckDB: centroids from `{src}`'s {lab} column, then the
 # integer-rational argmin assignment of every vector
 _IVF_STAGE_SQL = """
@@ -1619,25 +1681,8 @@ def q_trained_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     headroom: |n·x − S| ≤ 2·n·10⁴ ⇒ the 64-dim sum fits int64 to n ≈ 10⁸
     per cluster; beyond that the accumulator becomes DECIMAL(38,0) with
     the same plan."""
-    emb = ivf_input(spark, sf_dir)
-    a2, cents2 = ivf_train(emb)
-    probes = ivf_assign(
-        emb.where(F.col("vec_id") < 8), cents2, top=_IVF_NPROBE
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("c_label").alias("probe_label"),
-    )
-    pairs = probes.join(
-        a2,
-        (F.col("probe_label") == F.col("cluster"))
-        & (F.col("query_id") != F.col("vec_id")),
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        fround(cosine_similarity_expr(F.col("qe"), F.col("e")), 6).alias("cos_sim"),
-    )
-    return _ranked_topk(pairs, top_k=_IVF_TOPK)
+    cands = ivf_probe_cands(spark, sf_dir, _IVF_NPROBE).drop("rn")
+    return rerank_topk(cands, embedding_vectors(spark, sf_dir), _IVF_TOPK)
 
 
 # --------------------------------------------------------------------------
@@ -1711,9 +1756,7 @@ def q_matryoshka_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     both rankings are rank-filtered partitioned windows and the hit check
     is an equi-join on (query, neighbor).  At scale the audit runs on a
     sampled query set exactly like `lsh_recall_audit`."""
-    emb = load_valid_embeddings(spark, sf_dir).select(
-        "vec_id", to_double_array("embedding").alias("e")
-    )
+    emb = embedding_vectors(spark, sf_dir)
     queries = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
     )
@@ -1834,9 +1877,7 @@ def q_knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs for the IVF/LSH candidates — the vote/score tail is unchanged);
     votes and the argmax election are per-query aggregations over k rows.
     """
-    emb = load_valid_embeddings(spark, sf_dir).select(
-        "vec_id", "label", to_double_array("embedding").alias("e")
-    )
+    emb = embedding_vectors(spark, sf_dir, "label")
     queries = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("true_label"),
@@ -2005,9 +2046,7 @@ def q_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     across partitions — 10⁶ queries re-rank embarrassingly parallel."""
     import pandas as pd
 
-    emb = load_valid_embeddings(spark, sf_dir).select(
-        "vec_id", to_double_array("embedding").alias("e")
-    )
+    emb = embedding_vectors(spark, sf_dir)
     queries = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
     )
@@ -2238,12 +2277,11 @@ _PQ_TRAIN_CTES = f"""q4 AS (
 {_PQ_STAGE_SQL.format(i=2, src="assign1", lab="lab1", subdim=_PQ_SUBDIM)}"""
 
 
-def _pq_adc_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The shared ADC aggregation both PQ search tiers rank: train the
-    codebook, encode the corpus, build the per-query distance table, and
-    aggregate the per-(query, doc) integer ADC distance.  One definition —
-    the Python twin of the SQL side's ``_PQ_SEARCH_CTES`` — so the pure-ADC
-    ranking and the rerank tier can never diverge on what ADC means."""
+def _pq_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The trained PQ index every PQ search reads: train the codebook, then
+    return (codes, dtab) — the corpus encoded as (vec_id, sub, code), and
+    the per-query distance table (query_id, sub, code, d) to every
+    codeword.  The codebook stays a broadcast relation (r9 rejected #3)."""
     subv = pq_subvectors(load_valid_embeddings(spark, sf_dir))
     cents2 = pq_train_codebook(subv)
     codes = _pq_assign(subv, cents2).select(
@@ -2259,6 +2297,23 @@ def _pq_adc_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
             _pq_int_dist().alias("d"),
         )
     )
+    return codes, dtab
+
+
+def _adc_topk(adc: DataFrame, k: int) -> DataFrame:
+    """Each query's ``k`` smallest ADC distances (ties on neighbor_id),
+    ranked in ``rank``."""
+    w = Window.partitionBy("query_id").orderBy("adc_dist_q8", "neighbor_id")
+    return adc.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+
+
+def _pq_adc_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The shared ADC aggregation both PQ search tiers rank: the
+    per-(query, doc) integer ADC distance over the whole encoded corpus.
+    One definition — the Python twin of the SQL side's ``_PQ_SEARCH_CTES``
+    — so the pure-ADC ranking and the rerank tier can never diverge on
+    what ADC means."""
+    codes, dtab = _pq_index(spark, sf_dir)
     return (
         F.broadcast(dtab)
         .join(codes, ["sub", "code"])
@@ -2333,12 +2388,8 @@ def q_embedding_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     only Q×R shortlist rows leave each partition) and is the shape a
     10⁹-doc deployment runs.  The encoded table is 4 bytes/vector of code
     payload — the reason PQ is the standard billion-scale tier."""
-    adc = _pq_adc_relation(spark, sf_dir)
-    w = Window.partitionBy("query_id").orderBy("adc_dist_q8", "neighbor_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= _PQ_TOPK)
-        .select("query_id", "neighbor_id", "adc_dist_q8", "rank")
+    return _adc_topk(_pq_adc_relation(spark, sf_dir), _PQ_TOPK).select(
+        "query_id", "neighbor_id", "adc_dist_q8", "rank"
     )
 
 
@@ -2390,40 +2441,15 @@ def q_embedding_topk_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell on a near-dup corpus; the rerank tier restores recall).
 
     Plan shape: everything up to the shortlist is `embedding_topk_pq`'s
-    no-corpus-shuffle pipeline; the shortlist is queries × 20 rows, so the
-    rerank joins are broadcast lookups of exact vectors for a bounded
-    relation — full-precision floats are touched for 20 rows/query no
-    matter the corpus size.  Cross-engine determinism: the ADC tier is
-    exact int64 (tie-break neighbor_id), the rerank rounds cosine to 6dp
-    with fround parity."""
-    adc = _pq_adc_relation(spark, sf_dir)
-    aw = Window.partitionBy("query_id").orderBy("adc_dist_q8", "neighbor_id")
-    short = (
-        adc.withColumn("arank", F.row_number().over(aw))
-        .where(F.col("arank") <= _PQ_SHORTLIST)
-        .select("query_id", "neighbor_id")
+    no-corpus-shuffle pipeline; the shortlist is queries × 20 rows, and
+    ``rerank_topk`` re-scores only those pairs — full-precision cosine is
+    computed for 20 rows/query no matter the corpus size.  Cross-engine
+    determinism: the ADC tier is exact int64 (tie-break neighbor_id), the
+    rerank rounds cosine to 6dp with fround parity."""
+    short = _adc_topk(_pq_adc_relation(spark, sf_dir), _PQ_SHORTLIST)
+    return rerank_topk(
+        short.select("query_id", "neighbor_id"), embedding_vectors(spark, sf_dir), _PQ_TOPK
     )
-    vv = load_valid_embeddings(spark, sf_dir).select(
-        "vec_id", to_double_array("embedding").alias("e")
-    )
-    pairs = (
-        F.broadcast(short)
-        .join(
-            vv.select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe")),
-            "query_id",
-        )
-        .join(
-            vv.select(F.col("vec_id").alias("neighbor_id"), "e"), "neighbor_id"
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            fround(cosine_similarity_expr(F.col("qe"), F.col("e")), 6).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    return _ranked_topk(pairs, top_k=_PQ_TOPK)
 
 
 # --------------------------------------------------------------------------
@@ -2545,69 +2571,19 @@ def q_embedding_topk_ivf_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: training aggregates are K-bounded; candidate generation is
     an equi-join on cluster id; ADC joins are broadcast (codebook/dtab are
-    K*M rows, the shortlist Q x 20 rows); raw vectors shuffle
-    NOWHERE — SCALE.md's measured 1M-vector IVF-ADC probe row is exactly
-    this plan."""
-    emb = ivf_input(spark, sf_dir)
-    a2, icents = ivf_train(emb)
-    probes = ivf_assign(
-        emb.where(F.col("vec_id") < N_QUERIES), icents, top=_IVF_NPROBE
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("c_label").alias("probe_label"),
-    )
-    cand = probes.join(
-        a2,
-        (F.col("probe_label") == F.col("cluster"))
-        & (F.col("query_id") != F.col("vec_id")),
-    ).select("query_id", F.col("vec_id").alias("neighbor_id"))
-
-    subv = pq_subvectors(load_valid_embeddings(spark, sf_dir))
-    cents2 = pq_train_codebook(subv)
-    codes = _pq_assign(subv, cents2).select(
-        "vec_id", "sub", F.col("lab").alias("code")
-    )
-    dtab = (
-        subv.where(F.col("vec_id") < N_QUERIES)
-        .join(F.broadcast(cents2), "sub")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            "sub",
-            F.col("lab").alias("code"),
-            _pq_int_dist().alias("d"),
-        )
-    )
+    K*M rows); raw vectors never shuffle through training or ADC, and
+    ``rerank_topk`` joins exact vectors to the Q x 20 shortlist only —
+    SCALE.md's measured 1M-vector IVF-ADC probe row is this pipeline."""
+    cand = ivf_probe_cands(spark, sf_dir, _IVF_NPROBE).drop("rn")
+    codes, dtab = _pq_index(spark, sf_dir)
     adc = (
-        cand.join(codes, cand["neighbor_id"] == codes["vec_id"])
+        cand.join(codes, F.col("neighbor_id") == F.col("vec_id"))
         .join(F.broadcast(dtab), ["query_id", "sub", "code"])
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("d").alias("adc_dist_q8"))
     )
-    aw = Window.partitionBy("query_id").orderBy("adc_dist_q8", "neighbor_id")
-    short = (
-        adc.withColumn("arank", F.row_number().over(aw))
-        .where(F.col("arank") <= _PQ_SHORTLIST)
-        .select("query_id", "neighbor_id")
-    )
-    vv = load_valid_embeddings(spark, sf_dir).select(
-        "vec_id", to_double_array("embedding").alias("e")
-    )
-    pairs = (
-        F.broadcast(short)
-        .join(
-            vv.select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe")),
-            "query_id",
-        )
-        .join(vv.select(F.col("vec_id").alias("neighbor_id"), "e"), "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            fround(cosine_similarity_expr(F.col("qe"), F.col("e")), 6).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    return _ranked_topk(pairs, top_k=_PQ_TOPK)
+    short = _adc_topk(adc, _PQ_SHORTLIST).select("query_id", "neighbor_id")
+    return rerank_topk(short, embedding_vectors(spark, sf_dir), _PQ_TOPK)
 
 
 # --------------------------------------------------------------------------
@@ -2679,43 +2655,12 @@ def q_ivf_probe_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     SCALE.md's 200k/1M-vector probe rows measure the same sweep at scale
     (recall 67→88→95% with scale-invariant candidate ratio); this registers
     the fixture-sized, exact-oracle version as a permanent witness."""
-    emb = ivf_input(spark, sf_dir)
-    a2, cents2 = ivf_train(emb)
-    probes = ivf_assign(
-        emb.where(F.col("vec_id") < N_QUERIES),
-        cents2,
-        top=max(_IVF_AUDIT_LEVELS),
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("c_label").alias("probe_label"),
-        F.col("rn").cast("int").alias("lvl"),
+    # each pair appears once (ivf_probe_cands), so its probe rank is already
+    # the minimum level that surfaces it
+    tagged = ivf_probe_cands(spark, sf_dir, max(_IVF_AUDIT_LEVELS)).withColumnRenamed(
+        "rn", "min_lvl"
     )
-    pcands = (
-        probes.join(
-            a2,
-            (F.col("probe_label") == F.col("cluster"))
-            & (F.col("query_id") != F.col("vec_id")),
-        )
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.min("lvl").alias("min_lvl"))
-    )
-    bf = q_embedding_topk(spark, sf_dir).where(F.col("rank") <= _IVF_TOPK).select(
-        "query_id", "neighbor_id"
-    )
-    levels = spark.createDataFrame(
-        [(p,) for p in _IVF_AUDIT_LEVELS], "nprobe int"
-    )
-    hit = F.when(F.col("min_lvl") <= F.col("nprobe"), 1)
-    return (
-        bf.join(pcands, ["query_id", "neighbor_id"], "left")
-        .crossJoin(F.broadcast(levels))
-        .groupBy("nprobe")
-        .agg(
-            F.count("*").cast("int").alias("n_true"),
-            F.count(hit).cast("int").alias("n_hit"),
-            fround(F.count(hit) / F.count("*"), 4).alias("recall"),
-        )
-    )
+    return _recall_by_level(spark, sf_dir, tagged, _IVF_TOPK, "nprobe", _IVF_AUDIT_LEVELS)
 
 
 # --------------------------------------------------------------------------

@@ -3180,9 +3180,6 @@ def q_kfold_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _MKV_CHANNELS = ("click", "view", "signup", "error")
-_MKV_STEPS = 8
-
-
 _MKV_SQUARINGS = 3  # M^8 by repeated squaring: 3 rounds, not 8 vector steps
 
 

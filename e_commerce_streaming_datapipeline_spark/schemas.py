@@ -1,114 +1,18 @@
-"""Canonical schemas — single source of truth.
-
-The reference declares its event schemas twice (Avro dicts in
-``src/schemas/avro_schemas.py:1-51`` and hand-written StructTypes in
-``src/consumers/stream_processor.py:60-93``).  Here each schema exists once as
-a ``StructType`` and everything (batch loaders, streaming ``from_json``,
-tests) imports it.
-
-Two families:
-* ``ORDERS/ORDER_ITEMS/PAYMENTS_SCHEMA`` — the reference's three Kafka event
-  payloads, for the streaming layer and the JSON-decode operator (SURVEY §2.1
-  S3).
-* ``TESTDATA_SCHEMAS`` — the driver's synthetic tables under /root/testdata
-  (FIXTURES.md §B), used by batch sources.
+"""Fixture vocabulary shared by the loaders and operators: the driver's
+synthetic table names (FIXTURES.md §B), which ``sources/batch.py`` loads and
+``tests/oracle_compare.py`` mirrors as DuckDB views, and the event and
+payment vocabularies of those tables.  Table schemas are not declared here:
+the loaders read them from the parquet files.
 """
 
 from __future__ import annotations
-
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    FloatType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
-
-
-def _st(fields: list[tuple[str, object, bool]]) -> StructType:
-    return StructType([StructField(n, t, nullable) for n, t, nullable in fields])
-
-
-# -- reference event payloads (stream_processor.py:60-93 semantics) ----------
-
-ORDERS_SCHEMA = _st([
-    ("event_id", StringType(), False),
-    ("event_type", StringType(), False),
-    ("event_time", StringType(), False),
-    ("order_id", StringType(), False),
-    ("customer_id", StringType(), True),
-    ("order_status", StringType(), True),
-    ("order_approved_at", StringType(), True),
-    ("estimated_delivery_date", StringType(), True),
-    ("timestamp", StringType(), True),
-])
-
-ORDER_ITEMS_SCHEMA = _st([
-    ("event_id", StringType(), False),
-    ("event_type", StringType(), False),
-    ("event_time", StringType(), False),
-    ("order_id", StringType(), False),
-    ("order_item_id", IntegerType(), True),
-    ("product_id", StringType(), True),
-    ("seller_id", StringType(), True),
-    ("price", DoubleType(), True),
-    ("freight_value", DoubleType(), True),
-    ("timestamp", StringType(), True),
-])
-
-PAYMENTS_SCHEMA = _st([
-    ("event_id", StringType(), False),
-    ("event_type", StringType(), False),
-    ("event_time", StringType(), False),
-    ("order_id", StringType(), False),
-    ("payment_sequential", IntegerType(), True),
-    ("payment_type", StringType(), True),
-    ("payment_installments", IntegerType(), True),
-    ("payment_value", DoubleType(), True),
-    ("timestamp", StringType(), True),
-])
-
-# JSON payload carried on the synthetic events table's ``props`` column.
-EVENT_PROPS_SCHEMA = _st([("k", LongType(), True)])
-
-
-# -- driver synthetic tables (FIXTURES.md §B) --------------------------------
-
-EVENTS_SCHEMA = _st([
-    ("event_id", LongType(), False),
-    ("ts", TimestampType(), False),
-    ("user_id", LongType(), True),
-    ("event_type", StringType(), True),
-    ("value", DoubleType(), True),
-    ("props", StringType(), True),
-])
-
-DOCUMENTS_SCHEMA = _st([
-    ("doc_id", LongType(), False),
-    ("text", StringType(), True),
-    ("lang", StringType(), True),
-    ("source", StringType(), True),
-    ("n_chars", LongType(), True),
-])
-
-EMBEDDINGS_SCHEMA = _st([
-    ("vec_id", LongType(), False),
-    ("embedding", ArrayType(FloatType()), True),
-    ("label", IntegerType(), True),
-])
 
 TESTDATA_TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 )
 
-# Funnel-stage vocabulary of the synthetic events table; plays the role of the
-# reference's order_status buckets (funnel_processor.py:29-41,
-# dropoff_processor.py:19-20).
-EVENT_FUNNEL_STAGES = ("view", "click", "signup", "purchase")
+# Drop-off vocabulary of the synthetic events table; plays the role of the
+# reference's order_status buckets (dropoff_processor.py:19-20).
 EVENT_DROPOFF_TYPES = ("click", "error")
 PAYMENT_TYPES = ("credit_card", "boleto", "voucher", "debit_card")

@@ -74,15 +74,6 @@ def idempotent_parquet_sink(output_dir: str) -> Callable[[DataFrame, int], None]
     return write
 
 
-def console_sink(num_rows: int = 5) -> Callable[[DataFrame, int], None]:
-    """K2: console monitor (metrics_sink.py:24-26)."""
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.show(num_rows, truncate=False)
-
-    return write
-
-
 def build_upsert_statement(
     table: str,
     staging: str,

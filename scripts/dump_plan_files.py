@@ -1,25 +1,64 @@
-"""Dump `.explain("formatted")` for named queries to plans/r09/<q>_<tag>.txt.
+"""Dump `.explain("formatted")` for registry queries to <out>/<q>_<tag>.txt.
 
 Usage:
     python scripts/dump_plan_files.py before q1 q2 ...
     python scripts/dump_plan_files.py after  q1 q2 ...
+    python scripts/dump_plan_files.py cmp --out /path/dir      # every query
 
-The optimization-round evidence trail: every query touched in r9 gets a
-_before and _after plan file (the judge checks plan-shape claims against
-these).  Streaming/side-effecting builders are dumped as their returned
-relation's plan (the batch-visible part).
+With no query names, every registered query is dumped (in registry
+order).  The default output directory is plans/<SPARK_GRAFT_PLANS_ROUND>
+(r10 when unset); ``--out`` writes elsewhere.  Streaming/side-effecting
+builders are dumped as their returned relation's plan (the batch-visible
+part).
+
+Plans are normalized before they are written, so two builds of the same
+code give the same text: expression ids (``#123``), ``plan_id=...``, RDD
+ids and call sites (``MapPartitionsRDD[12] at ...``), lambda-variable
+counters (``x_12``), uuids, hex hashes, ``/tmp/...`` paths and this
+checkout's own path are replaced by fixed tokens.  A plan-identity check
+between two checkouts is then
+
+    (cd A && SPARK_GRAFT_SF_DIR=<sf0.001> python scripts/dump_plan_files.py cmp --out /some/a)
+    (cd B && SPARK_GRAFT_SF_DIR=<sf0.001> python scripts/dump_plan_files.py cmp --out /some/b)
+    diff -r /some/a /some/b
+
+``dataset_profile`` differs between two builds of the same code: its
+multi-distinct aggregate (the one-pass design its docstring gives) plans an
+Expand whose group order follows the JVM's expression-id counter.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
+import re
 import sys
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT_DIR = Path(__file__).resolve().parent.parent / "plans" / os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r10")
+OUT_DIR = REPO / "plans" / os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r10")
+
+_NORMALIZE = [
+    (re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"), "<uuid>"),
+    (re.compile(r"/tmp/[^\s,\]\)]*"), "/tmp/<path>"),
+    (re.compile(r"#\d+"), "#"),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"RDD\[\d+\] at (\w+) at [^,]+"), r"RDD[] at \1"),
+    (re.compile(r"\blambda (\w+?)_\d+\b"), r"lambda \1_"),
+    (re.compile(r"@[0-9a-f]{4,}\b"), "@<hash>"),
+    (re.compile(r"\b0x[0-9a-f]+\b"), "0x<hash>"),
+]
+
+
+def normalize_plan(plan: str) -> str:
+    """Replace every build-dependent token of a plan text with a fixed one."""
+    plan = plan.replace(str(REPO), "<repo>")
+    for pattern, token in _NORMALIZE:
+        plan = pattern.sub(token, plan)
+    return plan
 
 
 def main() -> None:
@@ -29,20 +68,21 @@ def main() -> None:
         release_rank_caches,
     )
 
-    tag = sys.argv[1]
-    names = sys.argv[2:]
-    OUT_DIR.mkdir(parents=True, exist_ok=True)
+    parser = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    parser.add_argument("tag")
+    parser.add_argument("names", nargs="*")
+    parser.add_argument("--out", type=Path, default=OUT_DIR)
+    args = parser.parse_args()
+
+    args.out.mkdir(parents=True, exist_ok=True)
     spark = get_spark(app_name="dump-plan-files", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     registry = all_queries()
-    for name in names:
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    for name in args.names or list(registry):
         df = registry[name].builder(spark, SF_DIR)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        path = OUT_DIR / f"{name}_{tag}.txt"
+        plan = normalize_plan(df._jdf.queryExecution().explainString(mode))
+        path = args.out / f"{name}_{args.tag}.txt"
         path.write_text(plan)
         n_lines = plan.count("\n")
         n_exch = plan.count("Exchange")

@@ -154,6 +154,52 @@ def test_feed_mtimes_are_stamped_in_one_helper(tmp_path):
     assert _utime_sites(tmp_path, ("t",)) == ["t/m.py:3"]
 
 
+# the functions in operators/similarity.py that may score pairs with
+# cosine_similarity_expr: the shared verification kernel, plus the scorers
+# that are not a candidate rerank
+_COSINE_SCORERS = {
+    "rerank_topk",  # the one exact-verification stage of every ANN query
+    "q_embedding_topk",  # brute force: every query x corpus pair
+    "q_embedding_topk_ivf",  # brute force inside the label cluster
+    "q_hard_negative_mining",  # brute force across labels
+    "q_knn_label_accuracy",  # brute force carrying both labels to the vote
+    "q_matryoshka_recall_audit",  # full and truncated cosine of one pair
+    "q_mmr_diversified_topk",  # micros-scaled relevance and pair sims
+}
+
+
+def _cosine_sites(path: Path) -> list[str]:
+    """``cosine_similarity_expr`` calls in ``path`` outside the top-level
+    functions named in ``_COSINE_SCORERS``."""
+    sites = []
+    for stmt in ast.parse(path.read_text()).body:
+        if getattr(stmt, "name", None) in _COSINE_SCORERS:
+            continue
+        for node in ast.walk(stmt):
+            if isinstance(node, ast.Call) and "cosine_similarity_expr" in (
+                getattr(node.func, "attr", None),
+                getattr(node.func, "id", None),
+            ):
+                sites.append(f"{path.name}:{node.lineno}")
+    return sites
+
+
+def test_ann_rerank_lives_in_one_kernel(tmp_path):
+    """Every ANN query in ``operators/similarity.py`` verifies its
+    candidates through ``rerank_topk``; a query that re-types the
+    join-and-score chain can drift from its siblings' rounding or join
+    shape.  Only the listed non-rerank scorers call
+    ``cosine_similarity_expr`` themselves."""
+    import e_commerce_streaming_datapipeline_spark.operators.similarity as sim
+
+    assert _cosine_sites(Path(sim.__file__)) == []
+    # the scan sees a planted rerank copy
+    (tmp_path / "m.py").write_text(
+        "def q_new_ann(c):\n    return c.select(\n        cosine_similarity_expr(a, b))\n"
+    )
+    assert _cosine_sites(tmp_path / "m.py") == ["m.py:3"]
+
+
 # module -> the one function in it allowed to write session conf (None: the
 # whole module; a module not listed may not write it)
 _CONF_WRITERS = {
@@ -421,11 +467,16 @@ def test_range_join_plan_has_no_nested_loop(spark, sf_dir):
 def test_order_details_plan_avoids_distinct_expand(spark, sf_dir):
     """COUNT(DISTINCT) via pre-aggregation: the physical plan must not
     contain an Expand node (the distinct-aggregate rewrite that doubles the
-    shuffled row count)."""
-    from e_commerce_streaming_datapipeline_spark.operators.joins import q_order_details
+    shuffled row count, and whose group order follows the JVM's
+    expression-id counter when there are two distinct groups)."""
+    from e_commerce_streaming_datapipeline_spark.operators.joins import (
+        q_order_details,
+        q_region_revenue,
+    )
 
-    plan = q_order_details(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-    assert "Expand" not in plan
+    for builder in (q_order_details, q_region_revenue):
+        plan = builder(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+        assert "Expand" not in plan, builder.__name__
 
 
 def test_incremental_dedup_plan_is_broadcast_anti_join(spark, sf_dir):
