@@ -1,9 +1,10 @@
 """Knuth multiplicative hashing (2654435761 mod 2^32) for deterministic
-samples, splits and experiment arms: plain 64-bit integer arithmetic that
-DuckDB evaluates bit-identically, so every query built on it stays
-hash-checkable (operators/sampling.py has the determinism rationale).
-Registry-free, so any operator module can import it without changing the
-query registration order."""
+samples, splits and experiment arms, and the universal hash family mod the
+Mersenne prime 2^31 - 1 that the sketches (count-min, KMV, Bloom) draw
+from: plain 64-bit integer arithmetic that DuckDB evaluates bit-identically,
+so every query built on it stays hash-checkable (operators/sampling.py has
+the determinism rationale).  Registry-free, so any operator module can
+import it without changing the query registration order."""
 
 from __future__ import annotations
 
@@ -12,6 +13,7 @@ from pyspark.sql import functions as F
 
 KNUTH = 2654435761  # golden-ratio multiplicative hash constant
 MOD = 2**32
+PRIME = 2**31 - 1  # Mersenne prime: the universal-hash modulus
 
 
 def hash32(key: Column) -> Column:
@@ -63,3 +65,20 @@ def hash_half(key: Column) -> Column:
 def hash_half_sql(key: str) -> str:
     """``hash_half`` as DuckDB SQL text, for oracles."""
     return f"({hash32_sql(key)} >> 31)"
+
+
+def universal_hash(key: Column, a: int, b: int) -> Column:
+    """The universal hash ``((key mod P) * a + b) mod P`` of an integer key,
+    P = 2^31 - 1, in [0, P).  The key is reduced first so the product stays
+    below (P - 1) * a < 2^63 for any a < 2^32: an unreduced multiply wraps
+    int64 in Spark (DuckDB promotes) once key * a passes 2^63.  Keys in
+    [0, P) hash to ``(key * a + b) mod P``.  SQL twin:
+    ``universal_hash_sql``."""
+    return F.pmod(F.pmod(key, F.lit(PRIME)) * F.lit(a) + F.lit(b), F.lit(PRIME))
+
+
+def universal_hash_sql(key: str, a: int | str, b: int | str) -> str:
+    """``universal_hash`` as DuckDB SQL text, for oracles.  ``key`` is a
+    column name or a parenthesized expression; ``a`` and ``b`` may be
+    column names."""
+    return f"((({key} % {PRIME}) * {a} + {b}) % {PRIME})"

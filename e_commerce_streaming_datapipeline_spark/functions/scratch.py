@@ -1,6 +1,6 @@
 """Process-scoped scratch directories for builders that must round-trip
-through real files (compaction rewrite, vacuum, streaming checkpoints,
-foreachBatch parquet sinks).
+through real files (the write-then-read-back connectors, compaction
+rewrite, vacuum, streaming checkpoints, foreachBatch parquet sinks).
 
 Each builder invocation gets a fresh uuid directory (streaming checkpoints
 MUST be fresh — a reused checkpoint resumes instead of recomputing), but

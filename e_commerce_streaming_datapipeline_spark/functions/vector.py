@@ -7,7 +7,8 @@ whole-stage codegen — no Python round-trip.  A Pandas-UDF variant exists in
 
 Determinism: all math is done in DOUBLE with left-to-right summation so the
 DuckDB oracle (same element order, DOUBLE[] casts) agrees to ~1e-15; results
-are rounded before ranking so cross-engine top-k is stable.
+are rounded before ranking so cross-engine top-k is stable.  ``norm_sql``
+and ``cosine6_sql`` are the oracles' DuckDB twins.
 """
 
 from __future__ import annotations
@@ -36,3 +37,13 @@ def norm_expr(a: Column) -> Column:
 
 def cosine_similarity_expr(a: Column, b: Column) -> Column:
     return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
+
+
+def norm_sql(e: str) -> str:
+    """``norm_expr`` as DuckDB SQL text over a DOUBLE[] expression."""
+    return f"sqrt(list_inner_product({e}, {e}))"
+
+
+def cosine6_sql(a: str, b: str) -> str:
+    """``fround(cosine_similarity_expr(a, b), 6)`` as DuckDB SQL text."""
+    return f"round(list_inner_product({a}, {b}) / ({norm_sql(a)} * {norm_sql(b)}), 6)"

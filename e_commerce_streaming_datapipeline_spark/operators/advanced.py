@@ -30,7 +30,7 @@ from e_commerce_streaming_datapipeline_spark.functions.rounding import (
     cents_sum_double,
     fround,
 )
-from e_commerce_streaming_datapipeline_spark.operators.payment import with_payment_type
+from e_commerce_streaming_datapipeline_spark.operators.payment import PAYMENT_TYPE_SQL, with_payment_type
 from e_commerce_streaming_datapipeline_spark.plans.registry import query
 from e_commerce_streaming_datapipeline_spark.schemas import PAYMENT_TYPES
 from e_commerce_streaming_datapipeline_spark.sources.batch import load_table
@@ -191,12 +191,11 @@ def q_user_activity_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "payment_type_pivot",
-    oracle="""
+    oracle=f"""
 WITH typed AS (
     SELECT
         date_trunc('hour', ts) AS window_start,
-        ['credit_card', 'boleto', 'voucher', 'debit_card']
-            [(CAST(props->>'$.k' AS BIGINT) % 4) + 1] AS payment_type,
+        {PAYMENT_TYPE_SQL} AS payment_type,
         coalesce(value, 0.0) AS value
     FROM events
 )

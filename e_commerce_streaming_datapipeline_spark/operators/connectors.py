@@ -27,6 +27,7 @@ from pyspark.sql.types import (
 )
 
 from e_commerce_streaming_datapipeline_spark.functions.rounding import cents_sum, cents_sum_double, fround
+from e_commerce_streaming_datapipeline_spark.functions.scratch import scratch_dir
 from e_commerce_streaming_datapipeline_spark.plans.registry import query
 from e_commerce_streaming_datapipeline_spark.sources.batch import load_table
 
@@ -100,19 +101,6 @@ _CSV_SCHEMA = (
 )
 
 
-def _scratch_dir(kind: str, sf_dir: str) -> str:
-    """Per-process scratch path for write-then-read-back artifacts: keyed by
-    sf basename AND pid, because two concurrent harness runs sharing one
-    path would overwrite files the other is mid-scan (the same failure class
-    the per-process embedded-Derby path below guards against)."""
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"e_commerce_streaming_datapipeline_{kind}",
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-
-
-
 @query(
     "csv_source_stats",
     oracle="""
@@ -135,7 +123,7 @@ def q_csv_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload.  At scale the same reader handles the reference's Olist CSVs
     (event_generator.py:51-69) as a parallel multi-file scan."""
     events = load_table(spark, "events", sf_dir)
-    out_dir = _scratch_dir("csv", sf_dir)
+    out_dir = scratch_dir("csv")
     (
         events.write.mode("overwrite")
         .option("header", "true")
@@ -166,8 +154,7 @@ def partitioned_events_dir(spark: SparkSession, sf_dir: str) -> str:
     partition pruning instead of a full scan.
 
     Cache keyed by the source file's (mtime, size), not just the sf name —
-    a regenerated fixture must not serve the previous snapshot (the same
-    staleness class q_warehouse_partitioned_roundtrip purges for).  The
+    a regenerated fixture must not serve the previous snapshot.  The
     build lands in a per-pid staging dir and is renamed into place, so a
     concurrent harness run either wins the rename or reads the winner's
     complete output — never a half-written directory."""
@@ -263,7 +250,7 @@ def _bucketed_table(spark: SparkSession, sf_dir: str, source: str, key: str, n: 
     safe_sf = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     name = f"bucketed_{source}_{safe_sf}"
     if not spark.catalog.tableExists(name):
-        path = os.path.join(_scratch_dir("buckets", sf_dir), source)
+        path = os.path.join(scratch_dir("buckets"), source)
         (
             load_table(spark, source, sf_dir)
             .write.mode("overwrite")
@@ -406,7 +393,7 @@ def q_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, "events", sf_dir).select(
         "event_id", "user_id", "value"
     )
-    out_dir = _scratch_dir("schema_evo", sf_dir)
+    out_dir = scratch_dir("schema_evo")
     gen1 = events.where(F.col("event_id") % 2 == 0)
     gen2 = events.where(F.col("event_id") % 2 == 1).withColumn(
         "channel",
@@ -497,16 +484,11 @@ def q_python_datasource_sink_roundtrip(spark: SparkSession, sf_dir: str) -> Data
     custom sink → manifest-scoped read-back — and hash-checks the result
     against the DuckDB regeneration of the feed, proving no row was lost
     or duplicated through the sink."""
-    import tempfile
-    import uuid as _uuid
-
     from e_commerce_streaming_datapipeline_spark.sources import python_datasource as pds
 
     pds.register(spark)
     pds.register_sink(spark)
-    out_dir = os.path.join(
-        tempfile.gettempdir(), "e_commerce_streaming_datapipeline_sink", _uuid.uuid4().hex
-    )
+    out_dir = scratch_dir("sink")
     feed = spark.read.format("ecommerce_replay").option("n", 10_000).load()
     feed.write.format("ecommerce_jsonl").option("path", out_dir).mode("append").save()
 
@@ -545,7 +527,7 @@ def q_orc_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     argument in SCALE.md transfers; this query keeps the format door open
     for deployments standardized on ORC (Hive-lineage warehouses)."""
     events = load_table(spark, "events", sf_dir)
-    out_dir = _scratch_dir("orc", sf_dir)
+    out_dir = scratch_dir("orc")
     events.write.mode("overwrite").orc(out_dir)
     back = spark.read.orc(out_dir)
     # scaled-long cents sum (functions/rounding.py fixed point; see csv
@@ -668,13 +650,9 @@ def q_warehouse_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataF
     partition pruning, retention-by-partition-drop, and the lambda batch
     layer all hang off this layout."""
     events = load_table(spark, "events", sf_dir)
-    loc = _scratch_dir("warehouse", sf_dir)
+    loc = scratch_dir("warehouse")
     events.createOrReplaceTempView("events_src_wh")
     spark.sql("DROP TABLE IF EXISTS events_wh")
-    # DROP on an external (LOCATION'd) table leaves the files; purge the
-    # location too, or a re-CREATE would recover stale partitions from a
-    # previous fixture revision (round-3 review finding)
-    shutil.rmtree(loc, ignore_errors=True)
     # dynamic overwrite as a TABLE option: builders share one session, so
     # its partitionOverwriteMode stays untouched
     spark.sql(
@@ -777,7 +755,7 @@ def q_xml_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-file parallel scan properties as CSV; schema is explicit so no
     inference job runs."""
     events = load_table(spark, "events", sf_dir)
-    out_dir = _scratch_dir("xml", sf_dir)
+    out_dir = scratch_dir("xml")
     (
         events.write.mode("overwrite")
         .format("xml")
@@ -867,7 +845,7 @@ def q_corrupt_dlq_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     classified = events.select(
         "event_id", "event_type", mangled.alias("payload"), reason.alias("reason")
     )
-    dlq_dir = _scratch_dir("dlq", sf_dir)
+    dlq_dir = scratch_dir("dlq")
     classified.where(F.col("reason").isNotNull()).write.mode("overwrite").parquet(
         dlq_dir
     )

@@ -25,10 +25,11 @@ from pyspark.storagelevel import StorageLevel
 from e_commerce_streaming_datapipeline_spark.functions.ranks import register_cache
 from e_commerce_streaming_datapipeline_spark.functions.checkpoints import round_checkpoint
 from e_commerce_streaming_datapipeline_spark.functions.rounding import fround
+from e_commerce_streaming_datapipeline_spark.functions.vector import cosine6_sql, norm_sql
 from e_commerce_streaming_datapipeline_spark.functions.hashing import hash_half, hash_half_sql
 
 from e_commerce_streaming_datapipeline_spark.plans.registry import query
-from e_commerce_streaming_datapipeline_spark.sources.batch import load_table
+from e_commerce_streaming_datapipeline_spark.sources.batch import VALID_EMBEDDINGS_SQL, load_table
 
 # MinHash/LSH parameters: 16 hashes in 4 bands of 4 — standard S-curve puts
 # the candidate threshold near jaccard ≈ (1/4)^(1/4) ≈ 0.71; verification
@@ -153,6 +154,39 @@ def shingled_docs(docs: DataFrame, k: int = SHINGLE_K) -> DataFrame:
     )
 
 
+def shingles_sql(fn: str = "") -> str:
+    """The ``SHINGLE_K``-token shingles of ``text`` as a DuckDB list, each
+    wrapped in the SQL function ``fn`` when one is given (``md5``): the
+    oracles' twin of ``shingled_docs`` before its ``list_distinct``.  The
+    caller keeps only documents of at least ``SHINGLE_K`` tokens."""
+    words = " || ' ' || ".join(
+        f"string_split(text, ' ')[i{f' + {j}' if j else ''}]" for j in range(SHINGLE_K)
+    )
+    return (
+        f"list_transform(generate_series(1, len(string_split(text, ' ')) - {SHINGLE_K - 1}), "
+        f"i -> {f'{fn}({words})' if fn else words})"
+    )
+
+
+def min_shingle_fp() -> F.Column:
+    """Winnowing-style min-shingle fingerprint over the pre-projected token
+    array column ``toks``: min of md5 over all word shingles.  The token
+    array must be projected ONCE per row — an inline split(text) inside the
+    lambda re-evaluates per shingle position (O(n_tokens^2) per doc).  The
+    dedup key of ``incremental_dedup``, ``doc_fingerprints`` and
+    ``corpus_quality_filter``.  SQL twin: ``MIN_SHINGLE_FP_SQL``."""
+    toks = ", ".join(f"toks[i{f'+{j}' if j else ''}]" for j in range(SHINGLE_K))
+    return F.array_min(
+        F.expr(
+            f"transform(sequence(0, size(toks) - {SHINGLE_K}), "
+            f"i -> md5(concat_ws(' ', {toks})))"
+        )
+    )
+
+
+MIN_SHINGLE_FP_SQL = f"list_aggregate({shingles_sql('md5')}, 'min')"
+
+
 # The 16 minhashes are carved from TWO md5s per shingle (non-overlapping
 # 4-hex-char chunks — md5 diffusion makes the chunks independent), so the
 # signature stage computes N_MD5_GROUPS md5s per shingle, not N_HASHES: 8x
@@ -224,12 +258,7 @@ def minhash_bands(docs: DataFrame, shingled: DataFrame | None = None) -> DataFra
 _MINHASH_VERIFIED_CTES = f"""shingled AS (
     SELECT
         doc_id,
-        list_distinct(list_transform(
-            generate_series(1, len(string_split(text, ' ')) - {SHINGLE_K - 1}),
-            i -> string_split(text, ' ')[i] || ' ' ||
-                 string_split(text, ' ')[i + 1] || ' ' ||
-                 string_split(text, ' ')[i + 2]
-        )) AS shingles
+        list_distinct({shingles_sql()}) AS shingles
     FROM documents
     WHERE len(string_split(text, ' ')) >= {SHINGLE_K}
 ), exploded AS (
@@ -452,12 +481,7 @@ JACCARD_TOP_K = 5
 WITH shingled AS (
     SELECT
         doc_id,
-        list_distinct(list_transform(
-            generate_series(1, len(string_split(text, ' ')) - {SHINGLE_K - 1}),
-            i -> string_split(text, ' ')[i] || ' ' ||
-                 string_split(text, ' ')[i + 1] || ' ' ||
-                 string_split(text, ' ')[i + 2]
-        )) AS shingles
+        list_distinct({shingles_sql()}) AS shingles
     FROM documents
     WHERE len(string_split(text, ' ')) >= {SHINGLE_K}
 ), probes AS (
@@ -517,18 +541,12 @@ def q_ngram_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "incremental_dedup",
-    oracle="""
+    oracle=f"""
 WITH fp AS (
     SELECT doc_id, source,
-        list_aggregate(
-            list_transform(
-                generate_series(1, len(string_split(text, ' ')) - 2),
-                i -> md5(string_split(text, ' ')[i] || ' ' ||
-                         string_split(text, ' ')[i + 1] || ' ' ||
-                         string_split(text, ' ')[i + 2])
-            ), 'min') AS min_shingle_fp
+        {MIN_SHINGLE_FP_SQL} AS min_shingle_fp
     FROM documents
-    WHERE len(string_split(text, ' ')) >= 3
+    WHERE len(string_split(text, ' ')) >= {SHINGLE_K}
 )
 SELECT n.doc_id, n.min_shingle_fp
 FROM fp n
@@ -562,12 +580,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "toks", F.split(F.col("text"), " ")
     )
     toks = F.col("toks")
-    min_shingle = F.array_min(
-        F.expr(
-            "transform(sequence(0, size(toks) - 3), "
-            "i -> md5(concat_ws(' ', toks[i], toks[i+1], toks[i+2])))"
-        )
-    )
+    min_shingle = min_shingle_fp()
     # materialize the fingerprint relation ONCE (r10): the anti join infers
     # isnotnull(min_shingle_fp) on both sides, and Catalyst pushes that
     # constraint BELOW the projection as a Filter over the full fingerprint
@@ -874,15 +887,11 @@ SEMANTIC_DEDUP_COSINE = 0.4  # fixture has no planted twins; 0.4 = real tail
     "semantic_dedup",
     oracle=f"""
 WITH v AS (
-    SELECT vec_id, label, embedding::DOUBLE[] AS e FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) = 64) embeddings
+    SELECT vec_id, label, embedding::DOUBLE[] AS e FROM {VALID_EMBEDDINGS_SQL} embeddings
 ), dropped AS (
     SELECT DISTINCT b.vec_id
     FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
-    WHERE round(
-            list_inner_product(a.e, b.e)
-            / (sqrt(list_inner_product(a.e, a.e)) * sqrt(list_inner_product(b.e, b.e))),
-            6
-        ) >= {SEMANTIC_DEDUP_COSINE}
+    WHERE {cosine6_sql("a.e", "b.e")} >= {SEMANTIC_DEDUP_COSINE}
 )
 SELECT
     v.label,
@@ -947,7 +956,7 @@ WITH planes AS (
             % 2147483648) % 2001) - 1000) / 1000.0 AS h
     FROM generate_series(0, 15) t1(j), generate_series(0, 63) t2(i)
 ), v AS (
-    SELECT vec_id, embedding::DOUBLE[] AS e FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) = 64) embeddings
+    SELECT vec_id, embedding::DOUBLE[] AS e FROM {VALID_EMBEDDINGS_SQL} embeddings
 ), bits AS (
     SELECT v.vec_id, p.j, round(sum(v.e[p.i + 1] * p.h), 4) >= 0 AS bit
     FROM v, planes p
@@ -964,7 +973,7 @@ WITH planes AS (
     SELECT s.vec_id, s.sig16 % CAST(power(2, nb.n_bits) AS BIGINT) AS bucket
     FROM sigs s, nb
 ), vn AS (
-    SELECT vec_id, e, sqrt(list_inner_product(e, e)) AS nrm FROM v
+    SELECT vec_id, e, {norm_sql("e")} AS nrm FROM v
 ), dropped AS (
     SELECT DISTINCT kb.vec_id
     FROM keyed ka
@@ -1444,14 +1453,9 @@ _PFX_TAU_NUM, _PFX_TAU_DEN = 3, 5  # over 3-word shingles (the MinHash grain)
     oracle=f"""
 WITH toks AS (
     SELECT doc_id,
-           list_distinct(list_transform(
-               generate_series(1, len(string_split(text, ' ')) - 2),
-               i -> string_split(text, ' ')[i] || ' ' ||
-                    string_split(text, ' ')[i + 1] || ' ' ||
-                    string_split(text, ' ')[i + 2]
-           )) AS ws
+           list_distinct({shingles_sql()}) AS ws
     FROM documents
-    WHERE text IS NOT NULL AND len(string_split(text, ' ')) >= 3
+    WHERE text IS NOT NULL AND len(string_split(text, ' ')) >= {SHINGLE_K}
 ), sized AS (
     SELECT doc_id, ws, len(ws) AS n FROM toks WHERE len(ws) > 0
 ), pairs AS (

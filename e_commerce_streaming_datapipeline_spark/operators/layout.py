@@ -35,6 +35,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from e_commerce_streaming_datapipeline_spark.functions.hashing import universal_hash, universal_hash_sql
 from e_commerce_streaming_datapipeline_spark.functions.rounding import cents, cents_sum, cents_sum_double, fround
 from e_commerce_streaming_datapipeline_spark.functions.scalars import scalar_join
 from e_commerce_streaming_datapipeline_spark.functions.scratch import scratch_dir
@@ -445,20 +446,16 @@ def q_hilbert_layout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _BLOOM_M = 16384  # bits
-_BLOOM_P = 2147483647  # Mersenne prime 2^31 - 1: the universal-hash modulus
-# two universal hashes h_i(k) = ((a_i*k + b_i) mod P) mod M.  The prime
-# intermediate modulus is what makes them independent: reducing the affine
-# map directly mod M = 2^14 (odd a) is a BIJECTION of k mod 2^14, so both
-# probe positions would be functions of k mod M alone and the k=2 AND would
-# degrade to a single-hash filter.  k is pre-reduced mod P so every product
-# stays below (P-1)*a < 2^63 — exact BIGINT arithmetic on both engines.
+# two universal hashes h_i(k) = ((a_i*k + b_i) mod P) mod M, P = 2^31 - 1.
+# The prime intermediate modulus is what makes them independent: reducing
+# the affine map directly mod M = 2^14 (odd a) is a BIJECTION of k mod 2^14,
+# so both probe positions would be functions of k mod M alone and the k=2
+# AND would degrade to a single-hash filter.
 _BLOOM_H = [(2654435761, 97), (40503, 2654435769)]
 
 
 def _bloom_pos(col: F.Column, h: int) -> F.Column:
-    a, b = _BLOOM_H[h]
-    kp = F.pmod(col, F.lit(_BLOOM_P))
-    return F.pmod(F.pmod(kp * F.lit(a) + F.lit(b), F.lit(_BLOOM_P)), F.lit(_BLOOM_M))
+    return F.pmod(universal_hash(col, *_BLOOM_H[h]), F.lit(_BLOOM_M))
 
 
 def bloom_filter_prejoin(orders: DataFrame, customer: DataFrame) -> DataFrame:
@@ -528,8 +525,7 @@ def bloom_filter_prejoin(orders: DataFrame, customer: DataFrame) -> DataFrame:
 
 def _bloom_oracle() -> str:
     def pos(expr: str, h: int) -> str:
-        a, b = _BLOOM_H[h]
-        return f"(((({expr} % {_BLOOM_P}) * {a} + {b}) % {_BLOOM_P}) % {_BLOOM_M})"
+        return f"({universal_hash_sql(expr, *_BLOOM_H[h])} % {_BLOOM_M})"
 
     return f"""
 WITH keys AS (
@@ -1486,7 +1482,7 @@ def q_encoding_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("event_id"), F.lit(4611686018427387904)).alias("oid"),
             "event_type",
             "user_id",
-            "value",
+            cents(F.col("value")).cast("string").alias("value"),
         )
     )
     stacked = ordered.select(
@@ -1495,8 +1491,7 @@ def q_encoding_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
         "oid",
         F.expr(
             "stack(3, 'event_type', event_type, "
-            "'user_id', cast(user_id as string), "
-            "'value', cast(cast(round(value * 100) as bigint) as string)) "
+            "'user_id', cast(user_id as string), 'value', value) "
             "AS (col_name, val)"
         ),
     )

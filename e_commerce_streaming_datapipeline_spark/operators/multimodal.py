@@ -40,7 +40,8 @@ def as_assets(docs: DataFrame) -> DataFrame:
     ``element_at(arr, NULL)`` and DuckDB's ``arr[NULL]`` disagree in
     downstream Python-kernel handling) — r8 edge-fixture pin."""
     modality = F.element_at(
-        F.array(*[F.lit(m) for m in MODALITIES]), F.pmod(F.col("doc_id"), F.lit(4)).cast("int") + 1
+        F.array(*[F.lit(m) for m in MODALITIES]),
+        F.pmod(F.col("doc_id"), F.lit(len(MODALITIES))).cast("int") + 1,
     )
     docs = docs.where(F.col("doc_id").isNotNull())
     return docs.select(
@@ -57,16 +58,20 @@ def as_assets(docs: DataFrame) -> DataFrame:
     )
 
 
-@query(
-    "multimodal_asset_stats",
-    oracle="""
-WITH assets AS (
+# the oracles' twin of as_assets: (asset_id, modality, payload)
+ASSETS_CTE = f"""assets AS (
     SELECT
         doc_id AS asset_id,
-        ['image', 'audio', 'video', 'text'][(doc_id % 4) + 1] AS modality,
+        {list(MODALITIES)}[(doc_id % {len(MODALITIES)}) + 1] AS modality,
         encode(text) AS payload
     FROM documents WHERE doc_id IS NOT NULL
-)
+)"""
+
+
+@query(
+    "multimodal_asset_stats",
+    oracle=f"""
+WITH {ASSETS_CTE}
 SELECT
     modality,
     count(*)                                  AS n_assets,
@@ -199,14 +204,8 @@ def decode_assets(assets: DataFrame) -> DataFrame:
 
 @query(
     "multimodal_decode",
-    oracle="""
-WITH assets AS (
-    SELECT
-        doc_id AS asset_id,
-        ['image', 'audio', 'video', 'text'][(doc_id % 4) + 1] AS modality,
-        encode(text) AS payload
-    FROM documents WHERE doc_id IS NOT NULL
-), decoded AS (
+    oracle=f"""
+WITH {ASSETS_CTE}, decoded AS (
     SELECT
         asset_id,
         modality,
@@ -244,13 +243,7 @@ FRAME_STEP = 8
 @query(
     "multimodal_resize",
     oracle=f"""
-WITH assets AS (
-    SELECT
-        doc_id AS asset_id,
-        ['image', 'audio', 'video', 'text'][(doc_id % 4) + 1] AS modality,
-        encode(text) AS payload
-    FROM documents WHERE doc_id IS NOT NULL
-), decoded AS (
+WITH {ASSETS_CTE}, decoded AS (
     SELECT
         asset_id, modality,
         64 + ('0x' || substr(md5(payload::VARCHAR), 1, 2))::BIGINT * 4 AS width,
@@ -328,13 +321,7 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "multimodal_frame_sample",
     oracle=f"""
-WITH assets AS (
-    SELECT
-        doc_id AS asset_id,
-        ['image', 'audio', 'video', 'text'][(doc_id % 4) + 1] AS modality,
-        encode(text) AS payload
-    FROM documents WHERE doc_id IS NOT NULL
-), decoded AS (
+WITH {ASSETS_CTE}, decoded AS (
     SELECT
         asset_id,
         1 + ('0x' || substr(md5(payload::VARCHAR), 5, 2))::BIGINT AS frames
@@ -390,14 +377,8 @@ def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "multimodal_features",
-    oracle="""
-WITH assets AS (
-    SELECT
-        doc_id AS asset_id,
-        ['image', 'audio', 'video', 'text'][(doc_id % 4) + 1] AS modality,
-        encode(text) AS payload
-    FROM documents WHERE doc_id IS NOT NULL
-)
+    oracle=f"""
+WITH {ASSETS_CTE}
 SELECT
     asset_id,
     modality,
@@ -460,14 +441,8 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "multimodal_dedup",
-    oracle="""
-WITH assets AS (
-    SELECT
-        doc_id AS asset_id,
-        ['image', 'audio', 'video', 'text'][(doc_id % 4) + 1] AS modality,
-        encode(text) AS payload
-    FROM documents WHERE doc_id IS NOT NULL
-), hashed AS (
+    oracle=f"""
+WITH {ASSETS_CTE}, hashed AS (
     -- DuckDB md5 takes VARCHAR only: hash the hex encoding of the bytes
     -- (Spark side mirrors md5(hex(payload)); hex casing matches)
     SELECT asset_id, modality, md5(hex(payload)) AS payload_hash FROM assets

@@ -49,6 +49,14 @@ def with_payment_type(events: DataFrame) -> DataFrame:
     )
 
 
+# the oracles' twin of with_payment_type's bucket: a positive mod, matching
+# Spark's pmod for negative k
+PAYMENT_TYPE_SQL = (
+    f"{list(PAYMENT_TYPES)} [(((CAST(props->>'$.k' AS BIGINT) % {len(PAYMENT_TYPES)}) "
+    f"+ {len(PAYMENT_TYPES)}) % {len(PAYMENT_TYPES)}) + 1]"
+)
+
+
 def payment_metrics(events: DataFrame, duration: str = "1 hour") -> DataFrame:
     success = F.coalesce(F.col("value"), F.lit(0.0)) >= SUCCESS_MIN_VALUE
     agg = (
@@ -78,8 +86,7 @@ WITH typed AS (
     SELECT
         *,
         CAST(props->>'$.k' AS BIGINT) AS props_k,
-        ['credit_card', 'boleto', 'voucher', 'debit_card']
-            [(((CAST(props->>'$.k' AS BIGINT) % 4) + 4) % 4) + 1] AS payment_type  -- positive mod, matching Spark's pmod for negative k
+        {PAYMENT_TYPE_SQL} AS payment_type
     FROM events
     WHERE ts IS NOT NULL  -- event-time policy (windows.py)
 )

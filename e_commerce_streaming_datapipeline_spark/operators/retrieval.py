@@ -28,11 +28,13 @@ from pyspark.sql import functions as F
 from e_commerce_streaming_datapipeline_spark.functions.rounding import cents, fround
 from e_commerce_streaming_datapipeline_spark.functions.scalars import scalar_join
 from e_commerce_streaming_datapipeline_spark.functions.vector import (
+    cosine6_sql,
     cosine_similarity_expr,
     to_double_array,
 )
 from e_commerce_streaming_datapipeline_spark.plans.registry import query
 from e_commerce_streaming_datapipeline_spark.sources.batch import (
+    VALID_EMBEDDING_PRED,
     load_table,
     load_valid_embeddings,
 )
@@ -48,11 +50,12 @@ FUSE_DEPTH = 50  # per-ranker candidate depth entering the fusion
 RRF_K = 60
 
 
-def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document BM25 score for ``QUERY_TERMS`` as ``(doc_id, bm25)``.
+def _bm25_contribs(spark: SparkSession, sf_dir: str, terms: tuple[str, ...]) -> DataFrame:
+    """Each of ``terms``' BM25 contribution to each document that holds it,
+    in micros, as ``(term, doc_id, c)``.  SQL twin: ``_bm25_contribs_sql``.
 
     The term filter sits directly on the exploded postings — only rows for
-    the 3 query terms survive into the (doc_id, term) aggregation, so the
+    the query terms survive into the (doc_id, term) aggregation, so the
     shuffled volume is the query's posting lists, not the corpus (at 100 TB:
     the same access pattern an inverted index serves, expressed as
     filter-then-aggregate so Catalyst pushes the IN down to the scan side).
@@ -67,7 +70,7 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tf = (
         docs.select("doc_id", F.explode(toks).alias("term"))
-        .where(F.col("term").isin(*QUERY_TERMS))
+        .where(F.col("term").isin(*terms))
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
     )
@@ -81,37 +84,49 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     tfn = (F.col("tf") * F.lit(K1 + 1)) / (
         F.col("tf") + F.lit(K1) * (F.lit(1 - B) + F.lit(B) * F.col("dl") / F.col("avgdl"))
     )
-    # fixed-point micros BEFORE the sum: per-term math is one identical IEEE
+    # fixed-point micros BEFORE any sum: per-term math is one identical IEEE
     # expression on both engines; the integer sum is order-independent
-    contrib = joined.select("doc_id", cents(idf * tfn, 1000000).alias("c"))
-    return contrib.groupBy("doc_id").agg(
-        fround(F.sum("c").cast("double") / 1000000, 4).alias("bm25")
-    )
+    return joined.select("term", "doc_id", cents(idf * tfn, 1000000).alias("c"))
 
 
-_BM25_SCORED_SQL = """
-WITH dl AS (
+def _bm25_contribs_sql(terms: tuple[str, ...]) -> str:
+    """``_bm25_contribs`` as a DuckDB CTE chain ending in ``contrib``."""
+    return f"""dl AS (
     SELECT doc_id, len(string_split(text, ' ')) AS dl FROM documents
 ), totals AS (
     SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl
 ), tf AS (
     SELECT doc_id, term, count(*) AS tf
     FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents)
-    WHERE term IN ('join', 'stream', 'window')
+    WHERE term IN ({", ".join(f"'{t}'" for t in terms)})
     GROUP BY 1, 2
 ), df AS (
     SELECT term, count(*) AS df FROM tf GROUP BY 1
 ), contrib AS (
     SELECT
-        tf.doc_id,
+        tf.term, tf.doc_id,
         CAST(round(
             ln(1 + (totals.n_docs - df.df + 0.5) / (df.df + 0.5))
-            * ((tf.tf * 2.2)
-               / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / totals.avgdl)))
+            * ((tf.tf * {K1 + 1})
+               / (tf.tf + {K1} * ({1 - B} + {B} * dl.dl / totals.avgdl)))
             * 1000000
         ) AS BIGINT) AS c
     FROM tf JOIN df USING (term) JOIN dl USING (doc_id) CROSS JOIN totals
-)
+)"""
+
+
+def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document BM25 score for ``QUERY_TERMS`` as ``(doc_id, bm25)``:
+    the micros contributions summed per document."""
+    return (
+        _bm25_contribs(spark, sf_dir, QUERY_TERMS)
+        .groupBy("doc_id")
+        .agg(fround(F.sum("c").cast("double") / 1000000, 4).alias("bm25"))
+    )
+
+
+_BM25_SCORED_SQL = f"""
+WITH {_bm25_contribs_sql(QUERY_TERMS)}
 SELECT doc_id, round(CAST(sum(c) AS DOUBLE) / 1000000, 4) AS bm25
 FROM contrib GROUP BY 1
 """
@@ -150,14 +165,9 @@ _VEC_RANKED_SQL = f"""
     FROM (
         SELECT
             c.vec_id AS neighbor_id,
-            round(
-                list_inner_product(q.e, c.e)
-                / (sqrt(list_inner_product(q.e, q.e))
-                   * sqrt(list_inner_product(c.e, c.e))),
-                6
-            ) AS cos_sim
+            {cosine6_sql("q.e", "c.e")} AS cos_sim
         FROM (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
-              WHERE embedding IS NOT NULL AND len(embedding) = 64) c
+              WHERE {VALID_EMBEDDING_PRED}) c
         CROSS JOIN (SELECT embedding::DOUBLE[] AS e FROM embeddings
                     WHERE vec_id = {QUERY_VEC_ID}) q
         WHERE c.vec_id <> {QUERY_VEC_ID}
@@ -285,75 +295,26 @@ _NDCG_W_MICROS = [round(1_000_000 / math.log2(r + 1)) for r in range(1, EVAL_K +
 _TERM_LIST_SQL = ", ".join(f"'{t}'" for t in EVAL_TERMS)
 _TERMS_VALUES_SQL = ", ".join(f"('{t}')" for t in EVAL_TERMS)
 
-# single-term BM25 score in micros per (term, doc): shared CTE prefix of both
-# eval oracles (same contribution expression as _BM25_SCORED_SQL, kept per
-# term instead of summed per document)
-_TERM_SCORED_SQL = f"""
-dl AS (
-    SELECT doc_id, len(string_split(text, ' ')) AS dl FROM documents
-), totals AS (
-    SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl
-), tf AS (
-    SELECT doc_id, term, count(*) AS tf
-    FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents)
-    WHERE term IN ({_TERM_LIST_SQL})
-    GROUP BY 1, 2
-), df AS (
-    SELECT term, count(*) AS df FROM tf GROUP BY 1
-), scored AS (
-    SELECT
-        tf.term, tf.doc_id,
-        CAST(round(
-            ln(1 + (totals.n_docs - df.df + 0.5) / (df.df + 0.5))
-            * ((tf.tf * 2.2)
-               / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / totals.avgdl)))
-            * 1000000
-        ) AS BIGINT) AS s
-    FROM tf JOIN df USING (term) JOIN dl USING (doc_id) CROSS JOIN totals
-), topk AS (
+# per-term top-k of the single-term BM25 scores: the shared CTE prefix of
+# both eval oracles (``_term_topk``'s twin)
+_TERM_TOPK_SQL = f"""
+{_bm25_contribs_sql(EVAL_TERMS)}, topk AS (
     SELECT term, doc_id, rnk FROM (
         SELECT term, doc_id,
-               row_number() OVER (PARTITION BY term ORDER BY s DESC, doc_id) AS rnk
-        FROM scored
+               row_number() OVER (PARTITION BY term ORDER BY c DESC, doc_id) AS rnk
+        FROM contrib
     ) WHERE rnk <= {EVAL_K}
 )
 """
-
-
-def _term_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-term BM25 ``(term, doc_id, s)`` score in micros for each of the
-    five evaluation queries — the per-term analogue of ``_bm25_scored``
-    (identical contribution expression, kept per term instead of summed)."""
-    docs = load_table(spark, "documents", sf_dir)
-    toks = F.split(F.col("text"), " ")
-    dl = docs.select("doc_id", F.size(toks).alias("dl"))
-    totals = dl.agg(F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl"))
-    tf = (
-        docs.select("doc_id", F.explode(toks).alias("term"))
-        .where(F.col("term").isin(*EVAL_TERMS))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").alias("tf"))
-    )
-    df = tf.groupBy("term").agg(F.count("*").alias("df"))
-    joined = scalar_join(
-        tf.join(F.broadcast(df), "term").join(dl, "doc_id"), totals
-    )
-    idf = F.log(
-        F.lit(1) + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    )
-    tfn = (F.col("tf") * F.lit(K1 + 1)) / (
-        F.col("tf") + F.lit(K1) * (F.lit(1 - B) + F.lit(B) * F.col("dl") / F.col("avgdl"))
-    )
-    return joined.select("term", "doc_id", cents(idf * tfn, 1000000).alias("s"))
 
 
 def _term_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-term top-``EVAL_K`` ranking ``(term, doc_id, rnk)``: a rank filter
     over a partitioned window, which Spark plans as WindowGroupLimit —
     per-partition top-k heaps, never a global sort of the scored relation."""
-    w = Window.partitionBy("term").orderBy(F.col("s").desc(), F.col("doc_id").asc())
+    w = Window.partitionBy("term").orderBy(F.col("c").desc(), F.col("doc_id").asc())
     return (
-        _term_scored(spark, sf_dir)
+        _bm25_contribs(spark, sf_dir, EVAL_TERMS)
         .withColumn("rnk", F.row_number().over(w))
         .where(F.col("rnk") <= EVAL_K)
         .select("term", "doc_id", "rnk")
@@ -363,7 +324,7 @@ def _term_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "retrieval_eval_mrr",
     oracle=f"""
-WITH {_TERM_SCORED_SQL},
+WITH {_TERM_TOPK_SQL},
 terms AS (
     SELECT * FROM (VALUES {_TERMS_VALUES_SQL}) t(term)
 ), labels AS (
@@ -482,7 +443,7 @@ _W_CASE_SQL = "CASE rnk " + " ".join(
 @query(
     "retrieval_eval_ndcg",
     oracle=f"""
-WITH {_TERM_SCORED_SQL},
+WITH {_TERM_TOPK_SQL},
 glab AS (
     SELECT doc_id, term, least(count(*), 3) AS grade
     FROM (SELECT doc_id, unnest(string_split(text, ' ')[1:20]) AS term

@@ -30,7 +30,11 @@ from e_commerce_streaming_datapipeline_spark.functions.hashing import (
 )
 from e_commerce_streaming_datapipeline_spark.functions.rounding import cents, fround
 from e_commerce_streaming_datapipeline_spark.plans.registry import query
-from e_commerce_streaming_datapipeline_spark.sources.batch import load_table, load_valid_embeddings
+from e_commerce_streaming_datapipeline_spark.sources.batch import (
+    VALID_EMBEDDINGS_SQL,
+    load_table,
+    load_valid_embeddings,
+)
 
 @query(
     "stratified_doc_sample",
@@ -112,12 +116,12 @@ def q_group_sample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embedding_quantize",
-    oracle="""
+    oracle=f"""
 WITH scaled AS (
     SELECT vec_id,
            127.0 / greatest(list_max(list_transform(embedding, x -> abs(x))), 1e-12)
                AS scale
-    FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) = 64) embeddings
+    FROM {VALID_EMBEDDINGS_SQL} embeddings
 )
 SELECT
     e.vec_id,
@@ -125,7 +129,7 @@ SELECT
     array_to_string(
         list_transform(e.embedding, x -> CAST(round(x * s.scale) AS INTEGER)), ','
     ) AS qvec
-FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) = 64) e JOIN scaled s ON e.vec_id = s.vec_id
+FROM {VALID_EMBEDDINGS_SQL} e JOIN scaled s ON e.vec_id = s.vec_id
 """,
 )
 def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:

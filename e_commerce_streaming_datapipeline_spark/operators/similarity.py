@@ -50,44 +50,77 @@ from pyspark.sql import functions as F
 
 from e_commerce_streaming_datapipeline_spark.functions.checkpoints import round_checkpoint
 from e_commerce_streaming_datapipeline_spark.functions.rounding import cents, fround
-
 from e_commerce_streaming_datapipeline_spark.functions.vector import (
+    cosine6_sql,
     cosine_similarity_expr,
     dot_expr,
     norm_expr,
+    norm_sql,
     to_double_array,
 )
 from e_commerce_streaming_datapipeline_spark.plans.registry import query
-from e_commerce_streaming_datapipeline_spark.sources.batch import load_table, load_valid_embeddings
+from e_commerce_streaming_datapipeline_spark.sources.batch import (
+    VALID_EMBEDDING_PRED,
+    VALID_EMBEDDINGS_SQL,
+    load_table,
+    load_valid_embeddings,
+)
 
 N_QUERIES = 8  # fixture convention: vec_id < 8 are the query vectors
 TOP_K = 5
 
-_ORACLE_PAIRS = """
-WITH v AS (
-    SELECT vec_id, label, embedding::DOUBLE[] AS e FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) = 64) embeddings
-), q AS (
-    SELECT * FROM v WHERE vec_id < {n_queries}
-), pairs AS (
-    SELECT
-        q.vec_id AS query_id,
-        c.vec_id AS neighbor_id,
-        round(
-            list_inner_product(q.e, c.e)
-            / (sqrt(list_inner_product(q.e, q.e)) * sqrt(list_inner_product(c.e, c.e))),
-            6
-        ) AS cos_sim
+# The oracles' DuckDB twins of the kernels below: ``_vectors_sql`` is
+# ``embedding_vectors``, ``_QUERIES_SQL`` its query rows over a ``v`` CTE,
+# ``_query_rank_sql`` the per-query ranking of ``_ranked_topk``, and
+# ``_rerank_topk_sql`` is ``rerank_topk``.
+
+
+def _vectors_sql(*cols: str) -> str:
+    return (
+        f"SELECT vec_id, {''.join(f'{c}, ' for c in cols)}embedding::DOUBLE[] AS e "
+        f"FROM {VALID_EMBEDDINGS_SQL} embeddings"
+    )
+
+
+_QUERIES_SQL = f"SELECT * FROM v WHERE vec_id < {N_QUERIES}"
+
+
+def _query_rank_sql(order: str = "cos_sim DESC, neighbor_id") -> str:
+    return f"row_number() OVER (PARTITION BY query_id ORDER BY {order})"
+
+
+def _ranked_topk_sql(rel: str, top_k: int = TOP_K) -> str:
+    """Each query's ``top_k`` rows of the (query_id, neighbor_id, cos_sim)
+    relation ``rel``, ranked in ``rank``."""
+    return f"""SELECT query_id, neighbor_id, cos_sim, CAST(rn AS INT) AS rank
+FROM (SELECT *, {_query_rank_sql()} AS rn FROM {rel})
+WHERE rn <= {top_k}"""
+
+
+def _brute_force_topk_sql(join_cond: str, top_k: int = TOP_K) -> str:
+    """Exact top-k of every query vector ``q`` over the corpus rows ``c``
+    that pass ``join_cond``."""
+    return f"""
+WITH v AS ({_vectors_sql("label")}), q AS ({_QUERIES_SQL}), pairs AS (
+    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+           {cosine6_sql("q.e", "c.e")} AS cos_sim
     FROM q JOIN v c ON {join_cond}
 )
-SELECT query_id, neighbor_id, cos_sim, CAST(rn AS INT) AS rank
-FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id
-    ) AS rn
-    FROM pairs
-)
-WHERE rn <= {top_k}
+{_ranked_topk_sql("pairs", top_k)}
 """
+
+
+def _rerank_topk_sql(cands: str, top_k: int, vectors: str = "v") -> str:
+    """The last CTE and the final SELECT of an ANN oracle: the
+    (query_id, neighbor_id) candidates of CTE ``cands`` re-scored against
+    the ``vectors`` CTE and ranked."""
+    return f"""scored AS (
+    SELECT cd.query_id, cd.neighbor_id, {cosine6_sql("q.e", "c.e")} AS cos_sim
+    FROM {cands} cd
+    JOIN {vectors} q ON q.vec_id = cd.query_id
+    JOIN {vectors} c ON c.vec_id = cd.neighbor_id
+)
+{_ranked_topk_sql("scored", top_k)}"""
 
 
 def _ranked_topk(pairs: DataFrame, top_k: int = TOP_K) -> DataFrame:
@@ -136,9 +169,7 @@ def rerank_topk(cands: DataFrame, vectors: DataFrame, top_k: int) -> DataFrame:
 
 @query(
     "embedding_topk",
-    oracle=_ORACLE_PAIRS.format(
-        n_queries=N_QUERIES, top_k=TOP_K, join_cond="q.vec_id <> c.vec_id"
-    ),
+    oracle=_brute_force_topk_sql("q.vec_id <> c.vec_id"),
 )
 def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k: query vectors (vec_id < 8) against the full
@@ -162,11 +193,7 @@ def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embedding_topk_ivf",
-    oracle=_ORACLE_PAIRS.format(
-        n_queries=N_QUERIES,
-        top_k=3,
-        join_cond="q.label = c.label AND q.vec_id <> c.vec_id",
-    ),
+    oracle=_brute_force_topk_sql("q.label = c.label AND q.vec_id <> c.vec_id", 3),
 )
 def q_embedding_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style pruned ANN: candidates restricted to the query's cluster
@@ -192,9 +219,7 @@ def q_embedding_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embedding_topk_pandas",
-    oracle=_ORACLE_PAIRS.format(
-        n_queries=N_QUERIES, top_k=TOP_K, join_cond="q.vec_id <> c.vec_id"
-    ),
+    oracle=_brute_force_topk_sql("q.vec_id <> c.vec_id"),
 )
 def q_embedding_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same top-k computed through the Arrow/Pandas-UDF path: queries are
@@ -267,7 +292,7 @@ _ORACLE_SIG_CTES = f"""planes AS (
     FROM generate_series(0, {LSH_NBITS - 1}) t1(j),
          generate_series(0, {LSH_DIM - 1}) t2(i)
 ), v AS (
-    SELECT vec_id, embedding::DOUBLE[] AS e FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) = 64) embeddings
+    {_vectors_sql()}
 ), bits AS (
     SELECT v.vec_id, p.j, round(sum(v.e[p.i + 1] * p.h), 4) >= 0 AS bit
     FROM v, planes p
@@ -285,27 +310,7 @@ WITH {_ORACLE_SIG_CTES}, cands AS (
     FROM sigs q JOIN sigs c
       ON (q.band0 = c.band0 OR q.band1 = c.band1) AND q.vec_id <> c.vec_id
     WHERE q.vec_id < {N_QUERIES}
-), scored AS (
-    SELECT
-        cd.query_id,
-        cd.neighbor_id,
-        round(
-            list_inner_product(q.e, c.e)
-            / (sqrt(list_inner_product(q.e, q.e)) * sqrt(list_inner_product(c.e, c.e))),
-            6
-        ) AS cos_sim
-    FROM cands cd
-    JOIN v q ON q.vec_id = cd.query_id
-    JOIN v c ON c.vec_id = cd.neighbor_id
-)
-SELECT query_id, neighbor_id, cos_sim, CAST(rn AS INT) AS rank
-FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id
-    ) AS rn
-    FROM scored
-)
-WHERE rn <= {LSH_TOP_K}
+), {_rerank_topk_sql("cands", LSH_TOP_K)}
 """
 
 
@@ -414,27 +419,7 @@ _ORACLE_PROBE_CTES = f"""masks AS (
 )"""
 
 _ORACLE_LSH_MULTIPROBE = f"""
-WITH {_ORACLE_SIG_CTES}, {_ORACLE_PROBE_CTES}, scored AS (
-    SELECT
-        cd.query_id,
-        cd.neighbor_id,
-        round(
-            list_inner_product(q.e, c.e)
-            / (sqrt(list_inner_product(q.e, q.e)) * sqrt(list_inner_product(c.e, c.e))),
-            6
-        ) AS cos_sim
-    FROM pcands cd
-    JOIN v q ON q.vec_id = cd.query_id
-    JOIN v c ON c.vec_id = cd.neighbor_id
-)
-SELECT query_id, neighbor_id, cos_sim, CAST(rn AS INT) AS rank
-FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id
-    ) AS rn
-    FROM scored
-)
-WHERE rn <= {LSH_TOP_K}
+WITH {_ORACLE_SIG_CTES}, {_ORACLE_PROBE_CTES}, {_rerank_topk_sql("pcands", LSH_TOP_K)}
 """
 
 
@@ -535,7 +520,7 @@ def _recall_by_level(
 
 _ORACLE_MULTIPROBE_AUDIT = f"""
 WITH {_ORACLE_SIG_CTES}, {_ORACLE_PROBE_CTES}, bf AS (
-    {_ORACLE_PAIRS.format(n_queries=N_QUERIES, top_k=LSH_TOP_K, join_cond="q.vec_id <> c.vec_id")}
+    {_brute_force_topk_sql("q.vec_id <> c.vec_id", LSH_TOP_K)}
 ), lv AS (
     SELECT unnest({_AUDIT_LEVELS}) AS probe_bits
 )
@@ -583,9 +568,7 @@ def q_lsh_multiprobe_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @query(
     "hard_negative_mining",
-    oracle=_ORACLE_PAIRS.format(
-        n_queries=N_QUERIES, top_k=3, join_cond="q.label <> c.label"
-    ),
+    oracle=_brute_force_topk_sql("q.label <> c.label", 3),
 )
 def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contrastive hard-negative mining: for each anchor (query vector), the
@@ -652,22 +635,14 @@ def blocked_cosine_pairs(vectors: DataFrame, block: str) -> DataFrame:
     "embedding_near_dups",
     oracle=f"""
 WITH v AS (
-    SELECT vec_id, label, embedding::DOUBLE[] AS e FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) = 64) embeddings
+    {_vectors_sql("label")}
 )
 SELECT
     a.vec_id AS vec_a,
     b.vec_id AS vec_b,
-    round(
-        list_inner_product(a.e, b.e)
-        / (sqrt(list_inner_product(a.e, a.e)) * sqrt(list_inner_product(b.e, b.e))),
-        6
-    ) AS cos_sim
+    {cosine6_sql("a.e", "b.e")} AS cos_sim
 FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
-WHERE round(
-        list_inner_product(a.e, b.e)
-        / (sqrt(list_inner_product(a.e, a.e)) * sqrt(list_inner_product(b.e, b.e))),
-        6
-    ) >= {NEAR_DUP_COSINE}
+WHERE {cosine6_sql("a.e", "b.e")} >= {NEAR_DUP_COSINE}
 """,
 )
 def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -682,13 +657,12 @@ def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.where(F.col("cos_sim") >= NEAR_DUP_COSINE)
 
 
-@query(
-    "embedding_centroids",
-    oracle="""
+# per-label mean vector, 4dp components: the oracle of both centroid kernels
+_CENTROIDS_ORACLE = f"""
 WITH ex AS (
     SELECT label,
-           unnest(list_transform(embedding, (x, i) -> {'pos': i, 'v': CAST(x AS DOUBLE)})) AS u
-    FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) = 64) embeddings
+           unnest(list_transform(embedding, (x, i) -> {{'pos': i, 'v': CAST(x AS DOUBLE)}})) AS u
+    FROM {VALID_EMBEDDINGS_SQL} embeddings
 ), per_dim AS (
     SELECT label, u.pos AS pos, round(avg(u.v), 4) + 0 AS c, count(*) AS n
     FROM ex GROUP BY 1, 2
@@ -698,8 +672,10 @@ SELECT label, CAST(max(n) AS BIGINT) AS n_vectors,
            list(CAST(round(c * 10000) AS BIGINT) ORDER BY pos), ','
        ) AS centroid_q4
 FROM per_dim GROUP BY 1
-""",
-)
+"""
+
+
+@query("embedding_centroids", oracle=_CENTROIDS_ORACLE)
 def q_embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cluster centroid vectors (the offline half of IVF / one k-means
     Lloyd step): mean embedding per label, dimension-wise.
@@ -747,7 +723,7 @@ def q_embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     "lsh_recall_audit",
     oracle=f"""
 WITH bf AS (
-    {_ORACLE_PAIRS.format(n_queries=N_QUERIES, top_k=LSH_TOP_K, join_cond="q.vec_id <> c.vec_id")}
+    {_brute_force_topk_sql("q.vec_id <> c.vec_id", LSH_TOP_K)}
 ), lshr AS (
     {_ORACLE_LSH}
 )
@@ -792,12 +768,12 @@ def q_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "training_record_export",
-    oracle="""
+    oracle=f"""
 WITH v AS (
     SELECT vec_id,
-        CAST(round(sqrt(list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[]))
+        CAST(round({norm_sql("embedding::DOUBLE[]")}
                    * 10000) AS BIGINT) AS norm_e4
-    FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) = 64) embeddings
+    FROM {VALID_EMBEDDINGS_SQL} embeddings
 )
 SELECT
     d.doc_id,
@@ -858,10 +834,10 @@ _COGROUP_BUCKETS = 16
     oracle=f"""
 WITH v AS (
     SELECT vec_id,
-        CAST(round(sqrt(list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[]))
+        CAST(round({norm_sql("embedding::DOUBLE[]")}
                    * 10000) AS BIGINT) AS norm_e4,
         vec_id % {_COGROUP_BUCKETS} AS bucket
-    FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) = 64) embeddings
+    FROM {VALID_EMBEDDINGS_SQL} embeddings
 ), d AS (
     SELECT doc_id, n_chars, doc_id % {_COGROUP_BUCKETS} AS bucket FROM documents
 ), m AS (
@@ -953,7 +929,7 @@ _SQ_CANDIDATES = 20  # 4x the final k — the quantized recall budget
 
 _SQ_ORACLE = f"""
 WITH v AS (
-    SELECT vec_id, embedding::DOUBLE[] AS e FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) = 64) embeddings
+    {_vectors_sql()}
 ), sc AS (
     SELECT vec_id, e,
            127.0 / greatest(list_max(list_transform(e, y -> abs(y))), 1e-12) AS s
@@ -979,28 +955,14 @@ WITH v AS (
     FROM qs q JOIN q8 c ON q.vec_id <> c.vec_id
 ), cand AS (
     SELECT * FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY query_id ORDER BY approx_sim DESC, neighbor_id
-        ) AS arn
+        SELECT *, {_query_rank_sql("approx_sim DESC, neighbor_id")} AS arn
         FROM approx
     ) WHERE arn <= {_SQ_CANDIDATES}
 ), exact AS (
-    SELECT query_id, neighbor_id,
-        round(
-            list_inner_product(qe, ce)
-            / (sqrt(list_inner_product(qe, qe)) * sqrt(list_inner_product(ce, ce))),
-            6
-        ) AS cos_sim
+    SELECT query_id, neighbor_id, {cosine6_sql("qe", "ce")} AS cos_sim
     FROM cand
 )
-SELECT query_id, neighbor_id, cos_sim, CAST(rn AS INT) AS rank
-FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id
-    ) AS rn
-    FROM exact
-)
-WHERE rn <= {TOP_K}
+{_ranked_topk_sql("exact")}
 """
 
 
@@ -1073,15 +1035,15 @@ def q_embedding_topk_sq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embedding_norms_arrow",
-    oracle="""
+    oracle=f"""
 SELECT
     vec_id,
-    round(sqrt(list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[]))
+    round({norm_sql("embedding::DOUBLE[]")}
           * 10000) / 10000                                   AS l2_norm,
     round(list_aggregate(embedding::DOUBLE[], 'sum') / len(embedding)
           * 10000) / 10000 + 0.0                             AS mean_component,
     CAST(len(list_filter(embedding, x -> x > 0)) AS INT)     AS n_positive
-FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) = 64) embeddings
+FROM {VALID_EMBEDDINGS_SQL} embeddings
 """,
 )
 def q_embedding_norms_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1140,14 +1102,22 @@ def q_embedding_norms_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 # K-means Lloyd assignment step (exact integer arithmetic)
 # --------------------------------------------------------------------------
 
+# DuckDB twins of the integer k-means kernels: ``_Q4_SQL`` is the q4-scaled
+# vector of ``ivf_input``; ``_IVF_DIST_SQL`` is ``_ivf_rational_dist`` from
+# ``q4.v`` to the rational centroid ``c`` (n, s_arr)
+_Q4_SQL = "list_transform(embedding::DOUBLE[], x -> CAST(round(x * 10000) AS BIGINT))"
+_IVF_DIST_SQL = (
+    "CAST(list_aggregate(list_transform(list_zip(q4.v, c.s_arr), "
+    "p -> (c.n * p[1] - p[2]) * (c.n * p[1] - p[2])), 'sum') AS DOUBLE) / (c.n * c.n)"
+)
+
+
 @query(
     "kmeans_lloyd_step",
-    oracle="""
+    oracle=f"""
 WITH q4 AS (
-    SELECT vec_id, label,
-           list_transform(embedding::DOUBLE[],
-                          x -> CAST(round(x * 10000) AS BIGINT)) AS v
-    FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) = 64) embeddings
+    SELECT vec_id, label, {_Q4_SQL} AS v
+    FROM {VALID_EMBEDDINGS_SQL} embeddings
 ), dims AS (
     SELECT label, u.i AS dim, sum(v[u.i]) AS s, count(*) AS n
     FROM q4, LATERAL unnest(generate_series(1, len(v))) u(i)
@@ -1161,12 +1131,7 @@ WITH q4 AS (
         q4.vec_id,
         q4.label AS old_label,
         c.c_label,
-        CAST(list_aggregate(
-            list_transform(
-                list_zip(q4.v, c.s_arr),
-                p -> (c.n * p[1] - p[2]) * (c.n * p[1] - p[2])
-            ), 'sum'
-        ) AS DOUBLE) / (c.n * c.n) AS d
+        {_IVF_DIST_SQL} AS d
     FROM q4, cents c
 ), ranked AS (
     SELECT *, row_number() OVER (
@@ -1243,24 +1208,7 @@ def q_kmeans_lloyd_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "embedding_centroids_arrow",
-    oracle="""
-WITH ex AS (
-    SELECT label,
-           unnest(list_transform(embedding, (x, i) -> {'pos': i, 'v': CAST(x AS DOUBLE)})) AS u
-    FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) = 64) embeddings
-), per_dim AS (
-    SELECT label, u.pos AS pos, round(avg(u.v), 4) + 0 AS c, count(*) AS n
-    FROM ex GROUP BY 1, 2
-)
-SELECT label, CAST(max(n) AS BIGINT) AS n_vectors,
-       array_to_string(
-           list(CAST(round(c * 10000) AS BIGINT) ORDER BY pos), ','
-       ) AS centroid_q4
-FROM per_dim GROUP BY 1
-""",
-)
+@query("embedding_centroids_arrow", oracle=_CENTROIDS_ORACLE)
 def q_embedding_centroids_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`applyInArrow` twin of `embedding_centroids` — the grouped Arrow
     extension API (Spark 4): each label's vectors arrive as ONE Arrow table
@@ -1327,7 +1275,7 @@ WITH xq AS (
         SELECT vec_id,
                unnest(list_transform(embedding::DOUBLE[],
                       (e, i) -> {{'i': i - 1, 'x': CAST(round(e * {_PC_Q}) AS BIGINT)}})) AS u
-        FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) = 64) embeddings
+        FROM {VALID_EMBEDDINGS_SQL} embeddings
     )
 ), mu AS (
     SELECT i, CAST(round(CAST(sum(x) AS DOUBLE) / count(*)) AS BIGINT) AS m
@@ -1391,10 +1339,7 @@ def q_embedding_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
     xq = emb.select(
         "vec_id",
         F.posexplode(
-            F.transform(
-                to_double_array("embedding"),
-                lambda e: F.round(e * _PC_Q, 0).cast("long"),
-            )
+            F.transform(to_double_array("embedding"), lambda e: cents(e, _PC_Q))
         ).alias("i", "x"),
     )
     mu = xq.groupBy("i").agg(
@@ -1575,13 +1520,15 @@ def ivf_probe_cands(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
         & (F.col("query_id") != F.col("vec_id")),
     ).select("query_id", F.col("vec_id").alias("neighbor_id"), "rn")
 
-# one Lloyd stage in DuckDB: centroids from `{src}`'s {lab} column, then the
-# integer-rational argmin assignment of every vector
-_IVF_STAGE_SQL = """
+def _ivf_stage_sql(i: int | str, src: str) -> str:
+    """One Lloyd stage in DuckDB: centroids ``cents{i}`` from ``src``'s
+    ``lab`` column, then the integer-rational argmin assignment
+    ``assign{i}`` of every vector."""
+    return f"""
 , cents{i} AS (
-    SELECT {lab} AS c_label, any_value(n) AS n, list(s ORDER BY dim) AS s_arr
+    SELECT lab AS c_label, any_value(n) AS n, list(s ORDER BY dim) AS s_arr
     FROM (
-        SELECT {lab}, u.i AS dim, sum(v[u.i]) AS s, count(*) AS n
+        SELECT lab, u.i AS dim, sum(v[u.i]) AS s, count(*) AS n
         FROM {src}, LATERAL unnest(generate_series(1, len(v))) u(i)
         GROUP BY 1, 2
     ) GROUP BY 1
@@ -1589,34 +1536,35 @@ _IVF_STAGE_SQL = """
     SELECT vec_id, v, e, c_label AS label{i}
     FROM (
         SELECT q4.vec_id, q4.v, q4.e, c.c_label,
-               row_number() OVER (
-                   PARTITION BY q4.vec_id
-                   ORDER BY CAST(list_aggregate(
-                       list_transform(
-                           list_zip(q4.v, c.s_arr),
-                           p -> (c.n * p[1] - p[2]) * (c.n * p[1] - p[2])
-                       ), 'sum') AS DOUBLE) / (c.n * c.n), c.c_label
-               ) AS rn
+               row_number() OVER (PARTITION BY q4.vec_id ORDER BY {_IVF_DIST_SQL}, c.c_label) AS rn
         FROM q4 JOIN {src} USING (vec_id), cents{i} c
     ) WHERE rn = 1
 )
 """
 
 
+def _ivf_probes_sql(cents: str, nprobe: int) -> str:
+    """``ivf_assign(..., top=nprobe)`` of the query vectors: each one's
+    ``nprobe`` nearest centroids of CTE ``cents``, as (query_id,
+    probe_label, rn)."""
+    return f"""SELECT vec_id AS query_id, c_label AS probe_label, rn
+    FROM (
+        SELECT q4.vec_id, c.c_label,
+               row_number() OVER (PARTITION BY q4.vec_id ORDER BY {_IVF_DIST_SQL}, c.c_label) AS rn
+        FROM q4, {cents} c
+        WHERE q4.vec_id < {N_QUERIES}
+    ) WHERE rn <= {nprobe}"""
+
+
 # the shared IVF training prefix (q4 scaling -> seeding -> two Lloyd
 # stages): reused by the trained search and the nprobe recall audit so both
 # provably index against the same learned clusters
 _IVF_TRAIN_SQL = f"""q4 AS (
-    SELECT vec_id,
-           vec_id % {_IVF_K} AS seed,
-           list_transform(embedding::DOUBLE[],
-                          x -> CAST(round(x * 10000) AS BIGINT)) AS v,
-           embedding::DOUBLE[] AS e
-    FROM (SELECT * FROM embeddings
-          WHERE embedding IS NOT NULL AND len(embedding) = 64) embeddings
+    SELECT vec_id, vec_id % {_IVF_K} AS seed, {_Q4_SQL} AS v, embedding::DOUBLE[] AS e
+    FROM {VALID_EMBEDDINGS_SQL} embeddings
 ), seeded AS (SELECT vec_id, seed AS lab, v FROM q4)
-{_IVF_STAGE_SQL.format(i=1, src="(SELECT vec_id, lab, v FROM seeded)", lab="lab")}
-{_IVF_STAGE_SQL.format(i=2, src="(SELECT vec_id, label1 AS lab, v FROM assign1)", lab="lab")}"""
+{_ivf_stage_sql(1, "(SELECT vec_id, lab, v FROM seeded)")}
+{_ivf_stage_sql(2, "(SELECT vec_id, label1 AS lab, v FROM assign1)")}"""
 
 
 @query(
@@ -1624,41 +1572,12 @@ _IVF_TRAIN_SQL = f"""q4 AS (
     oracle=f"""
 WITH {_IVF_TRAIN_SQL}
 , probes AS (
-    SELECT vec_id AS query_id, c_label AS probe_label
-    FROM (
-        SELECT q4.vec_id, c.c_label,
-               row_number() OVER (
-                   PARTITION BY q4.vec_id
-                   ORDER BY CAST(list_aggregate(
-                       list_transform(
-                           list_zip(q4.v, c.s_arr),
-                           p -> (c.n * p[1] - p[2]) * (c.n * p[1] - p[2])
-                       ), 'sum') AS DOUBLE) / (c.n * c.n), c.c_label
-               ) AS rn
-        FROM q4, cents2 c
-        WHERE q4.vec_id < 8
-    ) WHERE rn <= {_IVF_NPROBE}
-), pairs AS (
-    SELECT
-        p.query_id,
-        a.vec_id AS neighbor_id,
-        round(
-            list_inner_product(q.e, a.e)
-            / (sqrt(list_inner_product(q.e, q.e))
-               * sqrt(list_inner_product(a.e, a.e))),
-            6
-        ) AS cos_sim
+    {_ivf_probes_sql("cents2", _IVF_NPROBE)}
+), cands AS (
+    SELECT p.query_id, a.vec_id AS neighbor_id
     FROM probes p
     JOIN assign2 a ON a.label2 = p.probe_label AND a.vec_id <> p.query_id
-    JOIN q4 q ON q.vec_id = p.query_id
-)
-SELECT query_id, neighbor_id, cos_sim, CAST(rn AS INT) AS rank
-FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id
-    ) AS rn FROM pairs
-)
-WHERE rn <= {_IVF_TOPK}
+), {_rerank_topk_sql("cands", _IVF_TOPK, "q4")}
 """,
 )
 def q_trained_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1696,39 +1615,22 @@ MRL_TOP_K = 10
 @query(
     "matryoshka_recall_audit",
     oracle=f"""
-WITH v AS (
-    SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
-    WHERE embedding IS NOT NULL AND len(embedding) = 64
-), q AS (
-    SELECT * FROM v WHERE vec_id < {N_QUERIES}
-), pairs AS (
+WITH v AS ({_vectors_sql()}), q AS ({_QUERIES_SQL}), pairs AS (
     SELECT
         q.vec_id AS query_id,
         c.vec_id AS neighbor_id,
-        round(
-            list_inner_product(q.e, c.e)
-            / (sqrt(list_inner_product(q.e, q.e))
-               * sqrt(list_inner_product(c.e, c.e))),
-            6
-        ) AS cos_full,
-        round(
-            list_inner_product(q.e[1:{MRL_DIM}], c.e[1:{MRL_DIM}])
-            / (sqrt(list_inner_product(q.e[1:{MRL_DIM}], q.e[1:{MRL_DIM}]))
-               * sqrt(list_inner_product(c.e[1:{MRL_DIM}], c.e[1:{MRL_DIM}]))),
-            6
-        ) AS cos_trunc
+        {cosine6_sql("q.e", "c.e")} AS cos_full,
+        {cosine6_sql(f"q.e[1:{MRL_DIM}]", f"c.e[1:{MRL_DIM}]")} AS cos_trunc
     FROM q JOIN v c ON q.vec_id <> c.vec_id
 ), truth AS (
     SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id, row_number() OVER (
-            PARTITION BY query_id ORDER BY cos_full DESC, neighbor_id
-        ) AS rn FROM pairs
+        SELECT query_id, neighbor_id, {_query_rank_sql("cos_full DESC, neighbor_id")} AS rn
+        FROM pairs
     ) WHERE rn <= {MRL_TOP_K}
 ), trunc AS (
     SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id, row_number() OVER (
-            PARTITION BY query_id ORDER BY cos_trunc DESC, neighbor_id
-        ) AS rn FROM pairs
+        SELECT query_id, neighbor_id, {_query_rank_sql("cos_trunc DESC, neighbor_id")} AS rn
+        FROM pairs
     ) WHERE rn <= {MRL_TOP_K}
 )
 SELECT
@@ -1821,36 +1723,22 @@ def q_matryoshka_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "knn_label_accuracy",
     oracle=f"""
-WITH v AS (
-    SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings
-    WHERE embedding IS NOT NULL AND len(embedding) = 64
-), q AS (
-    SELECT * FROM v WHERE vec_id < {N_QUERIES}
-), pairs AS (
+WITH v AS ({_vectors_sql("label")}), q AS ({_QUERIES_SQL}), pairs AS (
     SELECT
         q.vec_id AS query_id,
         c.vec_id AS neighbor_id,
         c.label  AS nbr_label,
-        round(
-            list_inner_product(q.e, c.e)
-            / (sqrt(list_inner_product(q.e, q.e))
-               * sqrt(list_inner_product(c.e, c.e))),
-            6
-        ) AS cos_sim
+        {cosine6_sql("q.e", "c.e")} AS cos_sim
     FROM q JOIN v c ON q.vec_id <> c.vec_id
 ), top AS (
     SELECT query_id, nbr_label FROM (
-        SELECT query_id, nbr_label, row_number() OVER (
-            PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id
-        ) AS rn FROM pairs
+        SELECT query_id, nbr_label, {_query_rank_sql()} AS rn FROM pairs
     ) WHERE rn <= {TOP_K}
 ), votes AS (
     SELECT query_id, nbr_label, count(*) AS n_votes FROM top GROUP BY 1, 2
 ), predicted AS (
     SELECT query_id, nbr_label AS predicted_label, n_votes FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY query_id ORDER BY n_votes DESC, nbr_label
-        ) AS rn FROM votes
+        SELECT *, {_query_rank_sql("n_votes DESC, nbr_label")} AS rn FROM votes
     ) WHERE rn = 1
 )
 SELECT
@@ -1976,44 +1864,27 @@ def _mmr_sel_sql() -> str:
 @query(
     "mmr_diversified_topk",
     oracle=f"""
-WITH v AS (
-    SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
-    WHERE embedding IS NOT NULL AND len(embedding) = 64
-), q AS (
-    SELECT * FROM v WHERE vec_id < {N_QUERIES}
-), pairs AS (
+WITH v AS ({_vectors_sql()}), q AS ({_QUERIES_SQL}), pairs AS (
     SELECT
         q.vec_id AS query_id,
         c.vec_id AS nid,
-        CAST(round(round(
-            list_inner_product(q.e, c.e)
-            / (sqrt(list_inner_product(q.e, q.e))
-               * sqrt(list_inner_product(c.e, c.e))), 6) * 1000000)
-            AS BIGINT) AS rel
+        CAST(round({cosine6_sql("q.e", "c.e")} * 1000000) AS BIGINT) AS rel
     FROM q JOIN v c ON q.vec_id <> c.vec_id
 ), cands AS MATERIALIZED (
     SELECT query_id, nid, rel FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY query_id ORDER BY rel DESC, nid
-        ) AS rn FROM pairs
+        SELECT *, {_query_rank_sql("rel DESC, nid")} AS rn FROM pairs
     ) WHERE rn <= {MMR_CAND}
 ), sims AS MATERIALIZED (
     SELECT
         c1.query_id, c1.nid AS a, c2.nid AS b,
-        CAST(round(round(
-            list_inner_product(va.e, vb.e)
-            / (sqrt(list_inner_product(va.e, va.e))
-               * sqrt(list_inner_product(vb.e, vb.e))), 6) * 1000000)
-            AS BIGINT) AS s
+        CAST(round({cosine6_sql("va.e", "vb.e")} * 1000000) AS BIGINT) AS s
     FROM cands c1
     JOIN cands c2 ON c2.query_id = c1.query_id AND c2.nid <> c1.nid
     JOIN v va ON va.vec_id = c1.nid
     JOIN v vb ON vb.vec_id = c2.nid
 ), sel1 AS MATERIALIZED (
     SELECT query_id, nid, rel, CAST(0 AS BIGINT) AS pen, 1 AS rk FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY query_id ORDER BY rel DESC, nid
-        ) AS rn FROM cands
+        SELECT *, {_query_rank_sql("rel DESC, nid")} AS rn FROM cands
     ) WHERE rn = 1
 ){_mmr_sel_sql()}
 SELECT
@@ -2140,29 +2011,31 @@ _PQ_SUBDIM = 16  # dims per subspace (4 x 16 = the fixture's 64)
 _PQ_K = 8        # codewords per subspace codebook
 _PQ_TOPK = 5
 
-# one per-subspace Lloyd stage in DuckDB: integer (rounded) centroids from
-# `{src}`'s {lab} labels, then the exact-integer argmin re-assignment of
-# every subvector
-_PQ_STAGE_SQL = """
+# ``_pq_int_dist`` in DuckDB, from subvector ``s.sv`` to codeword ``c.c_arr``
+_PQ_DIST_SQL = (
+    "CAST(list_aggregate(list_transform(list_zip(s.sv, c.c_arr), "
+    "p -> (p[1] - p[2]) * (p[1] - p[2])), 'sum') AS BIGINT)"
+)
+
+
+def _pq_stage_sql(i: int, src: str, lab: str) -> str:
+    """One per-subspace Lloyd stage in DuckDB: integer (rounded) centroids
+    ``cents{i}`` from ``src``'s ``lab`` labels, then the exact-integer
+    argmin re-assignment ``assign{i}`` of every subvector."""
+    return f"""
 , cents{i} AS (
     SELECT sub, lab, list(c ORDER BY dim) AS c_arr
     FROM (
         SELECT sub, {lab} AS lab, u.i AS dim,
                CAST(round(CAST(sum(sv[u.i]) AS DOUBLE) / count(*)) AS BIGINT) AS c
-        FROM {src}, LATERAL unnest(generate_series(1, {subdim})) u(i)
+        FROM {src}, LATERAL unnest(generate_series(1, {_PQ_SUBDIM})) u(i)
         GROUP BY 1, 2, 3
     ) GROUP BY 1, 2
 ), assign{i} AS (
     SELECT vec_id, sub, sv, lab AS lab{i}
     FROM (
         SELECT s.vec_id, s.sub, s.sv, c.lab,
-               row_number() OVER (
-                   PARTITION BY s.vec_id, s.sub
-                   ORDER BY CAST(list_aggregate(
-                       list_transform(list_zip(s.sv, c.c_arr),
-                                      p -> (p[1] - p[2]) * (p[1] - p[2])),
-                       'sum') AS BIGINT), c.lab
-               ) AS rn
+               row_number() OVER (PARTITION BY s.vec_id, s.sub ORDER BY {_PQ_DIST_SQL}, c.lab) AS rn
         FROM subv s JOIN cents{i} c ON c.sub = s.sub
     ) WHERE rn = 1
 )
@@ -2259,13 +2132,7 @@ def pq_train_codebook(subv: DataFrame) -> DataFrame:
 # the shared training prefix: q4 scaling -> subspace slicing -> seeding ->
 # two Lloyd stages.  Reused verbatim by the streaming encoder's oracle so
 # batch search and stream encoding provably share one codebook definition.
-_PQ_TRAIN_CTES = f"""q4 AS (
-    SELECT vec_id,
-           list_transform(embedding::DOUBLE[],
-                          x -> CAST(round(x * 10000) AS BIGINT)) AS v
-    FROM (SELECT * FROM embeddings
-          WHERE embedding IS NOT NULL AND len(embedding) = 64) embeddings
-), subv AS (
+_PQ_CODEBOOK_CTES = f"""subv AS (
     SELECT vec_id, u.sub,
            list_slice(v, u.sub * {_PQ_SUBDIM} + 1,
                       u.sub * {_PQ_SUBDIM} + {_PQ_SUBDIM}) AS sv
@@ -2273,8 +2140,12 @@ _PQ_TRAIN_CTES = f"""q4 AS (
 ), seeded AS (
     SELECT vec_id, sub, sv, vec_id % {_PQ_K} AS lab FROM subv
 )
-{_PQ_STAGE_SQL.format(i=1, src="seeded", lab="lab", subdim=_PQ_SUBDIM)}
-{_PQ_STAGE_SQL.format(i=2, src="assign1", lab="lab1", subdim=_PQ_SUBDIM)}"""
+{_pq_stage_sql(1, "seeded", "lab")}
+{_pq_stage_sql(2, "assign1", "lab1")}"""
+_PQ_TRAIN_CTES = f"""q4 AS (
+    SELECT vec_id, {_Q4_SQL} AS v
+    FROM {VALID_EMBEDDINGS_SQL} embeddings
+), {_PQ_CODEBOOK_CTES}"""
 
 
 def _pq_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -2302,9 +2173,15 @@ def _pq_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
 
 def _adc_topk(adc: DataFrame, k: int) -> DataFrame:
     """Each query's ``k`` smallest ADC distances (ties on neighbor_id),
-    ranked in ``rank``."""
+    ranked in ``rank``.  SQL twin: ``_adc_topk_sql``."""
     w = Window.partitionBy("query_id").orderBy("adc_dist_q8", "neighbor_id")
     return adc.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+
+
+def _adc_topk_sql(cols: str, k: int) -> str:
+    return f"""SELECT {cols} FROM (
+    SELECT *, {_query_rank_sql("adc_dist_q8, neighbor_id")} AS rn FROM adc
+) WHERE rn <= {k}"""
 
 
 def _pq_adc_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2328,11 +2205,7 @@ def _pq_adc_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQ_SEARCH_CTES = f"""codes AS (
     SELECT vec_id, sub, lab2 AS code FROM assign2
 ), dtab AS (
-    SELECT s.vec_id AS query_id, c.sub, c.lab AS code,
-           CAST(list_aggregate(
-               list_transform(list_zip(s.sv, c.c_arr),
-                              p -> (p[1] - p[2]) * (p[1] - p[2])),
-               'sum') AS BIGINT) AS d
+    SELECT s.vec_id AS query_id, c.sub, c.lab AS code, {_PQ_DIST_SQL} AS d
     FROM subv s JOIN cents2 c ON c.sub = s.sub
     WHERE s.vec_id < {N_QUERIES}
 ), adc AS (
@@ -2349,13 +2222,7 @@ _PQ_SEARCH_CTES = f"""codes AS (
     oracle=f"""
 WITH {_PQ_TRAIN_CTES}
 , {_PQ_SEARCH_CTES}
-SELECT query_id, neighbor_id, adc_dist_q8, CAST(rn AS INT) AS rank
-FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY adc_dist_q8, neighbor_id
-    ) AS rn FROM adc
-)
-WHERE rn <= {_PQ_TOPK}
+{_adc_topk_sql("query_id, neighbor_id, adc_dist_q8, CAST(rn AS INT) AS rank", _PQ_TOPK)}
 """,
 )
 def q_embedding_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2402,34 +2269,10 @@ _PQ_SHORTLIST = 20
 WITH {_PQ_TRAIN_CTES}
 , {_PQ_SEARCH_CTES}
 , vv AS (
-    SELECT vec_id, embedding::DOUBLE[] AS e FROM (
-        SELECT * FROM embeddings
-        WHERE embedding IS NOT NULL AND len(embedding) = 64) embeddings
+    {_vectors_sql()}
 ), short AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY query_id ORDER BY adc_dist_q8, neighbor_id
-        ) AS rn FROM adc
-    ) WHERE rn <= {_PQ_SHORTLIST}
-), pairs AS (
-    SELECT s.query_id, s.neighbor_id,
-           round(
-               list_inner_product(q.e, c.e)
-               / (sqrt(list_inner_product(q.e, q.e))
-                  * sqrt(list_inner_product(c.e, c.e))),
-               6
-           ) AS cos_sim
-    FROM short s
-    JOIN vv q ON q.vec_id = s.query_id
-    JOIN vv c ON c.vec_id = s.neighbor_id
-)
-SELECT query_id, neighbor_id, cos_sim, CAST(rn AS INT) AS rank
-FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id
-    ) AS rn FROM pairs
-)
-WHERE rn <= {_PQ_TOPK}
+    {_adc_topk_sql("query_id, neighbor_id", _PQ_SHORTLIST)}
+), {_rerank_topk_sql("short", _PQ_TOPK, "vv")}
 """,
 )
 def q_embedding_topk_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2462,42 +2305,14 @@ def q_embedding_topk_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # carries (v: q4-scaled longs, e: exact doubles) for both
 _IVF_ADC_ORACLE = f"""
 WITH q4 AS (
-    SELECT vec_id,
-           list_transform(embedding::DOUBLE[],
-                          x -> CAST(round(x * 10000) AS BIGINT)) AS v,
-           embedding::DOUBLE[] AS e
-    FROM (SELECT * FROM embeddings
-          WHERE embedding IS NOT NULL AND len(embedding) = 64) embeddings
-), subv AS (
-    SELECT vec_id, u.sub,
-           list_slice(v, u.sub * {_PQ_SUBDIM} + 1,
-                      u.sub * {_PQ_SUBDIM} + {_PQ_SUBDIM}) AS sv
-    FROM q4, LATERAL unnest(generate_series(0, {_PQ_M - 1})) u(sub)
-), seeded AS (
-    SELECT vec_id, sub, sv, vec_id % {_PQ_K} AS lab FROM subv
-)
-{_PQ_STAGE_SQL.format(i=1, src="seeded", lab="lab", subdim=_PQ_SUBDIM)}
-{_PQ_STAGE_SQL.format(i=2, src="assign1", lab="lab1", subdim=_PQ_SUBDIM)}
+    SELECT vec_id, {_Q4_SQL} AS v, embedding::DOUBLE[] AS e
+    FROM {VALID_EMBEDDINGS_SQL} embeddings
+), {_PQ_CODEBOOK_CTES}
 , iseeded AS (SELECT vec_id, vec_id % {_IVF_K} AS lab, v FROM q4)
-{_IVF_STAGE_SQL.format(i="i1", src="(SELECT vec_id, lab, v FROM iseeded)", lab="lab")}
-{_IVF_STAGE_SQL.format(
-    i="i2", src="(SELECT vec_id, labeli1 AS lab, v FROM assigni1)", lab="lab"
-)}
+{_ivf_stage_sql("i1", "(SELECT vec_id, lab, v FROM iseeded)")}
+{_ivf_stage_sql("i2", "(SELECT vec_id, labeli1 AS lab, v FROM assigni1)")}
 , probes AS (
-    SELECT vec_id AS query_id, c_label AS probe_label
-    FROM (
-        SELECT q4.vec_id, c.c_label,
-               row_number() OVER (
-                   PARTITION BY q4.vec_id
-                   ORDER BY CAST(list_aggregate(
-                       list_transform(
-                           list_zip(q4.v, c.s_arr),
-                           p -> (c.n * p[1] - p[2]) * (c.n * p[1] - p[2])
-                       ), 'sum') AS DOUBLE) / (c.n * c.n), c.c_label
-               ) AS rn
-        FROM q4, centsi2 c
-        WHERE q4.vec_id < {N_QUERIES}
-    ) WHERE rn <= {_IVF_NPROBE}
+    {_ivf_probes_sql("centsi2", _IVF_NPROBE)}
 ), cand AS (
     SELECT p.query_id, a.vec_id AS neighbor_id
     FROM probes p
@@ -2505,11 +2320,7 @@ WITH q4 AS (
 ), codes AS (
     SELECT vec_id, sub, lab2 AS code FROM assign2
 ), dtab AS (
-    SELECT s.vec_id AS query_id, c.sub, c.lab AS code,
-           CAST(list_aggregate(
-               list_transform(list_zip(s.sv, c.c_arr),
-                              p -> (p[1] - p[2]) * (p[1] - p[2])),
-               'sum') AS BIGINT) AS d
+    SELECT s.vec_id AS query_id, c.sub, c.lab AS code, {_PQ_DIST_SQL} AS d
     FROM subv s JOIN cents2 c ON c.sub = s.sub
     WHERE s.vec_id < {N_QUERIES}
 ), adc AS (
@@ -2520,30 +2331,8 @@ WITH q4 AS (
               AND t.sub = co.sub AND t.code = co.code
     GROUP BY 1, 2
 ), short AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY query_id ORDER BY adc_dist_q8, neighbor_id
-        ) AS rn FROM adc
-    ) WHERE rn <= {_PQ_SHORTLIST}
-), pairs AS (
-    SELECT s.query_id, s.neighbor_id,
-           round(
-               list_inner_product(q.e, c.e)
-               / (sqrt(list_inner_product(q.e, q.e))
-                  * sqrt(list_inner_product(c.e, c.e))),
-               6
-           ) AS cos_sim
-    FROM short s
-    JOIN q4 q ON q.vec_id = s.query_id
-    JOIN q4 c ON c.vec_id = s.neighbor_id
-)
-SELECT query_id, neighbor_id, cos_sim, CAST(rn AS INT) AS rank
-FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id
-    ) AS rn FROM pairs
-)
-WHERE rn <= {_PQ_TOPK}
+    {_adc_topk_sql("query_id, neighbor_id", _PQ_SHORTLIST)}
+), {_rerank_topk_sql("short", _PQ_TOPK, "q4")}
 """
 
 
@@ -2596,28 +2385,14 @@ _IVF_AUDIT_LEVELS = [1, 2, 4]
 _IVF_PROBE_AUDIT_ORACLE = f"""
 WITH {_IVF_TRAIN_SQL}
 , probes AS (
-    SELECT vec_id AS query_id, c_label AS probe_label, CAST(rn AS INT) AS lvl
-    FROM (
-        SELECT q4.vec_id, c.c_label,
-               row_number() OVER (
-                   PARTITION BY q4.vec_id
-                   ORDER BY CAST(list_aggregate(
-                       list_transform(
-                           list_zip(q4.v, c.s_arr),
-                           p -> (c.n * p[1] - p[2]) * (c.n * p[1] - p[2])
-                       ), 'sum') AS DOUBLE) / (c.n * c.n), c.c_label
-               ) AS rn
-        FROM q4, cents2 c
-        WHERE q4.vec_id < {N_QUERIES}
-    ) WHERE rn <= {max(_IVF_AUDIT_LEVELS)}
+    {_ivf_probes_sql("cents2", max(_IVF_AUDIT_LEVELS))}
 ), pcands AS (
-    SELECT p.query_id, a.vec_id AS neighbor_id, min(p.lvl) AS min_lvl
+    SELECT p.query_id, a.vec_id AS neighbor_id, CAST(min(p.rn) AS INT) AS min_lvl
     FROM probes p
     JOIN assign2 a ON a.label2 = p.probe_label AND a.vec_id <> p.query_id
     GROUP BY 1, 2
 ), bf AS (
-    {_ORACLE_PAIRS.format(n_queries=N_QUERIES, top_k=_IVF_TOPK,
-                          join_cond="q.vec_id <> c.vec_id")}
+    {_brute_force_topk_sql("q.vec_id <> c.vec_id", _IVF_TOPK)}
 ), lv AS (
     SELECT unnest({_IVF_AUDIT_LEVELS}) AS nprobe
 )
@@ -2678,7 +2453,7 @@ WITH base AS (
     SELECT vec_id, embedding,
            CASE WHEN vec_id % 2 = 0 THEN 'ref' ELSE 'cur' END AS half
     FROM embeddings
-    WHERE embedding IS NOT NULL AND len(embedding) = 64
+    WHERE {VALID_EMBEDDING_PRED}
 ), dims AS (
     SELECT half, u.pos AS d,
            CAST(sum(CAST(round(u.v * {_DRIFT_SCALE}) AS BIGINT)) AS BIGINT) AS s
@@ -2752,8 +2527,7 @@ def q_embedding_drift_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.select("half", F.posexplode("embedding").alias("d", "v"))
         .groupBy("half", "d")
         .agg(
-            F.sum(F.round(F.col("v").cast("double") * _DRIFT_SCALE, 0).cast("long"))
-            .alias("s")
+            F.sum(cents(F.col("v").cast("double"), _DRIFT_SCALE)).alias("s")
         )
     )
     halves = base.agg(
@@ -2805,7 +2579,7 @@ _FISHER_TOPK = 5
 WITH base AS (
     SELECT CASE WHEN label < 5 THEN 0 ELSE 1 END AS cls, embedding
     FROM embeddings
-    WHERE embedding IS NOT NULL AND len(embedding) = 64 AND label IS NOT NULL
+    WHERE {VALID_EMBEDDING_PRED} AND label IS NOT NULL
 ), dims AS (
     -- u.pos is 1-based in DuckDB's list_transform; Spark's posexplode is
     -- 0-based, and d is an OUTPUT column here
@@ -2873,7 +2647,7 @@ def q_fisher_discriminative_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("label") < 5, F.lit(0)).otherwise(F.lit(1)).alias("cls"),
         "embedding",
     )
-    comp = F.round(F.col("v").cast("double") * _FISHER_SCALE, 0).cast("long")
+    comp = cents(F.col("v").cast("double"), _FISHER_SCALE)
     dims = (
         base.select("cls", F.posexplode("embedding").alias("d", "v"))
         .groupBy("cls", "d")
@@ -2937,7 +2711,7 @@ WITH v AS (
            list_transform(embedding::DOUBLE[],
                           x -> CAST(round(x * {_OUTLIER_SCALE}) AS BIGINT)) AS y
     FROM embeddings
-    WHERE embedding IS NOT NULL AND len(embedding) = 64
+    WHERE {VALID_EMBEDDING_PRED}
 ), dims AS (
     SELECT u.i AS dim,
            CAST(count(*) AS BIGINT)        AS n,
@@ -2996,9 +2770,8 @@ def q_embedding_outlier_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = load_valid_embeddings(spark, sf_dir).select(
         "vec_id",
         "label",
-        F.expr(
-            f"transform(transform(embedding, x -> CAST(x AS DOUBLE)), "
-            f"x -> CAST(round(x * {_OUTLIER_SCALE}) AS BIGINT))"
+        F.transform(
+            to_double_array("embedding"), lambda x: cents(x, _OUTLIER_SCALE)
         ).alias("y"),
     )
     dims = (

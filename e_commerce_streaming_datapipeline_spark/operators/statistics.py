@@ -24,10 +24,13 @@ from e_commerce_streaming_datapipeline_spark.functions.checkpoints import round_
 from e_commerce_streaming_datapipeline_spark.functions.rounding import cents, cents_sum, fround
 from e_commerce_streaming_datapipeline_spark.functions.scalars import scalar_join
 from e_commerce_streaming_datapipeline_spark.functions.hashing import (
+    PRIME,
     hash_bucket,
     hash_bucket_sql,
     hash_half,
     hash_half_sql,
+    universal_hash,
+    universal_hash_sql,
 )
 from e_commerce_streaming_datapipeline_spark.plans.registry import query
 from e_commerce_streaming_datapipeline_spark.sources.batch import load_table
@@ -51,6 +54,25 @@ def _purchase_cents_rollup(events: DataFrame, key, key_name: str) -> DataFrame:
             cents_sum(F.coalesce(F.col("value"), F.lit(0.0))).alias("cents")
         )
     )
+
+
+def _daily_purchase_cents(events: DataFrame) -> DataFrame:
+    """``_purchase_cents_rollup`` by epoch day (``day_num``, days since
+    1970-01-01 UTC).  SQL twin: ``_daily_purchase_cents_sql``."""
+    return _purchase_cents_rollup(
+        events, F.floor(F.unix_timestamp("ts") / 86400).cast("long"), "day_num"
+    )
+
+
+def _daily_purchase_cents_sql(non_null_ts: bool = True) -> str:
+    """``_daily_purchase_cents`` as the body of a DuckDB CTE; callers whose
+    builder keeps NULL-ts purchases (a NULL ``day_num`` group) pass
+    ``non_null_ts=False``."""
+    ts_filter = " AND ts IS NOT NULL" if non_null_ts else ""
+    return f"""SELECT CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day_num,
+           sum(CAST(round(coalesce(value, 0) * 100) AS BIGINT)) AS cents
+    FROM events WHERE event_type = 'purchase'{ts_filter}
+    GROUP BY 1"""
 
 
 @query(
@@ -392,7 +414,6 @@ def q_attribution_linear_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _CMS_PARAMS = [(0, 40503, 7), (1, 67867, 911), (2, 104729, 3571), (3, 122949, 27361)]
-_CMS_P = 2_147_483_647
 _CMS_W = 256
 _CMS_THRESHOLD = 20
 
@@ -404,11 +425,23 @@ def _cms_bucket_structs(key_col: str) -> F.Column:
         *[
             F.struct(
                 F.lit(j).alias("j"),
-                ((F.col(key_col) * a + b) % _CMS_P % _CMS_W).alias("bkt"),
+                (universal_hash(F.col(key_col), a, b) % _CMS_W).alias("bkt"),
             )
             for j, a, b in _CMS_PARAMS
         ]
     )
+
+
+# the oracles' twin of _cms_bucket_structs: a ``params`` CTE of the hash
+# rows and each key's bucket in row ``p.j``
+_CMS_PARAMS_CTE = f"""params AS (
+    SELECT * FROM (VALUES {", ".join(f"({j}, {a}, {b})" for j, a, b in _CMS_PARAMS)})
+    t(j, a, b)
+)"""
+
+
+def _cms_bucket_sql(key: str) -> str:
+    return f"{universal_hash_sql(key, 'p.a', 'p.b')} % {_CMS_W}"
 
 
 def cms_cells(df: DataFrame, key_col: str) -> DataFrame:
@@ -423,12 +456,9 @@ def cms_cells(df: DataFrame, key_col: str) -> DataFrame:
 
 
 HEAVY_HITTERS_ORACLE = f"""
-WITH params AS (
-    SELECT * FROM (VALUES {", ".join(f"({j}, {a}, {b})" for j, a, b in _CMS_PARAMS)})
-    t(j, a, b)
-), cells AS (
+WITH {_CMS_PARAMS_CTE}, cells AS (
     SELECT p.j,
-           ((p.a * e.user_id + p.b) % {_CMS_P}) % {_CMS_W} AS bkt,
+           {_cms_bucket_sql("e.user_id")} AS bkt,
            count(*) AS c
     FROM events e, params p
     GROUP BY 1, 2
@@ -438,7 +468,7 @@ WITH params AS (
     SELECT x.user_id, min(c.c) AS cms_estimate
     FROM (
         SELECT u.user_id, p.j,
-               ((p.a * u.user_id + p.b) % {_CMS_P}) % {_CMS_W} AS bkt
+               {_cms_bucket_sql("u.user_id")} AS bkt
         FROM exact u, params p
     ) x
     JOIN cells c ON c.j = x.j AND c.bkt = x.bkt
@@ -1516,15 +1546,12 @@ def q_winsorized_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "join_size_cms_estimate",
     oracle=f"""
-WITH params AS (
-    SELECT * FROM (VALUES {", ".join(f"({j}, {a}, {b})" for j, a, b in _CMS_PARAMS)})
-    t(j, a, b)
-), cells_o AS (
-    SELECT p.j, ((p.a * o.o_orderkey + p.b) % {_CMS_P}) % {_CMS_W} AS bkt,
+WITH {_CMS_PARAMS_CTE}, cells_o AS (
+    SELECT p.j, {_cms_bucket_sql("o.o_orderkey")} AS bkt,
            count(*) AS c
     FROM orders o, params p GROUP BY 1, 2
 ), cells_l AS (
-    SELECT p.j, ((p.a * l.l_orderkey + p.b) % {_CMS_P}) % {_CMS_W} AS bkt,
+    SELECT p.j, {_cms_bucket_sql("l.l_orderkey")} AS bkt,
            count(*) AS c
     FROM lineitem l, params p GROUP BY 1, 2
 ), est AS (
@@ -1967,12 +1994,9 @@ def q_ab_test_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "revenue_theilsen_trend",
-    oracle="""
+    oracle=f"""
 WITH daily AS (
-    SELECT CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day_num,
-           sum(CAST(round(coalesce(value, 0) * 100) AS BIGINT)) AS cents
-    FROM events WHERE event_type = 'purchase'
-    GROUP BY 1
+    {_daily_purchase_cents_sql(non_null_ts=False)}
 ), slopes AS (
     SELECT (b.cents - a.cents) * 1.0 / ((b.day_num - a.day_num) * 100.0)
                AS slope
@@ -2009,9 +2033,7 @@ def q_revenue_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard remedy is repeated median regression on a day sample,
     same plan shape."""
     events = load_table(spark, "events", sf_dir)
-    daily = _purchase_cents_rollup(
-        events, F.floor(F.unix_timestamp("ts") / 86400).cast("long"), "day_num"
-    )
+    daily = _daily_purchase_cents(events)
     a = daily.select(F.col("day_num").alias("da"), F.col("cents").alias("ca"))
     b = daily.select(F.col("day_num").alias("db"), F.col("cents").alias("cb"))
     slopes = a.join(b, F.col("db") > F.col("da")).select(
@@ -2039,12 +2061,9 @@ def q_revenue_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "weekday_seasonality",
-    oracle="""
+    oracle=f"""
 WITH daily AS (
-    SELECT CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day_num,
-           sum(CAST(round(coalesce(value, 0) * 100) AS BIGINT)) AS cents
-    FROM events WHERE event_type = 'purchase'
-    GROUP BY 1
+    {_daily_purchase_cents_sql(non_null_ts=False)}
 ), tagged AS (
     -- epoch day 0 (1970-01-01) was a Thursday: weekday = (day_num + 4) % 7
     -- with 0 = Sunday, engine-independent integer arithmetic (no locale-
@@ -2079,9 +2098,7 @@ def q_weekday_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     Sunday) rather than dayofweek()/strftime — locale- and engine-
     independent by construction."""
     events = load_table(spark, "events", sf_dir)
-    daily = _purchase_cents_rollup(
-        events, F.floor(F.unix_timestamp("ts") / 86400).cast("long"), "day_num"
-    )
+    daily = _daily_purchase_cents(events)
     per_wd = (
         daily.select(
             F.pmod(F.col("day_num") + 4, F.lit(7)).alias("weekday"), "cents"
@@ -2224,12 +2241,9 @@ def q_histogram_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "revenue_cusum_changepoints",
-    oracle="""
+    oracle=f"""
 WITH daily AS (
-    SELECT CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day_num,
-           sum(CAST(round(coalesce(value, 0) * 100) AS BIGINT)) AS cents
-    FROM events WHERE event_type = 'purchase'
-    GROUP BY 1
+    {_daily_purchase_cents_sql(non_null_ts=False)}
 ), tot AS (
     SELECT sum(cents) AS t_cents, count(*) AS n_days FROM daily
 ), dev AS (
@@ -2276,9 +2290,7 @@ def q_revenue_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue query shares), so the single-partition ordered pass is over
     ~365 rows/year, not events."""
     events = load_table(spark, "events", sf_dir)
-    daily = _purchase_cents_rollup(
-        events, F.floor(F.unix_timestamp("ts") / 86400).cast("long"), "day_num"
-    )
+    daily = _daily_purchase_cents(events)
     tot = daily.agg(F.sum("cents").alias("t_cents"), F.count("*").alias("n_days"))
     run = Window.orderBy("day_num").rowsBetween(Window.unboundedPreceding, 0)
     d = (
@@ -2433,12 +2445,9 @@ def q_bootstrap_revenue_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "forecast_backtest_snaive",
-    oracle="""
+    oracle=f"""
 WITH daily AS (
-    SELECT CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day_num,
-           sum(CAST(round(coalesce(value, 0) * 100) AS BIGINT)) AS cents
-    FROM events WHERE event_type = 'purchase' AND ts IS NOT NULL
-    GROUP BY 1
+    {_daily_purchase_cents_sql()}
 ), forecasted AS (
     SELECT day_num, cents,
            lag(cents, 7) OVER (ORDER BY day_num) AS fc
@@ -2473,9 +2482,7 @@ def q_forecast_backtest_snaive(spark: SparkSession, sf_dir: str) -> DataFrame:
     (model output joined on day) and keeps this exact scoring harness —
     the backtest is the operator, the model is data."""
     events = load_table(spark, "events", sf_dir).where(F.col("ts").isNotNull())
-    daily = _purchase_cents_rollup(
-        events, F.floor(F.unix_timestamp("ts") / 86400).cast("long"), "day_num"
-    )
+    daily = _daily_purchase_cents(events)
     fc = daily.withColumn("fc", F.lag("cents", 7).over(Window.orderBy("day_num")))
     scored = fc.where(F.col("fc").isNotNull()).select(
         F.floor(F.col("day_num") / 7).cast("long").alias("week_num"),
@@ -3574,12 +3581,9 @@ def q_cuped_did_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "quantile_pinball_backtest",
-    oracle="""
+    oracle=f"""
 WITH daily AS (
-    SELECT CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day_num,
-           sum(CAST(round(coalesce(value, 0) * 100) AS BIGINT)) AS cents
-    FROM events WHERE event_type = 'purchase' AND ts IS NOT NULL
-    GROUP BY 1
+    {_daily_purchase_cents_sql()}
 ), hist AS (
     SELECT day_num, cents,
            list_sort(list(cents) OVER (
@@ -3624,9 +3628,7 @@ def q_quantile_pinball_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the trailing-window order statistics, quantile-grid explode (3
     literals), and loss aggregation all run over #days rows."""
     events = load_table(spark, "events", sf_dir).where(F.col("ts").isNotNull())
-    daily = _purchase_cents_rollup(
-        events, F.floor(F.unix_timestamp("ts") / 86400).cast("long"), "day_num"
-    )
+    daily = _daily_purchase_cents(events)
     w14 = Window.orderBy("day_num").rowsBetween(-14, -1)
     hist = daily.withColumn("h", F.sort_array(F.collect_list("cents").over(w14)))
     scorable = hist.where(F.size("h") == 14)
@@ -3663,12 +3665,9 @@ def q_quantile_pinball_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "holt_forecast_backtest",
-    oracle="""
+    oracle=f"""
 WITH RECURSIVE daily AS (
-    SELECT CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day_num,
-           sum(CAST(round(coalesce(value, 0) * 100) AS BIGINT)) AS cents
-    FROM events WHERE event_type = 'purchase' AND ts IS NOT NULL
-    GROUP BY 1
+    {_daily_purchase_cents_sql()}
 ), seq AS (
     SELECT cents, row_number() OVER (ORDER BY day_num) AS rn FROM daily
 ), r AS (
@@ -3716,9 +3715,7 @@ def q_holt_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential time-series state should meet a distributed engine:
     distribute the rollup, not the recurrence."""
     events = load_table(spark, "events", sf_dir).where(F.col("ts").isNotNull())
-    daily = _purchase_cents_rollup(
-        events, F.floor(F.unix_timestamp("ts") / 86400).cast("long"), "day_num"
-    )
+    daily = _daily_purchase_cents(events)
     arr = daily.agg(
         F.sort_array(F.collect_list(F.struct("day_num", "cents"))).alias("arr")
     )
@@ -4176,12 +4173,9 @@ def q_pr_curve_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "seasonal_decompose_daily",
-    oracle="""
+    oracle=f"""
 WITH daily AS (
-    SELECT CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day_num,
-           sum(CAST(round(coalesce(value, 0) * 100) AS BIGINT)) AS cents
-    FROM events WHERE event_type = 'purchase' AND ts IS NOT NULL
-    GROUP BY 1
+    {_daily_purchase_cents_sql()}
 ), trended AS (
     SELECT day_num, cents,
            count(*) OVER w7 AS n7,
@@ -4225,9 +4219,7 @@ def q_seasonal_decompose_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily grain; the centered window, weekday means, and the final join
     all run over #days rows."""
     events = load_table(spark, "events", sf_dir).where(F.col("ts").isNotNull())
-    daily = _purchase_cents_rollup(
-        events, F.floor(F.unix_timestamp("ts") / 86400).cast("long"), "day_num"
-    )
+    daily = _daily_purchase_cents(events)
     w7 = Window.orderBy("day_num").rowsBetween(-3, 3)
     trended = daily.select(
         "day_num",
@@ -4263,12 +4255,9 @@ def q_seasonal_decompose_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "residual_anomaly_days",
-    oracle="""
+    oracle=f"""
 WITH daily AS (
-    SELECT CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day_num,
-           sum(CAST(round(coalesce(value, 0) * 100) AS BIGINT)) AS cents
-    FROM events WHERE event_type = 'purchase' AND ts IS NOT NULL
-    GROUP BY 1
+    {_daily_purchase_cents_sql()}
 ), trended AS (
     SELECT day_num, cents,
            count(*) OVER w7 AS n7,
@@ -4333,9 +4322,7 @@ def q_residual_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily rollup runs on #days rows; the two order statistics are the
     `conformal_interval` rank discipline."""
     events = load_table(spark, "events", sf_dir).where(F.col("ts").isNotNull())
-    daily = _purchase_cents_rollup(
-        events, F.floor(F.unix_timestamp("ts") / 86400).cast("long"), "day_num"
-    )
+    daily = _daily_purchase_cents(events)
     w7 = Window.orderBy("day_num").rowsBetween(-3, 3)
     trended = daily.select(
         "day_num",
@@ -4408,21 +4395,17 @@ def q_residual_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- KMV (k-minimum-values / theta) sketch: distinct counts AND set overlap --
 
 _KMV_K = 64
-_KMV_P = 2147483647  # Mersenne prime 2^31 - 1 (shared with the Bloom filter)
 _KMV_A, _KMV_B = 2654435761, 97
-_KMV_SCALE = (_KMV_K - 1) * _KMV_P  # (k-1)*P as one BIGINT literal (int32 would overflow)
+_KMV_SCALE = (_KMV_K - 1) * PRIME  # (k-1)*P as one BIGINT literal (int32 would overflow)
 
 
 def _kmv_hash(col):
-    """Universal hash onto [1, P]: ((u mod P) * a + b) mod P, then +1 so the
-    estimator's divisor can never be 0.  Every product stays below
-    (P-1)*a < 2^63 — exact BIGINT arithmetic on both engines."""
-    return F.pmod(
-        F.pmod(col, F.lit(_KMV_P)) * F.lit(_KMV_A) + F.lit(_KMV_B), F.lit(_KMV_P)
-    ) + 1
+    """Universal hash onto [1, P], P = 2^31 - 1: ``universal_hash`` + 1, so
+    the estimator's divisor can never be 0."""
+    return universal_hash(col, _KMV_A, _KMV_B) + 1
 
 
-_KMV_HASH_SQL = f"((((user_id % {_KMV_P}) * {_KMV_A} + {_KMV_B}) % {_KMV_P}) + 1)"
+_KMV_HASH_SQL = f"({universal_hash_sql('user_id', _KMV_A, _KMV_B)} + 1)"
 
 
 @query(
@@ -5548,10 +5531,7 @@ _HW_PERIOD = 7  # weekly seasonality over the daily revenue series
     "holt_winters_backtest",
     oracle=f"""
 WITH RECURSIVE daily AS (
-    SELECT CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day_num,
-           sum(CAST(round(coalesce(value, 0) * 100) AS BIGINT)) AS cents
-    FROM events WHERE event_type = 'purchase' AND ts IS NOT NULL
-    GROUP BY 1
+    {_daily_purchase_cents_sql()}
 ), seq AS (
     SELECT cents, row_number() OVER (ORDER BY day_num) AS rn FROM daily
 ), r AS (
@@ -5616,9 +5596,7 @@ def q_holt_winters_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (distribute the rollup, not the recurrence — the Holt twin's
     argument, unchanged by the larger state)."""
     events = load_table(spark, "events", sf_dir).where(F.col("ts").isNotNull())
-    daily = _purchase_cents_rollup(
-        events, F.floor(F.unix_timestamp("ts") / 86400).cast("long"), "day_num"
-    )
+    daily = _daily_purchase_cents(events)
     arr = daily.agg(
         F.sort_array(F.collect_list(F.struct("day_num", "cents"))).alias("arr")
     )

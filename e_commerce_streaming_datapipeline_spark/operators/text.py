@@ -17,6 +17,11 @@ from e_commerce_streaming_datapipeline_spark.functions.checkpoints import round_
 from e_commerce_streaming_datapipeline_spark.functions.rounding import fround
 
 from e_commerce_streaming_datapipeline_spark.functions.scalars import bounded_cross_join, scalar_join
+from e_commerce_streaming_datapipeline_spark.operators.dedup import (
+    MIN_SHINGLE_FP_SQL,
+    SHINGLE_K,
+    min_shingle_fp,
+)
 from e_commerce_streaming_datapipeline_spark.plans.registry import query
 from e_commerce_streaming_datapipeline_spark.sources.batch import load_table
 
@@ -154,38 +159,15 @@ def q_token_count_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _min_shingle_fp():
-    """Winnowing-style min-shingle fingerprint over the pre-projected token
-    array column ``toks``: min of md5 over all word 3-shingles.  The token
-    array must be projected ONCE per row — an inline split(text) inside the
-    lambda re-evaluates per shingle position (O(n_tokens^2) per doc).
-    Shared by ``doc_fingerprints`` and ``corpus_quality_filter`` so the
-    dedup-key definition cannot drift between the two."""
-    return F.array_min(
-        F.expr(
-            "transform(sequence(0, size(toks) - 3), "
-            "i -> md5(concat_ws(' ', toks[i], toks[i+1], toks[i+2])))"
-        )
-    )
-
-
 @query(
     "doc_fingerprints",
-    oracle="""
+    oracle=f"""
 SELECT
     doc_id,
     substr(md5(text), 1, 16) AS content_fp,
-    list_aggregate(
-        list_transform(
-            generate_series(1, len(string_split(text, ' ')) - 2),
-            i -> md5(string_split(text, ' ')[i] || ' ' ||
-                     string_split(text, ' ')[i + 1] || ' ' ||
-                     string_split(text, ' ')[i + 2])
-        ),
-        'min'
-    ) AS min_shingle_fp
+    {MIN_SHINGLE_FP_SQL} AS min_shingle_fp
 FROM documents
-WHERE len(string_split(text, ' ')) >= 3
+WHERE len(string_split(text, ' ')) >= {SHINGLE_K}
 """,
 )
 def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -195,7 +177,7 @@ def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir).withColumn(
         "toks", F.split(F.col("text"), " ")
     )
-    min_shingle = _min_shingle_fp()
+    min_shingle = min_shingle_fp()
     return (
         docs.where(F.size(F.col("toks")) >= 3)
         .select(
@@ -267,22 +249,16 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "corpus_quality_filter",
-    oracle="""
+    oracle=f"""
 WITH stats AS (
     SELECT
         doc_id, lang,
         CAST(len(string_split(text, ' ')) AS INT) AS n_tokens,
         len(list_distinct(string_split(text, ' ')))
             / len(string_split(text, ' ')) AS ttr,
-        list_aggregate(
-            list_transform(
-                generate_series(1, len(string_split(text, ' ')) - 2),
-                i -> md5(string_split(text, ' ')[i] || ' ' ||
-                         string_split(text, ' ')[i + 1] || ' ' ||
-                         string_split(text, ' ')[i + 2])
-            ), 'min') AS fp
+        {MIN_SHINGLE_FP_SQL} AS fp
     FROM documents
-    WHERE len(string_split(text, ' ')) >= 3
+    WHERE len(string_split(text, ' ')) >= {SHINGLE_K}
 ), filtered AS (
     SELECT * FROM stats WHERE n_tokens BETWEEN 30 AND 90 AND ttr >= 0.35
 )
@@ -308,7 +284,7 @@ def q_corpus_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "toks", F.split(F.col("text"), " ")
     )
     toks = F.col("toks")
-    min_shingle = _min_shingle_fp()
+    min_shingle = min_shingle_fp()
     stats = (
         docs.where(F.size(toks) >= 3)
         .select(

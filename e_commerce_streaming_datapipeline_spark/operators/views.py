@@ -18,8 +18,8 @@ from pyspark.sql import functions as F
 from e_commerce_streaming_datapipeline_spark.functions.rounding import decimal_avg, fround
 
 from e_commerce_streaming_datapipeline_spark.operators.dropoff import dropoff_analysis
-from e_commerce_streaming_datapipeline_spark.operators.gmv import gmv_tumbling
-from e_commerce_streaming_datapipeline_spark.operators.payment import payment_metrics
+from e_commerce_streaming_datapipeline_spark.operators.gmv import _GMV_ORACLE_AGGS, gmv_tumbling
+from e_commerce_streaming_datapipeline_spark.operators.payment import PAYMENT_TYPE_SQL, payment_metrics
 from e_commerce_streaming_datapipeline_spark.functions.scalars import scalar_join
 from e_commerce_streaming_datapipeline_spark.plans.registry import query
 from e_commerce_streaming_datapipeline_spark.sources.batch import load_table
@@ -27,18 +27,12 @@ from e_commerce_streaming_datapipeline_spark.sources.batch import load_table
 
 @query(
     "latest_gmv_windows",
-    oracle="""
+    oracle=f"""
 SELECT * FROM (
     SELECT
         date_trunc('hour', ts)                     AS window_start,
         date_trunc('hour', ts) + INTERVAL '1 hour' AS window_end,
-        round(sum(value), 2)                       AS gmv,
-        count(*)                                   AS item_count,
-        count(DISTINCT user_id)                    AS unique_buyers,
-        round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) / count(value), 2)
-                                                   AS avg_item_price,
-        round(max(value), 2)                       AS max_item_price,
-        round(min(value), 2)                       AS min_item_price
+        {_GMV_ORACLE_AGGS}
     FROM events WHERE event_type = 'purchase' GROUP BY 1, 2
 ) ORDER BY window_start DESC LIMIT 24
 """,
@@ -53,10 +47,9 @@ def q_latest_gmv_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "payment_rollup",
-    oracle="""
+    oracle=f"""
 WITH typed AS (
-    SELECT *, ['credit_card', 'boleto', 'voucher', 'debit_card']
-        [(((CAST(props->>'$.k' AS BIGINT) % 4) + 4) % 4) + 1] AS payment_type  -- positive mod, matching Spark's pmod for negative k
+    SELECT *, {PAYMENT_TYPE_SQL} AS payment_type
     FROM events
 )
 SELECT

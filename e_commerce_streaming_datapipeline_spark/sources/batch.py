@@ -158,14 +158,19 @@ def load_valid_embeddings(spark: SparkSession, sf_dir: str | None = None) -> Dat
     a job-killing DIVIDE_BY_ZERO, and the Arrow kernels cannot reshape a
     ragged batch.  Dropped EXPLICITLY here, once, for the whole similarity/
     dedup/quantize family; every family oracle mirrors the gate with
-    ``WHERE embedding IS NOT NULL AND len(embedding) = 64`` (pinned by the
-    embeddings-edge fixture test).  At 100 TB this filter is a map-side
-    predicate on the scan — production pipelines gate malformed vectors at
-    ingest for exactly this reason."""
+    ``VALID_EMBEDDINGS_SQL`` (pinned by the embeddings-edge fixture test).
+    At 100 TB this filter is a map-side predicate on the scan — production
+    pipelines gate malformed vectors at ingest for exactly this reason."""
     df = load_table(spark, "embeddings", sf_dir)
     return df.where(
         F.col("embedding").isNotNull() & (F.size("embedding") == EMBED_DIM)
     )
+
+
+# the oracles' twin of load_valid_embeddings: the predicate, and the gated
+# table as a subquery
+VALID_EMBEDDING_PRED = f"embedding IS NOT NULL AND len(embedding) = {EMBED_DIM}"
+VALID_EMBEDDINGS_SQL = f"(SELECT * FROM embeddings WHERE {VALID_EMBEDDING_PRED})"
 
 
 def load_tables(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:

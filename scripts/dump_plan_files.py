@@ -1,5 +1,10 @@
 """Dump `.explain("formatted")` for registry queries to <out>/<q>_<tag>.txt.
 
+Each query's DuckDB oracle SQL, when it has one, goes beside its plan in
+<out>/<q>_<tag>.sql with ``--`` comments stripped and whitespace collapsed
+(runs of whitespace become one space; none is kept next to a parenthesis
+or a comma), so the same ``diff -r`` checks both plans and oracles.
+
 Usage:
     python scripts/dump_plan_files.py before q1 q2 ...
     python scripts/dump_plan_files.py after  q1 q2 ...
@@ -61,6 +66,16 @@ def normalize_plan(plan: str) -> str:
     return plan
 
 
+_SQL_COMMENT = re.compile(r"--[^\n]*")
+_SQL_SPACE_AROUND = re.compile(r"\s*([(),])\s*")
+
+
+def normalize_sql(sql: str) -> str:
+    """An oracle's text without comments and with whitespace collapsed."""
+    sql = " ".join(_SQL_COMMENT.sub("", sql).split())
+    return _SQL_SPACE_AROUND.sub(r"\1", sql) + "\n"
+
+
 def main() -> None:
     from e_commerce_streaming_datapipeline_spark.plans.registry import all_queries
     from e_commerce_streaming_datapipeline_spark.session import get_spark
@@ -80,6 +95,9 @@ def main() -> None:
     registry = all_queries()
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     for name in args.names or list(registry):
+        if registry[name].oracle is not None:
+            sql_path = args.out / f"{name}_{args.tag}.sql"
+            sql_path.write_text(normalize_sql(registry[name].oracle))
         df = registry[name].builder(spark, SF_DIR)
         plan = normalize_plan(df._jdf.queryExecution().explainString(mode))
         path = args.out / f"{name}_{args.tag}.txt"

@@ -30,11 +30,29 @@ def test_fround_matches_duckdb_on_halves(spark):
     assert got == expected
 
 
-def _inline_fixed_point_sites(package: Path) -> list[str]:
-    """``round(<expr> * 10^k[, 0]).cast("long")`` outside the kernel."""
-    powers_of_ten = {10**k for k in range(1, 19)}
+def _literal_text(node: ast.AST) -> str:
+    """A string literal's text, an f-string's with ``{}`` for each
+    placeholder; "" for any other node."""
+    if isinstance(node, ast.Constant) and isinstance(node.value, str):
+        return node.value
+    if isinstance(node, ast.JoinedStr):
+        return "".join(v.value if isinstance(v, ast.Constant) else "{}" for v in node.values)
+    return ""
 
-    def is_power_of_ten(node: ast.AST) -> bool:
+
+def _inline_fixed_point_sites(package: Path) -> list[str]:
+    """``round(<expr> * <scale>[, 0]).cast("long")`` outside the kernel,
+    where the scale is a power-of-ten literal or a module constant
+    (``_SCALE``), and its SQL spelling ``CAST(round(x * s) AS BIGINT)``
+    inside an ``F.expr`` string."""
+    import re
+
+    powers_of_ten = {10**k for k in range(1, 19)}
+    sql_copy = re.compile(r"CAST\(\s*round\([^()]*\*[^()]*\)\s*AS\s+BIGINT\)", re.I)
+
+    def is_scale(node: ast.AST) -> bool:
+        if isinstance(node, ast.Name):
+            return node.id.lstrip("_").isupper()
         return (
             isinstance(node, ast.Constant)
             and type(node.value) is int
@@ -46,10 +64,15 @@ def _inline_fixed_point_sites(package: Path) -> list[str]:
         if path.relative_to(package).as_posix() == "functions/rounding.py":
             continue
         for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call) or not isinstance(node.func, ast.Attribute):
+                continue
+            if node.func.attr == "expr" and any(
+                sql_copy.search(_literal_text(arg)) for arg in node.args
+            ):
+                sites.append(f"{path.relative_to(package)}:{node.lineno}")
+                continue
             if not (
-                isinstance(node, ast.Call)
-                and isinstance(node.func, ast.Attribute)
-                and node.func.attr == "cast"
+                node.func.attr == "cast"
                 and node.args
                 and isinstance(node.args[0], ast.Constant)
                 and node.args[0].value in ("long", "bigint")
@@ -65,7 +88,7 @@ def _inline_fixed_point_sites(package: Path) -> list[str]:
                 continue
             product = rounded.args[0]
             if isinstance(product, ast.BinOp) and isinstance(product.op, ast.Mult) and (
-                is_power_of_ten(product.left) or is_power_of_ten(product.right)
+                is_scale(product.left) or is_scale(product.right)
             ):
                 sites.append(f"{path.relative_to(package)}:{node.lineno}")
     return sites
@@ -81,11 +104,76 @@ def test_fixed_point_lives_in_one_kernel(tmp_path):
 
     package = Path(pkg.__file__).resolve().parent
     assert _inline_fixed_point_sites(package) == []
-    # the scan sees a planted multi-line copy
+    # the scan sees a planted multi-line copy, a named-scale copy and an
+    # F.expr copy
     (tmp_path / "m.py").write_text(
         'x = F.round(\n    F.col("v")\n    * 1_000_000,\n    0,\n).cast("long")\n'
+        'y = F.round(e * _PC_Q, 0).cast("long")\n'
+        'z = F.expr(f"transform(e, x -> CAST(round(x * {_S}) AS BIGINT))")\n'
     )
-    assert _inline_fixed_point_sites(tmp_path) == ["m.py:1"]
+    assert _inline_fixed_point_sites(tmp_path) == ["m.py:1", "m.py:6", "m.py:7"]
+
+
+# relations the DuckDB oracles share, each spelled once as a SQL fragment
+# beside the builder kernel it mirrors: pattern -> the owner module
+_ORACLE_FRAGMENTS = {
+    r"len\(embedding\) = ": "sources/batch.py",  # the vector input gate
+    r"sqrt\(list_inner_product\(": "functions/vector.py",  # norm and 6dp cosine
+    r"PARTITION BY query_id ORDER BY": "operators/similarity.py",  # per-query rank
+    r"string_split\(text, ' '\)\[i": "operators/dedup.py",  # word shingles
+    r"floor\(epoch\(ts\) / 86400\)": "operators/statistics.py",  # epoch-day cents
+    r"'image', 'audio'": "operators/multimodal.py",  # the modality list
+}
+
+
+def _oracle_fragment_copies(package: Path) -> list[str]:
+    """Every string-literal occurrence of an ``_ORACLE_FRAGMENTS`` pattern
+    except one in its owner module."""
+    import re
+
+    hits: dict[str, list[tuple[str, int]]] = {p: [] for p in _ORACLE_FRAGMENTS}
+    for path in sorted(package.rglob("*.py")):
+        rel = path.relative_to(package).as_posix()
+        tree = ast.parse(path.read_text())
+        parts = {id(v) for n in ast.walk(tree) if isinstance(n, ast.JoinedStr) for v in n.values}
+        for node in ast.walk(tree):
+            text = _literal_text(node)
+            if not text or id(node) in parts:
+                continue
+            for pattern in hits:
+                hits[pattern] += [(rel, node.lineno)] * len(re.findall(pattern, text))
+    sites = []
+    for pattern, owner in _ORACLE_FRAGMENTS.items():
+        found = hits[pattern]
+        own = [h for h in found if h[0] == owner]
+        if own:
+            found.remove(own[0])
+        sites += [f"{rel}:{line}" for rel, line in found]
+    return sorted(sites)
+
+
+def test_oracle_relations_are_spelled_once(tmp_path):
+    """Each relation the oracles share (the vector gate, the cosine, the
+    per-query ranking, the shingle list, the epoch-day purchase series, the
+    modality list) is one SQL fragment, rendered from the builder's own
+    constants; an oracle that re-types it can drift from the kernel its
+    builder calls."""
+    import e_commerce_streaming_datapipeline_spark as pkg
+
+    package = Path(pkg.__file__).resolve().parent
+    assert _oracle_fragment_copies(package) == []
+    # the scan sees a planted copy, in another module and in the owner
+    (tmp_path / "sources").mkdir()
+    (tmp_path / "operators").mkdir()
+    (tmp_path / "sources" / "batch.py").write_text(
+        'P = f"embedding IS NOT NULL AND len(embedding) = {D}"\n'
+        'Q = "WHERE len(embedding) = 64"\n'
+    )
+    (tmp_path / "operators" / "m.py").write_text(
+        'O = f"""SELECT vec_id\nFROM embeddings\n'
+        'WHERE embedding IS NOT NULL AND len(embedding) = 64 AND {x}"""\n'
+    )
+    assert _oracle_fragment_copies(tmp_path) == ["operators/m.py:1", "sources/batch.py:2"]
 
 
 def _lineage_cut_sites(package: Path) -> list[str]:
@@ -341,6 +429,55 @@ def test_warehouse_overwrite_is_dynamic_without_touching_session_conf(spark, sf_
         for r in spark.table("events_wh").groupBy("event_date").count().collect()
     }
     assert after == {**days, day: 1}
+
+
+def test_cms_bucket_of_a_large_key_matches_python_ints(spark):
+    """The count-min buckets come from ``functions/hashing.py::
+    universal_hash``, which reduces the key mod P before the multiply: a
+    key near 2^62 buckets exactly as the unbounded-integer formula, where
+    an unreduced ``key * a`` passes 2^63."""
+    from e_commerce_streaming_datapipeline_spark.operators.statistics import (
+        _CMS_PARAMS,
+        _CMS_W,
+        _cms_bucket_structs,
+    )
+
+    key = 2**62 + 12345
+    got = (
+        spark.range(1)
+        .select(F.lit(key).alias("k"))
+        .select(F.explode(_cms_bucket_structs("k")).alias("s"))
+        .select("s.j", "s.bkt")
+        .collect()
+    )
+    want = {j: (key * a + b) % (2**31 - 1) % _CMS_W for j, a, b in _CMS_PARAMS}
+    assert {r["j"]: r["bkt"] for r in got} == want
+
+
+# the connectors that write the fixture out and read it back from files
+_ROUNDTRIP_CONNECTORS = (
+    "csv_source_stats",
+    "orc_source_stats",
+    "xml_source_stats",
+    "schema_evolution_read",
+    "corrupt_dlq_roundtrip",
+    "warehouse_partitioned_roundtrip",
+    "bucketed_order_join",
+    "python_datasource_sink_roundtrip",
+)
+
+
+@pytest.mark.parametrize("name", _ROUNDTRIP_CONNECTORS)
+def test_roundtrip_connector_builds_do_not_share_files(spark, sf_dir, name):
+    """Each build writes to its own scratch directory, so a second build
+    leaves the files the first one lists in place: collecting the first
+    build afterwards reads what it wrote."""
+    from e_commerce_streaming_datapipeline_spark.plans.registry import get_query
+
+    builder = get_query(name).builder
+    first = builder(spark, sf_dir)
+    second = builder(spark, sf_dir)
+    assert sorted(map(repr, first.collect())) == sorted(map(repr, second.collect()))
 
 
 def test_dedup_winner_stable_under_repartition(spark, sf_dir):
@@ -986,11 +1123,14 @@ def test_external_session_can_run_closure_pickling_queries(tmp_path):
     import sys
     import textwrap
 
+    from tests.conftest import SF_DIR
+
+    entry = Path(__file__).resolve().parent.parent / "__spark_entry__.py"
     script = textwrap.dedent(
-        """
+        f"""
         import importlib.util
         spec = importlib.util.spec_from_file_location(
-            "__spark_entry__", "/root/repo/__spark_entry__.py")
+            "__spark_entry__", {str(entry)!r})
         mod = importlib.util.module_from_spec(spec)
         spec.loader.exec_module(mod)
         from pyspark.sql import SparkSession
@@ -1000,7 +1140,7 @@ def test_external_session_can_run_closure_pickling_queries(tmp_path):
         # register() -> ensure_session_conf, not ride on a prior query's
         # addPyFile side effect
         for name in ("python_datasource_feed", "multimodal_decode"):
-            assert qs[name](spark, "/root/testdata/sf0.001").count() > 0, name
+            assert qs[name](spark, {SF_DIR!r}).count() > 0, name
         print("EXTERNAL_SESSION_OK")
         """
     )

@@ -12,14 +12,12 @@ can never ship again.
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 from e_commerce_streaming_datapipeline_spark.plans.registry import all_queries
+from tests.conftest import SF_DIR
 from tests.oracle_compare import oracle_connection
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
 BAD = ("HUGEINT", "UHUGEINT", "DECIMAL")
 
 

@@ -10,8 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from e_commerce_streaming_datapipeline_spark.plans.registry import all_queries
-
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+from tests.conftest import SF_DIR
 
 
 class TestDtypeKindGate:

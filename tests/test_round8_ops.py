@@ -12,8 +12,7 @@ import os
 import pytest
 
 from e_commerce_streaming_datapipeline_spark.plans.registry import all_queries
-
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
+from tests.conftest import SF_DIR
 
 
 @pytest.fixture(scope="module")
@@ -322,7 +321,7 @@ class TestSortedNeighborhoodPairs:
         assert rows, "no type pairs"
         # derive n from the fixture under the query's own non-null filter —
         # a hardcoded sf0.001 count asserts the wrong bound whenever
-        # SPARK_GRAFT_TEST_SF points elsewhere (r8 ADVICE #5)
+        # SPARK_GRAFT_TEST_SF_DIR points elsewhere (r8 ADVICE #5)
         n_events = (
             spark.read.parquet(f"{SF_DIR}/events.parquet")
             .where(

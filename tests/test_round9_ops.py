@@ -6,14 +6,14 @@ r8 ADVICE fixes and the bounds-oracle sketch conversions (task #7)."""
 from __future__ import annotations
 
 import json
-import os
 import sys
 from pathlib import Path
 
 import pytest
 
+from tests.conftest import SF_DIR
+
 REPO = Path(__file__).resolve().parent.parent
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 
 class TestRoundDeltaLedger:
